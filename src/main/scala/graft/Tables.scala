@@ -54,14 +54,6 @@ object Tables {
   private val jvmRunId: String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  /** target/tmp materialization dir for write-once artifacts, keyed by
-    * (kind, sf dir, JVM run, session identity) so concurrent sessions,
-    * sf scales, AND successive JVM runs never collide — the ONE path
-    * scheme every persisted stage (dedup pair/fingerprint tables,
-    * pricing MV, manifest layout, IVF index) uses; a change to
-    * sanitization or session-keying lands everywhere at once. The
-    * session-identity suffix preserves write-once reuse WITHIN a
-    * session while isolating concurrent sessions in one JVM. */
   /** Spread an under-parallel scan across the executor before
     * CPU-heavy per-row work (guide §2.5's unsplittable-input fix):
     * the gate corpus is ONE parquet file with ONE row group, so every
@@ -110,6 +102,46 @@ object Tables {
     }
   }
 
+  /** Per-session write-once cells: session identity (held weakly) →
+    * (kind, sf dir) → the cell of that fixture. */
+  private val onceCells = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[(String, String), Once]]()
+
+  private final class Once { var value: AnyRef = _ }
+
+  /** Build a per-(session, sf dir) fixture ONCE and serve it to every
+    * later caller — the write-once convention of every persisted stage
+    * (dedup pair tables, chain roots, indexes, trained merge tables).
+    * `kind` names the fixture; all kinds share one namespace per
+    * session. Concurrent callers of one key wait for the single build
+    * and get the same instance. The build runs under its own cell's
+    * lock only, so a build may call `once` for another key (builds
+    * nest: the change-feed table over its chain, the pair table over
+    * the fingerprints, every chain over `ensureLayout`). A build that
+    * throws leaves the cell empty and the next call builds again. The
+    * session is held weakly and no value references it, so a session's
+    * fixtures are released with the session. */
+  def once[T <: AnyRef](kind: String, s: SparkSession, d: String)
+                       (build: => T): T = {
+    val cells = onceCells.synchronized {
+      onceCells.computeIfAbsent(s,
+        _ => new java.util.concurrent.ConcurrentHashMap())
+    }
+    val cell = cells.computeIfAbsent((kind, d), _ => new Once)
+    cell.synchronized {
+      if (cell.value == null) cell.value = build
+      cell.value.asInstanceOf[T]
+    }
+  }
+
+  /** target/tmp materialization dir for write-once artifacts, keyed by
+    * (kind, sf dir, JVM run, session identity) so concurrent sessions,
+    * sf scales, AND successive JVM runs never collide — the ONE path
+    * scheme every persisted stage (dedup pair/fingerprint tables,
+    * pricing MV, manifest layout, IVF index) uses; a change to
+    * sanitization or session-keying lands everywhere at once. The
+    * session-identity suffix preserves write-once reuse WITHIN a
+    * session while isolating concurrent sessions in one JVM. */
   def matDir(kind: String, spark: SparkSession, sfDir: String): String =
     s"/root/repo/target/tmp/${kind}_" +
       sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + jvmRunId + "_" +

@@ -27,6 +27,17 @@ object DedupQueries {
 
   private val dups = "/root/testdata" // doc substrate is `documents`
 
+  /** Output-layout knob for the persisted dedup stages: files sized
+    * to ~2M rows each. At battery scale every stage lands in ONE
+    * compact file (hashes unchanged vs the old repartition(1)); at
+    * 10⁹ docs the banding design keeps pair mass O(N), so the pair
+    * table writes ~N/2M files instead of funneling a corpus-sized
+    * result through a single task — the knob the r9 review called
+    * out. An empty result still writes one file (schema preserved). */
+  private val RowsPerFile = 2L * 1000 * 1000
+  private def compactFiles(rowEstimate: Long): Int =
+    math.max(1L, (rowEstimate + RowsPerFile - 1) / RowsPerFile).toInt
+
   /** Shared Spark side of the 64-bit SimHash near-dup pairs (see
     * q_dedup_simhash64 for the algorithm notes): (a_id, b_id, hamming)
     * at hamming <= 3.
@@ -39,7 +50,7 @@ object DedupQueries {
     * and the battery does the real thing: the first consumer WRITES the
     * pair table as parquet under target/tmp (mirroring
     * IvfIndex.buildIndex's persisted-index layout), later consumers in
-    * the same session/dir READ it — the cache below holds only the
+    * the same session/dir READ it — the registry holds only the
     * path, so no RDD blocks stay pinned for the process lifetime.
     * The fingerprint table is persisted the same way (parquet under
     * [[persistedFingerprints]]) — its consumers are the banded
@@ -52,30 +63,9 @@ object DedupQueries {
     * minimal lossless split — b=7 / ~36-bit keys at N=10⁹). Any plan
     * is lossless at hamming <= 3, so the pair set — and every
     * downstream hash — is independent of the chosen width. */
-  private val pairDirCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
-  /** target/tmp materialization dir, keyed like the IVF index layout:
-    * per (sf dir, session identity) so concurrent sessions and sf
-    * scales never collide. */
-  private def matDir(kind: String, s: org.apache.spark.sql.SparkSession,
-                     d: String): String = Tables.matDir(kind, s, d)
-
-  /** Output-layout knob for the persisted dedup stages: files sized
-    * to ~2M rows each. At battery scale every stage lands in ONE
-    * compact file (hashes unchanged vs the old repartition(1)); at
-    * 10⁹ docs the banding design keeps pair mass O(N), so the pair
-    * table writes ~N/2M files instead of funneling a corpus-sized
-    * result through a single task — the knob the r9 review called
-    * out. An empty result still writes one file (schema preserved). */
-  private val RowsPerFile = 2L * 1000 * 1000
-  private def compactFiles(rowEstimate: Long): Int =
-    math.max(1L, (rowEstimate + RowsPerFile - 1) / RowsPerFile).toInt
-
   private def simhash64Pairs(s: org.apache.spark.sql.SparkSession,
                              d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(pairDirCache.computeIfAbsent((s, d), { _ =>
+    s.read.parquet(Tables.once("pairDirCache", s, d) {
       // the fingerprint table is its own persisted stage (one row per
       // doc, 24 bytes each): the banded self-join's two sides read the
       // parquet back instead of each recomputing the tokenize + md5 +
@@ -87,11 +77,33 @@ object DedupQueries {
       val n = fp.count()
       val plan = SimhashBanding.choose(n)
       val pairs = bandedPairs(fp, plan)
-      val dir = matDir("simhash_pairs", s, d)
+      val dir = Tables.matDir("simhash_pairs", s, d)
       pairs.repartition(compactFiles(n))
         .write.mode("overwrite").parquet(dir)
       dir
-    }))
+    })
+
+  /** The PERSISTED word-trigram TF postings (doc_id, g, tf) — shared
+    * by the weighted sparse-cosine and asymmetric-containment dedups:
+    * both derive their df cap, sizes and join sides from this table,
+    * and the per-doc window construction over the exploded corpus is
+    * their dominant cost — paid once, written as parquet (pair-table
+    * convention; tf rows double as the distinct (doc, gram) set). */
+  private def trigramTf(s: org.apache.spark.sql.SparkSession,
+                        d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(Tables.once("tfDirCache", s, d) {
+      // trigrams built MAP-SIDE via shingles() (zip_with slices) —
+      // the old posexplode + window-lead form shuffled the exploded
+      // corpus by doc_id just to reassemble adjacent tokens; the only
+      // shuffle left in the shared build is the tf aggregate itself
+      val tf = Tables.spread(Tables.load(s, d, "documents"))
+        .select(col("doc_id"),
+          explode(shingles(tokens(col("text")), 3)).as("g"))
+        .groupBy("doc_id", "g").agg(count(lit(1)).as("tf"))
+      val dir = Tables.matDir("trigram_tf", s, d)
+      tf.write.mode("overwrite").parquet(dir)
+      dir
+    })
 
   /** The PERSISTED per-doc triangle statistics (doc_id, deg, n_tri)
     * of the near-dup graph — the third shared graph materialization
@@ -103,53 +115,19 @@ object DedupQueries {
     * there — instead of enumerating document-level triangles: at the
     * 10x rung the doc graph's wedge close was 929M wedges even
     * degree-ordered, the quotient's is 10.8M. */
-  /** The PERSISTED word-trigram TF postings (doc_id, g, tf) — shared
-    * by the weighted sparse-cosine and asymmetric-containment dedups:
-    * both derive their df cap, sizes and join sides from this table,
-    * and the per-doc window construction over the exploded corpus is
-    * their dominant cost — paid once, written as parquet (pair-table
-    * convention; tf rows double as the distinct (doc, gram) set). */
-  private val tfDirCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
-  private def trigramTf(s: org.apache.spark.sql.SparkSession,
-                        d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(tfDirCache.computeIfAbsent((s, d), { _ =>
-      // trigrams built MAP-SIDE via shingles() (zip_with slices) —
-      // the old posexplode + window-lead form shuffled the exploded
-      // corpus by doc_id just to reassemble adjacent tokens; the only
-      // shuffle left in the shared build is the tf aggregate itself
-      val tf = Tables.spread(Tables.load(s, d, "documents"))
-        .select(col("doc_id"),
-          explode(shingles(tokens(col("text")), 3)).as("g"))
-        .groupBy("doc_id", "g").agg(count(lit(1)).as("tf"))
-      val dir = matDir("trigram_tf", s, d)
-      tf.write.mode("overwrite").parquet(dir)
-      dir
-    }))
-
-  private val triStatsDirCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   private def simhash64TriangleStats(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(triStatsDirCache.computeIfAbsent((s, d), { _ =>
+    s.read.parquet(Tables.once("triStatsDirCache", s, d) {
       val fp = persistedFingerprints(s, d)
       val stats = TriangleQuotient.nodeStats(fp)
-      val dir = matDir("simhash_tristats", s, d)
+      val dir = Tables.matDir("simhash_tristats", s, d)
       // one row per document; the fingerprint parquet's row count is
       // a metadata read and sizes the output layout
       stats.repartition(compactFiles(fp.count()))
         .write.mode("overwrite").parquet(dir)
       dir
-    }))
-
-  private val fpDirCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
+    })
 
   /** The PERSISTED simhash64 fingerprint table (doc_id, hi, lo):
     * "fingerprint the corpus once" as a real parquet write, read back
@@ -161,15 +139,15 @@ object DedupQueries {
   private[dedup] def persistedFingerprints(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(fpDirCache.computeIfAbsent((s, d), { _ =>
-      val dir = matDir("simhash_fps", s, d)
+    s.read.parquet(Tables.once("fpDirCache", s, d) {
+      val dir = Tables.matDir("simhash_fps", s, d)
       // one row per document; the source parquet's row count is a
       // metadata read and sizes the output layout
       val n = Tables.load(s, d, "documents").count()
       fingerprints(s, d).repartition(compactFiles(n))
         .write.mode("overwrite").parquet(dir)
       dir
-    }))
+    })
 
   /** MAP-SIDE 64-bit average-hash (aHash) over the first 64 payload
     * bytes of `text`: bit p set iff 64·byte_p > Σ bytes, packed as
@@ -295,23 +273,19 @@ object DedupQueries {
     * table, the assignment is a real parquet write/read: the cache
     * holds only the path, and the CC rounds' localCheckpoint blocks
     * become garbage-collectable once the write finishes. */
-  private val clusterDirCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   private def simhash64Clusters(s: org.apache.spark.sql.SparkSession,
                                 d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(clusterDirCache.computeIfAbsent((s, d), { _ =>
+    s.read.parquet(Tables.once("clusterDirCache", s, d) {
       val comp =
         ConnectedComponents.run(simhash64Pairs(s, d).select("a_id", "b_id"))
           .localCheckpoint()
-      val dir = matDir("simhash_clusters", s, d)
+      val dir = Tables.matDir("simhash_clusters", s, d)
       // node-count-sized layout, same rule as the pair/triangle/
       // fingerprint tables (the count reads the checkpointed blocks)
       comp.repartition(compactFiles(comp.count()))
         .write.mode("overwrite").parquet(dir)
       dir
-    }))
+    })
 
   /** The PERSISTED 3-iteration label-propagation community assignment
     * (doc_id, community) — the pair/cluster-table convention applied
@@ -322,14 +296,10 @@ object DedupQueries {
     * needs. Per round: join labels to edges on node id + a (node,
     * label) count + an argmax aggregate, lineage cut per round —
     * nothing corpus-sized on the driver. */
-  private val commDirCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   private def labelPropCommunities(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(commDirCache.computeIfAbsent((s, d), { _ =>
+    s.read.parquet(Tables.once("commDirCache", s, d) {
       val iters = 3
       val e = simhash64Pairs(s, d)
       val edges = e.select(col("a_id").as("u"), col("b_id").as("v"))
@@ -348,13 +318,13 @@ object DedupQueries {
             .as("lbl"))
           .localCheckpoint()
       }
-      val dir = matDir("simhash_communities", s, d)
+      val dir = Tables.matDir("simhash_communities", s, d)
       // node-count-sized layout (lab is already checkpointed per round)
       lab.select(col("id").as("doc_id"), col("lbl").as("community"))
         .repartition(compactFiles(lab.count()))
         .write.mode("overwrite").parquet(dir)
       dir
-    }))
+    })
 
   /** Cross-family access to the shared pair materialization (e.g. the
     * end-to-end prep pipeline in TextQueries) — same single

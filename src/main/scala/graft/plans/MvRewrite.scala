@@ -68,12 +68,9 @@ object MvCatalog {
 object MvSetup {
   import org.apache.spark.sql.functions._
 
-  private val done = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   def ensurePricingMv(s: SparkSession, d: String): Unit = {
     MvRewriteRule.ensure(s)
-    done.computeIfAbsent((s, d), { _ =>
+    graft.Tables.once("MvSetup.done", s, d) {
       val dir = graft.Tables.matDir("mv_pricing", s, d)
       // the MV build itself aggregates the base scan — registration
       // happens AFTER the write, so the build can never self-rewrite
@@ -87,7 +84,7 @@ object MvSetup {
         groupCols = Set("l_returnflag", "l_linestatus"),
         sums = Map("l_quantity" -> "psum_qty"), countCol = "pcnt"))
       dir
-    })
+    }
   }
 }
 

@@ -23,11 +23,8 @@ object CoreQueries {
   /** q_cow_merge's merged manifest, built ONCE per (session, sf dir):
     * layout + one file-grain CoW merge of the deterministic batch
     * (the write-once convention of every persisted stage). */
-  private val cowCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private[graft] def cowMergedManifest(s: SparkSession, d: String): String =
-    cowCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("cowCache", s, d) {
       val root = graft.sources.ManifestPrune.ensureLayout(s, d)
       val docs = Tables.load(s, d, "documents")
       val updates = docs.filter(col("doc_id") % 23 === 0)
@@ -36,44 +33,35 @@ object CoreQueries {
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"),
           lit("new").as("lang"), col("source"), col("n_chars"))
       graft.sources.ManifestPrune.cowMerge(s, root, updates, inserts, "v2")._2
-    })
+    }
 
   /** q_manifest_tree's two-level manifest tree, built ONCE per
     * (session, sf dir) over the shared clustered layout. */
-  private val treeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def manifestTree(s: SparkSession, d: String): String =
-    treeCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("treeCache", s, d) {
       val root = graft.sources.ManifestPrune.ensureLayout(s, d)
       graft.sources.ManifestPrune.buildManifestTree(s, root,
         s"$root/manifest", nShards = 4)
-    })
+    }
 
   /** q_dv_delete's (manifest, dv) pair, built ONCE per (session, sf
     * dir): layout + one merge-on-read delete of a deterministic key
     * set — no data file is touched (DvDeleteSpec pins that). */
-  private val dvCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-
   private[graft] def dvDeletedVersion(s: SparkSession,
                                       d: String): (String, String) =
-    dvCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("dvCache", s, d) {
       val root = graft.sources.ManifestPrune.ensureLayout(s, d)
       val deletes = Tables.load(s, d, "documents")
         .filter(col("doc_id") % 7 === 3).select("doc_id")
       graft.sources.ManifestPrune.dvDeleteFrom(s, root,
         s"$root/manifest", None, deletes, "dv1")
-    })
+    }
 
   /** q_compact_commit's committed chain (fresh root → DV delete →
     * compaction), built ONCE per (session, sf dir): the full
     * merge-on-read lifecycle whose read-back the oracle replays. */
-  private val compactCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def compactedChain(s: SparkSession, d: String): String =
-    compactCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("compactCache", s, d) {
       // nanoTime suffix: _commits markers persist on disk and the
       // session-identity suffix can collide across JVM restarts (the
       // CDC spec's lesson) — a fresh chain must start at version 0
@@ -84,7 +72,7 @@ object CoreQueries {
         docs.filter(col("doc_id") % 7 === 3).select("doc_id"))
       graft.sources.ManifestPrune.compactCommit(s, root, nFiles = 4)
       root
-    })
+    }
 
   /** q_gdpr_erase's drained chain (fresh root → two erasure-stream
     * batches → compaction → expiry), built ONCE per (session, sf
@@ -94,11 +82,8 @@ object CoreQueries {
     * the accumulated vectors into clustered files, and vacuum
     * reclaims every pre-compaction file so the erased bytes are
     * physically gone, not merely hidden. */
-  private val gdprCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def gdprChain(s: SparkSession, d: String): String =
-    gdprCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("gdprCache", s, d) {
       val root = Tables.matDir(s"gdpr_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -110,18 +95,15 @@ object CoreQueries {
       graft.sources.ManifestPrune.expireVersions(s, root,
         keepLast = 1, graceMs = 0L)
       root
-    })
+    }
 
   /** q_change_feed's chain (fresh root → CoW merge with update AND
     * insert batches → DV delete → compaction), built ONCE per
     * (session, sf dir): one commit of each kind, so the feed must
     * emit all three ops — and NOTHING for the compaction, whose
     * physical motion is not change. */
-  private val feedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def changeFeedChain(s: SparkSession, d: String): String =
-    feedCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("feedCache", s, d) {
       val root = Tables.matDir(s"feed_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -139,7 +121,7 @@ object CoreQueries {
       // v3: compaction — physical rewrite, zero logical change
       graft.sources.ManifestPrune.compactCommit(s, root, nFiles = 4)
       root
-    })
+    }
 
   /** The PERSISTED change feed of the shared chain (0, 3], written
     * ONCE per (session, sf dir) — the same convention as the dedup
@@ -149,11 +131,8 @@ object CoreQueries {
     * halves the battery cost without weakening either hash gate (the
     * gates check the feed's CONTENT, which is unchanged). Row-count-
     * sized layout, no fixed-width write. */
-  private val feedTableCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def feedTable(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(feedTableCache.computeIfAbsent((s, d), { _ =>
+    s.read.parquet(Tables.once("feedTableCache", s, d) {
       val src = changeFeedChain(s, d)
       val dir = Tables.matDir("feed_table", s, d)
       val feed = graft.sources.ManifestPrune.changeFeed(s, src, 0L, 3L)
@@ -162,16 +141,13 @@ object CoreQueries {
         (feed.count() + 2000000L - 1) / 2000000L).toInt
       feed.repartition(nFiles).write.mode("overwrite").parquet(dir)
       dir
-    }))
+    })
 
   /** q_merge_into's chain (fresh root → ONE general MERGE INTO
     * commit: multi-column SET + inserts + deletes), built ONCE per
     * (session, sf dir). */
-  private val mergeIntoCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def mergeIntoChain(s: SparkSession, d: String): String =
-    mergeIntoCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("mergeIntoCache", s, d) {
       val root = Tables.matDir(s"mi_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -185,7 +161,7 @@ object CoreQueries {
         deletes = Some(docs.filter(col("doc_id") % 17 === 4)
           .select("doc_id")))
       root
-    })
+    }
 
   /** q_mor_merge's chain (fresh root → TWO merge-on-read commits),
     * built ONCE per (session, sf dir). Same MERGE semantics as
@@ -194,11 +170,8 @@ object CoreQueries {
     * re-updates a subset of the first commit's post-images, so the
     * gate proves chained masking — a delta row hidden by a LATER
     * delta — not just one sidecar generation. */
-  private val morCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def morChain(s: SparkSession, d: String): String =
-    morCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("morCache", s, d) {
       val root = Tables.matDir(s"mor_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -218,7 +191,7 @@ object CoreQueries {
         docs.limit(0).select(col("doc_id"), col("text"), col("lang"),
           col("source"), col("n_chars")))
       root
-    })
+    }
 
   /** q_eq_delete's chain (fresh root → PURE-METADATA equality delete
     * v1 → MoR upsert v2 whose entry fold materializes the accumulated
@@ -227,11 +200,8 @@ object CoreQueries {
     * the full Iceberg-v2 equality-delete lifecycle — O(keys) commit,
     * read-side anti-join, fold-on-next-write, physical
     * materialization — whose head read the oracle replays. */
-  private val eqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def eqDeleteChain(s: SparkSession, d: String): String =
-    eqCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("eqCache", s, d) {
       val root = Tables.matDir(s"eq_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -246,18 +216,15 @@ object CoreQueries {
         docs.filter(col("doc_id") % 17 === 6).select("doc_id"))
       graft.sources.ManifestPrune.compactCommit(s, root, nFiles = 4)
       root
-    })
+    }
 
   /** q_table_sink's chain, driven entirely through the graft-table
     * STREAMING SINK's per-batch applier (append → upsert → delete,
     * one committed version each — the writeStream face's exact code
     * path, exercised batch-wise like the GDPR chain), built ONCE per
     * (session, sf dir). */
-  private val sinkCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sinkChain(s: SparkSession, d: String): String =
-    sinkCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sinkCache", s, d) {
       val root = Tables.matDir(s"sink_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(
@@ -277,7 +244,7 @@ object CoreQueries {
         docs.filter(col("doc_id") % 23 === 5), 2L, root, "delete",
         "doc_id")
       root
-    })
+    }
 
   /** q_colocated_join's pair of BUCKETED tables (documents-meta and
     * embeddings-meta, both bucketed 8 ways on the join key), written
@@ -289,12 +256,9 @@ object CoreQueries {
     * paid once at write time and amortized over every later join
     * (ColocatedJoinSpec pins the zero-Exchange plan with broadcast
     * disabled). */
-  private val bucketedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-
   private def bucketedTables(s: SparkSession,
                              d: String): (String, String) =
-    bucketedCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("bucketedCache", s, d) {
       val suf = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
         java.lang.Integer.toHexString(System.identityHashCode(s))
       val t1 = s"graft_docs_bkt_$suf"
@@ -312,38 +276,63 @@ object CoreQueries {
         .bucketBy(8, "doc_id").sortBy("doc_id")
         .format("parquet").saveAsTable(t2)
       (t1, t2)
-    })
+    }
 
   /** q_sql_prune_str's lang-clustered DDL chain, one per
     * (session, sf dir); holds the registered table name. */
-  private val langChainCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private def langChainTable(s: SparkSession, d: String): String =
+    Tables.once("langChainCache", s, d) {
+      val r = Tables.matDir(s"langchain_${System.nanoTime}", s, d)
+      s.conf.set("spark.sql.catalog.graft",
+        classOf[graft.sources.GraftCatalog].getName)
+      val tbl = s"lng.t_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      s.sql(s"""CREATE TABLE graft.$tbl (
+               |  doc_id BIGINT, lang STRING, n_chars BIGINT)
+               |USING graft LOCATION '$r'
+               |TBLPROPERTIES ('cluster'='lang|lang,doc_id',
+               |  'key'='doc_id')""".stripMargin)
+      val view = s"lng_src_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      Tables.load(s, d, "documents")
+        .select("doc_id", "lang", "n_chars")
+        .createOrReplaceTempView(view)
+      s.sql(s"INSERT INTO graft.$tbl " +
+        s"SELECT doc_id, lang, n_chars FROM $view")
+      graft.sources.ManifestPrune.compactCommit(s, r, nFiles = 8)
+      tbl
+    }
 
   /** q_sql_prune_multi's (lang, n_chars)-clustered chain — the
     * layout whose per-file COLUMN stats make both dimensions
     * prunable; holds the chain root. */
-  private val multiStatCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private def multiStatChain(s: SparkSession, d: String): String =
+    Tables.once("multiStatCache", s, d) {
+      val r = Tables.matDir(s"multistat_${System.nanoTime}", s, d)
+      graft.sources.ManifestPrune.buildLayout(
+        Tables.load(s, d, "documents"), r, nFiles = 16,
+        clusterCols = Seq("lang", "n_chars"))
+      r
+    }
 
   /** q_sql_topn's doc_id-clustered chain (spec still stats n_chars,
     * so the ORDER BY doc_id pruning exercises the cstats path). */
-  private val docIdChainCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private def docIdChain(s: SparkSession, d: String): String =
+    Tables.once("docIdChainCache", s, d) {
+      val r = Tables.matDir(s"docidchain_${System.nanoTime}", s, d)
+      graft.sources.ManifestPrune.buildLayout(
+        Tables.load(s, d, "documents"), r, nFiles = 16,
+        clusterCols = Seq("doc_id"))
+      r
+    }
 
-  /** q_sql_topn_str's tag-clustered chain (unique string key; the
-    * ORDER BY tag pruning exercises the cstats_str path). */
   /** q_sql_agg_group's per-lang-committed chain: one INSERT per lang
     * makes every committed file lang-constant — the layout an
     * identity-partitioned ingest produces, which is exactly what the
     * metadata GROUP BY rollup requires. Shared with
     * q_sql_distinct_push (battery order must not matter). */
-  private val groupAggCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def groupAggTable(s: SparkSession, d: String): String = {
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.GraftCatalog].getName)
-    val root = groupAggCache.computeIfAbsent((s, d), { _ =>
+    val root = Tables.once("groupAggCache", s, d) {
       val MP = graft.sources.ManifestPrune
       val docs = graft.Tables.load(s, d, "documents")
         .select("doc_id", "lang", "n_chars")
@@ -357,7 +346,7 @@ object CoreQueries {
         MP.appendCommit(s, r, docs.filter(col("lang") === l))
       }
       r
-    })
+    }
     val tbl = s"prn.gby_${d.replaceAll("[^A-Za-z0-9]", "_")}"
     graft.sources.GraftCatalog.registerTable(tbl, root)
     tbl
@@ -365,11 +354,35 @@ object CoreQueries {
 
   /** q_sql_rewrite_grouped's chain: built MIXED (range-clustered by
     * doc_id), then group-constant-rewritten once via the CALL. */
-  private val rewriteGroupedCache = new java.util.concurrent
-    .ConcurrentHashMap[(SparkSession, String), String]()
+  private def rewriteGroupedChain(s: SparkSession, d: String): String =
+    Tables.once("rewriteGroupedCache", s, d) {
+      val MP = graft.sources.ManifestPrune
+      val r = graft.Tables.matDir(s"rgchain_${System.nanoTime}",
+        s, d)
+      MP.buildLayout(graft.Tables.load(s, d, "documents")
+        .select("doc_id", "lang", "n_chars"), r, nFiles = 8,
+        clusterCols = Seq("doc_id"))
+      val tbl0 = s"prn.rg_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      graft.sources.GraftCatalog.registerTable(tbl0, r)
+      s.sql(s"CALL graft.system.rewrite_grouped(" +
+        s"table => '$tbl0', column => 'lang', " +
+        s"target_files => 8)").collect()
+      r
+    }
 
-  private val strTopNCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  /** q_sql_topn_str's tag-clustered chain (unique string key; the
+    * ORDER BY tag pruning exercises the cstats_str path). */
+  private def strTopNChain(s: SparkSession, d: String): String =
+    Tables.once("strTopNCache", s, d) {
+      val r = Tables.matDir(s"strtopn_${System.nanoTime}", s, d)
+      graft.sources.ManifestPrune.buildLayout(
+        Tables.load(s, d, "documents")
+          .withColumn("tag", concat_ws("-", col("lang"),
+            lpad(col("doc_id").cast("string"), 9, "0")))
+          .select("doc_id", "tag", "lang", "n_chars"),
+        r, nFiles = 16, clusterCols = Seq("tag"))
+      r
+    }
 
   /** q_spj_join's pair of co-BUCKETED chain tables (documents and
     * embeddings-meta, both bucketed 8 ways on the join key through
@@ -378,11 +391,8 @@ object CoreQueries {
     * native bucketBy tables, these are CHAIN tables — versioned,
     * DV-maskable, SQL-writable — whose scans report
     * KeyGroupedPartitioning(bucket(8, doc_id)). */
-  private val spjCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String)]()
-
   private def spjTables(s: SparkSession, d: String): (String, String) =
-    spjCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("spjCache", s, d) {
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sources.GraftCatalog].getName)
       s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -400,15 +410,12 @@ object CoreQueries {
       graft.sources.GraftCatalog.registerTable(ta, rootA)
       graft.sources.GraftCatalog.registerTable(tb, rootB)
       (ta, tb)
-    })
+    }
 
   /** q_point_lookup's chain (layout → DV delete v1 → per-file bloom
     * index over doc_id), built ONCE per (session, sf dir). */
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def bloomChain(s: SparkSession, d: String): String =
-    bloomCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("bloomCache", s, d) {
       val root = Tables.matDir(s"bloom_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -416,18 +423,15 @@ object CoreQueries {
         docs.filter(col("doc_id") % 7 === 3).select("doc_id"))
       graft.sources.BloomIndex.build(s, root, 1L)
       root
-    })
+    }
 
   /** q_point_lookup_branch's chain: the bloom chain's shape forked —
     * main: layout → DV delete v1 → bloom build; branch at v1 takes an
     * equality delete (folded by the next commit) and an append, then
     * EXTENDS the index from the parent-resolved sketches. Built ONCE
     * per (session, sf dir); returns the branch root. */
-  private val bloomBranchCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def bloomBranchChain(s: SparkSession, d: String): String =
-    bloomBranchCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("bloomBranchCache", s, d) {
       import graft.sources.{BloomIndex, ManifestPrune}
       val root = Tables.matDir(s"bloombr_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
@@ -444,24 +448,19 @@ object CoreQueries {
           lit("s0").as("source"), lit(10L).as("n_chars")))
       BloomIndex.extend(s, br, 0L, 2L)
       br
-    })
+    }
 
   /** q_clone's pair of chains (source: layout → DV delete; clone at
     * the head; clone-side MoR update; SOURCE-side divergence the
     * clone must not see), built ONCE per (session, sf dir). */
-  private val cloneCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def clonedChain(s: SparkSession, d: String): String =
-    cloneCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("cloneCache", s, d) {
       val src = Tables.matDir(s"clone_src_${System.nanoTime}", s, d)
       val dst = Tables.matDir(s"clone_dst_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, src, nFiles = 8)
       graft.sources.ManifestPrune.dvDeleteCommit(s, src,
         docs.filter(col("doc_id") % 7 === 3).select("doc_id"))
-      // matDir pre-creates the dir; cloneTable insists on creating it
-      new java.io.File(dst).delete()
       graft.sources.ManifestPrune.cloneTable(s, src, dst)
       graft.sources.ManifestPrune.morMergeCommit(s, dst,
         docs.filter(col("doc_id") % 5 === 0)
@@ -472,16 +471,13 @@ object CoreQueries {
       graft.sources.ManifestPrune.dvDeleteCommit(s, src,
         docs.filter(col("doc_id") % 19 === 8).select("doc_id"))
       dst
-    })
+    }
 
   /** q_spec_evolution's chain (fresh root → DV delete v1 → evolve
     * clustering to doc_id v2 → compaction v3 that physically applies
     * the new spec), built ONCE per (session, sf dir). */
-  private val specEvoCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def specEvoChain(s: SparkSession, d: String): String =
-    specEvoCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("specEvoCache", s, d) {
       val MP = graft.sources.ManifestPrune
       val root = Tables.matDir(s"spec_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
@@ -491,7 +487,7 @@ object CoreQueries {
       MP.evolveClustering(s, root, "doc_id", Seq("doc_id"))
       MP.compactCommit(s, root, nFiles = 8)
       root
-    })
+    }
 
   /** q_branch_merge's chain (fresh root → branch at v0 → ONE general
     * MERGE on the BRANCH: update+insert+DV-delete → audit via the
@@ -499,11 +495,8 @@ object CoreQueries {
     * per (session, sf dir). The branch commit interleaves a CoW
     * rewrite with a deletion-vector sidecar, so the fast-forward
     * also proves the sidecar rehoming path. */
-  private val branchCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def branchChain(s: SparkSession, d: String): String =
-    branchCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("branchCache", s, d) {
       val MP = graft.sources.ManifestPrune
       val root = Tables.matDir(s"br_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
@@ -524,17 +517,14 @@ object CoreQueries {
       MP.validateConstraints(s, br, MP.currentVersion(s, br))
       MP.fastForward(s, root, "wap")
       root
-    })
+    }
 
   /** q_branch_rebase's chain (fresh root → branch updates ODD keys →
     * main diverges deleting EVEN keys → in-place rebase applies
     * main's feed onto the branch → fast-forward), built ONCE per
     * (session, sf dir). */
-  private val rebaseCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def rebaseChain(s: SparkSession, d: String): String =
-    rebaseCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("rebaseCache", s, d) {
       val MP = graft.sources.ManifestPrune
       val root = Tables.matDir(s"rb_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
@@ -552,16 +542,13 @@ object CoreQueries {
       MP.rebaseBranch(s, root, "feat")
       MP.fastForward(s, root, "feat")
       root
-    })
+    }
 
   /** q_restore's chain (fresh root → DV delete → "bad" CoW merge →
     * RESTORE of the pre-merge version as the new head), built ONCE
     * per (session, sf dir). */
-  private val restoreCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def restoreChain(s: SparkSession, d: String): String =
-    restoreCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("restoreCache", s, d) {
       val MP = graft.sources.ManifestPrune
       val root = Tables.matDir(s"rs_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
@@ -575,16 +562,13 @@ object CoreQueries {
           col("source"), col("n_chars")))
       MP.restoreVersion(s, root, 1L)
       root
-    })
+    }
 
   /** q_replicate's replica chain, built ONCE per (session, sf dir):
     * same base layout as the (cached) change-feed source chain, then
     * converged purely by replicateFeed over the source's 3 steps. */
-  private val replicaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def replicaChain(s: SparkSession, d: String): String =
-    replicaCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("replicaCache", s, d) {
       val src = changeFeedChain(s, d)
       val dst = Tables.matDir(s"replica_chain_${System.nanoTime}", s, d)
       graft.sources.ManifestPrune.buildLayout(
@@ -602,7 +586,7 @@ object CoreQueries {
         .start()
       q.awaitTermination(300000); q.stop()
       dst
-    })
+    }
 
   /** q_time_travel's chain (fresh root → DV delete v1 → DV delete
     * v2) plus the two commit instants, built ONCE per (session, sf
@@ -612,12 +596,9 @@ object CoreQueries {
     * sleep is sized), so instead the v2 marker is nudged FORWARD
     * until the timeline actually orders the commits — `as of t1`
     * then provably resolves to v1 at any mtime granularity. */
-  private val travelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, Long, Long)]()
-
   private def travelChain(s: SparkSession,
                           d: String): (String, Long, Long) =
-    travelCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("travelCache", s, d) {
       import graft.sources.ManifestPrune
       val root = Tables.matDir(s"travel_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
@@ -633,7 +614,7 @@ object CoreQueries {
       val t2 = ManifestPrune.commitTimeMs(root, v2).get
       assert(t2 > t1, s"marker timeline not monotonic: $t1 -> $t2")
       (root, t1, t2)
-    })
+    }
 
   /** q_sql_catalog's chain, built ONCE per (session, sf dir) and
     * mutated ONCE through the SQL face itself: base layout →
@@ -642,11 +623,8 @@ object CoreQueries {
     * translation). The gated query then only SELECTs, so the battery
     * stays idempotent; the oracle replays insert+delete over the base
     * parquet. Returns the registered `graft.`-relative table name. */
-  private val sqlCatCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sqlCatalogTable(s: SparkSession, d: String): String =
-    sqlCatCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sqlCatCache", s, d) {
       val root = Tables.matDir(s"sqlcat_chain_${System.nanoTime}", s, d)
       graft.sources.ManifestPrune.buildLayout(
         Tables.load(s, d, "documents"), root, nFiles = 8)
@@ -661,18 +639,15 @@ object CoreQueries {
       s.sql(s"DELETE FROM graft.$tbl WHERE doc_id % 9 = 2 " +
         "AND lang <> 'sq'")
       tbl
-    })
+    }
 
   /** q_sql_merge's chain: base layout, then ONE deterministic SQL
     * MERGE INTO through the catalog's delta-based row-level operation
     * (matched-delete + matched-update + not-matched-insert clauses in
     * one command, committed as one merge-on-read version). The gated
     * query only SELECTs; the oracle replays the merge arithmetic. */
-  private val sqlMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sqlMergeTable(s: SparkSession, d: String): String =
-    sqlMergeCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sqlMergeCache", s, d) {
       val root = Tables.matDir(s"sqlmerge_chain_${System.nanoTime}", s, d)
       val docs = Tables.load(s, d, "documents")
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -698,7 +673,7 @@ object CoreQueries {
                |  VALUES (s.doc_id, 'merged row', s.lang, 'sql', 10)
                |""".stripMargin)
       tbl
-    })
+    }
 
   /** q_sql_ddl's table: built PURELY through `spark.sql` DDL+DML —
     * `CREATE TABLE … USING graft` (bootstraps an empty chain with a
@@ -706,11 +681,8 @@ object CoreQueries {
     * (enforced on every later commit), then two INSERTs (a
     * SELECT-sourced append and a literal row). The gated query only
     * SELECTs; the oracle replays the inserts over the base parquet. */
-  private val sqlDdlCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sqlDdlTable(s: SparkSession, d: String): String =
-    sqlDdlCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sqlDdlCache", s, d) {
       val root = Tables.matDir(s"sqlddl_chain_${System.nanoTime}", s, d)
       s.conf.set("spark.sql.catalog.graft",
         classOf[graft.sources.GraftCatalog].getName)
@@ -732,7 +704,7 @@ object CoreQueries {
       s.sql(s"INSERT INTO graft.$tbl VALUES " +
         "(92000001, 'ddl literal row', 'dd', 'ddl', 7)")
       tbl
-    })
+    }
 
   /** q_sql_rename_column's table: a documents chain evolved by
     * `RENAME COLUMN lang TO language` then `DROP COLUMN source` (both
@@ -740,11 +712,8 @@ object CoreQueries {
     * read spans files of BOTH physical generations (pre-rename files
     * hold `lang`, the appended file holds `language`) and a schema
     * that lost a column without touching a byte of data. */
-  private val sqlRenameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sqlRenameTable(s: SparkSession, d: String): String =
-    sqlRenameCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sqlRenameCache", s, d) {
       val root = Tables.matDir(s"sqlrename_chain_${System.nanoTime}", s, d)
       graft.sources.ManifestPrune.buildLayout(
         Tables.load(s, d, "documents"), root, nFiles = 8)
@@ -757,7 +726,7 @@ object CoreQueries {
       s.sql(s"INSERT INTO graft.$tbl VALUES " +
         "(94000001, 'renamed-generation row', 'rn', 9)")
       tbl
-    })
+    }
 
   /** q_sql_call's table: the maintenance lifecycle driven PURELY by
     * `CALL graft.system.<proc>` (Spark 4 ProcedureCatalog): tag v0
@@ -768,11 +737,8 @@ object CoreQueries {
     * tag's surviving row count, so a broken compaction, an
     * over-eager vacuum, or a tag that failed to anchor all break the
     * hash. */
-  private val sqlCallCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sqlCallTable(s: SparkSession, d: String): String =
-    sqlCallCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sqlCallCache", s, d) {
       val root = Tables.matDir(s"sqlcall_chain_${System.nanoTime}", s, d)
       graft.sources.ManifestPrune.buildLayout(
         Tables.load(s, d, "documents"), root, nFiles = 8)
@@ -788,17 +754,14 @@ object CoreQueries {
       s.sql(s"CALL graft.system.expire_versions(table => '$tbl', " +
         "keep_last => 1, grace_ms => 0)")
       tbl
-    })
+    }
 
   /** q_sql_add_column's table: a documents chain widened by
     * `ALTER TABLE … ADD COLUMN note STRING` (a metadata-only
     * declared-schema commit) and then appended through SQL with the
     * new column populated — pre-evolution rows must surface NULL. */
-  private val sqlAddColCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def sqlAddColTable(s: SparkSession, d: String): String =
-    sqlAddColCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("sqlAddColCache", s, d) {
       val root = Tables.matDir(s"sqladdcol_chain_${System.nanoTime}", s, d)
       graft.sources.ManifestPrune.buildLayout(
         Tables.load(s, d, "documents"), root, nFiles = 8)
@@ -811,17 +774,14 @@ object CoreQueries {
         "(93000001, 'widened row one', 'ac', 'ddl', 8, 'noted'), " +
         "(93000003, 'widened row two', 'ac', 'ddl', 8, NULL)")
       tbl
-    })
+    }
 
   /** q_stream_table's sink dir: a chain streamed through the catalog
     * row stream in two phases — snapshot of the v0 base, then (after
     * an append commit) a checkpoint resume that receives ONLY the
     * appended files. Built once per (session, sf dir). */
-  private val streamTblCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def streamTableSink(s: SparkSession, d: String): String =
-    streamTblCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("streamTblCache", s, d) {
       val docs = Tables.load(s, d, "documents")
       val root = Tables.matDir(s"streamtbl_chain_${System.nanoTime}", s, d)
       graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
@@ -850,30 +810,24 @@ object CoreQueries {
             lit("st").as("lang"), col("source"), col("n_chars")))
       drain() // phase 2: only the appended files
       out
-    })
+    }
 
   /** q_dpp_join's hive-partitioned events layout (partition column =
     * event_type), written once per (session, sf dir). */
-  private val dppCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def dppLayout(s: SparkSession, d: String): String =
-    dppCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("dppCache", s, d) {
       val dir = Tables.matDir("dpp_events", s, d)
       graft.sources.SourcesSinks.writePartitionedParquet(
         Tables.load(s, d, "events"), dir, "event_type")
       dir
-    })
+    }
 
   /** q_mv_refresh's historical partial-aggregate table (l_shipdate
     * before the cutoff), written once per (session, sf dir) with
     * MERGEABLE columns: DECIMAL partial sums + partial counts. */
-  private val mvBaseCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private def mvRefreshBase(s: SparkSession, d: String,
                             cutoff: String): String =
-    mvBaseCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("mvBaseCache", s, d) {
       val dir = Tables.matDir("mv_pricing_base", s, d)
       Tables.load(s, d, "lineitem")
         .filter(col("l_shipdate") < lit(cutoff).cast("timestamp"))
@@ -882,7 +836,7 @@ object CoreQueries {
           count(lit(1)).as("p_cnt"))
         .write.mode("overwrite").parquet(dir)
       dir
-    })
+    }
 
   /** The SCD2 versioned dimension (q_scd2_merge's history), shared
     * with the point-in-time lookup q_pit_join: (c_custkey, segment,
@@ -2504,13 +2458,7 @@ object CoreQueries {
       (s, d) => {
         s.conf.set("spark.sql.catalog.graft",
           classOf[graft.sources.GraftCatalog].getName)
-        val root = multiStatCache.computeIfAbsent((s, d), { _ =>
-          val r = Tables.matDir(s"multistat_${System.nanoTime}", s, d)
-          graft.sources.ManifestPrune.buildLayout(
-            Tables.load(s, d, "documents"), r, nFiles = 16,
-            clusterCols = Seq("lang", "n_chars"))
-          r
-        })
+        val root = multiStatChain(s, d)
         val tbl = s"prn.m_${d.replaceAll("[^A-Za-z0-9]", "_")}"
         graft.sources.GraftCatalog.registerTable(tbl, root)
         s.sql(s"""SELECT source, count(*) AS n_docs,
@@ -2540,13 +2488,7 @@ object CoreQueries {
       (s, d) => {
         s.conf.set("spark.sql.catalog.graft",
           classOf[graft.sources.GraftCatalog].getName)
-        val root = docIdChainCache.computeIfAbsent((s, d), { _ =>
-          val r = Tables.matDir(s"docidchain_${System.nanoTime}", s, d)
-          graft.sources.ManifestPrune.buildLayout(
-            Tables.load(s, d, "documents"), r, nFiles = 16,
-            clusterCols = Seq("doc_id"))
-          r
-        })
+        val root = docIdChain(s, d)
         val tbl = s"prn.did_${d.replaceAll("[^A-Za-z0-9]", "_")}"
         graft.sources.GraftCatalog.registerTable(tbl, root)
         s.sql(s"""SELECT doc_id, lang, n_chars FROM graft.$tbl
@@ -2569,16 +2511,7 @@ object CoreQueries {
       (s, d) => {
         s.conf.set("spark.sql.catalog.graft",
           classOf[graft.sources.GraftCatalog].getName)
-        val root = strTopNCache.computeIfAbsent((s, d), { _ =>
-          val r = Tables.matDir(s"strtopn_${System.nanoTime}", s, d)
-          graft.sources.ManifestPrune.buildLayout(
-            Tables.load(s, d, "documents")
-              .withColumn("tag", concat_ws("-", col("lang"),
-                lpad(col("doc_id").cast("string"), 9, "0")))
-              .select("doc_id", "tag", "lang", "n_chars"),
-            r, nFiles = 16, clusterCols = Seq("tag"))
-          r
-        })
+        val root = strTopNChain(s, d)
         val tbl = s"prn.tstr_${d.replaceAll("[^A-Za-z0-9]", "_")}"
         graft.sources.GraftCatalog.registerTable(tbl, root)
         s.sql(s"""SELECT tag, doc_id FROM graft.$tbl
@@ -2695,20 +2628,7 @@ object CoreQueries {
       (s, d) => {
         s.conf.set("spark.sql.catalog.graft",
           classOf[graft.sources.GraftCatalog].getName)
-        val root = rewriteGroupedCache.computeIfAbsent((s, d), { _ =>
-          val MP = graft.sources.ManifestPrune
-          val r = graft.Tables.matDir(s"rgchain_${System.nanoTime}",
-            s, d)
-          MP.buildLayout(graft.Tables.load(s, d, "documents")
-            .select("doc_id", "lang", "n_chars"), r, nFiles = 8,
-            clusterCols = Seq("doc_id"))
-          val tbl0 = s"prn.rg_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-          graft.sources.GraftCatalog.registerTable(tbl0, r)
-          s.sql(s"CALL graft.system.rewrite_grouped(" +
-            s"table => '$tbl0', column => 'lang', " +
-            s"target_files => 8)").collect()
-          r
-        })
+        val root = rewriteGroupedChain(s, d)
         val tbl = s"prn.rg_${d.replaceAll("[^A-Za-z0-9]", "_")}"
         graft.sources.GraftCatalog.registerTable(tbl, root)
         s.sql(s"""SELECT lang, count(*) AS n_docs,
@@ -2999,25 +2919,7 @@ object CoreQueries {
     // hash.
     Q("q_sql_prune_str",
       (s, d) => {
-        val root = langChainCache.computeIfAbsent((s, d), { _ =>
-          val r = Tables.matDir(s"langchain_${System.nanoTime}", s, d)
-          s.conf.set("spark.sql.catalog.graft",
-            classOf[graft.sources.GraftCatalog].getName)
-          val tbl = s"lng.t_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-          s.sql(s"""CREATE TABLE graft.$tbl (
-                   |  doc_id BIGINT, lang STRING, n_chars BIGINT)
-                   |USING graft LOCATION '$r'
-                   |TBLPROPERTIES ('cluster'='lang|lang,doc_id',
-                   |  'key'='doc_id')""".stripMargin)
-          val view = s"lng_src_${d.replaceAll("[^A-Za-z0-9]", "_")}"
-          Tables.load(s, d, "documents")
-            .select("doc_id", "lang", "n_chars")
-            .createOrReplaceTempView(view)
-          s.sql(s"INSERT INTO graft.$tbl " +
-            s"SELECT doc_id, lang, n_chars FROM $view")
-          graft.sources.ManifestPrune.compactCommit(s, r, nFiles = 8)
-          tbl
-        })
+        val root = langChainTable(s, d)
         s.sql(s"""SELECT count(*) AS n_docs,
                  |  sum(n_chars) AS sum_chars,
                  |  min(doc_id) AS min_id

@@ -105,19 +105,15 @@ object SimilarityQueries {
     * [[IvfIndex.searchIndexed]]. Deterministic centroids (lowest-8
     * vec_ids, zero Lloyd iterations) keep the whole path
     * SQL-expressible for the oracle. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   private def ivfIndexDir(s: org.apache.spark.sql.SparkSession,
                           d: String): String =
-    ivfIndexCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("ivfIndexCache", s, d) {
       val e = scaled(s, d)
       val emb = e.select(col("vec_id"), col("sv").as("embedding"))
       val dir = graft.Tables.matDir("ivf_index", s, d)
       IvfIndex.buildIndex(emb, ivfCentroids(e), dir, simScaled)
       dir
-    })
+    }
 
   /** q_ann_incremental's index: built on PART of the corpus, then
     * grown to the full corpus through [[IvfIndex.extendIndex]] —
@@ -125,13 +121,9 @@ object SimilarityQueries {
     * assignment makes the grown index row-identical to a full
     * rebuild, so the q_ann_ivf oracle verifies the incremental path
     * end-to-end. */
-  private val ivfIncCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   private def ivfIncIndexDir(s: org.apache.spark.sql.SparkSession,
                              d: String): String =
-    ivfIncCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("ivfIncCache", s, d) {
       val e = scaled(s, d)
       val emb = e.select(col("vec_id"), col("sv").as("embedding"))
       val dir = graft.Tables.matDir("ivf_index_inc", s, d)
@@ -141,24 +133,20 @@ object SimilarityQueries {
       IvfIndex.extendIndex(emb.filter(col("vec_id") % 3 === 2), cents,
         dir, simScaled)
       dir
-    })
+    }
 
   /** q_ann_graph's persisted per-cell graph index (the IVF layout
     * plus an adjacency column), built ONCE per (session, sf dir) over
     * the same deterministic centroids as the IVF index. */
-  private val graphIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-
   private def graphIndexDir(s: org.apache.spark.sql.SparkSession,
                             d: String): String =
-    graphIndexCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("graphIndexCache", s, d) {
       val e = scaled(s, d)
       val dir = graft.Tables.matDir("graph_index", s, d)
       GraphAnn.buildGraphIndex(e, ivfCentroids(e), dir, m = 8,
         simScaled)
       dir
-    })
+    }
 
   /** Cross-module access to the battery's persisted ANN search state —
     * (index dir, centroid table, exact scaled-cosine sim) plus the

@@ -101,15 +101,12 @@ object ManifestPrune {
   private[sources] def dirFact[T](dir: String, key: String)
                                  (compute: => T): T = {
     val listing = ChainStorage.forPath(dir).list(dir).sorted
-    val cur = dirFacts.get(dir)
-    val entry =
+    // one atomic swap: callers that see the same listing share one
+    // entry instead of replacing each other's facts
+    val entry = dirFacts.compute(dir, (_, cur) =>
       if (cur != null && cur.listing == listing) cur
-      else {
-        val e = DirFacts(listing,
-          scala.collection.concurrent.TrieMap.empty[String, Any])
-        dirFacts.put(dir, e)
-        e
-      }
+      else DirFacts(listing,
+        scala.collection.concurrent.TrieMap.empty[String, Any]))
     entry.vals.getOrElseUpdate(key, compute).asInstanceOf[T]
   }
 
@@ -131,18 +128,15 @@ object ManifestPrune {
                                      dv: String): Long =
     dirFact(dv, "count") { immutableParquet(s, dv).count() }
 
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   /** Write the clustered documents layout + its manifest once per
     * (session, sf dir); returns the layout root. `data/` holds the
     * range-partitioned files, `manifest/` one row per file:
     * (file, min_key, max_key, n_rows). */
   def ensureLayout(s: SparkSession, d: String): String =
-    layoutCache.computeIfAbsent((s, d), { _ =>
+    graft.Tables.once("ManifestPrune.layoutCache", s, d) {
       buildLayout(graft.Tables.load(s, d, "documents"),
         graft.Tables.matDir("manifest_docs", s, d), nFiles = 8)
-    })
+    }
 
   /** Plan a range scan: the manifest names the files whose stats
     * interval overlaps [lo, hi]. Driver-held list, one row per file —

@@ -26,14 +26,11 @@ import org.apache.spark.sql.functions._
   */
 object SchemaEvolution {
 
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   /** Write the two-generation layout once per (session, sf dir);
     * returns the layout root. Generation membership is doc_id parity —
     * partitioning-independent and reproducible in the oracle. */
   def ensureLayout(s: SparkSession, d: String): String =
-    layoutCache.computeIfAbsent((s, d), { _ =>
+    graft.Tables.once("SchemaEvolution.layoutCache", s, d) {
       val root = graft.Tables.matDir("schema_evo", s, d)
       val docs = graft.Tables.load(s, d, "documents")
       docs.filter(col("doc_id") % 2 === 0)
@@ -43,7 +40,7 @@ object SchemaEvolution {
         .select("doc_id", "source", "n_chars", "lang")
         .write.mode("overwrite").parquet(s"$root/gen=2")
       root
-    })
+    }
 
   /** The reconciled read over every generation: one scan, merged
     * schema, generation-1 rows null-filled for the added column. */

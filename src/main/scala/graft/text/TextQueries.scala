@@ -26,13 +26,9 @@ object TextQueries {
     * invocation cost a 0.46 s single-task driver job on every bench
     * pass of both encode queries. The training explode is spread
     * (§2.5: single-row-group gate file). */
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), Seq[String]]()
-
   private[graft] def bpeMerges(s: org.apache.spark.sql.SparkSession,
                                d: String): Seq[String] =
-    bpeMergeCache.computeIfAbsent((s, d), { _ =>
+    Tables.once("bpeMergeCache", s, d) {
       Tables.spread(Tables.load(s, d, "documents"))
         .select(explode(tokens(col("text"))).as("word"))
         .filter(length(col("word")) >= 2)
@@ -42,7 +38,7 @@ object TextQueries {
         .groupBy("bg").agg(count(lit(1)).as("cnt"))
         .orderBy(desc("cnt"), asc("bg")).limit(30)
         .collect().map(_.getString(0)).toSeq
-    })
+    }
 
   /** The rank-fold BPE encoder as a pure expression over `word`:
     * sentinel form "#h# #e# ..." then one exhaustive left-to-right
@@ -2521,11 +2517,8 @@ object TextQueries {
     * table, the battery's stand-in for the nightly sketch build
     * (IvfIndex.buildIndex precedent: real parquet, path-only cache). */
   object SketchTable {
-    private val done = new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), String]()
-
     def ensure(s: SparkSession, d: String): String =
-      done.computeIfAbsent((s, d), { _ =>
+      Tables.once("SketchTable.done", s, d) {
         val dir = Tables.matDir("hll_vocab", s, d)
         Tables.load(s, d, "documents")
           .select(col("source"), col("lang"),
@@ -2534,6 +2527,6 @@ object TextQueries {
           .agg(hll_sketch_agg(col("tok"), 12).as("sketch"))
           .write.mode("overwrite").parquet(dir)
         dir
-      })
+      }
   }
 }

@@ -73,7 +73,7 @@ object BloomIndex {
             key: String = "doc_id", bitsPerKey: Long = 10L): String = {
     val mf = ManifestPrune.manifestOf(root, version)
     val maxRows = math.max(1L,
-      s.read.parquet(mf).agg(max(col("n_rows"))).head().getLong(0))
+      ManifestPrune.dirRows(s, mf).longs("n_rows").max)
     val agg = new BloomFilterAggregate(
       GraftSqlShims.expression(xxhash64(col(key))),
       CatLit(maxRows), CatLit(maxRows * bitsPerKey))
@@ -102,26 +102,26 @@ object BloomIndex {
     val src = indexOf(root, fromVersion).getOrElse(
       throw new IllegalStateException(
         s"no bloom index for version $fromVersion of $root to extend"))
-    val m0 = s.read.parquet(
-      ManifestPrune.manifestOf(root, fromVersion)).select("file")
-    val m1 = s.read.parquet(
-      ManifestPrune.manifestOf(root, toVersion)).select("file")
-    val newFiles = ManifestPrune.collectFileList(s, m1.except(m0),
-      s"bloom extend new files of v$toVersion")
-    val carried = s.read.parquet(src)
-      .join(m1.withColumnRenamed("file", "f"),
-        col("file") === col("f"), "left_semi")
-    val meta = readMeta(src)
-    val maxRows = meta.getOrElse(math.max(1L, s.read.parquet(
+    val m0 = ManifestPrune.dirRows(s,
+      ManifestPrune.manifestOf(root, fromVersion)).strings("file").toSet
+    val m1 = ManifestPrune.dirRows(s,
       ManifestPrune.manifestOf(root, toVersion))
-      .agg(max(col("n_rows"))).head().getLong(0)))
+    val f1 = m1.strings("file")
+    val newFiles = ManifestPrune.boundedFiles(s,
+      f1.iterator.filterNot(m0).distinct,
+      s"bloom extend new files of v$toVersion")
+    val carried = ManifestPrune.immutableParquet(s, src)
+      .filter(col("file").isInCollection(f1))
+    val meta = readMeta(src)
+    val maxRows = meta.getOrElse(math.max(1L, m1.longs("n_rows").max))
     val fresh =
       if (newFiles.isEmpty) carried.limit(0)
       else {
         val agg = new BloomFilterAggregate(
           GraftSqlShims.expression(xxhash64(col(key))),
           CatLit(maxRows), CatLit(maxRows * bitsPerKey))
-        s.read.parquet(newFiles: _*)
+        ManifestPrune.readFiles(s,
+            ManifestPrune.manifestOf(root, toVersion), newFiles)
           .groupBy(col("_metadata.file_path").as("file"))
           .agg(GraftSqlShims.column(agg.toAggregateExpression())
             .as("bloom"))
@@ -198,7 +198,7 @@ object BloomIndex {
     val base =
       if (files.isEmpty) ManifestPrune.readVersion(s, mf).limit(0)
       else ManifestPrune.applyEqDel(s,
-        ManifestPrune.applyDv(s, s.read.parquet(files: _*),
+        ManifestPrune.applyDv(s, ManifestPrune.readFiles(s, mf, files),
           ManifestPrune.dvOf(root, version)),
         ManifestPrune.eqDelOf(root, version))
     base.filter(col(key).isInCollection(keys))

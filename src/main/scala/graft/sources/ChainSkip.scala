@@ -233,9 +233,9 @@ private[graft] object ChainSkip {
     * so the file drops; otherwise the closed-interval overlap test
     * runs with null bounds as ±inf (the string upper bound is null
     * whenever the max exceeded the 64-char truncation budget).
-    * Comparisons evaluate IN Spark over the manifest parquet, so
-    * string ordering is the same UTF8-binary ordering the min/max
-    * aggregation used. */
+    * Comparisons evaluate in Catalyst over the driver-held manifest
+    * rows (a LocalRelation — no job), so string ordering is the same
+    * UTF8-binary ordering the min/max aggregation used. */
   private val colFilesCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Long, Map[String, Bounds], Map[String, SBounds]),
     Option[Seq[String]]]()
@@ -248,8 +248,8 @@ private[graft] object ChainSkip {
     // memoized per immutable snapshot + constraint set (same
     // commit-instant key as every planning cache here — a chain
     // REBUILT at the same path can't serve a stale plan): repeated
-    // executions of a multi-column query pay the manifest aggregation
-    // job once, like the neighboring bucketedFiles/columnStatsFor
+    // executions of a multi-column query plan once, like the
+    // neighboring bucketedFiles/columnStatsFor
     val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
     colFilesCache.computeIfAbsent((root, version, ts, bounds, sbounds),
       _ => colStatsFilesUncached(s, root, version, bounds, sbounds))
@@ -259,7 +259,9 @@ private[graft] object ChainSkip {
       s: SparkSession, root: String, version: Long,
       bounds: Map[String, Bounds], sbounds: Map[String, SBounds])
       : Option[Seq[String]] = {
-    val m = ManifestPrune.immutableParquet(s,
+    // the same Catalyst comparisons, over the driver-held manifest
+    // rows (a LocalRelation: filter + collect run no job)
+    val m = ManifestPrune.localFrame(s,
       ManifestPrune.manifestOf(root, version))
     def keep(mapCol: String, c: String,
              qlo: Option[org.apache.spark.sql.Column],

@@ -1288,18 +1288,14 @@ private[sources] object GraftChainScan {
     * equality-delete sidecar parts riding to every task — the masked
     * snapshot plan shared by the batch scan and the row stream's
     * first batch. Interval bounds (from pushed predicates) prune the
-    * file list manifest-side before anything reaches the driver. */
+    * driver-held manifest rows; planning runs no Spark job. */
   def snapshotPartitions(s: SparkSession, root: String, version: Long,
                          skipBounds: Map[String, ChainSkip.Bounds] =
                            Map.empty): Array[InputPartition] = {
     val mf = ManifestPrune.manifestOf(root, version)
     val files = ChainSkip.plannedFiles(s, root, version, skipBounds)
-      .getOrElse(ManifestPrune.cachedFileList(s, mf,
-        s"catalog scan of $root v$version") {
-        ManifestPrune.collectFileList(s,
-          ManifestPrune.immutableParquet(s, mf).select("file"),
-          s"catalog scan of $root v$version")
-      })
+      .getOrElse(ManifestPrune.versionFiles(s, mf,
+        s"catalog scan of $root v$version"))
     val dv = sidecarParts(ManifestPrune.dvOf(root, version))
     val eq = sidecarParts(ManifestPrune.eqDelOf(root, version))
     files.map(f =>

@@ -554,11 +554,12 @@ private[sources] class GraftRowMicroBatchStream(
     val maskChanged =
       ManifestPrune.dvOf(root, v) != ManifestPrune.dvOf(root, v - 1) ||
         ManifestPrune.eqDelOf(root, v) != ManifestPrune.eqDelOf(root, v - 1)
-    val prev = ManifestPrune.immutableParquet(s,
-      ManifestPrune.manifestOf(root, v - 1)).select("file")
-    val cur = ManifestPrune.immutableParquet(s,
-      ManifestPrune.manifestOf(root, v)).select("file")
-    val removedAny = prev.except(cur).limit(1).count() > 0L
+    val prev = ManifestPrune.dirRows(s,
+      ManifestPrune.manifestOf(root, v - 1)).strings("file")
+    val cur = ManifestPrune.dirRows(s,
+      ManifestPrune.manifestOf(root, v)).strings("file")
+    val (prevSet, curSet) = (prev.toSet, cur.toSet)
+    val removedAny = !prevSet.subsetOf(curSet)
     if (maskChanged || removedAny || note.startsWith("restore:")) {
       if (skipChangeCommits) Seq.empty
       else throw new IllegalStateException(
@@ -567,7 +568,8 @@ private[sources] class GraftRowMicroBatchStream(
           "it. Read the change feed instead (readStream.table(" +
           "\"<catalog>.db.t.changes\") or format(\"graft-table\")), " +
           "or set skipChangeCommits=true to drop such commits")
-    } else ManifestPrune.collectFileList(s, cur.except(prev),
+    } else ManifestPrune.boundedFiles(s,
+      cur.iterator.filterNot(prevSet).distinct,
       s"row-stream append v$v of $root")
   }
 

@@ -2,16 +2,20 @@ package graft.sources
 
 import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Executor-side decoding of parquet Groups (parquet-hadoop's example
-  * API — no Spark-internal reader classes) into Spark rows/values,
-  * shared by the change-feed reader ([[FeedParquetReaderFactory]])
-  * and the catalog table scan ([[GraftChainScan]]). Fields resolve BY
-  * NAME against the file schema, primitives convert directly, INT96
-  * timestamps decode to micros. Complex/decimal columns are rejected
-  * with a clear error — the chain's tables are flat by construction. */
+/** Decoding of parquet Groups (parquet-hadoop's example API — no
+  * Spark-internal reader classes) into Spark rows/values, shared by
+  * the change-feed reader ([[FeedParquetReaderFactory]]), the catalog
+  * table scan ([[GraftChainScan]]) and the driver-side reads of
+  * protocol-owned metadata dirs ([[readRows]]: manifests, deletion
+  * vectors, equality-delete keys). Fields resolve BY NAME against the
+  * file schema, primitives convert directly, INT96 timestamps decode
+  * to micros; decimals, structs and maps (the manifest's stats
+  * columns) decode to their Catalyst forms. Arrays are rejected with
+  * a clear error — no chain table or manifest carries one. */
 private[sources] object GroupParquet {
 
   /** One field of `g` as a Spark-internal value for `dataType`
@@ -20,22 +24,31 @@ private[sources] object GroupParquet {
     val gt = g.getType
     if (!gt.containsField(name)) return null
     val i = gt.getFieldIndex(name)
-    if (g.getFieldRepetitionCount(i) == 0) return null
+    if (g.getFieldRepetitionCount(i) == 0) null
+    else valueAt(g, i, dataType)
+  }
+
+  /** The (single) value of field `i` of `g`, known to be set. */
+  private def valueAt(g: Group, i: Int, dataType: DataType): Any = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    def physical = g.getType.getType(i).asPrimitiveType()
+      .getPrimitiveTypeName
     dataType match {
       case StringType => UTF8String.fromString(g.getString(i, 0))
       case LongType => g.getLong(i, 0)
       case IntegerType => g.getInteger(i, 0)
+      case ShortType => g.getInteger(i, 0).toShort
+      case ByteType => g.getInteger(i, 0).toByte
       case DoubleType => g.getDouble(i, 0)
       case FloatType => g.getFloat(i, 0)
       case BooleanType => g.getBoolean(i, 0)
       case BinaryType => g.getBinary(i, 0).getBytes
       case DateType => g.getInteger(i, 0)
+      case TimestampNTZType => g.getLong(i, 0)
       case TimestampType =>
-        gt.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-          case org.apache.parquet.schema.PrimitiveType
-              .PrimitiveTypeName.INT64 => g.getLong(i, 0)
-          case org.apache.parquet.schema.PrimitiveType
-              .PrimitiveTypeName.INT96 =>
+        physical match {
+          case PrimitiveTypeName.INT64 => g.getLong(i, 0)
+          case PrimitiveTypeName.INT96 =>
             // 8 LE bytes nanos-of-day + 4 LE bytes julian day
             val b = g.getInt96(i, 0).getBytes
             val buf = java.nio.ByteBuffer.wrap(b)
@@ -46,9 +59,37 @@ private[sources] object GroupParquet {
           case t => throw new UnsupportedOperationException(
             s"timestamp physical type $t")
         }
+      // Spark writes precision <= 9 as INT32, <= 18 as INT64, wider
+      // as a big-endian two's-complement byte array
+      case d: DecimalType => physical match {
+        case PrimitiveTypeName.INT32 =>
+          Decimal(g.getInteger(i, 0).toLong, d.precision, d.scale)
+        case PrimitiveTypeName.INT64 =>
+          Decimal(g.getLong(i, 0), d.precision, d.scale)
+        case _ => Decimal(new java.math.BigDecimal(
+          new java.math.BigInteger(g.getBinary(i, 0).getBytes), d.scale),
+          d.precision, d.scale)
+      }
+      case st: StructType => decode(g.getGroup(i, 0), st)
+      // MAP group > repeated key_value group > (key, value)
+      case MapType(kt, vt, _) =>
+        val m = g.getGroup(i, 0)
+        val n = m.getFieldRepetitionCount(0)
+        val ks = new Array[Any](n)
+        val vs = new Array[Any](n)
+        var j = 0
+        while (j < n) {
+          val kv = m.getGroup(0, j)
+          ks(j) = valueAt(kv, 0, kt)
+          vs(j) = if (kv.getFieldRepetitionCount(1) == 0) null
+            else valueAt(kv, 1, vt)
+          j += 1
+        }
+        new ArrayBasedMapData(new GenericArrayData(ks),
+          new GenericArrayData(vs))
       case t => throw new UnsupportedOperationException(
-        s"cannot decode column '$name' of type ${t.simpleString} — " +
-          "the chain's tables are flat primitive columns")
+        s"cannot decode column '${g.getType.getFieldName(i)}' of type " +
+          s"${t.simpleString}")
     }
   }
 
@@ -90,6 +131,58 @@ private[sources] object GroupParquet {
         while (g != null) { f(g); g = r.read() }
       } finally r.close()
     }
+
+  /** A parquet file's footer (schema, row groups, key-value
+    * metadata) — one ranged read, no data pages. */
+  def footer(path: String, conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val r = openFile(path, conf)
+    try r.getFooter finally r.close()
+  }
+
+  private def openFile(path: String,
+                       conf: org.apache.hadoop.conf.Configuration) =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), conf))
+
+  /** Every row of the parquet files `paths`, decoded on the calling
+    * thread — no Spark job — into Catalyst rows shaped by `schema`.
+    * Only `schema`'s columns are read from the files (the column
+    * chunks of the others are never fetched). The driver-side reader
+    * of small protocol-owned dirs ([[ManifestPrune.dirRows]]). */
+  def readRows(paths: Seq[String], schema: StructType,
+               conf: org.apache.hadoop.conf.Configuration)
+      : IndexedSeq[InternalRow] = {
+    import scala.jdk.CollectionConverters._
+    val out = IndexedSeq.newBuilder[InternalRow]
+    val wanted = schema.fieldNames.toSet
+    paths.foreach { p =>
+      val r = openFile(p, conf)
+      try {
+        val fileSchema = r.getFooter.getFileMetaData.getSchema
+        val proj = new org.apache.parquet.schema.MessageType(
+          fileSchema.getName,
+          fileSchema.getFields.asScala.filter(t => wanted(t.getName))
+            .asJava)
+        r.setRequestedSchema(proj)
+        val io = new org.apache.parquet.io.ColumnIOFactory()
+          .getColumnIO(proj, fileSchema)
+        var pages = r.readNextRowGroup()
+        while (pages != null) {
+          val rr = io.getRecordReader(pages,
+            new org.apache.parquet.example.data.simple.convert
+              .GroupRecordConverter(proj))
+          var n = 0L
+          while (n < pages.getRowCount) {
+            out += decode(rr.read(), schema); n += 1
+          }
+          pages = r.readNextRowGroup()
+        }
+      } finally r.close()
+    }
+    out.result()
+  }
 
   // ------------------------------------------------ the WRITE half
 

@@ -22,18 +22,22 @@ import org.apache.spark.sql.functions._
   */
 object ManifestPrune {
 
-  /** DRIVER-HELD FILE-LIST BOUND. Every planning path here ends in a
+  /** DRIVER-HELD FILE-LIST BOUND. Planning runs on the driver over
+    * the manifest rows held there ([[dirRows]]) and ends in a
     * path-list read (`spark.read.parquet(files: _*)`), so the file
-    * list itself must fit on the driver — the same design point as an
-    * Iceberg planner, which is comfortable to ~10⁶ manifest entries
-    * (a 100 TB table at a healthy 128 MB/file is ~8·10⁵ files). The
-    * bound is enforced, not assumed: a manifest that exceeds it fails
-    * fast with a pointer to [[compactLayout]] instead of silently
-    * OOMing the driver — at that point the table needs compaction (or
-    * an Iceberg-style manifest TREE, which shards the list and prunes
-    * at the manifest-file grain before any leaf list materializes).
-    * Overridable per session via `graft.manifest.maxDriverFiles` (the
-    * spec's adversarial-count lever). */
+    * list a plan returns must fit on the driver — the same design
+    * point as an Iceberg planner, which is comfortable to ~10⁶
+    * manifest entries (a 100 TB table at a healthy 128 MB/file is
+    * ~8·10⁵ files). The bound is enforced on every list a plan
+    * returns, not assumed: a list that exceeds it fails fast at
+    * cap + 1 entries with a pointer to [[compactLayout]] instead of
+    * building an unbounded plan — at that point the table needs
+    * compaction (or an Iceberg-style manifest TREE, which shards the
+    * list and prunes at the manifest-file grain before any leaf list
+    * materializes). A selective plan over a larger manifest still
+    * succeeds: the bound applies to what is planned. Overridable per
+    * session via `graft.manifest.maxDriverFiles` (the spec's
+    * adversarial-count lever). */
   private def maxDriverFiles(s: SparkSession): Long =
     s.conf.getOption("graft.manifest.maxDriverFiles")
       .map(_.toLong).getOrElse(1000000L)
@@ -42,15 +46,13 @@ object ManifestPrune {
       // would disable the fail-fast guard entirely)
       .max(1L).min(Int.MaxValue - 1L)
 
-  /** Collect a one-string-column frame of file paths under the bound;
-    * the collect itself is capped at bound+1 rows, so an oversized
-    * manifest costs one truncated scan, never an unbounded collect. */
-  private[sources] def collectFileList(s: SparkSession,
-                              files: org.apache.spark.sql.DataFrame,
-                              what: String): Seq[String] = {
+  /** Take a driver-held file list under the bound: at most cap + 1
+    * entries are ever materialized, and cap + 1 fails. */
+  private[sources] def boundedFiles(s: SparkSession,
+                                    files: Iterator[String],
+                                    what: String): Seq[String] = {
     val cap = maxDriverFiles(s)
-    val got = files.limit((cap + 1).min(Int.MaxValue.toLong).toInt)
-      .collect().map(_.getString(0)).toSeq
+    val got = files.take((cap + 1).toInt).toVector
     if (got.length > cap)
       throw new IllegalStateException(
         s"$what exceeds graft.manifest.maxDriverFiles=$cap files — " +
@@ -59,40 +61,40 @@ object ManifestPrune {
     got
   }
 
-  /** A driver-held file list served through the snapshot cache. The
-    * fail-fast bound is re-checked against the CURRENT session's cap
-    * on every hit — a cached list must obey the same driver-memory
-    * contract as a fresh collect (the cap is a session conf and can
-    * tighten between uses). */
-  private[sources] def cachedFileList(s: SparkSession, dir: String,
-                                      what: String)
-                                     (compute: => Seq[String])
-      : Seq[String] = {
-    val got = dirFact(dir, "files")(compute)
-    val cap = maxDriverFiles(s)
-    if (got.length > cap)
-      throw new IllegalStateException(
-        s"$what exceeds graft.manifest.maxDriverFiles=$cap files — " +
-          "compact the layout (ManifestPrune.compactLayout) or raise " +
-          "the bound")
-    got
-  }
+  /** Collect a one-string-column frame of file paths under the bound;
+    * the collect itself is capped at bound+1 rows, so an oversized
+    * plan costs one truncated scan, never an unbounded collect. Over
+    * a [[localFrame]] the collect runs no Spark job. */
+  private[sources] def collectFileList(s: SparkSession,
+                              files: org.apache.spark.sql.DataFrame,
+                              what: String): Seq[String] =
+    boundedFiles(s, files.limit((maxDriverFiles(s) + 1).toInt)
+      .collect().iterator.map(_.getString(0)), what)
 
   // ------------------------------------------- snapshot metadata cache
   /** Planner-side SNAPSHOT METADATA CACHE (Iceberg's manifest-cache
-    * stance): per-directory planning facts — parquet schemas, the
-    * driver-held file lists planning already materializes, manifest
-    * row sums, sidecar cardinalities — are memoized so re-reading the
-    * same immutable snapshot costs zero Spark jobs. The cache is
-    * SELF-VALIDATING, never trust-based: every hit re-lists the
-    * directory (one metadata RPC, no job) and compares the child-name
-    * set the entry was computed under. The protocol never rewrites a
-    * published file in place — every parquet (over)write mints fresh
-    * part-file names — so an unchanged listing proves unchanged bytes,
-    * and a recompacted/overwritten dir invalidates itself without any
-    * write-site coupling. Holds METADATA only (the facts an Iceberg
-    * snapshot carries in its manifest list); query RESULTS always
-    * recompute from the data files. */
+    * stance): every protocol-owned parquet dir — `manifest*`, `dv_*`
+    * and equality-delete sidecars — is immutable once written, so its
+    * planning facts are read ON THE DRIVER, once, and held here:
+    *   - its schema, from one part file's footer ([[footerSchema]] —
+    *     what Spark's inference task reads, without the job);
+    *   - its row count, from the footers' row-group counts;
+    *   - its rows, decoded through parquet-hadoop ([[dirRows]]).
+    * Planning a table read — file lists, range and column-stats
+    * pruning, live counts, history, change-feed file sets, the vacuum
+    * keep-set — is then Scala over the rows, or Catalyst over a
+    * [[localFrame]], and runs no Spark job. Data files are still read
+    * and written by Spark; query RESULTS are never cached.
+    *
+    * The cache is SELF-VALIDATING, never trust-based: every hit
+    * re-lists the directory (one metadata RPC, no job) and compares
+    * the child-name set the entry was computed under. The protocol
+    * never rewrites a published file in place — every parquet
+    * (over)write mints fresh part-file names — so an unchanged listing
+    * proves unchanged bytes, and a recompacted/overwritten dir
+    * invalidates itself without any write-site coupling. The held
+    * state is bounded by the retained snapshots: [[expireVersions]]
+    * drops the entries of every dir it deletes. */
   private case class DirFacts(listing: Seq[String],
       vals: scala.collection.concurrent.TrieMap[String, Any])
   private val dirFacts =
@@ -110,23 +112,150 @@ object ManifestPrune {
     entry.vals.getOrElseUpdate(key, compute).asInstanceOf[T]
   }
 
-  /** Read a (small, protocol-owned) parquet dir with its schema served
-    * from the snapshot cache: the first read per dir pays the one
-    * footer-inference job, every later read of the unchanged dir plans
-    * with zero jobs. The DATA read itself stays in the query plan —
-    * only the planning-time inference is memoized. */
-  private[sources] def immutableParquet(s: SparkSession,
-                                        dir: String): DataFrame = {
-    val sch = dirFact(dir, "schema") { s.read.parquet(dir).schema }
-    s.read.schema(sch).parquet(dir)
+  /** Dirs with cached facts (for specs of the cache's bound). */
+  private[sources] def cachedDirs: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    dirFacts.keySet.asScala.toSet
   }
 
+  /** Forget the cached facts of every dir under `root` that no longer
+    * exists — what keeps the cache bounded once vacuum deletes. */
+  private def forgetDeletedUnder(root: String): Unit = {
+    val st = ChainStorage.forPath(root)
+    dirFacts.keySet.removeIf(d => d.startsWith(s"$root/") && !st.isDir(d))
+  }
+
+  /** A dir's parquet part files, sorted — Spark's rule: names
+    * starting with `_` or `.` are metadata, not data. `None` when the
+    * dir holds sub-directories (a hive-partitioned layout, whose
+    * schema includes the partition columns Spark infers). */
+  private def partFiles(s: SparkSession, dir: String): Option[Seq[String]] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val kids = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listStatus(p).toSeq
+      .filterNot(k => k.getPath.getName.startsWith("_") ||
+        k.getPath.getName.startsWith("."))
+    if (kids.exists(_.isDirectory)) None
+    else Some(kids.map(_.getPath.toString).sorted)
+  }
+
+  /** The Spark schema of one parquet file, from its footer alone. */
+  private[sources] def fileSchema(s: SparkSession, file: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val conf = s.sparkContext.hadoopConfiguration
+    @annotation.nowarn("cat=deprecation")
+    val footer = new org.apache.parquet.hadoop.Footer(
+      new org.apache.hadoop.fs.Path(file), GroupParquet.footer(file, conf))
+    nullable(ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(s.sessionState.conf)))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
+  /** Spark reads every file-source column as nullable. */
+  private def nullable(t: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case m: MapType => m.copy(valueType = nullable(m.valueType),
+        valueContainsNull = true)
+      case a: ArrayType => a.copy(elementType = nullable(a.elementType),
+        containsNull = true)
+      case other => other
+    }
+  }
+
+  /** A protocol-owned dir's schema, read from its first part file's
+    * footer on the driver (no inference job) and held as a snapshot
+    * fact. A partitioned dir falls back to Spark's inference. */
+  private[sources] def footerSchema(s: SparkSession, dir: String)
+      : org.apache.spark.sql.types.StructType =
+    dirFact(dir, "schema") {
+      partFiles(s, dir).flatMap(_.headOption) match {
+        case Some(first) => fileSchema(s, first)
+        case None => s.read.parquet(dir).schema
+      }
+    }
+
+  /** Read a (small, protocol-owned) parquet dir with its schema served
+    * from the snapshot cache: planning the read runs no job. The DATA
+    * read itself stays in the query plan — only the schema is a
+    * snapshot fact. */
+  private[sources] def immutableParquet(s: SparkSession,
+                                        dir: String): DataFrame =
+    s.read.schema(footerSchema(s, dir)).parquet(dir)
+
+  /** A protocol-owned dir's rows, held on the driver: schema plus rows
+    * in part-file order. */
+  private[sources] case class DirRows(
+      schema: org.apache.spark.sql.types.StructType,
+      rows: IndexedSeq[org.apache.spark.sql.Row]) {
+    def has(c: String): Boolean = schema.fieldNames.contains(c)
+    def strings(c: String): IndexedSeq[String] = {
+      val i = schema.fieldIndex(c)
+      rows.map(_.getString(i))
+    }
+    def longs(c: String): IndexedSeq[Long] = {
+      val i = schema.fieldIndex(c)
+      rows.map(r => if (r.isNullAt(i)) 0L else r.getLong(i))
+    }
+  }
+
+  /** Columns [[dirRows]] leaves on disk: the per-file NDV sketches are
+    * KBs per row and only the NDV estimate reads them, through
+    * Spark. */
+  private val DiskOnlyCols = Set("cstats_hll")
+
+  /** The rows of a protocol-owned parquet dir (every column but
+    * [[DiskOnlyCols]]), decoded on the driver through parquet-hadoop
+    * and held as a snapshot fact — a manifest costs one footer and a
+    * few column chunks per part file, no Spark job. */
+  private[sources] def dirRows(s: SparkSession, dir: String): DirRows =
+    dirFact(dir, "rows") {
+      val sch = org.apache.spark.sql.types.StructType(
+        footerSchema(s, dir).fields.filterNot(f => DiskOnlyCols(f.name)))
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(sch)
+      DirRows(sch, GroupParquet.readRows(partFiles(s, dir).getOrElse(
+          throw new IllegalStateException(s"$dir is partitioned")),
+        sch, s.sparkContext.hadoopConfiguration)
+        .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
+    }
+
+  /** [[dirRows]] as a DataFrame over a LocalRelation: filter, project
+    * and limit over it collect on the driver with no Spark job, so a
+    * planner keeps its Catalyst expressions without paying a scan. */
+  private[sources] def localFrame(s: SparkSession, dir: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val m = dirRows(s, dir)
+    s.createDataFrame(m.rows.asJava, m.schema)
+  }
+
+  /** Row count of a protocol-owned dir from its footers' row-group
+    * counts — a DV sidecar's cardinality, a manifest's file count. */
+  private def footerCount(s: SparkSession, dir: String): Long =
+    dirFact(dir, "count") {
+      partFiles(s, dir).getOrElse(Seq.empty).map(f =>
+        GroupParquet.footer(f, s.sparkContext.hadoopConfiguration)
+          .getBlocks.stream().mapToLong(_.getRowCount).sum()).sum
+    }
+
   /** Cardinality of a published DV sidecar — a snapshot fact (the
-    * number Iceberg keeps as a manifest's position-delete count),
-    * served from the cache after the first count job. */
+    * number Iceberg keeps as a manifest's position-delete count). */
   private[sources] def dvHiddenCount(s: SparkSession,
                                      dv: String): Long =
-    dirFact(dv, "count") { immutableParquet(s, dv).count() }
+    footerCount(s, dv)
+
+  /** The file list a manifest names, under the driver bound. */
+  private[sources] def versionFiles(s: SparkSession, manifestDir: String,
+                                    what: String): Seq[String] =
+    boundedFiles(s, dirRows(s, manifestDir).strings("file").iterator, what)
+
+  /** Sum of a manifest's per-file physical row counts. */
+  private def physicalRows(s: SparkSession, manifestDir: String): Long =
+    dirRows(s, manifestDir).longs("n_rows").sum
 
   /** Write the clustered documents layout + its manifest once per
     * (session, sf dir); returns the layout root. `data/` holds the
@@ -143,17 +272,32 @@ object ManifestPrune {
     * the same bounded state an Iceberg planner keeps. */
   def planFiles(s: SparkSession, root: String, lo: Long,
                 hi: Long): Seq[String] =
-    collectFileList(s,
-      immutableParquet(s, s"$root/manifest")
-        .filter(col("min_key") <= hi && col("max_key") >= lo)
-        .select("file"),
+    planOverlapping(s, dirRows(s, s"$root/manifest"), lo, hi,
       s"range plan [$lo, $hi]")
+
+  /** Files of manifest rows whose integral [min_key, max_key] overlaps
+    * [lo, hi] (null stats never overlap), under the driver bound. */
+  private def planOverlapping(s: SparkSession, m: DirRows, lo: Long,
+                              hi: Long, what: String,
+                              fileCol: String = "file"): Seq[String] = {
+    val (iF, iLo, iHi) = (m.schema.fieldIndex(fileCol),
+      m.schema.fieldIndex("min_key"), m.schema.fieldIndex("max_key"))
+    boundedFiles(s, m.rows.iterator.filter(overlaps(_, iLo, iHi, lo, hi))
+      .map(_.getString(iF)), what)
+  }
+
+  /** Does a manifest row's integral [min_key, max_key] overlap
+    * [lo, hi]? Null stats (a 0-row placeholder file) never do — the
+    * SQL comparison's answer. */
+  private def overlaps(r: org.apache.spark.sql.Row, iLo: Int, iHi: Int,
+                       lo: Long, hi: Long): Boolean =
+    !r.isNullAt(iLo) && !r.isNullAt(iHi) &&
+      r.getAs[Number](iLo).longValue <= hi &&
+      r.getAs[Number](iHi).longValue >= lo
 
   /** Total file count in the layout (for the pruning assertion). */
   def totalFiles(s: SparkSession, root: String): Long =
-    dirFact(s"$root/manifest", "count") {
-      immutableParquet(s, s"$root/manifest").count()
-    }
+    footerCount(s, s"$root/manifest")
 
   /** The pruned range read: only planned files are opened; the exact
     * predicate is re-applied so overlap-but-no-match files cannot
@@ -165,7 +309,7 @@ object ManifestPrune {
     val base =
       if (files.isEmpty)
         immutableParquet(s, s"$root/data").limit(0)
-      else s.read.parquet(files: _*)
+      else readFiles(s, s"$root/manifest", files)
     base.filter(col("n_chars") >= lo && col("n_chars") <= hi)
   }
 
@@ -189,7 +333,7 @@ object ManifestPrune {
   def buildManifestTree(s: SparkSession, root: String,
                         flatManifest: String, nShards: Int): String = {
     val treeDir = s"$root/manifest_tree"
-    val shards = s.read.parquet(flatManifest)
+    val shards = immutableParquet(s, flatManifest)
       .repartitionByRange(nShards, col("min_key"), col("file"))
     shards.write.mode("overwrite").parquet(s"$treeDir/shards")
     s.read.parquet(s"$treeDir/shards")
@@ -209,11 +353,8 @@ object ManifestPrune {
     * so a selective predicate stays plannable at any table size. */
   def planFilesTree(s: SparkSession, treeDir: String, lo: Long,
                     hi: Long): Seq[String] = {
-    val shardPaths = collectFileList(s,
-      immutableParquet(s, s"$treeDir/list")
-        .filter(col("min_key") <= hi && col("max_key") >= lo)
-        .select(col("shard").as("file")),
-      s"manifest-list shard plan [$lo, $hi]")
+    val shardPaths = planOverlapping(s, dirRows(s, s"$treeDir/list"),
+      lo, hi, s"manifest-list shard plan [$lo, $hi]", fileCol = "shard")
     if (shardPaths.isEmpty) Seq.empty
     else collectFileList(s,
       s.read.parquet(shardPaths: _*)
@@ -229,7 +370,7 @@ object ManifestPrune {
     val files = planFilesTree(s, treeDir, lo, hi)
     val base =
       if (files.isEmpty) immutableParquet(s, s"$root/data").limit(0)
-      else s.read.parquet(files: _*)
+      else readFiles(s, s"$root/manifest", files)
     base.filter(col("n_chars") >= lo && col("n_chars") <= hi)
   }
 
@@ -247,7 +388,7 @@ object ManifestPrune {
                     nFiles: Int): (String, String) = {
     val dataDir = s"$root/data_compact_$nFiles"
     val mfDir = s"$root/manifest_compact_$nFiles"
-    s.read.parquet(s"$root/data")
+    immutableParquet(s, s"$root/data")
       .repartitionByRange(nFiles, col("n_chars"), col("doc_id"))
       .write.mode("overwrite").parquet(dataDir)
     statsManifest(s, dataDir, policy = statsPolicyOf(root))
@@ -319,7 +460,8 @@ object ManifestPrune {
     //    vectors already hide must not be resurrected by the rewrite
     val hit =
       if (hitFiles.isEmpty) table.limit(0)
-      else applyDv(s, s.read.parquet(hitFiles.toIndexedSeq: _*), effDv)
+      else applyDv(s, readFiles(s, baseManifest, hitFiles.toIndexedSeq),
+        effDv)
     val afterDelete = deletes match {
       case Some(del) => hit.join(del.select(key), Seq(key),
         "left_anti")
@@ -354,9 +496,8 @@ object ManifestPrune {
     // refuse up front with a usable message (an empty table is
     // expressed by truncation, not by a merge)
     require(hitFiles.isEmpty || mergedRows.limit(1).count() > 0 ||
-        s.read.parquet(baseManifest)
-          .filter(!col("file").isInCollection(hitFiles.toIndexedSeq))
-          .limit(1).count() > 0,
+        dirRows(s, baseManifest).strings("file")
+          .exists(f => !hitFiles.contains(f)),
       "this merge would delete every live row — an empty table " +
         "cannot be represented by a merged version; truncate instead")
     mergedRows.write.mode("overwrite").parquet(dataV2)
@@ -371,7 +512,7 @@ object ManifestPrune {
     // sidecar; entries for rewritten files are dropped — the rewrite
     // materialized those deletes (the Iceberg rewrite-drops-its-
     // position-deletes rule).
-    val untouched = s.read.parquet(baseManifest)
+    val untouched = immutableParquet(s, baseManifest)
       .filter(if (hitFiles.isEmpty) lit(true)
         else !col("file").isInCollection(hitFiles.toIndexedSeq))
     val spec = specOfManifest(root, baseManifest)
@@ -381,7 +522,7 @@ object ManifestPrune {
       .write.mode("overwrite").parquet(mfV2)
     carrySpecPointer(root, baseManifest, mfV2)
     effDv.foreach { dv =>
-      val carried = s.read.parquet(dv)
+      val carried = immutableParquet(s, dv)
         .filter(if (hitFiles.isEmpty) lit(true)
           else !col("file").isInCollection(hitFiles.toIndexedSeq))
       if (carried.limit(1).count() > 0) {
@@ -434,13 +575,14 @@ object ManifestPrune {
       .join(deletes.select(key), key)
       .select("file", "pos")
     val merged = effDv match {
-      case Some(dv) => s.read.parquet(dv).unionByName(doomed).distinct()
+      case Some(dv) =>
+        immutableParquet(s, dv).unionByName(doomed).distinct()
       case None => doomed.distinct()
     }
     merged.write.mode("overwrite").parquet(dvV)
     // manifest: identical file list — the no-rewrite contract; the
     // sidecar reference rides inside it so one rename publishes both
-    s.read.parquet(baseManifest).write.mode("overwrite").parquet(mfV)
+    immutableParquet(s, baseManifest).write.mode("overwrite").parquet(mfV)
     carrySpecPointer(root, baseManifest, mfV)
     writeDvPointer(root, mfV, dvV)
     (mfV, dvV)
@@ -527,7 +669,8 @@ object ManifestPrune {
       .join(maskKeys.distinct(), key)
       .select("file", "pos")
     val mergedDv = effDv match {
-      case Some(dv) => s.read.parquet(dv).unionByName(doomed).distinct()
+      case Some(dv) =>
+        immutableParquet(s, dv).unionByName(doomed).distinct()
       case None => doomed.distinct()
     }
     // 2. post-images: old values of matched UPDATE keys (hit-file
@@ -541,7 +684,8 @@ object ManifestPrune {
       "MoR merge hit-file plan").toArray
     val hit =
       if (hitFiles.isEmpty) table.limit(0)
-      else applyDv(s, s.read.parquet(hitFiles.toIndexedSeq: _*), effDv)
+      else applyDv(s, readFiles(s, baseManifest, hitFiles.toIndexedSeq),
+        effDv)
     val prefixed = setCols.foldLeft(upd0) { (d, c) =>
       d.withColumnRenamed(c, s"__u_$c")
     }
@@ -565,7 +709,7 @@ object ManifestPrune {
     // grown sidecar rides inside the prepared manifest so one rename
     // publishes both (the dvDeleteFrom publication rule)
     mergedDv.write.mode("overwrite").parquet(dvV)
-    s.read.parquet(baseManifest)
+    immutableParquet(s, baseManifest)
       .unionByName(deltaStats, allowMissingColumns = true)
       .write.mode("overwrite").parquet(mfV)
     carrySpecPointer(root, baseManifest, mfV)
@@ -603,11 +747,7 @@ object ManifestPrune {
     * position_deletes`). */
   def liveRowCount(s: SparkSession, manifestDir: String,
                    dvDir: Option[String]): Long = {
-    val physical = dirFact(manifestDir, "nRowsSum") {
-      immutableParquet(s, manifestDir)
-        .agg(coalesce(sum(col("n_rows")), lit(0L)))
-        .collect().head.getLong(0)
-    }
+    val physical = physicalRows(s, manifestDir)
     val hidden = dvDir.map(dvHiddenCount(s, _)).getOrElse(0L)
     physical - hidden
   }
@@ -751,7 +891,7 @@ object ManifestPrune {
         .contains).mkString(", ")} do not exist in the table")
     val tok = prepareToken()
     val merged = eqDelOf(root, base) match {
-      case Some(e) => s.read.parquet(e).unionByName(keys).distinct()
+      case Some(e) => immutableParquet(s, e).unionByName(keys).distinct()
       case None => keys.distinct()
     }
     // AUTO-FOLD POLICY — read amplification bounded by policy, not
@@ -783,7 +923,8 @@ object ManifestPrune {
         .join(merged, merged.columns.toIndexedSeq, "left_semi")
         .select(col("__file").as("file"), col("__pos").as("pos"))
       val folded = effDv match {
-        case Some(dv) => s.read.parquet(dv).unionByName(hits).distinct()
+        case Some(dv) =>
+          immutableParquet(s, dv).unionByName(hits).distinct()
         case None => hits.distinct()
       }
       val dvV = s"$root/dv_$tok"
@@ -841,14 +982,15 @@ object ManifestPrune {
       throw new IllegalStateException(
         s"base manifest $baseManifest's equality-delete sidecar " +
           s"$eqDir is missing")
-    val keys = s.read.parquet(eqDir)
+    val keys = immutableParquet(s, eqDir)
     val hits = readVersionWithDv(s, baseManifest, baseDv)
       .withColumn("__file", col("_metadata.file_path"))
       .withColumn("__pos", col("_metadata.row_index"))
       .join(keys, keys.columns.toIndexedSeq, "left_semi")
       .select(col("__file").as("file"), col("__pos").as("pos"))
     val folded = baseDv match {
-      case Some(dv) => s.read.parquet(dv).unionByName(hits).distinct()
+      case Some(dv) =>
+        immutableParquet(s, dv).unionByName(hits).distinct()
       case None => hits.distinct()
     }
     val dir = s"$root/dv_${version}f"
@@ -984,13 +1126,17 @@ object ManifestPrune {
     * pre-image.
     *
     * The chain's swap-by-path structure makes this FILE-GRAIN — cost
-    * is O(files touched by the commit), never O(table):
+    * is O(files touched by the commit), never O(table), and planning
+    * it runs no Spark job (manifests and sidecars are driver-held):
     *   - removed/added file sets come from the two manifests alone;
-    *   - rows newly hidden by the DV sidecar delta on CARRIED files
-    *     are deletes (read by positional join, only affected files);
-    *   - removed-file live rows vs added-file rows full-outer-join on
-    *     `key`: only-new → insert, only-old → delete, both with a
-    *     changed payload → update — and both with an IDENTICAL
+    *   - the OLD side is the removed files' live rows plus the rows
+    *     the DV sidecar newly hides on CARRIED files; the NEW side is
+    *     the added files' rows plus the rows a shrunk sidecar un-hides
+    *     (read by positional join, only affected files);
+    *   - the two sides full-outer-join on `key`: only-new → insert,
+    *     only-old → delete, both with a changed payload → update —
+    *     so a merge-on-read update (old row masked, post-image in a
+    *     delta file) yields both images — and both with an IDENTICAL
     *     payload are dropped, which is exactly why a pure compaction
     *     or Z-order rewrite emits an EMPTY feed (physical motion is
     *     not change).
@@ -1006,70 +1152,66 @@ object ManifestPrune {
     val d1 = dvOf(root, v)
     val e0 = eqDelOf(root, v - 1)
     val e1 = eqDelOf(root, v)
-    val f0 = immutableParquet(s, m0).select("file")
-    val f1 = immutableParquet(s, m1).select("file")
-    val removed = collectFileList(s, f0.except(f1),
+    val f0 = dirRows(s, m0).strings("file")
+    val f1 = dirRows(s, m1).strings("file")
+    val (set0, set1) = (f0.toSet, f1.toSet)
+    val removed = boundedFiles(s, f0.iterator.filterNot(set1).distinct,
       s"change-feed removed files of v$v")
-    val added = collectFileList(s, f1.except(f0),
+    val added = boundedFiles(s, f1.iterator.filterNot(set0).distinct,
       s"change-feed added files of v$v")
     // template for empty frames + the payload column list
     val schemaRow = readVersion(s, m1).limit(0)
-    val payloadCols = schemaRow.columns.filterNot(_ == key).toSeq
+    val cols = schemaRow.columns.toIndexedSeq
+    val payloadCols = cols.filterNot(_ == key)
     // "live" means visible under BOTH sidecar kinds of the respective
     // side — rows an equality delete already hid must not re-emit
     // when a later commit folds them into positions or rewrites their
     // file away (the consumer saw their delete at the eqdel commit)
-    def readLive(files: Seq[String], dv: Option[String],
+    def readLive(mf: String, files: Seq[String], dv: Option[String],
                  eq: Option[String]): DataFrame =
       if (files.isEmpty) schemaRow
-      else applyEqDel(s, applyDv(s, s.read.parquet(files: _*), dv), eq)
+      else applyEqDel(s, applyDv(s, readFiles(s, mf, files), dv), eq)
+        .select(cols.map(col): _*)
     // 1. DV delta on carried files, BOTH directions. Growth (in d1,
-    // not d0) hides rows → deletes. Shrink (in d0, not d1) UN-hides
-    // rows → inserts — the restoreVersion case: rolling back a
+    // not d0) hides rows: the old side. Shrink (in d0, not d1) UN-hides
+    // rows: the new side — the restoreVersion case: rolling back a
     // DV-delete commit leaves the file set unchanged while the
     // sidecar shrinks (or vanishes entirely), and a feed that only
     // watched growth would emit nothing for the resurrected rows,
     // silently diverging every consumer tailing across the restore.
-    // The carried-file semi-join below makes the vanished-sidecar
-    // ambiguity safe: a REWRITE that drops its DVs also replaces the
-    // files (nothing carried → empty delta), while a restore keeps
-    // the files (carried → full shrink emitted).
-    def dvSideRows(delta0: DataFrame, tag: String,
-                   eq: Option[String]): DataFrame = {
-      // positions must reference carried files; the semi-join pins it.
+    // Restricting positions to carried files makes the
+    // vanished-sidecar ambiguity safe: a REWRITE that drops its DVs
+    // also replaces the files (nothing carried → empty delta), while a
+    // restore keeps the files (carried → full shrink emitted).
+    val carried = set0 intersect set1
+    def dvPositions(dv: Option[String]): Set[(String, Long)] =
+      dv.map { d =>
+        val m = dirRows(s, d)
+        m.strings("file").zip(m.longs("pos")).toSet
+      }.getOrElse(Set.empty)
+    def dvSide(mf: String, tag: String, delta: Set[(String, Long)],
+               eq: Option[String]): DataFrame = {
       // `eq` screens out rows the respective side's equality deletes
       // already hide: a FOLD grows the DV by exactly the eq-hidden
       // positions (their deletes were emitted at the eqdel commit),
       // and rolling a fold back re-hides the resurrected positions
       // behind the restored eq sidecar — both must emit NOTHING.
-      val delta = delta0.join(f1.intersect(f0), Seq("file"),
-        "left_semi")
-      val files = collectFileList(s, delta.select("file").distinct(),
+      val onCarried = delta.filter(p => carried(p._1)).toSeq
+      val files = boundedFiles(s, onCarried.iterator.map(_._1).distinct,
         s"change-feed DV-$tag files of v$v")
       if (files.isEmpty) schemaRow
-      else applyEqDel(s, s.read.parquet(files: _*)
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(delta, col("__file") === col("file") &&
-          col("__pos") === col("pos"))
-        .select(schemaRow.columns.map(col).toIndexedSeq: _*), eq)
+      else {
+        applyEqDel(s, readFiles(s, mf, files)
+          .withColumn("__file", col("_metadata.file_path"))
+          .withColumn("__pos", col("_metadata.row_index"))
+          .join(s.createDataFrame(onCarried).toDF("file", "pos"),
+            col("__file") === col("file") && col("__pos") === col("pos"))
+          .select(cols.map(col): _*), eq)
+      }
     }
-    val dvGrow: Option[DataFrame] = (d0, d1) match {
-      case (_, None) => None
-      case (None, Some(b)) => Some(immutableParquet(s, b))
-      case (Some(a), Some(b)) =>
-        Some(immutableParquet(s, b).except(immutableParquet(s, a)))
-    }
-    val dvShrink: Option[DataFrame] = (d0, d1) match {
-      case (None, _) => None
-      case (Some(a), None) => Some(immutableParquet(s, a))
-      case (Some(a), Some(b)) =>
-        Some(immutableParquet(s, a).except(immutableParquet(s, b)))
-    }
-    val dvDeletes = dvGrow.map(dvSideRows(_, "grow", e0))
-      .getOrElse(schemaRow)
-    val dvInserts = dvShrink.map(dvSideRows(_, "shrink", e1))
-      .getOrElse(schemaRow)
+    val (p0, p1) = (dvPositions(d0), dvPositions(d1))
+    val dvHidden = dvSide(m1, "grow", p1 -- p0, e0)
+    val dvShown = dvSide(m0, "shrink", p0 -- p1, e1)
     // 1c. equality-delete delta, both directions (the DV rule applied
     // to key-valued sidecars). Growth hides live rows → deletes;
     // shrink — a RESTORE rolling back an eqdel commit — un-hides
@@ -1102,15 +1244,16 @@ object ManifestPrune {
         case Some(keys) =>
           readVersionWithDv(s, m1, d1)
             .join(keys, keys.columns.toIndexedSeq, "left_semi")
-            .select(schemaRow.columns.map(col).toIndexedSeq: _*)
+            .select(cols.map(col): _*)
       }
     val eqDeletes = eqSideRows(eqGrowKeys)
     val eqInserts = eqSideRows(eqShrinkKeys)
-    // 2. removed-vs-added key diff (bounded by the commit's own files)
-    val oldS = readLive(removed, d0, e0)
+    // 2. old-vs-new key diff (bounded by the commit's own files and
+    // sidecar delta)
+    val oldS = readLive(m0, removed, d0, e0).unionByName(dvHidden)
       .select(col(key).as("__k"),
         struct(payloadCols.map(col): _*).as("__old"))
-    val newS = readLive(added, d1, e1)
+    val newS = readLive(m1, added, d1, e1).unionByName(dvShown)
       .select(col(key).as("__k"),
         struct(payloadCols.map(col): _*).as("__new"))
     val joined = oldS.join(newS, Seq("__k"), "full_outer")
@@ -1127,14 +1270,10 @@ object ManifestPrune {
       .unionByName(emit("update_preimage", "__old"))
       .unionByName(emit("update_postimage", "__new"))
       .unionByName(emit("delete", "__old"))
-    dvDeletes.withColumn("op", lit("delete"))
-      .select("op", schemaRow.columns.toIndexedSeq: _*)
-      .unionByName(dvInserts.withColumn("op", lit("insert"))
-        .select("op", schemaRow.columns.toIndexedSeq: _*))
-      .unionByName(eqDeletes.withColumn("op", lit("delete"))
-        .select("op", schemaRow.columns.toIndexedSeq: _*))
+    eqDeletes.withColumn("op", lit("delete"))
+      .select("op", cols: _*)
       .unionByName(eqInserts.withColumn("op", lit("insert"))
-        .select("op", schemaRow.columns.toIndexedSeq: _*))
+        .select("op", cols: _*))
       .unionByName(keyDiff)
       .withColumn("version", lit(v))
   }
@@ -1183,9 +1322,10 @@ object ManifestPrune {
   }
 
   /** Enforce every registered constraint over `rows`; throws naming
-    * the violated constraint and a sample offending row. */
+    * the violated constraint and a sample offending row. `rows` is
+    * built only when a constraint is registered. */
   private[sources] def enforceConstraints(root: String,
-                                          rows: DataFrame): Unit =
+                                          rows: => DataFrame): Unit =
     listConstraints(root).toSeq.sortBy(_._1).foreach { case (name, e) =>
       val bad = rows.filter(!expr(e)).limit(1).collect()
       if (bad.nonEmpty)
@@ -1209,41 +1349,23 @@ object ManifestPrune {
     * (file set changed: CoW merge / compaction / Z-order). Commit
     * wall-clock and marker note ride along for operators; they are
     * excluded from oracle gates (timestamps are nondeterministic).
-    * Cost: O(versions) manifest metadata reads — never a data scan. */
+    * Cost: O(versions) driver-held manifest reads — no Spark job,
+    * never a data scan. */
   def describeHistory(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
     val cur = currentVersion(s, root)
-    // the file SET is compared by (count, hash-sum) signature so the
-    // driver never holds a version's file list (the same clamp
-    // discipline as planning); a signature collision would need two
-    // same-sized sets with colliding xxhash64 sums
-    var prevSig: Option[(Long, String)] = None
-    var prevMf: Option[String] = None
+    // file SETS compare directly: every retained manifest's rows are
+    // driver-held snapshot facts, so a history read runs no job
+    var prevFiles: Option[Set[String]] = None
     var prevHidden = 0L
     val st = ChainStorage.forPath(root)
     val rows = (0L to cur).flatMap { v =>
       val mf = manifestOf(root, v)
-      if (!st.isPublished(mf)) { prevSig = None; prevMf = None; None }
+      if (!st.isPublished(mf)) { prevFiles = None; None }
       else {
-        // signature aggregate / DV cardinality / carried-file check
-        // are all snapshot facts of immutable dirs — served from the
-        // self-validating cache, so a warm history read is job-free
-        val (nFiles, physical, sigHash) =
-          dirFact(mf, "historySig") {
-            val m = immutableParquet(s, mf)
-            // hash-sum in decimal: a long sum of xxhash64 values
-            // overflows under ANSI arithmetic
-            val agg = m.agg(count(lit(1)),
-              coalesce(sum(col("n_rows")), lit(0L)),
-              coalesce(sum(xxhash64(col("file"))
-                .cast(org.apache.spark.sql.types.DecimalType(38, 0))),
-                lit(0L).cast(
-                  org.apache.spark.sql.types.DecimalType(38, 0))))
-              .collect().head
-            (agg.getLong(0), agg.getLong(1),
-              agg.getDecimal(2).toPlainString)
-          }
-        val sig = (nFiles, sigHash)
+        val list = dirRows(s, mf).strings("file")
+        val files = list.toSet
+        val physical = physicalRows(s, mf)
         val hidden = dvOf(root, v)
           .map(dvHiddenCount(s, _)).getOrElse(0L)
         // kind from the chain shape alone: identical file set =
@@ -1251,37 +1373,32 @@ object ManifestPrune {
         // the merge-on-read family (mor-merge when the sidecar also
         // grew — masked updates; append when it did not); anything
         // that replaced files = rewrite (CoW merge / compaction /
-        // Z-order). The carried check is an O(manifest) metadata
-        // anti-join, never a data read.
+        // Z-order)
         val note0 = commitNote(root, v).getOrElse("")
         // notes are whitespace-separated tokens: a sink-cursor token
         // (tsink:<id>) can ride NEXT TO the kind token (eqdel), so the
         // classifier matches token-wise, not on the whole string
         val noteToks = note0.split("\\s+").toSet
-        val kind =
-          if (v == 0L || prevSig.isEmpty) "base"
-          else if (note0.startsWith("restore:")) "restore"
-          else if (sig == prevSig.get)
-            (if (note0.startsWith("spec:")) "evolve-spec"
-             else if (note0.startsWith("schema:")) "evolve-schema"
-             else if (noteToks.contains("eqdel-fold")) "eqdel-fold"
-             else if (noteToks.contains("eqdel") ||
-               noteToks.exists(_.startsWith("eqdel:")))
-               "eq-delete"
-             else "dv-delete")
-          else if (nFiles > prevSig.get._1 && prevMf.exists(p =>
-              dirFact(mf, s"carriedFrom:$p") {
-                immutableParquet(s, p).select("file")
-                  .except(immutableParquet(s, mf).select("file"))
-                  .limit(1).count() == 0L
-              }))
-            (if (hidden > prevHidden) "mor-merge" else "append")
-          else "rewrite"
-        prevSig = Some(sig)
-        prevMf = Some(mf)
+        val kind = prevFiles match {
+          case _ if v == 0L => "base"
+          case None => "base"
+          case _ if note0.startsWith("restore:") => "restore"
+          case Some(prev) if files == prev =>
+            if (note0.startsWith("spec:")) "evolve-spec"
+            else if (note0.startsWith("schema:")) "evolve-schema"
+            else if (noteToks.contains("eqdel-fold")) "eqdel-fold"
+            else if (noteToks.contains("eqdel") ||
+              noteToks.exists(_.startsWith("eqdel:")))
+              "eq-delete"
+            else "dv-delete"
+          case Some(prev) if prev.subsetOf(files) =>
+            if (hidden > prevHidden) "mor-merge" else "append"
+          case _ => "rewrite"
+        }
+        prevFiles = Some(files)
         prevHidden = hidden
-        Some((v, kind, nFiles, physical, hidden, physical - hidden,
-          commitTimeMs(root, v).getOrElse(0L), note0))
+        Some((v, kind, list.size.toLong, physical, hidden,
+          physical - hidden, commitTimeMs(root, v).getOrElse(0L), note0))
       }
     }
     rows.toDF("version", "kind", "n_files", "physical_rows",
@@ -1570,7 +1687,7 @@ object ManifestPrune {
     enforceConstraints(root,
       s.read.parquet(dataDelta).select(cols.map(col): _*))
     val mfV = s"$root/manifest_$tok"
-    s.read.parquet(baseManifest)
+    immutableParquet(s, baseManifest)
       .unionByName(deltaStats, allowMissingColumns = true)
       .write.mode("overwrite").parquet(mfV)
     carrySpecPointer(root, baseManifest, mfV)
@@ -1624,20 +1741,21 @@ object ManifestPrune {
       val files = BloomIndex.planFiles(s, root, base, ks)
       if (files.isEmpty)
         readVersion(s, baseManifest).limit(0)
-      else applyDv(s, s.read.parquet(files: _*), effDv)
+      else applyDv(s, readFiles(s, baseManifest, files), effDv)
     }.getOrElse(readVersionWithDv(s, baseManifest, effDv))
     val doomed = scanBase
       .filter(cond)
       .select(col("_metadata.file_path").as("file"),
         col("_metadata.row_index").as("pos"))
     val merged = effDv match {
-      case Some(dv) => s.read.parquet(dv).unionByName(doomed).distinct()
+      case Some(dv) =>
+        immutableParquet(s, dv).unionByName(doomed).distinct()
       case None => doomed.distinct()
     }
     val dvV = s"$root/dv_$tok"
     merged.write.mode("overwrite").parquet(dvV)
     val mfV = s"$root/manifest_$tok"
-    s.read.parquet(baseManifest).write.mode("overwrite").parquet(mfV)
+    immutableParquet(s, baseManifest).write.mode("overwrite").parquet(mfV)
     carrySpecPointer(root, baseManifest, mfV)
     writeDvPointer(root, mfV, dvV)
     publish(root, base, mfV)
@@ -1704,10 +1822,10 @@ object ManifestPrune {
       st2
     }
     statsOpt match {
-      case Some(st2) => s.read.parquet(baseManifest)
+      case Some(st2) => immutableParquet(s, baseManifest)
         .unionByName(st2, allowMissingColumns = true)
         .write.mode("overwrite").parquet(mfV)
-      case None => s.read.parquet(baseManifest)
+      case None => immutableParquet(s, baseManifest)
         .write.mode("overwrite").parquet(mfV)
     }
     carrySpecPointer(root, baseManifest, mfV)
@@ -1715,7 +1833,7 @@ object ManifestPrune {
     (effDv, posNonEmpty) match {
       case (Some(dv), Some(p)) =>
         val dvV = s"$root/dv_$tok"
-        s.read.parquet(dv).unionByName(p).distinct()
+        immutableParquet(s, dv).unionByName(p).distinct()
           .write.mode("overwrite").parquet(dvV)
         writeDvPointer(root, mfV, dvV)
       case (Some(dv), None) => writeDvPointer(root, mfV, dv)
@@ -1864,14 +1982,22 @@ object ManifestPrune {
   def schemaOfVersion(s: SparkSession, root: String, version: Long)
       : org.apache.spark.sql.types.StructType = {
     val mf = manifestOf(root, version)
-    schemaOfManifest(mf).getOrElse {
-      dirFact(mf, "versionSchema") {
-        val first = immutableParquet(s, mf).select("file")
-          .orderBy("file").limit(1).head.getString(0)
-        s.read.parquet(first).schema
-      }
-    }
+    schemaOfManifest(mf).getOrElse(dataSchema(s, mf))
   }
+
+  /** The footer schema of a manifest's first data file (by path) — a
+    * snapshot fact: every chain writer pins column order to the
+    * table's, so any file's footer IS the table's schema, which is
+    * also what Spark's own inference reads (one part file's footer). */
+  private def dataSchema(s: SparkSession, manifestDir: String)
+      : org.apache.spark.sql.types.StructType =
+    dirFact(manifestDir, "dataSchema") {
+      val files = dirRows(s, manifestDir).strings("file")
+      require(files.nonEmpty, s"manifest $manifestDir names no file")
+      fileSchema(s, files.min)
+    }
+
+
 
   /** Metadata key carrying a renamed column's PRIOR physical names,
     * newest first — files written before rename N still hold the
@@ -1953,7 +2079,7 @@ object ManifestPrune {
   private def protectedColumnReasons(root: String, base: Long,
                                      name: String): Seq[String] = {
     val inEqDel = eqDelOf(root, base).toSeq.flatMap { eq =>
-      val cols = SparkSession.active.read.parquet(eq).columns
+      val cols = footerSchema(SparkSession.active, eq).fieldNames
       if (cols.exists(_.equalsIgnoreCase(name)))
         Seq(s"live equality-delete sidecar keys on '$name' — fold " +
           "the deletes first (compactCommit, or any data-touching " +
@@ -2130,7 +2256,8 @@ object ManifestPrune {
     val base =
       if (files.isEmpty) readVersion(s, manifestOf(root, version)).limit(0)
       else applyEqDel(s,
-        applyDv(s, s.read.parquet(files: _*), dvOf(root, version)),
+        applyDv(s, readFiles(s, manifestOf(root, version), files),
+          dvOf(root, version)),
         eqDelOf(root, version))
     base.filter(col(colName) >= lo && col(colName) <= hi)
   }
@@ -2144,7 +2271,9 @@ object ManifestPrune {
                             version: Long, colName: String,
                             lo: Option[Any],
                             hi: Option[Any]): Seq[String] = {
-    val m0 = immutableParquet(s, manifestOf(root, version))
+    // Catalyst comparisons over the driver-held rows (a LocalRelation:
+    // the filter and the collect run no job)
+    val m0 = localFrame(s, manifestOf(root, version))
     val m =
       if (m0.columns.contains("spec_id"))
         m0.withColumn("spec_id", coalesce(col("spec_id"), lit(0)))
@@ -2169,19 +2298,29 @@ object ManifestPrune {
   def planRangeCommitted(s: SparkSession, root: String, version: Long,
                          colName: String, lo: Long,
                          hi: Long): Seq[String] = {
-    val m0 = immutableParquet(s, manifestOf(root, version))
-    val m =
-      if (m0.columns.contains("spec_id"))
-        m0.withColumn("spec_id", coalesce(col("spec_id"), lit(0)))
-      else m0.withColumn("spec_id", lit(0))
+    val mf = manifestOf(root, version)
+    val m = dirRows(s, mf)
+    val integral = {
+      import org.apache.spark.sql.types._
+      Set[DataType](LongType, IntegerType, ShortType, ByteType)
+        .contains(m.schema("min_key").dataType)
+    }
+    // non-integral stats (a string-statted spec in the chain's past):
+    // Catalyst's own comparison rules decide, still over driver rows
+    if (!integral)
+      return planRangeCommittedAny(s, root, version, colName, Some(lo),
+        Some(hi))
     val prunable = listSpecs(root).collect {
       case (id, sp) if sp.statsCol == colName => id
-    }.toSeq
-    collectFileList(s,
-      m.filter((!col("spec_id").isInCollection(
-          if (prunable.isEmpty) Seq(-1) else prunable)) ||
-          (col("min_key") <= hi && col("max_key") >= lo))
-        .select("file"),
+    }.toSet
+    val iSpec = Some("spec_id").filter(m.has).map(m.schema.fieldIndex)
+    val (iF, iLo, iHi) = (m.schema.fieldIndex("file"),
+      m.schema.fieldIndex("min_key"), m.schema.fieldIndex("max_key"))
+    boundedFiles(s, m.rows.iterator.filter { r =>
+      val spec = iSpec.filterNot(r.isNullAt)
+        .map(r.getAs[Number](_).intValue).getOrElse(0)
+      !prunable(spec) || overlaps(r, iLo, iHi, lo, hi)
+    }.map(_.getString(iF)),
       s"spec-aware range plan [$lo, $hi] on $colName")
   }
 
@@ -2461,11 +2600,9 @@ object ManifestPrune {
       val cur = currentVersion(s, root)
       val live = (0L to cur).map(v => manifestOf(root, v))
         .filter(st.isPublished)
-      val shared = live.iterator.map { mf =>
-        s.read.parquet(mf).select("file")
-          .filter(col("file").contains(prefix)).limit(1).count()
-      }.sum
-      require(shared == 0L,
+      val shared = live.exists(mf =>
+        dirRows(s, mf).strings("file").exists(_.contains(prefix)))
+      require(!shared,
         s"main still references data files under branch '$name' — " +
           "compactCommit + expireVersions on main first, or force=true")
     }
@@ -2761,7 +2898,7 @@ object ManifestPrune {
                             specId: Int = 0,
                             policy: StatsPolicy = StatsAll)
       : DataFrame = {
-    val df = s.read.parquet(dataDir)
+    val df = immutableParquet(s, dataDir)
     val (longs, strs) = cstatFields(df.schema, policy)
     val dataCols = ((longs ++ strs).map(_.name) :+ statsCol).distinct
     val base = df
@@ -2987,8 +3124,7 @@ object ManifestPrune {
     val keep: Set[String] = (kept.map(v => manifestOf(root, v)) ++
       adHocManifests ++ branchManifests ++
       cloneManifests).flatMap { m =>
-      collectFileList(s, s.read.parquet(m).select("file"),
-        s"expiry keep-set of $m")
+      versionFiles(s, m, s"expiry keep-set of $m")
     }.map(localPath).toSet
     // 2. orphan data files, at file grain
     var removedData = 0L
@@ -3139,19 +3275,22 @@ object ManifestPrune {
         if (oldEnough(d)) rmTree(d)
       }
     }
+    // the snapshot cache holds facts of exactly the dirs still on disk
+    if (!dryRun) forgetDeletedUnder(root)
     ExpireStats(kept, removedData, removedMf, removedDv, removedStaging,
       removedIdx)
   }
 
   /** Read the table a manifest version describes (the post-merge
     * reader: untouched files at their old paths + rewritten files). */
-  def readVersion(s: SparkSession, manifestDir: String): DataFrame = {
-    val files = cachedFileList(s, manifestDir,
-      s"version read of $manifestDir") {
-      collectFileList(s,
-        immutableParquet(s, manifestDir).select("file"),
-        s"version read of $manifestDir")
-    }
+  def readVersion(s: SparkSession, manifestDir: String): DataFrame =
+    readFiles(s, manifestDir,
+      versionFiles(s, manifestDir, s"version read of $manifestDir"))
+
+  /** A path-list read of (some of) the files `manifestDir` names, with
+    * the version's schema pinned — planning it runs no inference job. */
+  private[sources] def readFiles(s: SparkSession, manifestDir: String,
+                                 files: Seq[String]): DataFrame =
     // a declared (evolved) schema pins the read: files written before
     // an ADD COLUMN null-fill the new columns; files written before a
     // RENAME hold the column under a PRIOR physical name, so the read
@@ -3178,13 +3317,7 @@ object ManifestPrune {
         }
       case None =>
         // the referenced data files are immutable with the manifest
-        // that names them, so their merged footer schema is a snapshot
-        // fact — infer once, plan later reads with it pinned
-        val sch = dirFact(manifestDir, "dataSchema") {
-          s.read.parquet(files: _*).schema
-        }
-        s.read.schema(sch).parquet(files: _*)
+        // that names them, so their footer schema is a snapshot fact
+        s.read.schema(dataSchema(s, manifestDir)).parquet(files: _*)
     }
-  }
-
 }

@@ -120,17 +120,18 @@ object SpjBucket {
   private def bucketedFilesUncached(s: SparkSession, root: String,
                     version: Long): Option[(Int, Seq[(String, Int)])] =
     bucketingOf(root).flatMap { case (_, n) =>
-      val m = ManifestPrune.immutableParquet(s,
+      val m = ManifestPrune.dirRows(s,
         ManifestPrune.manifestOf(root, version))
-      if (!m.columns.contains("bucket")) None
+      if (!m.has("bucket")) None
       else {
         // a 0-row file (the DDL create placeholder) holds nothing and
         // belongs to no bucket — it is soundly dropped from the plan
-        val rows = m.filter(col("n_rows") > 0)
-          .select("file", "bucket").orderBy("file")
-          .collect().toSeq
-        if (rows.exists(_.isNullAt(1))) None
-        else Some((n, rows.map(r => (r.getString(0), r.getInt(1)))))
+        val Seq(iF, iN, iB) =
+          Seq("file", "n_rows", "bucket").map(m.schema.fieldIndex)
+        val rows = m.rows.filter(r => !r.isNullAt(iN) && r.getLong(iN) > 0)
+          .sortBy(_.getString(iF))
+        if (rows.exists(_.isNullAt(iB))) None
+        else Some((n, rows.map(r => (r.getString(iF), r.getInt(iB)))))
       }
     }
 }

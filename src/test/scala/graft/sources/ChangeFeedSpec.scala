@@ -123,6 +123,41 @@ class ChangeFeedSpec extends SparkSpec {
     assert(rep === head)
   }
 
+  test("a merge-on-read step pairs masked rows with their post-images " +
+    "and drops updates that change nothing") {
+    val root = graft.Tables.matDir(s"feed_mor_${System.nanoTime}",
+      spark, sf0001)
+    ManifestPrune.buildLayout(docs, root, nFiles = 4)
+    // every matched key is masked and re-appended; only even keys get
+    // a new lang, odd keys keep theirs (an identical payload)
+    val matched = col("doc_id") % 9 === 2
+    val gone = col("doc_id") % 17 === 4
+    ManifestPrune.morMergeCommit(spark, root,
+      docs.filter(matched).select(col("doc_id"),
+        when(col("doc_id") % 2 === 0, lit("mm"))
+          .otherwise(col("lang")).as("lang")),
+      docs.filter(col("doc_id") % 31 === 3)
+        .withColumn("doc_id", col("doc_id") + 40000000L),
+      Some(docs.filter(gone).select("doc_id")))
+    val s1 = ManifestPrune.changeFeedStep(spark, root, 1L).cache()
+    val changed = docs.filter(matched && col("doc_id") % 2 === 0 && !gone)
+    def keys(op: String) = s1.filter(col("op") === op).select("doc_id")
+      .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("doc_id")
+      .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
+    assert(keys("update_preimage") === ids(changed))
+    assert(keys("update_postimage") === ids(changed))
+    assert(s1.filter(col("op") === "update_postimage" &&
+      col("lang") =!= "mm").count() === 0L)
+    assert(s1.filter(col("op") === "update_preimage" &&
+      col("lang") === "mm").count() === 0L)
+    assert(keys("delete") === ids(docs.filter(gone)))
+    assert(keys("insert").size.toLong ===
+      docs.filter(col("doc_id") % 31 === 3).count())
+    assert(s1.count() === 2L * changed.count() +
+      docs.filter(gone).count() + keys("insert").size)
+  }
+
   test("replaying the feed over v0 reproduces v3 exactly") {
     val root = chain()
     val feed = ManifestPrune.changeFeed(spark, root, 0L, 3L).cache()

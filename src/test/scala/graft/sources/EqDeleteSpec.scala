@@ -113,10 +113,11 @@ class EqDeleteSpec extends SparkSpec {
     val step2 = ManifestPrune.changeFeedStep(spark, root, 2L).cache()
     assert(step2.filter(col("doc_id") % 5 === 1).count() === 0L,
       "the fold re-emitted rows the eqdel commit already deleted")
-    // the update's own images are still there
-    assert(step2.filter(col("op") === "insert" &&
-      col("lang") === "ff").count() ===
-      docs.filter(col("doc_id") % 5 === 2).count())
+    // the update's own images are still there, paired
+    val nUpd = docs.filter(col("doc_id") % 5 === 2).count()
+    assert(step2.filter(col("op") === "update_postimage" &&
+      col("lang") === "ff").count() === nUpd)
+    assert(step2.filter(col("op") === "update_preimage").count() === nUpd)
     // restore back across the WHOLE thing to v0: every hidden row
     // (eq-hidden then folded, plus the update's masks) resurrects
     val rootR = freshChain("feedrestore")

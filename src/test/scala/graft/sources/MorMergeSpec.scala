@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *      commit's delta row;
   *   4. compaction erases the read-side overhead — no sidecar, same
   *      content.
-  * Plus: describeHistory classifies the commit as `mor-merge`, and
-  * the change feed + replica converge across MoR commits. */
+  * Plus: describeHistory classifies the commit as `mor-merge`, the
+  * change feed pairs a masked row with its post-image, and a feed
+  * replica converges across MoR commits. */
 class MorMergeSpec extends SparkSpec {
 
   private lazy val docs = Tables.load(spark, sf0001, "documents")
@@ -117,22 +118,22 @@ class MorMergeSpec extends SparkSpec {
     assert(after === before)
   }
 
-  test("the change feed emits MoR updates as delete+insert and a " +
-    "replica converges") {
+  test("the change feed pairs MoR updates into pre/post images") {
     val root = freshRoot("feed")
     ManifestPrune.morMergeCommit(spark, root, updates, inserts,
       Some(deletes))
     val s1 = ManifestPrune.changeFeedStep(spark, root, 1L).cache()
-    // masked old rows → deletes; post-images + inserts → inserts
-    // (MoR has no removed files, so the pre/post pairing the CoW feed
-    // derives from removed-vs-added keys degrades to delete+insert —
-    // the same net effect applyImages applies anyway)
+    // a masked old row meets its post-image in the delta file on the
+    // key diff: BOTH images, as for a CoW update; masked rows without
+    // a post-image are deletes; delta rows without an old row inserts
     val nUpd = docs.filter(col("doc_id") % 9 === 2 &&
       col("doc_id") % 17 =!= 4).count()
     val nDel = docs.filter(col("doc_id") % 17 === 4).count()
-    assert(s1.filter(col("op") === "delete").count() === nUpd + nDel)
-    assert(s1.filter(col("op") === "insert").count() ===
-      nUpd + inserts.count())
+    assert(s1.filter(col("op") === "delete").count() === nDel)
+    assert(s1.filter(col("op") === "update_preimage").count() === nUpd)
+    assert(s1.filter(col("op") === "update_postimage" &&
+      col("lang") === "mm").count() === nUpd)
+    assert(s1.filter(col("op") === "insert").count() === inserts.count())
     val dst = freshRoot("feeddst")
     ManifestPrune.replicateFeed(spark, root, dst, 0L, 1L)
     val rep = ManifestPrune.readCommitted(spark, dst,

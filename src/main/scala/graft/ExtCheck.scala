@@ -6,12 +6,15 @@ import org.apache.spark.sql.SparkSession
   * spark.sql.extensions=graft.GraftExtensions (the exact config a
   * cluster job would set) and exercises every injected piece from pure
   * SQL — cosine_sim, dot_long, simhash64, and the row_number<=k →
-  * TopKPerGroup optimizer rewrite. Usage:
-  *   spark-submit --class graft.ExtCheck <jar> [sfDir]
+  * TopKPerGroup optimizer rewrite. Usage, from the repo root (the
+  * default wiki dump is the in-repo 10-page test fixture):
+  *   spark-submit --class graft.ExtCheck <jar> [sfDir] [wiki.xml]
   */
 object ExtCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val wikiXml = args.lift(1)
+      .getOrElse("src/test/resources/wiki/itwiki-sample-10pages.xml")
     val spark = graft.SparkTune.tuned(SparkSession.builder())
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .appName("graft-extcheck")
@@ -135,10 +138,10 @@ object ExtCheck {
     // DataSource V2 connector from pure SQL DDL (no Scala API): the
     // splittable XML scanner as a USING clause
     spark.sql(
-      """CREATE OR REPLACE TEMPORARY VIEW wiki_dump
+      s"""CREATE OR REPLACE TEMPORARY VIEW wiki_dump
         |USING `graft-xml`
         |OPTIONS (
-        |  path '/root/reference/result/i/itwiki-latest-pages-articles1-10pages.xml',
+        |  path '$wikiXml',
         |  rowTag 'page')""".stripMargin)
     val nPages = spark.sql("SELECT count(*) AS n FROM wiki_dump")
       .collect()(0).getLong(0)

@@ -93,7 +93,12 @@ object SplittableXml {
     * FileInputFormat.isSplitable gives non-splittable codecs. (Real
     * MediaWiki dumps ship as .bz2/.gz; parallelism within one such
     * archive requires decompressing it once up front, exactly as with
-    * Hadoop.) */
+    * Hadoop.)
+    *
+    * A path that matches nothing throws `FileNotFoundException` naming
+    * it, as FileInputFormat ("Input path does not exist", "matches 0
+    * files") and Spark's own file sources (PATH_NOT_FOUND) do; only an
+    * existing directory without files plans zero splits. */
   def planSplits(spark: SparkSession, path: String,
                  splitBytes: Long): Seq[XmlSplit] = {
     require(splitBytes > 0, s"splitBytes must be positive: $splitBytes")
@@ -101,7 +106,15 @@ object SplittableXml {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty)
+    val matched = fs.globStatus(p) match {
+      case null =>
+        throw new java.io.FileNotFoundException(
+          s"Input path does not exist: $path")
+      case Array() =>
+        throw new java.io.FileNotFoundException(
+          s"Input pattern $path matches 0 files")
+      case found => found
+    }
     val files = matched.flatMap { st =>
       if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
       else Array(st)

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types._
   *   - namespace filter is substring `contains` — NOT prefix — over seven
   *     needles; `s:` famously drops `[[Genesis: storia]]`
   *     (CountReference.java:254-256).
-  *   - cleanup strips ALL `[`/`]`/`,` then trims (CountReference.java:260).
+  *   - cleanup strips ALL `[`/`]`/`,` then trims (CountReference.java:260);
+  *     both trims, here and of the source title (:263), are Java's
+  *     `String.trim()`, which strips every char <= U+0020, tabs included.
   *   - duplicate links from one page count once; self-links count
   *     (CountReference.java:269-276).
   *
@@ -53,6 +55,12 @@ object WikiPipeline {
     StructField("title", StringType),
     StructField("revision", StructType(Seq(
       StructField("text", StringType))))))
+
+  /** The chars `String.trim()` strips (CountReference.java:260,263):
+    * U+0000 to U+0020. Spark's one-argument `trim` strips only U+0020. */
+  private val JavaTrimChars: String = (0 to 0x20).map(_.toChar).mkString
+
+  private def javaTrim(c: Column): Column = trim(c, JavaTrimChars)
 
   /** S1+E1: splittable tag scan + nested projection. Replaces
     * XmlInputFormat (CountReference.java:94-203) and the hand-rolled
@@ -93,7 +101,7 @@ object WikiPipeline {
     // E2: whole match group(0), brackets included (:249). explode of
     // regexp_extract_all == the MR mapper's multi-emit (a Generator).
     val raw = live.select(
-      trim(col("title")).as("page_from"),
+      javaTrim(col("title")).as("page_from"),
       explode(regexp_extract_all(col("text"), lit(LinkRegex), lit(0))).as("m"))
 
     // E3: part before the first '|' of the whole match (:251-253; the
@@ -106,7 +114,7 @@ object WikiPipeline {
       // E4: strip all [ ] , then trim (:260).
       .select(
         col("page_from"),
-        trim(regexp_replace(target, "[\\[\\]\\,]", "")).as("page_to"))
+        javaTrim(regexp_replace(target, "[\\[\\]\\,]", "")).as("page_to"))
       // F2: drop empty cleaned targets (:261).
       .filter(length(col("page_to")) > 0)
       .select("page_to", "page_from")

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Scale smoke for the splittable XML scan (S1): run the full pipeline
   * on a multi-hundred-MB dump, report scan parallelism and throughput,
   * and check the copy-invariants (targets unchanged, per-target counts
-  * multiplied by the copy factor).
+  * multiplied by the copy factor). The input is
+  * `tools/make_wiki_dump.py` over the 10-page test fixture.
   * Usage: runMain graft.wiki.WikiScale <big.xml> <copies>
   */
 object WikiScale {
@@ -85,13 +86,15 @@ object WikiScale {
     println(f"[scale] pipeline: $rows rows in $secs%.1f s " +
       f"(${bytes / 1e6 / secs}%.1f MB/s)")
 
-    // invariants vs the single-copy goldens: same 1206 targets, every
-    // count multiplied by the copy factor (sources are distinct per copy)
+    // invariants vs the single-copy goldens of the 10-page test fixture
+    // (FIXTURES.md §A): same 426 targets, every count multiplied by the
+    // copy factor (sources are distinct per copy)
     val max = counts.orderBy(desc("count"), asc("page_title")).limit(1).collect()(0)
-    println(s"[scale] targets=$rows (expect 1206), " +
-      s"max=${max.getString(0)}:${max.getLong(1)} (expect Medioevo:${4L * copies})")
-    assert(rows == 1206L, s"target count $rows != 1206")
-    assert(max.getString(0) == "Medioevo" && max.getLong(1) == 4L * copies)
+    val top = "astronomia moderna"
+    println(s"[scale] targets=$rows (expect 426), " +
+      s"max=${max.getString(0)}:${max.getLong(1)} (expect $top:${10L * copies})")
+    assert(rows == 426L, s"target count $rows != 426")
+    assert(max.getString(0) == top && max.getLong(1) == 10L * copies)
     println("[scale] invariants OK")
     spark.stop()
   }

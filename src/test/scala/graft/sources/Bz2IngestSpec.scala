@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.wiki.WikiPipeline
+import graft.wiki.{WikiFixture, WikiPipeline}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.BZip2Codec
@@ -12,15 +12,12 @@ import org.apache.hadoop.io.compress.BZip2Codec
   * can read, cut only at page boundaries. */
 class Bz2IngestSpec extends SparkSpec {
 
-  private val fixture =
-    "/root/reference/result/i/itwiki-latest-pages-articles1-10pages.xml"
-  private val work = "/root/repo/target/tmp/bz2ingest_spec"
+  private val fixture = WikiFixture.path
 
   private lazy val (bz2Path, outDir, result) = {
+    val work = java.nio.file.Files.createTempDirectory("bz2ingest").toString
     val conf = new Configuration()
     val fs = new Path(work).getFileSystem(conf)
-    fs.delete(new Path(work), true)
-    fs.mkdirs(new Path(work))
     // compress the golden fixture with the same Hadoop codec family
     // the ingest reads through
     val bz2 = s"$work/dump.xml.bz2"
@@ -33,7 +30,7 @@ class Bz2IngestSpec extends SparkSpec {
     var n = in.read(buf)
     while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
     in.close(); out.close()
-    // 16 KB target on a ~2 MB fixture: many rotations exercised
+    // 16 KB target on the 187 KB fixture: several rotations exercised
     val dir = s"$work/parts"
     val r = Bz2Ingest.ingest(bz2, dir, 16 * 1024)
     (bz2, dir, r)

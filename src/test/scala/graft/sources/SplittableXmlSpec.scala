@@ -1,17 +1,16 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.wiki.WikiPipeline
+import graft.wiki.{WikiFixture, WikiPipeline}
 import org.apache.spark.sql.functions._
 
 /** The splittable in-file XML scan vs two independent baselines: Spark's
-  * native per-file XML source on the reference fixture, and hand-built
+  * native per-file XML source on the 10-page wiki fixture, and hand-built
   * documents with split boundaries forced into every awkward position
   * (inside records, inside tags). */
 class SplittableXmlSpec extends SparkSpec {
 
-  val fixtureXml =
-    "/root/reference/result/i/itwiki-latest-pages-articles1-10pages.xml"
+  val fixtureXml = WikiFixture.path
 
   private def fixtureRows(df: org.apache.spark.sql.DataFrame) =
     df.select(col("title"), col("revision.text").as("text"))
@@ -29,7 +28,7 @@ class SplittableXmlSpec extends SparkSpec {
 
   test("many tiny splits: same rows, >1 scan partition, no dup/loss") {
     val ds = SplittableXml.records(spark, fixtureXml, "page",
-      splitBytes = 8 * 1024) // 236 KB fixture -> ~29 ranges
+      splitBytes = 8 * 1024) // 187 KB fixture -> 23 ranges
     assert(ds.rdd.getNumPartitions > 1)
     val split = fixtureRows(SplittableXml.read(
       spark, fixtureXml, "page", WikiPipeline.pageSchema,
@@ -127,9 +126,30 @@ class SplittableXmlSpec extends SparkSpec {
         splitBytes = 16 * 1024)
       .select(col("title"), col("revision.text").as("text"))
     val links = WikiPipeline.links(pages).cache()
-    assert(links.count() === 1483L)
-    assert(links.distinct().count() === 1261L)
+    assert(links.count() === WikiFixture.Emissions)
+    assert(links.distinct().count() === WikiFixture.DistinctPairs)
     val counts = WikiPipeline.incomingReferenceCounts(links)
-    assert(counts.count() === 1206L)
+    assert(counts.count() === WikiFixture.Rows)
+  }
+
+  test("planSplits: a missing file fails, naming the path") {
+    val dir = java.nio.file.Files.createTempDirectory("nofile")
+    val missing = dir.resolve("absent.xml").toString
+    val e = intercept[java.io.FileNotFoundException](
+      SplittableXml.planSplits(spark, missing, 8 * 1024))
+    assert(e.getMessage.contains(missing))
+    // every reader planned through it fails before any job runs
+    intercept[java.io.FileNotFoundException](
+      WikiPipeline.readPages(spark, missing))
+  }
+
+  test("planSplits: a glob that matches nothing fails; an empty dir " +
+    "plans zero splits") {
+    val dir = java.nio.file.Files.createTempDirectory("noglob")
+    val glob = dir.resolve("*.xml").toString
+    val e = intercept[java.io.FileNotFoundException](
+      SplittableXml.planSplits(spark, glob, 8 * 1024))
+    assert(e.getMessage.contains(glob))
+    assert(SplittableXml.planSplits(spark, dir.toString, 8 * 1024).isEmpty)
   }
 }

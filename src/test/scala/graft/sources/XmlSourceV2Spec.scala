@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.wiki.WikiFixture
 import org.apache.spark.sql.functions._
 
 /** The DataSource V2 face of the splittable XML scanner: same records
@@ -8,8 +9,7 @@ import org.apache.spark.sql.functions._
   * API, and the pruned zero-column count path. */
 class XmlSourceV2Spec extends SparkSpec {
 
-  private val fixture =
-    "/root/reference/result/i/itwiki-latest-pages-articles1-10pages.xml"
+  private val fixture = WikiFixture.path
 
   test("format(\"graft-xml\") reads the same records as the RDD path") {
     val v2 = spark.read.format("graft-xml")
@@ -73,5 +73,15 @@ class XmlSourceV2Spec extends SparkSpec {
     assert(pushedTitles.toSeq === reference.toSeq)
     // a filtered count: the screen feeds the zero-column path too
     assert(filtered.count() === reference.length)
+  }
+
+  test("a path that matches nothing fails the read, naming the path") {
+    val missing = java.nio.file.Files.createTempDirectory("v2missing")
+      .resolve("absent.xml").toString
+    val e = intercept[Exception](spark.read.format("graft-xml")
+      .option("rowTag", "page").load(missing).count())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => c.isInstanceOf[java.io.FileNotFoundException] &&
+      c.getMessage.contains(missing)), e)
   }
 }

@@ -6,31 +6,13 @@ import org.scalacheck.rng.Seed
 
 /** Property-based parity: WikiPipeline.links must agree with a
   * line-faithful Scala replica of the reference's parseText
-  * (/root/reference/src/mr/CountReference.java:246-266) on arbitrary
-  * generated wikitext — including pipes, banned namespaces, newlines,
-  * commas, nesting and unicode. One Spark job checks all samples.
+  * (CountReference.java:246-266) on arbitrary generated wikitext —
+  * including pipes, banned namespaces, newlines, commas, nesting and
+  * unicode. One Spark job checks all samples. The same replica, with no
+  * Spark at all, fixes the in-repo fixture's goldens ([[WikiFixture]]).
   */
 class WikiPropertySpec extends SparkSpec {
-
-  /** Replica of parseText + the emptiness guard (:237) and title trim
-    * (:263). Kept deliberately literal, quirks included. */
-  private def referenceEmissions(title: String, text: String): Seq[(String, String)] = {
-    if (title == null || title.isEmpty || text == null || text.isEmpty)
-      return Seq.empty
-    val banned = Seq("File:", "Categoria:", "Category:", "Aiuto:", "s:",
-      "Image:", "Immagine:")
-    val m = java.util.regex.Pattern.compile("\\[\\[(.*?)\\]\\]").matcher(text)
-    val out = Seq.newBuilder[(String, String)]
-    while (m.find()) {
-      var ref = m.group(0)
-      if (ref.contains("|")) ref = ref.split("\\|")(0)
-      if (!banned.exists(ref.contains)) {
-        ref = ref.replaceAll("\\[|\\]|\\,", "").trim
-        if (ref.nonEmpty) out += ((ref, title.trim))
-      }
-    }
-    out.result()
-  }
+  import WikiPropertySpec._
 
   private val fragment: Gen[String] = Gen.oneOf(
     Gen.alphaLowerStr.map(s => s"[[${s.take(8)}]]"),
@@ -93,5 +75,70 @@ class WikiPropertySpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val refiltered = l1.filter(!banned.map(col("page_to").contains(_)).reduce(_ || _))
     assert(refiltered.count() === l1.count())
+  }
+
+  test("reference replica over the in-repo fixture gives its goldens") {
+    val pages = staxPages(WikiFixture.path)
+    assert(pages.size.toLong === WikiFixture.Pages)
+    val emissions = pages.flatMap { case (t, x) => referenceEmissions(t, x) }
+    assert(emissions.size.toLong === WikiFixture.Emissions)
+    val pairs = emissions.distinct
+    assert(pairs.size.toLong === WikiFixture.DistinctPairs)
+    val counts = pairs.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    assert(counts.size.toLong === WikiFixture.Rows)
+    assert(counts.values.max === WikiFixture.MaxCount)
+    assert(counts.filter(_._2 == WikiFixture.MaxCount).keySet ===
+      WikiFixture.AtMaxCount)
+  }
+}
+
+object WikiPropertySpec {
+
+  /** Replica of parseText + the emptiness guard (:237) and title trim
+    * (:263). Kept deliberately literal, quirks included. */
+  def referenceEmissions(title: String, text: String): Seq[(String, String)] = {
+    if (title == null || title.isEmpty || text == null || text.isEmpty)
+      return Seq.empty
+    val banned = Seq("File:", "Categoria:", "Category:", "Aiuto:", "s:",
+      "Image:", "Immagine:")
+    val m = java.util.regex.Pattern.compile("\\[\\[(.*?)\\]\\]").matcher(text)
+    val out = Seq.newBuilder[(String, String)]
+    while (m.find()) {
+      var ref = m.group(0)
+      if (ref.contains("|")) ref = ref.split("\\|")(0)
+      if (!banned.exists(ref.contains)) {
+        ref = ref.replaceAll("\\[|\\]|\\,", "").trim
+        if (ref.nonEmpty) out += ((ref, title.trim))
+      }
+    }
+    out.result()
+  }
+
+  /** (title, text) of every page the way the reference's mapper gathers
+    * them (CountReference.java:211-244): StAX, and every CHARACTERS event
+    * of an element named `title` or `text` (any case) concatenated. */
+  def staxPages(path: String): Seq[(String, String)] = {
+    import javax.xml.stream.{XMLInputFactory, XMLStreamConstants => X}
+    val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
+    try {
+      val r = XMLInputFactory.newInstance().createXMLStreamReader(in, "UTF-8")
+      val out = Seq.newBuilder[(String, String)]
+      val title, text = new StringBuilder
+      var element = ""
+      while (r.hasNext) r.next() match {
+        case X.START_ELEMENT =>
+          element = r.getLocalName
+          if (element == "page") { title.clear(); text.clear() }
+        case X.CHARACTERS =>
+          if (element.equalsIgnoreCase("title")) title.append(r.getText)
+          else if (element.equalsIgnoreCase("text")) text.append(r.getText)
+        case X.END_ELEMENT =>
+          element = ""
+          if (r.getLocalName == "page") out += ((title.toString, text.toString))
+        case _ =>
+      }
+      r.close()
+      out.result()
+    } finally in.close()
   }
 }

@@ -2,11 +2,12 @@
 """Synthesize a large wiki dump from the 10-page fixture for WikiScale.
 
 Usage: make_wiki_dump.py <fixture.xml> <outdir> <copies> <parts>
+where <fixture.xml> is src/test/resources/wiki/itwiki-sample-10pages.xml.
 
 Each copy re-emits every fixture page with its <title> suffixed
 "__c<i>" — SOURCE pages become distinct per copy while link TARGETS
 (the [[...]] text) are untouched, so the pipeline's invariants scale
-exactly: the target set stays the fixture's 1206 and every incoming-
+exactly: the target set stays the fixture's 426 and every incoming-
 reference count multiplies by <copies> (counts are
 countDistinct(page_from) per target). Copies are dealt round-robin
 into <parts> files, each a valid <mediawiki> document, so the same

@@ -88,10 +88,10 @@ object TableScaleBench {
       // round 16: metadata SUM + GROUP BY rollup decades, measured
       // BEFORE any sidecar lands (hidden rows refuse both paths).
       // sql_agg_sum answers metadata-only (the cstats_sum rollup is
-      // one manifest aggregate, O(files) rows). The grouped rollup
-      // on this range-clustered layout runs its full constancy-
-      // checking manifest job and then REFUSES (files mix langs) —
-      // its decade is the group-plan job plus the constant-data
+      // driver arithmetic over O(files) manifest rows). The grouped
+      // rollup on this range-clustered layout runs its constancy
+      // check over the manifest rows and then REFUSES (files mix
+      // langs) — its decade is the group plan plus the constant-data
       // scan, i.e. exactly the planning cost under test.
       spark.conf.set("spark.sql.catalog.graft",
         classOf[graft.sources.GraftCatalog].getName)

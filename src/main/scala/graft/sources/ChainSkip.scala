@@ -1,11 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, GeneralScalarExpression, Literal => V2Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
-import org.apache.spark.sql.functions.{base64, coalesce, col, concat, concat_ws, count, length, lit, max, min, sum}
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** FILE-SKIPPING intervals and METADATA-ONLY aggregates for the SQL
   * catalog scan — the planning arithmetic that lets `WHERE` prune the
@@ -28,7 +28,13 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * null populations to be provably visible (no hidden rows at all)
   * and per-file bounds for the asked column — from the clustering
   * spec's stats or the per-column `cstats_*` maps. Anything else
-  * falls back to the real scan. */
+  * falls back to the real scan.
+  *
+  * Every planner here is plain Scala (or Catalyst over a
+  * LocalRelation) over the version's driver-held manifest and
+  * sidecar rows ([[ManifestPrune.dirRows]]): planning runs no Spark
+  * job, so nothing here is memoized — the rows themselves are the
+  * snapshot facts. */
 private[graft] object ChainSkip {
 
   /** A closed interval a column's matching rows must lie in. */
@@ -136,8 +142,7 @@ private[graft] object ChainSkip {
   }
 
   private def strLit(e: V2Expr): Option[String] = e match {
-    case l: V2Literal[_] if l.dataType ==
-        org.apache.spark.sql.types.StringType =>
+    case l: V2Literal[_] if l.dataType == StringType =>
       Option(l.value).map(_.toString)
     case _ => None
   }
@@ -236,31 +241,11 @@ private[graft] object ChainSkip {
     * Comparisons evaluate in Catalyst over the driver-held manifest
     * rows (a LocalRelation — no job), so string ordering is the same
     * UTF8-binary ordering the min/max aggregation used. */
-  private val colFilesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Map[String, Bounds], Map[String, SBounds]),
-    Option[Seq[String]]]()
-
   def colStatsFiles(s: SparkSession, root: String, version: Long,
                     bounds: Map[String, Bounds],
                     sbounds: Map[String, SBounds])
       : Option[Seq[String]] = {
     if (bounds.isEmpty && sbounds.isEmpty) return None
-    // memoized per immutable snapshot + constraint set (same
-    // commit-instant key as every planning cache here — a chain
-    // REBUILT at the same path can't serve a stale plan): repeated
-    // executions of a multi-column query plan once, like the
-    // neighboring bucketedFiles/columnStatsFor
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    colFilesCache.computeIfAbsent((root, version, ts, bounds, sbounds),
-      _ => colStatsFilesUncached(s, root, version, bounds, sbounds))
-  }
-
-  private def colStatsFilesUncached(
-      s: SparkSession, root: String, version: Long,
-      bounds: Map[String, Bounds], sbounds: Map[String, SBounds])
-      : Option[Seq[String]] = {
-    // the same Catalyst comparisons, over the driver-held manifest
-    // rows (a LocalRelation: filter + collect run no job)
     val m = ManifestPrune.localFrame(s,
       ManifestPrune.manifestOf(root, version))
     def keep(mapCol: String, c: String,
@@ -294,6 +279,113 @@ private[graft] object ChainSkip {
       s"column-stats plan of $root v$version"))
   }
 
+  // ------------------------------------------ manifest row access
+
+  private val Integral = Set[DataType](LongType, IntegerType, ShortType,
+    ByteType)
+
+  /** The `cstats_*` map that stats a column of type `t`. */
+  private def family(t: DataType): String =
+    if (t == StringType) "cstats_str" else "cstats_long"
+
+  /** One file's `cstats_*` entry for a column: the recorded bounds
+    * (null = unknown, or an all-null file) and the null count. */
+  private case class Stat(lo: Any, hi: Any, nn: Long)
+
+  /** Field access over a version's driver-held manifest rows
+    * ([[ManifestPrune.dirRows]]). Every planner below is plain Scala
+    * over these rows, so planning runs no Spark job and has nothing
+    * to memoize. */
+  private final class ManifestView(s: SparkSession, val dir: String) {
+    val m: ManifestPrune.DirRows = ManifestPrune.dirRows(s, dir)
+    private val idx = m.schema.fieldNames.zipWithIndex.toMap
+    private def num(r: Row, c: String): Option[Number] =
+      idx.get(c).filterNot(r.isNullAt).map(r.getAs[Number](_))
+    def has(c: String): Boolean = idx.contains(c)
+    def file(r: Row): String = r.getString(idx("file"))
+    def rows(r: Row): Long = num(r, "n_rows").fold(0L)(_.longValue)
+    def nulls(r: Row): Option[Long] = num(r, "n_nulls").map(_.longValue)
+    /** NULL and absent spec ids read as the default spec 0. */
+    def spec(r: Row): Int = num(r, "spec_id").fold(0)(_.intValue)
+    def key(r: Row, c: String): Any = r.get(idx(c))
+    /** Indices of the live files (`n_rows > 0`) in the manifest. */
+    lazy val liveIdx: IndexedSeq[Int] =
+      m.rows.indices.filter(i => rows(m.rows(i)) > 0)
+    lazy val live: IndexedSeq[Row] = liveIdx.map(m.rows)
+    def stat(r: Row, family: String, c: String): Option[Stat] =
+      idx.get(family).filterNot(r.isNullAt)
+        .flatMap(i => r.getAs[scala.collection.Map[String, Row]](i).get(c))
+        .filter(_ != null)
+        .map(e => Stat(e.get(0), e.get(1), e.getAs[Number](2).longValue))
+    /** Σ of column c's per-file `cstats_sum` entries over `files`, and
+      * how many files lack the KEY — a coverage gap. A null entry is a
+      * legitimately all-null file, which is present coverage. */
+    def sumOf(files: Seq[Row], c: String): (Long, java.math.BigDecimal) = {
+      val entries = files.map(r =>
+        idx.get("cstats_sum").filterNot(r.isNullAt)
+          .map(r.getAs[scala.collection.Map[String, java.math.BigDecimal]](_))
+          .filter(_.contains(c)).map(_(c)))
+      (entries.count(_.isEmpty).toLong,
+        entries.flatten.filter(_ != null).reduceOption(_ add _).orNull)
+    }
+  }
+
+  private def manifestView(s: SparkSession, root: String,
+                           version: Long): ManifestView =
+    new ManifestView(s, ManifestPrune.manifestOf(root, version))
+
+  /** The order the manifest's min/max aggregation used: UTF8-binary
+    * for strings, numeric for integral columns. */
+  private def statOrdering(str: Boolean): Ordering[Any] =
+    if (str) utf8Ordering.on[Any](_.toString)
+    else Ordering.by[Any, Long](_.asInstanceOf[Number].longValue)
+
+  /** SQL MIN/MAX over `vals`: nulls skipped, null when none is left. */
+  private def extreme(vals: Iterator[Any], ord: Ordering[Any],
+                      max: Boolean): Any =
+    vals.filter(_ != null)
+      .reduceOption((a, b) => if (max) ord.max(a, b) else ord.min(a, b))
+      .orNull
+
+  /** Column c's rollup over `files`: files without its entry (coverage
+    * gaps), the string-truncation guards — a recorded lo of 64+ chars
+    * may be a prefix, a null hi on a file with values was truncated —
+    * the extremes, and the non-null count Σ(n_rows − nn). */
+  private case class Rollup(gaps: Long, loCut: Long, hiCut: Long,
+                            lo: Any, hi: Any, nonNull: Long)
+
+  private def rollup(v: ManifestView, files: Seq[Row], c: String,
+                     t: DataType): Rollup = {
+    val str = t == StringType
+    val ord = statOrdering(str)
+    val entries = files.map(r => (v.rows(r), v.stat(r, family(t), c)))
+    val present = entries.collect { case (n, Some(e)) => (n, e) }
+    def chars(x: Any) = { val u = x.toString; u.codePointCount(0, u.length) }
+    Rollup(
+      gaps = entries.count(_._2.isEmpty).toLong,
+      loCut = if (!str) 0L else present.count { case (n, e) =>
+        e.nn < n && e.lo != null && chars(e.lo) >= 64 }.toLong,
+      hiCut = if (!str) 0L else present.count { case (n, e) =>
+        e.nn < n && e.hi == null }.toLong,
+      lo = extreme(present.iterator.map(_._2.lo), ord, max = false),
+      hi = extreme(present.iterator.map(_._2.hi), ord, max = true),
+      nonNull = present.map { case (n, e) => n - e.nn }.sum)
+  }
+
+  /** A statistic as a Catalyst value of the column's own type: numeric
+    * widths boxed as the attribute's (CBO and the aggregate output
+    * cast by it), strings as UTF8String. */
+  private def statVal(v: Any, t: DataType): Any =
+    if (v == null) null
+    else t match {
+      case IntegerType => v.asInstanceOf[Number].intValue
+      case ShortType => v.asInstanceOf[Number].shortValue
+      case ByteType => v.asInstanceOf[Number].byteValue
+      case StringType =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(v.toString)
+      case _ => v.asInstanceOf[Number].longValue
+    }
+
   /** One reported column statistic: min/max/nullCount are EXACT from
     * manifest arithmetic; ndv is the DataSketches-HLL estimate
     * (lgK=12, ~1.6% standard error — sketch union across files is
@@ -303,9 +395,6 @@ private[graft] object ChainSkip {
   case class ColStatRow(min: Option[Any], max: Option[Any],
                         nullCount: Long, ndv: Option[Long] = None)
 
-  private val colStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, String), Map[String, ColStatRow]]()
-
   /** EXACT per-column (min, max, nullCount) for `cols` of the
     * version, from the manifest's cstats maps — the numbers a Hive
     * table only has after ANALYZE TABLE ... FOR COLUMNS, free here
@@ -314,99 +403,54 @@ private[graft] object ChainSkip {
     * could be an extreme or a null), every live file carrying the
     * column's entry, and string maxima only when untruncated (string
     * minima are prefixes — sound as a LOWER estimate but not exact,
-    * so strings report nullCount only). Memoized per immutable
-    * snapshot + column set; one aggregate job on first use. */
+    * so strings report nullCount only). NDV unions the live files'
+    * sketches on the driver, claimed only when every live file
+    * carries one. */
   def columnStatsFor(s: SparkSession, root: String, version: Long,
-                     cols: Seq[org.apache.spark.sql.types.StructField])
-      : Map[String, ColStatRow] = {
+                     cols: Seq[StructField]): Map[String, ColStatRow] = {
     if (ManifestPrune.dvOf(root, version).nonEmpty ||
         ManifestPrune.eqDelOf(root, version).nonEmpty) return Map.empty
-    val longs = cols.filter(f => Set[DataType](LongType, IntegerType,
-      ShortType, ByteType).contains(f.dataType))
-    val strs = cols.filter(_.dataType ==
-      org.apache.spark.sql.types.StringType)
-    if (longs.isEmpty && strs.isEmpty) return Map.empty
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    val key = (root, version, ts,
-      (longs ++ strs).map(_.name).sorted.mkString(","))
-    colStatsCache.computeIfAbsent(key, { _ =>
-      val m = ManifestPrune.immutableParquet(s,
-        ManifestPrune.manifestOf(root, version))
-      val hasL = m.columns.contains("cstats_long")
-      val hasS = m.columns.contains("cstats_str")
-      if (!hasL && !hasS) Map.empty
+    val v = manifestView(s, root, version)
+    val fields = cols.filter(f =>
+      (Integral(f.dataType) || f.dataType == StringType) &&
+        v.has(family(f.dataType)))
+    if (fields.isEmpty) return Map.empty
+    val rows = v.live.map(v.rows).sum
+    lazy val sketches = {
+      val hs = ManifestPrune.sketchRows(s, v.dir)
+      v.liveIdx.map(hs.lift(_).orNull)
+    }
+    fields.flatMap { f =>
+      val r = rollup(v, v.live, f.name, f.dataType)
+      if (r.gaps > 0) None // a file without the entry
       else {
-        val live = m.filter(col("n_rows") > 0)
-        def cnt(cond: org.apache.spark.sql.Column) =
-          coalesce(sum(org.apache.spark.sql.functions.when(cond, 1L)
-            .otherwise(0L)), lit(0L))
-        val fields = (longs.map(f => (f, "cstats_long")) ++
-          strs.map(f => (f, "cstats_str")))
-          .filter { case (_, mc) => m.columns.contains(mc) }
-        val hasH = m.columns.contains("cstats_hll")
-        val aggs = fields.zipWithIndex.flatMap { case ((f, mc), i) =>
-          val e = col(mc).getItem(f.name)
-          val h =
-            if (hasH) col("cstats_hll").getItem(f.name)
-            else lit(null).cast("binary")
-          Seq(cnt(e.isNull).as(s"__g_$i"),
-            min(e.getField("lo")).as(s"__lo_$i"),
-            max(e.getField("hi")).as(s"__hi_$i"),
-            coalesce(sum(col("n_rows") - e.getField("nn")), lit(0L))
-              .as(s"__vals_$i"),
-            coalesce(sum(col("n_rows")), lit(0L)).as(s"__rows_$i"),
-            (if (mc == "cstats_str")
-               cnt(e.getField("nn") < col("n_rows") &&
-                 e.getField("hi").isNull)
-             else lit(0L)).as(s"__tr_$i"),
-            // NDV: sketches union losslessly; claimed only when
-            // every live file carries one (__hg gap count)
-            cnt(h.isNull).as(s"__hg_$i"),
-            org.apache.spark.sql.functions.hll_sketch_estimate(
-              org.apache.spark.sql.functions.hll_union_agg(h,
-                lit(true))).as(s"__nd_$i"))
-        }
-        if (aggs.isEmpty) Map.empty
-        else {
-          val row = live.agg(aggs.head, aggs.tail: _*).head
-          def rL(n: String) = row.getLong(row.fieldIndex(n))
-          def rV(n: String): Option[Any] = {
-            val i = row.fieldIndex(n)
-            if (row.isNullAt(i)) None else Some(row.get(i))
-          }
-          fields.zipWithIndex.flatMap { case ((f, mc), i) =>
-            if (rL(s"__g_$i") > 0) None // a file without the entry
-            else {
-              val nulls = rL(s"__rows_$i") - rL(s"__vals_$i")
-              val ndv: Option[Long] =
-                if (rL(s"__hg_$i") > 0) None // a file without a sketch
-                else rV(s"__nd_$i")
-                  .map(_.asInstanceOf[Number].longValue)
-              val exactRange = mc == "cstats_long"
-              // box in the attribute's own numeric width — CBO's
-              // estimation casts by the attribute type
-              def cvt(o: Option[Any]): Option[Any] = o.map { v =>
-                f.dataType match {
-                  case IntegerType =>
-                    Integer.valueOf(v.asInstanceOf[Number].intValue)
-                  case ShortType => java.lang.Short
-                    .valueOf(v.asInstanceOf[Number].shortValue)
-                  case ByteType => java.lang.Byte
-                    .valueOf(v.asInstanceOf[Number].byteValue)
-                  case _ => java.lang.Long
-                    .valueOf(v.asInstanceOf[Number].longValue)
-                }
-              }
-              Some(f.name -> ColStatRow(
-                if (exactRange) cvt(rV(s"__lo_$i")) else None,
-                if (exactRange) cvt(rV(s"__hi_$i")) else None,
-                nulls.max(0L), ndv))
-            }
-          }.toMap
-        }
+        val exact = f.dataType != StringType
+        Some(f.name -> ColStatRow(
+          Option(r.lo).filter(_ => exact).map(statVal(_, f.dataType)),
+          Option(r.hi).filter(_ => exact).map(statVal(_, f.dataType)),
+          (rows - r.nonNull).max(0L),
+          unionEstimate(sketches.map(h =>
+            if (h == null) null else h.get(f.name).orNull))))
       }
-    })
+    }.toMap
   }
+
+  /** The NDV of the union of per-file HLL sketches, computed as
+    * Spark's `hll_sketch_estimate(hll_union_agg(h, true))` does it;
+    * None when a file has no sketch. */
+  private def unionEstimate(sketches: Seq[Array[Byte]])
+      : Option[Long] =
+    if (sketches.contains(null)) None
+    else {
+      import org.apache.datasketches.hll.{HllSketch, Union}
+      import org.apache.datasketches.memory.Memory
+      def wrap(b: Array[Byte]) = HllSketch.wrap(Memory.wrap(b))
+      val u = sketches.headOption.fold(new Union())(b =>
+        new Union(wrap(b).getLgConfigK))
+      sketches.foreach(b => u.update(wrap(b)))
+      Some(math.round(HllSketch.heapify(
+        Memory.wrap(u.toUpdatableByteArray)).getEstimate))
+    }
 
   /** Per-column EXACT key sets from a pushed-predicate batch — only
     * shapes that pin a column to a finite value set contribute
@@ -464,36 +508,20 @@ private[graft] object ChainSkip {
 
   // ------------------------------------------------ planned stats
 
-  /** Post-pruning row/byte estimates, cached per immutable snapshot:
-    * keyed by (root, version, the version's commit instant, bounds)
-    * so a chain REBUILT at the same path (version numbers recycled)
-    * can never serve a stale entry. */
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Map[String, Bounds]), Long]()
-
   /** Live row count of the (possibly pruned) scan — manifest
-    * arithmetic minus the DV sidecar's hidden positions, one tiny
-    * job per distinct (snapshot, bounds), then memoized. Equality
-    * deletes make this an over-estimate (planner statistics may
-    * legally over-estimate; the metadata AGGREGATE path refuses
-    * instead). */
+    * arithmetic minus the DV sidecar's hidden positions, over the
+    * driver-held manifest rows. Equality deletes make this an
+    * over-estimate (planner statistics may legally over-estimate; the
+    * metadata AGGREGATE path refuses instead). */
   def plannedLiveRows(s: SparkSession, root: String, version: Long,
                       bounds: Map[String, Bounds]): Long = {
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    statsCache.computeIfAbsent((root, version, ts, bounds), { _ =>
-      val m = ManifestPrune.immutableParquet(s,
-        ManifestPrune.manifestOf(root, version))
-      val planned = plannedFiles(s, root, version, bounds) match {
-        case Some(fs) => m.filter(col("file").isInCollection(
-          if (fs.isEmpty) Seq("") else fs))
-        case None => m
-      }
-      val total = planned.agg(coalesce(sum(col("n_rows")), lit(0L)))
-        .head.getLong(0)
-      val hidden = ManifestPrune.dvOf(root, version)
-        .map(ManifestPrune.dvHiddenCount(s, _)).getOrElse(0L)
-      (total - hidden).max(0L)
-    })
+    val v = manifestView(s, root, version)
+    val planned: String => Boolean =
+      plannedFiles(s, root, version, bounds).fold((_: String) => true)(_.toSet)
+    val total = v.m.rows.filter(r => planned(v.file(r))).map(v.rows).sum
+    val hidden = ManifestPrune.dvOf(root, version)
+      .map(ManifestPrune.dvHiddenCount(s, _)).getOrElse(0L)
+    (total - hidden).max(0L)
   }
 
   /** LIMIT-pushdown file plan: the FEWEST files (largest live count
@@ -504,46 +532,19 @@ private[graft] object ChainSkip {
     * deletes make per-file live counts unknowable, so None (no
     * pruning) there. None also when the whole table doesn't cover
     * the limit (plan everything — Spark still gets every row). */
-  private val limitFilesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Int), Option[Seq[String]]]()
-
   def limitFiles(s: SparkSession, root: String, version: Long,
                  limit: Int): Option[Seq[String]] = {
-    // memoized per immutable snapshot + limit (the colStatsFiles
-    // discipline): the commit-instant key makes a rebuilt chain at
-    // the same path a different cache key
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    limitFilesCache.computeIfAbsent((root, version, ts, limit),
-      _ => limitFilesUncached(s, root, version, limit))
-  }
-
-  private def limitFilesUncached(s: SparkSession, root: String,
-                                 version: Long,
-                                 limit: Int): Option[Seq[String]] = {
     if (ManifestPrune.eqDelOf(root, version).nonEmpty) return None
-    val m = ManifestPrune.immutableParquet(s,
-        ManifestPrune.manifestOf(root, version))
-      .select(col("file"), col("n_rows"))
-    val live = ManifestPrune.dvOf(root, version) match {
-      case Some(dv) =>
-        val hidden = ManifestPrune.immutableParquet(s, dv)
-          .groupBy("file")
-          .agg(count(lit(1)).as("__hidden"))
-        m.join(hidden, Seq("file"), "left")
-          .select(col("file"), (col("n_rows") -
-            coalesce(col("__hidden"), lit(0L))).as("n_live"))
-      case None => m.select(col("file"), col("n_rows").as("n_live"))
-    }
+    val v = manifestView(s, root, version)
+    val hidden = ManifestPrune.dvHiddenByFile(s,
+      ManifestPrune.dvOf(root, version))
     // driver-bounded by the same manifest cap as every file plan
-    val rows = ManifestPrune.collectFileList(s,
-      live.orderBy(col("n_live").desc, col("file"))
-        .select(concat_ws("\u0000", col("file"),
-          col("n_live").cast("string"))),
-      s"limit-pushdown plan of $root v$version")
-      .map { packed =>
-        val i = packed.lastIndexOf('\u0000')
-        (packed.substring(0, i), packed.substring(i + 1).toLong)
-      }
+    val rows = ManifestPrune.boundedFiles(s, v.m.rows.iterator.map { r =>
+        val f = v.file(r)
+        (f, v.rows(r) - hidden.getOrElse(f, 0L))
+      }, s"limit-pushdown plan of $root v$version")
+      .sorted(Ordering.by[(String, Long), Long](_._2)(Ordering.Long.reverse)
+        .orElseBy(_._1)(utf8Ordering))
     var acc = 0L
     val kept = rows.takeWhile { case (_, n) =>
       val need = acc < limit; acc += n; need
@@ -572,91 +573,12 @@ private[graft] object ChainSkip {
     * None when nothing can be dropped or the preconditions (no
     * equality deletes, per-file bounds for the column from the spec
     * stats OR the cstats_long map) fail. */
-  private val topNFilesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, String, Boolean, Boolean, Int),
-    Option[Seq[String]]]()
-
   def topNFiles(s: SparkSession, root: String, version: Long,
                 colName: String, ascending: Boolean,
-                nullsFirst: Boolean, k: Int): Option[Seq[String]] = {
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    topNFilesCache.computeIfAbsent(
-      (root, version, ts, colName, ascending, nullsFirst, k),
-      _ => topNFilesUncached(s, root, version, colName, ascending,
-        nullsFirst, k))
-  }
-
-  private def topNFilesUncached(s: SparkSession, root: String,
-                version: Long, colName: String, ascending: Boolean,
-                nullsFirst: Boolean, k: Int): Option[Seq[String]] = {
-    if (ManifestPrune.eqDelOf(root, version).nonEmpty) return None
-    val statted = ManifestPrune.listSpecs(root).collect {
-      case (id, sp) if sp.statsCol == colName => id }.toSet
-    val m0 = ManifestPrune.immutableParquet(s,
-      ManifestPrune.manifestOf(root, version))
-    val hasC = m0.columns.contains("cstats_long")
-    if (statted.isEmpty && !hasC) return None
-    if (!m0.columns.contains("n_nulls")) return None
-    val m1 =
-      if (m0.columns.contains("spec_id"))
-        m0.withColumn("spec_id", coalesce(col("spec_id"), lit(0)))
-      else m0.withColumn("spec_id", lit(0))
-    val hidden = ManifestPrune.dvOf(root, version) match {
-      case Some(dv) => ManifestPrune.immutableParquet(s, dv)
-        .groupBy("file")
-        .agg(count(lit(1)).as("__hidden"))
-      case None => m1.select(col("file")).limit(0)
-        .withColumn("__hidden", lit(0L))
-    }
-    // per-file bounds source, row by row: the spec's min/max_key when
-    // this row's spec stats the ordered column (and the manifest's
-    // key columns are long-typed — a string-statted chain's keys are
-    // lexicographic), else the column's cstats_long entry; rows with
-    // neither are unusable (never dropped, never counted as beating)
-    import org.apache.spark.sql.functions.{when => sqlWhen}
-    val minKeyIsLong = Set[DataType](LongType, IntegerType, ShortType,
-      ByteType).contains(m0.schema("min_key").dataType)
-    val fromSpec =
-      if (statted.isEmpty || !minKeyIsLong) lit(false)
-      else col("spec_id").isInCollection(statted.toSeq)
-    val ce =
-      if (hasC) col("cstats_long").getItem(colName)
-      else lit(null).cast("struct<lo:bigint,hi:bigint,nn:bigint>")
-    val loC = sqlWhen(fromSpec, col("min_key").cast("long"))
-      .otherwise(ce.getField("lo"))
-    val hiC = sqlWhen(fromSpec, col("max_key").cast("long"))
-      .otherwise(ce.getField("hi"))
-    val nnC = sqlWhen(fromSpec, col("n_nulls"))
-      .otherwise(ce.getField("nn"))
-    val usableC = fromSpec || ce.isNotNull
-    // u0001 cannot occur in a filesystem path; concat_ws SKIPS null
-    // columns, so every nullable field is coalesced to "" explicitly
-    // to keep the positions stable
-    val sep = "\u0001"
-    def str(c: org.apache.spark.sql.Column) =
-      coalesce(c.cast("string"), lit(""))
-    val packed = ManifestPrune.collectFileList(s,
-      m1.join(hidden, Seq("file"), "left")
-        .select(concat_ws(sep,
-          col("file"),
-          str(loC),
-          str(hiC),
-          str(col("n_rows")),
-          str(nnC),
-          str(coalesce(col("__hidden"), lit(0L))),
-          str(sqlWhen(usableC, lit(1)).otherwise(lit(0))))),
-      s"top-$k plan of $root v$version")
-    val files = packed.map { line =>
-      val p = line.split(sep, -1)
-      def num(i: Int): Option[Long] =
-        if (p(i).isEmpty) None else Some(p(i).toLong)
-      TopNFile(p(0), num(1), num(2), p(3).toLong, num(4), p(5).toLong,
-        usable = p(6) == "1")
-    }
-    val dropped = topNDropSet(files, ascending, nullsFirst, k)
-    if (dropped.isEmpty) None
-    else Some(files.map(_.file).filterNot(dropped).sorted)
-  }
+                nullsFirst: Boolean, k: Int): Option[Seq[String]] =
+    topNPlan[Long](s, root, version, colName, ascending, nullsFirst, k,
+      LongType, s"top-$k plan of $root v$version")(
+      _.asInstanceOf[Number].longValue)
 
   /** TOP-N pushdown file plan for `ORDER BY <string col> <dir> LIMIT
     * k` — the `cstats_str` mirror of [[topNFiles]], sound under the
@@ -677,98 +599,52 @@ private[graft] object ChainSkip {
     *
     * Spec `min_key`/`max_key` take over per row when the manifest
     * keys are string-typed (a lang/URL-clustered chain): those are
-    * EXACT, untruncated bounds from the stats aggregation. Bounds are
-    * base64-packed through the driver collect — string VALUES may
-    * contain the separator, unlike file paths — and compared in
-    * UTF8-binary order, matching the manifest aggregation's own
-    * min/max semantics. */
-  private val topNFilesStrCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, String, Boolean, Boolean, Int),
-    Option[Seq[String]]]()
-
+    * EXACT, untruncated bounds from the stats aggregation. Bounds
+    * compare in UTF8-binary order, matching the manifest
+    * aggregation's own min/max semantics. */
   def topNFilesStr(s: SparkSession, root: String, version: Long,
                    colName: String, ascending: Boolean,
-                   nullsFirst: Boolean, k: Int): Option[Seq[String]] = {
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    topNFilesStrCache.computeIfAbsent(
-      (root, version, ts, colName, ascending, nullsFirst, k),
-      _ => topNFilesStrUncached(s, root, version, colName, ascending,
-        nullsFirst, k))
-  }
+                   nullsFirst: Boolean, k: Int): Option[Seq[String]] =
+    topNPlan[String](s, root, version, colName, ascending, nullsFirst,
+      k, StringType, s"top-$k string plan of $root v$version")(
+      _.toString)(utf8Ordering)
 
-  private def topNFilesStrUncached(s: SparkSession, root: String,
-                   version: Long, colName: String, ascending: Boolean,
-                   nullsFirst: Boolean, k: Int): Option[Seq[String]] = {
+  /** The TOP-N builder behind both planners, generic in the bound
+    * type `t` stands for. Per-file bounds come row by row from the
+    * spec's min/max_key when this row's spec stats the ordered column
+    * (and the manifest's key columns are of `t`'s family — a
+    * string-statted chain's keys are lexicographic), else from the
+    * column's cstats entry; rows with neither are unusable (never
+    * dropped, never counted as beating). */
+  private def topNPlan[T](s: SparkSession, root: String, version: Long,
+      colName: String, ascending: Boolean, nullsFirst: Boolean, k: Int,
+      t: DataType, what: String)(bound: Any => T)
+      (implicit ord: Ordering[T]): Option[Seq[String]] = {
     if (ManifestPrune.eqDelOf(root, version).nonEmpty) return None
     val statted = ManifestPrune.listSpecs(root).collect {
       case (id, sp) if sp.statsCol == colName => id }.toSet
-    val m0 = ManifestPrune.immutableParquet(s,
-      ManifestPrune.manifestOf(root, version))
-    val hasC = m0.columns.contains("cstats_str")
-    if (statted.isEmpty && !hasC) return None
-    if (!m0.columns.contains("n_nulls")) return None
-    val m1 =
-      if (m0.columns.contains("spec_id"))
-        m0.withColumn("spec_id", coalesce(col("spec_id"), lit(0)))
-      else m0.withColumn("spec_id", lit(0))
-    val hidden = ManifestPrune.dvOf(root, version) match {
-      case Some(dv) => ManifestPrune.immutableParquet(s, dv)
-        .groupBy("file")
-        .agg(count(lit(1)).as("__hidden"))
-      case None => m1.select(col("file")).limit(0)
-        .withColumn("__hidden", lit(0L))
-    }
-    import org.apache.spark.sql.functions.{when => sqlWhen}
-    val minKeyIsStr = m0.schema("min_key").dataType ==
-      org.apache.spark.sql.types.StringType
-    val fromSpec =
-      if (statted.isEmpty || !minKeyIsStr) lit(false)
-      else col("spec_id").isInCollection(statted.toSeq)
-    val ce =
-      if (hasC) col("cstats_str").getItem(colName)
-      else lit(null).cast("struct<lo:string,hi:string,nn:bigint>")
-    val loC = sqlWhen(fromSpec, col("min_key").cast("string"))
-      .otherwise(ce.getField("lo"))
-    val hiC = sqlWhen(fromSpec, col("max_key").cast("string"))
-      .otherwise(ce.getField("hi"))
-    val nnC = sqlWhen(fromSpec, col("n_nulls"))
-      .otherwise(ce.getField("nn"))
-    val usableC = fromSpec || ce.isNotNull
-    // null-vs-value marker + base64: string bounds can contain ANY
-    // byte (including the separator and newlines), and "" is a legal
-    // bound distinct from null
-    def enc(c: org.apache.spark.sql.Column) =
-      sqlWhen(c.isNull, lit("N"))
-        .otherwise(concat(lit("V"), base64(c.cast("binary"))))
-    def str(c: org.apache.spark.sql.Column) =
-      coalesce(c.cast("string"), lit(""))
-    val sep = "\u0001"
-    val packed = ManifestPrune.collectFileList(s,
-      m1.join(hidden, Seq("file"), "left")
-        .select(concat_ws(sep,
-          col("file"),
-          enc(loC),
-          enc(hiC),
-          str(col("n_rows")),
-          str(nnC),
-          str(coalesce(col("__hidden"), lit(0L))),
-          str(sqlWhen(usableC, lit(1)).otherwise(lit(0))))),
-      s"top-$k string plan of $root v$version")
-    val files = packed.map { line =>
-      val p = line.split(sep, -1)
-      def dec(i: Int): Option[String] =
-        if (p(i) == "N") None
-        // MIME decoder: Spark's base64() chunks at 76 chars with CRLF
-        else Some(new String(
-          java.util.Base64.getMimeDecoder.decode(p(i).substring(1)),
-          java.nio.charset.StandardCharsets.UTF_8))
-      def num(i: Int): Option[Long] =
-        if (p(i).isEmpty) None else Some(p(i).toLong)
-      TopNFile[String](p(0), dec(1), dec(2), p(3).toLong, num(4),
-        p(5).toLong, usable = p(6) == "1")
-    }
-    val dropped =
-      topNDropSet(files, ascending, nullsFirst, k)(utf8Ordering)
+    val v = manifestView(s, root, version)
+    if (statted.isEmpty && !v.has(family(t))) return None
+    if (!v.has("n_nulls")) return None
+    val keyType = v.m.schema("min_key").dataType
+    val specKeys = statted.nonEmpty &&
+      (if (t == StringType) keyType == StringType else Integral(keyType))
+    val hidden = ManifestPrune.dvHiddenByFile(s,
+      ManifestPrune.dvOf(root, version))
+    val files = ManifestPrune.boundedFiles(s, v.m.rows.iterator, what)
+      .map { r =>
+        def f(lo: Any, hi: Any, nulls: Option[Long]) = TopNFile[T](
+          v.file(r), Option(lo).map(bound), Option(hi).map(bound),
+          v.rows(r), nulls, hidden.getOrElse(v.file(r), 0L),
+          usable = true)
+        if (specKeys && statted(v.spec(r)))
+          f(v.key(r, "min_key"), v.key(r, "max_key"), v.nulls(r))
+        else v.stat(r, family(t), colName) match {
+          case Some(e) => f(e.lo, e.hi, Some(e.nn))
+          case None => f(null, null, None).copy(usable = false)
+        }
+      }
+    val dropped = topNDropSet(files, ascending, nullsFirst, k)
     if (dropped.isEmpty) None
     else Some(files.map(_.file).filterNot(dropped).sorted)
   }
@@ -869,6 +745,108 @@ private[graft] object ChainSkip {
     * null for an empty table). */
   case class MetaAgg(schema: StructType, rows: Seq[Seq[Any]])
 
+  /** One aggregate of a pushed batch that metadata can answer. */
+  private sealed trait Ask
+  private case object AskCount extends Ask
+  private case class AskCountCol(c: String, t: DataType) extends Ask
+  private case class AskMin(c: String, t: DataType) extends Ask
+  private case class AskMax(c: String, t: DataType) extends Ask
+  private case class AskSum(c: String, t: DataType) extends Ask
+
+  /** A bare reference to a table column the writer stats — every
+    * width cstatFields stats into cstats_long, and strings. */
+  private def statted(table: StructType, e: V2Expr)
+      : Option[(String, DataType)] = for {
+    n <- colName(e)
+    f <- table.fields.find(_.name == n)
+    if Integral(f.dataType) || f.dataType == StringType
+  } yield (n, f.dataType)
+
+  /** The batch's asks, or None when one of them needs the data:
+    * DISTINCT, an unstatted column, a string SUM (doubles are never
+    * statted), any other function. */
+  private def parseAsks(table: StructType, agg: Aggregation)
+      : Option[Seq[Ask]] = {
+    val asks = agg.aggregateExpressions().toSeq.map {
+      case _: CountStar => Some(AskCount)
+      case c: org.apache.spark.sql.connector.expressions.aggregate.Count
+          if !c.isDistinct =>
+        statted(table, c.column).map((AskCountCol.apply _).tupled)
+      case m: Min => statted(table, m.column).map((AskMin.apply _).tupled)
+      case m: Max => statted(table, m.column).map((AskMax.apply _).tupled)
+      case sm: Sum if !sm.isDistinct =>
+        statted(table, sm.column).filter(_._2 != StringType)
+          .map((AskSum.apply _).tupled)
+      case _ => None
+    }
+    if (asks.forall(_.isDefined)) Some(asks.flatten) else None
+  }
+
+  /** The distinct columns the asks read, with what each needs: MIN
+    * (whole string lo), MAX (recorded string hi), the non-null count
+    * (COUNT(col), and SUM for its NULL-iff-no-values rule) and SUM. */
+  private case class Need(min: Boolean, max: Boolean, count: Boolean,
+                          sum: Boolean)
+
+  private def needs(asks: Seq[Ask]): Seq[((String, DataType), Need)] =
+    asks.collect {
+      case AskMin(c, t) => (c, t)
+      case AskMax(c, t) => (c, t)
+      case AskCountCol(c, t) => (c, t)
+      case AskSum(c, t) => (c, t)
+    }.distinct.map { ct =>
+      ct -> Need(asks.contains(AskMin(ct._1, ct._2)),
+        asks.contains(AskMax(ct._1, ct._2)),
+        asks.exists(a => a == AskCountCol(ct._1, ct._2) ||
+          a == AskSum(ct._1, ct._2)),
+        asks.contains(AskSum(ct._1, ct._2)))
+    }
+
+  /** The cstats answer (lo, hi, non-null count) for a column, or None
+    * on a coverage gap or a string bound the truncation rule leaves
+    * unknowable. */
+  private def cstatsAnswer(r: Rollup, need: Need): Option[(Any, Any, Long)] =
+    if (r.gaps == 0 && (!need.min || r.loCut == 0) &&
+        (!need.max || r.hiCut == 0)) Some((r.lo, r.hi, r.nonNull))
+    else None
+
+  private val LongMaxD = java.math.BigDecimal.valueOf(Long.MaxValue)
+  private val LongMinD = java.math.BigDecimal.valueOf(Long.MinValue)
+
+  /** One output row of the asks from a file set's answers: `count` is
+    * its live rows, `answer` a column's (lo, hi, non-null count), `sum`
+    * its decimal total. None when a SUM falls outside Long range — the
+    * real scan then reproduces Spark's native ANSI overflow behavior. */
+  private def askValues(asks: Seq[Ask], count: Long,
+                        answer: String => (Any, Any, Long),
+                        sum: String => java.math.BigDecimal)
+      : Option[Seq[Any]] = {
+    val out = asks.map {
+      case AskCount => count
+      case AskCountCol(c, _) => answer(c)._3
+      case AskMin(c, t) => statVal(answer(c)._1, t)
+      case AskMax(c, t) => statVal(answer(c)._2, t)
+      case AskSum(c, _) =>
+        // SUM(integral) is LongType in Spark regardless of the input
+        // width; NULL iff zero non-null values (the SQL rule)
+        val tot = sum(c)
+        if (answer(c)._3 == 0L || tot == null) null
+        else if (tot.compareTo(LongMaxD) > 0 || tot.compareTo(LongMinD) < 0)
+          return None
+        else tot.longValueExact()
+    }
+    Some(out)
+  }
+
+  private def askField(a: Ask, i: Int): StructField = a match {
+    case AskCount => StructField(s"count_$i", LongType, nullable = false)
+    case AskCountCol(c, _) =>
+      StructField(s"countc_${c}_$i", LongType, nullable = false)
+    case AskMin(c, t) => StructField(s"min_${c}_$i", t)
+    case AskMax(c, t) => StructField(s"max_${c}_$i", t)
+    case AskSum(c, _) => StructField(s"sum_${c}_$i", LongType)
+  }
+
   /** Plan `agg` purely from the version's metadata, or None when a
     * scan is genuinely required. Supported, all global (no GROUP BY):
     *
@@ -888,296 +866,77 @@ private[graft] object ChainSkip {
     *    column's cstats entries; same no-hidden-rows requirement
     *    (a hidden row's nullness is a data question);
     *  - SUM of an integral column — Σ of the per-file decimal(38,0)
-    *    sums in `cstats_sum`, requiring gap-free coverage by
-    *    map_contains_key (a null SUM entry is a legitimately all-null
-    *    file, a missing key is a pre-feature or trimmed-policy row),
-    *    NULL iff zero non-null values, REFUSED when the exact total
-    *    falls outside Long range (the real scan then reproduces
-    *    Spark's native ANSI overflow behavior).
+    *    sums in `cstats_sum`, requiring gap-free key coverage (a null
+    *    SUM entry is a legitimately all-null file, a missing key is a
+    *    pre-feature or trimmed-policy row), NULL iff zero non-null
+    *    values, REFUSED when the exact total falls outside Long range
+    *    (the real scan then reproduces Spark's native ANSI overflow
+    *    behavior).
     *
     * Aggregate pushdown is all-or-nothing: one unanswerable ask
-    * refuses the whole batch and the real scan runs.
-    *
-    * Both planners are memoized per immutable snapshot + ask
-    * signature (the colStatsFiles commit-instant key discipline):
-    * repeated executions of the same aggregate pay the manifest
-    * job once. */
-  private val metaAggCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Seq[String]), Option[MetaAgg]]()
-
-  private def aggSignature(agg: Aggregation): Seq[String] =
-    (agg.groupByExpressions().map(_.describe()) ++
-      agg.aggregateExpressions().map(_.describe())).toSeq
-
+    * refuses the whole batch and the real scan runs. */
   def planAgg(s: SparkSession, root: String, version: Long,
               table: StructType, agg: Aggregation): Option[MetaAgg] = {
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    metaAggCache.computeIfAbsent(
-      (root, version, ts, "G" +: aggSignature(agg)),
-      _ => planAggUncached(s, root, version, table, agg))
-  }
-
-  private def planAggUncached(
-      s: SparkSession, root: String, version: Long,
-      table: StructType, agg: Aggregation): Option[MetaAgg] = {
     if (agg.groupByExpressions().nonEmpty) return None
-    val eqdel = ManifestPrune.eqDelOf(root, version)
+    val asks = parseAsks(table, agg).getOrElse(return None)
+    // every ask refuses under equality deletes; all but COUNT(*) need
+    // every row visible
     val dv = ManifestPrune.dvOf(root, version)
-
-    sealed trait Ask
-    case object AskCount extends Ask
-    case class AskCountCol(c: String, t: DataType) extends Ask
-    case class AskMin(c: String, t: DataType) extends Ask
-    case class AskMax(c: String, t: DataType) extends Ask
-    case class AskSum(c: String, t: DataType) extends Ask
-
-    def minMaxCol(e: V2Expr): Option[(String, DataType)] = for {
-      n <- colName(e)
-      f <- table.fields.find(_.name == n)
-      // every width cstatFields stats into cstats_long qualifies —
-      // gating narrower than the writer silently forced short/byte
-      // aggregates onto a full scan despite exact manifest stats
-      if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == ShortType || f.dataType == ByteType ||
-        f.dataType == org.apache.spark.sql.types.StringType
-    } yield (n, f.dataType)
-
-    val asks: Seq[Ask] = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar =>
-        if (eqdel.nonEmpty) return None
-        AskCount
-      case cnt: org.apache.spark.sql.connector.expressions.aggregate
-          .Count =>
-        if (cnt.isDistinct || eqdel.nonEmpty || dv.nonEmpty) return None
-        minMaxCol(cnt.column) match {
-          case Some((n, t)) => AskCountCol(n, t)
-          case None => return None
-        }
-      case m: Min =>
-        if (eqdel.nonEmpty || dv.nonEmpty) return None
-        minMaxCol(m.column) match {
-          case Some((n, t)) => AskMin(n, t)
-          case None => return None
-        }
-      case m: Max =>
-        if (eqdel.nonEmpty || dv.nonEmpty) return None
-        minMaxCol(m.column) match {
-          case Some((n, t)) => AskMax(n, t)
-          case None => return None
-        }
-      case sm: Sum =>
-        // SUM answers from the per-file cstats_sum map — integral
-        // columns only (string SUM never reaches here; doubles are
-        // never statted). Hidden rows make the total a data question,
-        // same refusal as MIN/MAX.
-        if (sm.isDistinct || eqdel.nonEmpty || dv.nonEmpty) return None
-        minMaxCol(sm.column) match {
-          case Some((n, t)) if t != org.apache.spark.sql.types
-            .StringType => AskSum(n, t)
-          case _ => return None
-        }
-      case _: AggregateFunc => return None
-    }
-
-    val m0 = ManifestPrune.immutableParquet(s,
-      ManifestPrune.manifestOf(root, version))
-    val m =
-      if (m0.columns.contains("spec_id"))
-        m0.withColumn("spec_id", coalesce(col("spec_id"), lit(0)))
-      else m0.withColumn("spec_id", lit(0))
+    if (ManifestPrune.eqDelOf(root, version).nonEmpty ||
+        (dv.nonEmpty && asks.exists(_ != AskCount))) return None
+    val v = manifestView(s, root, version)
+    if (asks.exists(_.isInstanceOf[AskSum]) && !v.has("cstats_sum"))
+      return None
+    val live = v.live
     val specs = ManifestPrune.listSpecs(root)
-    val live = m.filter(col("n_rows") > 0)
-
-    def needMin(c: String) = asks.exists { case AskMin(x, _) => x == c
-                                           case _ => false }
-    def needMax(c: String) = asks.exists { case AskMax(x, _) => x == c
-                                           case _ => false }
-    def needCnt(c: String) = asks.exists {
-      case AskCountCol(x, _) => x == c
-      case AskSum(x, _) => x == c // SUM needs the non-null count too
-      case _ => false }
-    def needSum(c: String) = asks.exists {
-      case AskSum(x, _) => x == c; case _ => false }
-    val mmAsks: Seq[(String, DataType)] = asks.collect {
-      case AskMin(c, t) => (c, t)
-      case AskMax(c, t) => (c, t)
-      case AskCountCol(c, t) => (c, t)
-      case AskSum(c, t) => (c, t) }.distinct
-
-    // Everything the decision needs — per-column coverage gaps,
-    // string-truncation guards, extremes, non-null counts, the spec
-    // path's min_key/max_key rollup AND the total row count — comes
-    // from ONE aggregate job over the manifest (planning latency is
-    // a per-query cost; the r14 lesson is to never spend a Spark job
-    // where a column expression will do).
-    val isStr = (t: DataType) =>
-      t == org.apache.spark.sql.types.StringType
-    val intish = Set[DataType](LongType, IntegerType, ShortType,
-      ByteType)
-    def entry(c: String, t: DataType) = {
-      val mapCol = if (isStr(t)) "cstats_str" else "cstats_long"
-      if (m.columns.contains(mapCol)) col(mapCol).getItem(c)
-      else lit(null).cast(
-        if (isStr(t)) "struct<lo:string,hi:string,nn:bigint>"
-        else "struct<lo:bigint,hi:bigint,nn:bigint>")
-    }
-    val minKeyType = m0.schema.fields.find(_.name == "min_key")
+    val keyType = v.m.schema.fields.find(_.name == "min_key")
       .map(_.dataType)
-    def cnt(cond: org.apache.spark.sql.Column) =
-      coalesce(sum(org.apache.spark.sql.functions.when(cond, 1L)
-        .otherwise(0L)), lit(0L))
-    val perColAggs = mmAsks.zipWithIndex.flatMap { case ((c, t), i) =>
-      val e = entry(c, t)
-      val specOk = specs.collect {
-        case (id, sp) if sp.statsCol == c => id }.toSeq
-      val specTypeOk = minKeyType.exists(k =>
-        if (isStr(t)) isStr(k) else intish.contains(k))
-      val specGap =
-        if (specOk.isEmpty || !specTypeOk) lit(1L)
-        else cnt(!col("spec_id").isInCollection(specOk))
-      Seq(
-        specGap.as(s"__sg_$i"),
-        cnt(e.isNull).as(s"__cg_$i"),
-        (if (isStr(t)) cnt(e.getField("nn") < col("n_rows") &&
-           length(e.getField("lo")) >= 64) else lit(0L))
-          .as(s"__lb_$i"),
-        (if (isStr(t)) cnt(e.getField("nn") < col("n_rows") &&
-           e.getField("hi").isNull) else lit(0L)).as(s"__hb_$i"),
-        min(e.getField("lo")).as(s"__lo_$i"),
-        max(e.getField("hi")).as(s"__hi_$i"),
-        coalesce(sum(col("n_rows") - e.getField("nn")), lit(0L))
-          .as(s"__nn_$i")) ++
-      (if (!needSum(c)) Nil else {
-        // the decimal(38,0) per-file sums roll up losslessly; the
-        // gap count uses map_contains_key, NOT a null-value test — a
-        // legitimately all-null file records a null SUM entry, which
-        // is present coverage, while a pre-feature manifest row (or
-        // trimmed-policy row) has no key at all and must refuse
-        val hasSum = m.columns.contains("cstats_sum")
-        val se =
-          if (hasSum) col("cstats_sum").getItem(c)
-          else lit(null).cast("decimal(38,0)")
-        val sgap =
-          if (hasSum)
-            cnt(!coalesce(org.apache.spark.sql.functions
-              .map_contains_key(col("cstats_sum"), lit(c)),
-              lit(false)))
-          else lit(1L)
-        Seq(sum(se).as(s"__sm_$i"), sgap.as(s"__smg_$i"))
-      })
-    }
-    val shared = Seq(
-      coalesce(sum(col("n_rows")), lit(0L)).as("__rows"),
-      min(col("min_key")).as("__sklo"),
-      max(col("max_key")).as("__skhi"),
-      (if (m0.columns.contains("n_nulls"))
-         coalesce(sum(col("n_rows") - col("n_nulls")), lit(0L))
-       else lit(-1L)).as("__sknn"),
-      (if (m0.columns.contains("n_nulls"))
-         cnt(col("n_nulls").isNull) else lit(1L)).as("__sknn_gap"))
-    val aggs = shared ++ perColAggs
-    val row = live.agg(aggs.head, aggs.tail: _*).head
-    def rL(name: String): Long = row.getLong(row.fieldIndex(name))
-    def rV(name: String): Any = {
-      val i = row.fieldIndex(name)
-      if (row.isNullAt(i)) null else row.get(i)
-    }
-
-    val perCol = mmAsks.zipWithIndex.map { case ((c, t), i) =>
-      val specCovers = rL(s"__sg_$i") == 0L
-      val cstatsCover = rL(s"__cg_$i") == 0L
-      val loWhole = !isStr(t) || !needMin(c) || rL(s"__lb_$i") == 0L
-      val hiWhole = !isStr(t) || !needMax(c) || rL(s"__hb_$i") == 0L
-      val cTriple: Option[(Any, Any, Long)] =
-        if (cstatsCover && loWhole && hiWhole)
-          Some((rV(s"__lo_$i"), rV(s"__hi_$i"), rL(s"__nn_$i")))
-        else None
-      val sTriple: Option[(Any, Any, Long)] =
-        if (specCovers)
-          Some((rV("__sklo"), rV("__skhi"),
-            if (rL("__sknn_gap") == 0L) rL("__sknn") else -1L))
-        else None
+    // the spec path's non-null count needs a gap-free n_nulls rollup
+    lazy val specNonNull =
+      if (live.forall(v.nulls(_).isDefined))
+        live.map(r => v.rows(r) - v.nulls(r).get).sum
+      else -1L
+    val perCol = needs(asks).map { case ((c, t), need) =>
+      val str = t == StringType
+      val r = rollup(v, live, c, t)
+      val specIds = specs.collect {
+        case (id, sp) if sp.statsCol == c => id }.toSet
+      val specCovers = specIds.nonEmpty &&
+        keyType.exists(k => if (str) k == StringType else Integral(k)) &&
+        live.forall(f => specIds(v.spec(f)))
+      val sTriple =
+        if (!specCovers) None
+        else {
+          val ord = statOrdering(str)
+          Some((extreme(live.iterator.map(v.key(_, "min_key")), ord,
+              max = false),
+            extreme(live.iterator.map(v.key(_, "max_key")), ord,
+              max = true),
+            specNonNull))
+        }
       // spec bounds are exact and untruncated — prefer them except
       // for the non-null count, which only the cstats entries (or a
       // gap-free n_nulls rollup) can answer
+      val cTriple = cstatsAnswer(r, need)
       val triple =
-        if (needCnt(c)) cTriple.orElse(sTriple.filter(_._3 >= 0L))
+        if (need.count) cTriple.orElse(sTriple).filter(_._3 >= 0L)
         else sTriple.orElse(cTriple)
-      c -> triple
+      c -> triple.getOrElse(return None)
     }.toMap
-    // total per-column SUMs: (coverage-gap count, decimal total)
-    val sumCol: Map[String, (Long, Any)] =
-      mmAsks.zipWithIndex.collect {
-        case ((c, _), i) if needSum(c) =>
-          c -> ((rL(s"__smg_$i"), rV(s"__sm_$i")))
-      }.toMap
-    val longMaxD = java.math.BigDecimal.valueOf(Long.MaxValue)
-    val longMinD = java.math.BigDecimal.valueOf(Long.MinValue)
-    for (ask <- asks) ask match {
-      case AskMin(c, _) => if (perCol(c).isEmpty) return None
-      case AskMax(c, _) => if (perCol(c).isEmpty) return None
-      case AskCountCol(c, _) =>
-        if (perCol(c).isEmpty || perCol(c).get._3 < 0) return None
-      case AskSum(c, _) =>
-        // needs the non-null count (NULL-iff-no-values rule) AND
-        // gap-free sum coverage; a total outside Long range refuses
-        // so the real scan reproduces Spark's native ANSI overflow
-        if (perCol(c).isEmpty || perCol(c).get._3 < 0) return None
-        val (gap, tot) = sumCol(c)
-        if (gap != 0L) return None
-        if (tot != null) {
-          val bd = tot.asInstanceOf[java.math.BigDecimal]
-          if (bd.compareTo(longMaxD) > 0 || bd.compareTo(longMinD) < 0)
-            return None
-        }
-      case AskCount =>
-    }
-
-    val totalRows = rL("__rows")
+    val sums = needs(asks).collect {
+      case ((c, _), need) if need.sum => c -> v.sumOf(live, c) }.toMap
+    if (sums.values.exists(_._1 != 0L)) return None
     val hidden = dv.map(ManifestPrune.dvHiddenCount(s, _)).getOrElse(0L)
-    val liveRows = (totalRows - hidden).max(0L)
-    def statVal(v: Any, t: DataType): Any =
-      if (v == null) null
-      else t match {
-        case IntegerType => v.asInstanceOf[Number].intValue
-        case ShortType => v.asInstanceOf[Number].shortValue
-        case ByteType => v.asInstanceOf[Number].byteValue
-        case org.apache.spark.sql.types.StringType =>
-          org.apache.spark.unsafe.types.UTF8String
-            .fromString(v.toString)
-        case _ => v.asInstanceOf[Number].longValue
-      }
-
-    val (fields, values) = asks.zipWithIndex.map {
-      case (AskCount, i) =>
-        (org.apache.spark.sql.types.StructField(s"count_$i", LongType,
-          nullable = false), liveRows: Any)
-      case (AskCountCol(c, _), i) =>
-        (org.apache.spark.sql.types.StructField(s"countc_${c}_$i",
-          LongType, nullable = false), perCol(c).get._3: Any)
-      case (AskMin(c, t), i) =>
-        (org.apache.spark.sql.types.StructField(s"min_${c}_$i", t),
-          statVal(perCol(c).get._1, t))
-      case (AskMax(c, t), i) =>
-        (org.apache.spark.sql.types.StructField(s"max_${c}_$i", t),
-          statVal(perCol(c).get._2, t))
-      case (AskSum(c, _), i) =>
-        // SUM(integral) is LongType in Spark regardless of the input
-        // width; NULL iff zero non-null values (the SQL rule)
-        val v: Any =
-          if (perCol(c).get._3 == 0L || sumCol(c)._2 == null) null
-          else sumCol(c)._2.asInstanceOf[java.math.BigDecimal]
-            .longValueExact()
-        (org.apache.spark.sql.types.StructField(s"sum_${c}_$i",
-          LongType), v)
-    }.unzip
-    Some(MetaAgg(StructType(fields), Seq(values)))
+    askValues(asks, (live.map(v.rows).sum - hidden).max(0L), perCol,
+        c => sums(c)._2)
+      .map(vals => MetaAgg(StructType(asks.zipWithIndex.map {
+        case (a, i) => askField(a, i) }), Seq(vals)))
   }
 
   /** Metadata-only GROUP BY (the Iceberg-partition-rollup analogue,
     * generalized to any cstats-covered columns): `GROUP BY g[, h...]`
     * (up to 4 columns) with COUNT(*)/COUNT(col)/MIN/MAX/SUM
-    * aggregates answers from one manifest aggregation when every
+    * aggregates answers from the manifest rows when every
     * live file is provably SINGLE-GROUP in EVERY grouping column —
     * its cstats entry says lo == hi with zero nulls (the file
     * belongs wholly to group lo), or all-null (the file belongs
@@ -1195,211 +954,50 @@ private[graft] object ChainSkip {
   def planGroupAgg(s: SparkSession, root: String, version: Long,
                    table: StructType, agg: Aggregation)
       : Option[MetaAgg] = {
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    metaAggCache.computeIfAbsent(
-      (root, version, ts, "GB" +: aggSignature(agg)),
-      _ => planGroupAggUncached(s, root, version, table, agg))
-  }
-
-  private def planGroupAggUncached(
-      s: SparkSession, root: String, version: Long,
-      table: StructType, agg: Aggregation): Option[MetaAgg] = {
-    import org.apache.spark.sql.types.StringType
     val gbs = agg.groupByExpressions()
     if (gbs.isEmpty || gbs.length > 4) return None
     if (ManifestPrune.eqDelOf(root, version).nonEmpty ||
         ManifestPrune.dvOf(root, version).nonEmpty) return None
-    // every grouping column must be statted AND file-constant; the
-    // composite key is then constant per file too, so the same
-    // single-group arithmetic covers GROUP BY (a, b, ...)
-    val gFields = gbs.toSeq.map { gb =>
-      (for {
-        n <- colName(gb)
-        f <- table.fields.find(_.name == n)
-        if f.dataType == LongType || f.dataType == IntegerType ||
-          f.dataType == ShortType || f.dataType == ByteType ||
-          f.dataType == StringType
-      } yield f).getOrElse(return None)
-    }
-
-    sealed trait Ask
-    case object AskCount extends Ask
-    case class AskCountCol(c: String, t: DataType) extends Ask
-    case class AskMin(c: String, t: DataType) extends Ask
-    case class AskMax(c: String, t: DataType) extends Ask
-    case class AskSum(c: String, t: DataType) extends Ask
-    def statted(e: V2Expr): Option[(String, DataType)] = for {
-      n <- colName(e)
-      f <- table.fields.find(_.name == n)
-      if f.dataType == LongType || f.dataType == IntegerType ||
-        f.dataType == ShortType || f.dataType == ByteType ||
-        f.dataType == StringType
-    } yield (n, f.dataType)
-    val asks: Seq[Ask] = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar => AskCount
-      case c: org.apache.spark.sql.connector.expressions.aggregate
-          .Count =>
-        if (c.isDistinct) return None
-        statted(c.column).map { case (n, t) => AskCountCol(n, t) }
-          .getOrElse(return None)
-      case m: Min => statted(m.column).map { case (n, t) =>
-        AskMin(n, t) }.getOrElse(return None)
-      case m: Max => statted(m.column).map { case (n, t) =>
-        AskMax(n, t) }.getOrElse(return None)
-      case sm: Sum =>
-        if (sm.isDistinct) return None
-        statted(sm.column) match {
-          case Some((n, t)) if t != StringType => AskSum(n, t)
-          case _ => return None
-        }
-      case _: AggregateFunc => return None
-    }
-
-    val m0 = ManifestPrune.immutableParquet(s,
-      ManifestPrune.manifestOf(root, version))
-    val gMaps = gFields.map(f =>
-      if (f.dataType == StringType) "cstats_str" else "cstats_long")
-    if (gMaps.exists(mp => !m0.columns.contains(mp))) return None
-    val needsSum = asks.exists(_.isInstanceOf[AskSum])
-    if (needsSum && !m0.columns.contains("cstats_sum")) return None
-    val live = m0.filter(col("n_rows") > 0)
-    // the constancy proof, row by row and PER GROUP COLUMN — every
+    val gFields = gbs.toSeq.map(statted(table, _).getOrElse(return None))
+    val asks = parseAsks(table, agg).getOrElse(return None)
+    val v = manifestView(s, root, version)
+    if (gFields.exists { case (_, t) => !v.has(family(t)) }) return None
+    if (asks.exists(_.isInstanceOf[AskSum]) && !v.has("cstats_sum"))
+      return None
+    // the constancy proof, file by file and PER GROUP COLUMN — every
     // grouping column must be single-valued (or all-null) in the
     // file; the composite key is then file-constant too
-    val ges = gFields.zip(gMaps).map { case (f, mp) =>
-      col(mp).getItem(f.name) }
-    val gAllNulls = ges.map(ge =>
-      ge.isNotNull && ge.getField("nn") === col("n_rows"))
-    val gOneVals = gFields.zip(ges).map { case (f, ge) =>
-      ge.isNotNull && ge.getField("nn") === lit(0L) &&
-        ge.getField("lo") === ge.getField("hi") &&
-        (if (f.dataType == StringType) ge.getField("hi").isNotNull
-         else lit(true)) }
-    val gConstant = gAllNulls.zip(gOneVals)
-      .map { case (an, ov) => an || ov }
-      .reduce(_ && _)
-    def cnt(cond: org.apache.spark.sql.Column) =
-      coalesce(sum(org.apache.spark.sql.functions.when(cond, 1L)
-        .otherwise(0L)), lit(0L))
-
-    val isStr = (t: DataType) => t == StringType
-    def entry(c: String, t: DataType) = {
-      val mc = if (isStr(t)) "cstats_str" else "cstats_long"
-      if (m0.columns.contains(mc)) col(mc).getItem(c)
-      else lit(null).cast(
-        if (isStr(t)) "struct<lo:string,hi:string,nn:bigint>"
-        else "struct<lo:bigint,hi:bigint,nn:bigint>")
+    val keyed = v.live.map { r =>
+      gFields.map { case (g, t) =>
+        v.stat(r, family(t), g) match {
+          case Some(e) if e.nn == v.rows(r) => null // the NULL group
+          case Some(e) if e.nn == 0L && e.lo != null && e.lo == e.hi =>
+            e.lo
+          case _ => return None
+        }
+      } -> r
     }
-    def needMin(c: String) = asks.exists { case AskMin(x, _) => x == c
-                                           case _ => false }
-    def needMax(c: String) = asks.exists { case AskMax(x, _) => x == c
-                                           case _ => false }
-    val mmAsks: Seq[(String, DataType)] = asks.collect {
-      case AskMin(c, t) => (c, t)
-      case AskMax(c, t) => (c, t)
-      case AskCountCol(c, t) => (c, t)
-      case AskSum(c, t) => (c, t) }.distinct
-    val needSumC = asks.collect { case AskSum(c, _) => c }.toSet
-    val perColAggs = mmAsks.zipWithIndex.flatMap { case ((c, t), i) =>
-      val e = entry(c, t)
-      Seq(
-        cnt(e.isNull).as(s"__cg_$i"),
-        (if (isStr(t) && needMin(c)) cnt(e.getField("nn") <
-           col("n_rows") && length(e.getField("lo")) >= 64)
-         else lit(0L)).as(s"__lb_$i"),
-        (if (isStr(t) && needMax(c)) cnt(e.getField("nn") <
-           col("n_rows") && e.getField("hi").isNull)
-         else lit(0L)).as(s"__hb_$i"),
-        min(e.getField("lo")).as(s"__lo_$i"),
-        max(e.getField("hi")).as(s"__hi_$i"),
-        coalesce(sum(col("n_rows") - e.getField("nn")), lit(0L))
-          .as(s"__nn_$i")) ++
-      (if (!needSumC(c)) Nil else Seq(
-        sum(col("cstats_sum").getItem(c)).as(s"__sm_$i"),
-        cnt(!coalesce(org.apache.spark.sql.functions
-          .map_contains_key(col("cstats_sum"), lit(c)), lit(false)))
-          .as(s"__smg_$i")))
-    }
-    // ONE manifest job: per-group rollups keyed by the proven group
-    // values, with the guard counts riding the same aggregation
-    val gvals = gAllNulls.zip(ges).zipWithIndex.map {
-      case ((an, ge), i) => org.apache.spark.sql.functions
-        .when(an, lit(null)).otherwise(ge.getField("lo"))
-        .as(s"__g$i") }
-    val grouped = live
-      .withColumn("__gok",
-        org.apache.spark.sql.functions.when(gConstant, 0L)
-          .otherwise(1L))
-      .groupBy(gvals: _*)
-      .agg(cnt(col("__gok") === 1L).as("__bad"),
-        (coalesce(sum(col("n_rows")), lit(0L)).as("__rows") +:
-          perColAggs): _*)
-      .collect()
-
-    // all-or-nothing: any non-constant file, coverage gap, or
-    // truncation guard anywhere refuses the whole batch
-    if (grouped.exists(r => r.getLong(r.fieldIndex("__bad")) != 0L))
-      return None
-    for (((c, t), i) <- mmAsks.zipWithIndex) {
-      val gap = grouped.exists(r =>
-        r.getLong(r.fieldIndex(s"__cg_$i")) != 0L ||
-        r.getLong(r.fieldIndex(s"__lb_$i")) != 0L ||
-        r.getLong(r.fieldIndex(s"__hb_$i")) != 0L ||
-        (needSumC(c) && r.getLong(r.fieldIndex(s"__smg_$i")) != 0L))
-      if (gap) return None
-    }
-    val longMaxD = java.math.BigDecimal.valueOf(Long.MaxValue)
-    val longMinD = java.math.BigDecimal.valueOf(Long.MinValue)
-    def statVal(v: Any, t: DataType): Any =
-      if (v == null) null
-      else t match {
-        case IntegerType => v.asInstanceOf[Number].intValue
-        case ShortType => v.asInstanceOf[Number].shortValue
-        case ByteType => v.asInstanceOf[Number].byteValue
-        case StringType => org.apache.spark.unsafe.types.UTF8String
-          .fromString(v.toString)
-        case _ => v.asInstanceOf[Number].longValue
-      }
-    val colIdx = mmAsks.zipWithIndex.toMap
-    val rows = grouped.toSeq.map { r =>
-      def rv(n: String): Any = {
-        val i = r.fieldIndex(n); if (r.isNullAt(i)) null else r.get(i)
-      }
-      def rl(n: String): Long = r.getLong(r.fieldIndex(n))
-      val gvs = gFields.zipWithIndex.map { case (f, i) =>
-        statVal(rv(s"__g$i"), f.dataType) }
-      val vals: Seq[Any] = asks.map {
-        case AskCount => rl("__rows"): Any
-        case AskCountCol(c, t) => rl(s"__nn_${colIdx((c, t))}"): Any
-        case AskMin(c, t) => statVal(rv(s"__lo_${colIdx((c, t))}"), t)
-        case AskMax(c, t) => statVal(rv(s"__hi_${colIdx((c, t))}"), t)
-        case AskSum(c, t) =>
-          val i = colIdx((c, t))
-          if (rl(s"__nn_$i") == 0L || rv(s"__sm_$i") == null) null
-          else {
-            val bd = rv(s"__sm_$i")
-              .asInstanceOf[java.math.BigDecimal]
-            if (bd.compareTo(longMaxD) > 0 ||
-                bd.compareTo(longMinD) < 0) return None
-            bd.longValueExact(): Any
-          }
-      }
-      gvs ++ vals
-    }
-    val askFields = asks.zipWithIndex.map {
-      case (AskCount, i) => org.apache.spark.sql.types
-        .StructField(s"count_$i", LongType, nullable = false)
-      case (AskCountCol(c, _), i) => org.apache.spark.sql.types
-        .StructField(s"countc_${c}_$i", LongType, nullable = false)
-      case (AskMin(c, t), i) => org.apache.spark.sql.types
-        .StructField(s"min_${c}_$i", t)
-      case (AskMax(c, t), i) => org.apache.spark.sql.types
-        .StructField(s"max_${c}_$i", t)
-      case (AskSum(c, _), i) => org.apache.spark.sql.types
-        .StructField(s"sum_${c}_$i", LongType)
+    val byKey = keyed.groupMap(_._1)(_._2)
+    val cols = needs(asks)
+    val rows = keyed.map(_._1).distinct.map { key =>
+      val files = byKey(key)
+      val per = cols.map { case ((c, t), need) =>
+        // all-or-nothing: a coverage gap or truncation guard in any
+        // group refuses the whole batch
+        c -> (cstatsAnswer(rollup(v, files, c, t), need)
+            .getOrElse(return None),
+          if (!need.sum) null
+          else v.sumOf(files, c) match {
+            case (0L, tot) => tot
+            case _ => return None
+          })
+      }.toMap
+      gFields.zip(key).map { case ((_, t), g) => statVal(g, t) } ++
+        askValues(asks, files.map(v.rows).sum, c => per(c)._1,
+          c => per(c)._2).getOrElse(return None)
     }
     Some(MetaAgg(StructType(
-      gFields.map(f => org.apache.spark.sql.types
-        .StructField(f.name, f.dataType)) ++ askFields), rows))
+      gFields.map { case (g, t) => StructField(g, t) } ++
+        asks.zipWithIndex.map { case (a, i) => askField(a, i) }), rows))
   }
 }

@@ -1123,7 +1123,7 @@ private[sources] class GraftChainScan(
         // spec-statted columns already pruned via min_key/max_key,
         // and when a bloom index screened the exact keys the [min,
         // max] hull adds little — skipping those keeps the extra
-        // manifest job off the hot single-column paths (point
+        // manifest pass off the hot single-column paths (point
         // lookups, stats-column ranges) and reserves it for the
         // multi-dimension predicates it was built for
         val specCols = ManifestPrune.listSpecs(root).values
@@ -1178,10 +1178,10 @@ private[sources] class GraftChainScan(
     parts
   }
 
-  /** Post-pruning statistics from manifest arithmetic (memoized per
-    * immutable snapshot) — what lets Catalyst broadcast a small
+  /** Post-pruning statistics from manifest arithmetic over the
+    * driver-held manifest rows — what lets Catalyst broadcast a small
     * graft table in a join without hints, and AQE size the exchange,
-    * for the cost of one tiny manifest job instead of a data scan. */
+    * without a Spark job, let alone a data scan. */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val s = SparkSession.active
@@ -1192,8 +1192,9 @@ private[sources] class GraftChainScan(
     // `columnStats()` whenever cost-based optimization asks — a
     // graft table looks like a freshly-ANALYZEd table with zero
     // ANALYZE cost, because every commit already statted every
-    // column. Computed lazily (one memoized manifest aggregate) and
-    // only under CBO, so the default planning path pays nothing.
+    // column. Computed lazily (driver arithmetic over the manifest
+    // rows, plus a sketch union for NDV) and only under CBO, so the
+    // default planning path pays nothing.
     val cboOn = s.conf.get("spark.sql.cbo.enabled", "false") == "true"
     // column stats are snapshot-global while `rows` is already
     // reduced by pushed-filter file skipping — attaching both would

@@ -46,11 +46,12 @@ object ManifestPrune {
       // would disable the fail-fast guard entirely)
       .max(1L).min(Int.MaxValue - 1L)
 
-  /** Take a driver-held file list under the bound: at most cap + 1
-    * entries are ever materialized, and cap + 1 fails. */
-  private[sources] def boundedFiles(s: SparkSession,
-                                    files: Iterator[String],
-                                    what: String): Seq[String] = {
+  /** Take a driver-held file list (or its manifest rows) under the
+    * bound: at most cap + 1 entries are ever materialized, and cap + 1
+    * fails. */
+  private[sources] def boundedFiles[T](s: SparkSession,
+                                       files: Iterator[T],
+                                       what: String): Seq[T] = {
     val cap = maxDriverFiles(s)
     val got = files.take((cap + 1).toInt).toVector
     if (got.length > cap)
@@ -205,23 +206,45 @@ object ManifestPrune {
 
   /** Columns [[dirRows]] leaves on disk: the per-file NDV sketches are
     * KBs per row and only the NDV estimate reads them, through
-    * Spark. */
+    * [[sketchRows]]. */
   private val DiskOnlyCols = Set("cstats_hll")
 
+  /** `sch`'s columns of a protocol-owned dir's rows, in part-file
+    * order, decoded on the driver through parquet-hadoop. */
+  private def readDir(s: SparkSession, dir: String,
+                      sch: org.apache.spark.sql.types.StructType)
+      : IndexedSeq[org.apache.spark.sql.Row] = {
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(sch)
+    GroupParquet.readRows(partFiles(s, dir).getOrElse(
+        throw new IllegalStateException(s"$dir is partitioned")),
+      sch, s.sparkContext.hadoopConfiguration)
+      .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row])
+  }
+
   /** The rows of a protocol-owned parquet dir (every column but
-    * [[DiskOnlyCols]]), decoded on the driver through parquet-hadoop
-    * and held as a snapshot fact — a manifest costs one footer and a
-    * few column chunks per part file, no Spark job. */
+    * [[DiskOnlyCols]]), held as a snapshot fact — a manifest costs one
+    * footer and a few column chunks per part file, no Spark job. */
   private[sources] def dirRows(s: SparkSession, dir: String): DirRows =
     dirFact(dir, "rows") {
       val sch = org.apache.spark.sql.types.StructType(
         footerSchema(s, dir).fields.filterNot(f => DiskOnlyCols(f.name)))
-      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(sch)
-      DirRows(sch, GroupParquet.readRows(partFiles(s, dir).getOrElse(
-          throw new IllegalStateException(s"$dir is partitioned")),
-        sch, s.sparkContext.hadoopConfiguration)
-        .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
+      DirRows(sch, readDir(s, dir, sch))
+    }
+
+  /** A manifest's per-file NDV sketches (`cstats_hll`: column name ->
+    * sketch bytes, null where a row has none), aligned with
+    * [[dirRows]]' rows and held under their own fact key, so only the
+    * NDV estimate pays for them. Empty when the manifest predates the
+    * column. */
+  private[sources] def sketchRows(s: SparkSession, dir: String)
+      : IndexedSeq[scala.collection.Map[String, Array[Byte]]] =
+    dirFact(dir, "hll") {
+      val sch = org.apache.spark.sql.types.StructType(
+        footerSchema(s, dir).fields.filter(f => DiskOnlyCols(f.name)))
+      if (sch.isEmpty) IndexedSeq.empty
+      else readDir(s, dir, sch).map(
+        _.getAs[scala.collection.Map[String, Array[Byte]]](0))
     }
 
   /** [[dirRows]] as a DataFrame over a LocalRelation: filter, project
@@ -247,6 +270,14 @@ object ManifestPrune {
   private[sources] def dvHiddenCount(s: SparkSession,
                                      dv: String): Long =
     footerCount(s, dv)
+
+  /** Per-file hidden-row counts of a DV sidecar, from its driver-held
+    * rows (the `n_rows - hidden` live-count arithmetic of the LIMIT
+    * and TOP-N planners); empty without one. */
+  private[sources] def dvHiddenByFile(s: SparkSession,
+                                      dv: Option[String]): Map[String, Long] =
+    dv.fold(Map.empty[String, Long])(d =>
+      dirRows(s, d).strings("file").groupMapReduce(identity)(_ => 1L)(_ + _))
 
   /** The file list a manifest names, under the driver bound. */
   private[sources] def versionFiles(s: SparkSession, manifestDir: String,
@@ -2809,7 +2840,7 @@ object ManifestPrune {
         // per-file DataSketches HLL (lgK=12, ~1.6% standard error):
         // sketches union losslessly across files, so the snapshot's
         // NDV — the one statistic ANALYZE normally charges a full
-        // scan for — is one manifest aggregate at read time.
+        // scan for — is one driver-side sketch union at read time.
         // Narrower widths hash through long so a file written before
         // a type widening unions with one written after.
         hll_sketch_agg(col(f.name).cast("long"), lit(12))

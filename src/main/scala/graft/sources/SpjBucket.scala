@@ -103,21 +103,9 @@ object SpjBucket {
   /** The scan-side plan: per-file bucket ids of `version`, or None
     * when SPJ cannot be offered (no registration, or any live file
     * without a recorded bucket — e.g. appended by a writer that
-    * predates the registration). Order is by file for determinism. */
-  private val bucketedCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Option[(Int, Seq[(String, Int)])]]()
-
+    * predates the registration). Order is by file for determinism.
+    * Plain Scala over the driver-held manifest rows: no Spark job. */
   def bucketedFiles(s: SparkSession, root: String,
-                    version: Long): Option[(Int, Seq[(String, Int)])] = {
-    // memoized per immutable snapshot (commit instant in the key, so
-    // a rebuilt chain at the same path can never serve stale files) —
-    // SQL-heavy workloads plan the same head many times
-    val ts = ManifestPrune.commitTimeMs(root, version).getOrElse(0L)
-    bucketedCache.computeIfAbsent((root, version, ts),
-      _ => bucketedFilesUncached(s, root, version))
-  }
-
-  private def bucketedFilesUncached(s: SparkSession, root: String,
                     version: Long): Option[(Int, Seq[(String, Int)])] =
     bucketingOf(root).flatMap { case (_, n) =>
       val m = ManifestPrune.dirRows(s,

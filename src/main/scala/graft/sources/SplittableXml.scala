@@ -78,6 +78,25 @@ object SplittableXml {
     spark.createDataset(rdd)
   }
 
+  /** What `path` (a file, directory or glob) matches. A path that
+    * matches nothing throws `FileNotFoundException` naming it, as
+    * FileInputFormat ("Input path does not exist", "matches 0 files")
+    * and Spark's own file sources (PATH_NOT_FOUND) do. */
+  def globMatches(spark: SparkSession, path: String)
+      : Array[org.apache.hadoop.fs.FileStatus] = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(p) match {
+      case null =>
+        throw new java.io.FileNotFoundException(
+          s"Input path does not exist: $path")
+      case Array() =>
+        throw new java.io.FileNotFoundException(
+          s"Input pattern $path matches 0 files")
+      case found => found
+    }
+  }
+
   /** Byte ranges per file; glob- and directory-friendly. Follows the
     * Hadoop FileInputFormat SPLIT_SLOP convention: keep cutting full
     * splits while the remainder exceeds 1.1x splitBytes, then emit the
@@ -95,27 +114,15 @@ object SplittableXml {
     * archive requires decompressing it once up front, exactly as with
     * Hadoop.)
     *
-    * A path that matches nothing throws `FileNotFoundException` naming
-    * it, as FileInputFormat ("Input path does not exist", "matches 0
-    * files") and Spark's own file sources (PATH_NOT_FOUND) do; only an
+    * A path that matches nothing throws ([[globMatches]]); only an
     * existing directory without files plans zero splits. */
   def planSplits(spark: SparkSession, path: String,
                  splitBytes: Long): Seq[XmlSplit] = {
     require(splitBytes > 0, s"splitBytes must be positive: $splitBytes")
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
+    val fs = new Path(path).getFileSystem(conf)
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    val matched = fs.globStatus(p) match {
-      case null =>
-        throw new java.io.FileNotFoundException(
-          s"Input path does not exist: $path")
-      case Array() =>
-        throw new java.io.FileNotFoundException(
-          s"Input pattern $path matches 0 files")
-      case found => found
-    }
-    val files = matched.flatMap { st =>
+    val files = globMatches(spark, path).flatMap { st =>
       if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
       else Array(st)
     }.filter(_.getLen > 0)

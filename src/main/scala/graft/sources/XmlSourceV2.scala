@@ -42,9 +42,15 @@ class XmlSourceV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-xml"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     XmlSourceV2.Schema
+  /** A path that matches nothing fails here, so `load` fails as
+    * Spark's own file sources do, not the first action. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table =
-    new XmlTable(new CaseInsensitiveStringMap(properties))
+                        properties: java.util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    Option(options.get("path"))
+      .foreach(SplittableXml.globMatches(SparkSession.active, _))
+    new XmlTable(options)
+  }
 }
 
 object XmlSourceV2 {

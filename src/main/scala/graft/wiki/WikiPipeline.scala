@@ -136,23 +136,30 @@ object WikiPipeline {
     incomingReferenceCounts(links(readPages(spark, xmlPath)))
 
   /** W2+W3: single CSV file with literal header `page_title,count`
-    * (CountReference.java:292-295,304) renamed to a stable path.
-    * coalesce(1) ONLY here, at the final finalize step — upstream
-    * parallelism is untouched because coalesce folds into the write.
+    * and raw `title,count` lines, exactly as the reference writes them
+    * (CountReference.java:292-295,304) — no CSV quoting or escaping of
+    * titles that hold `"` or `,`. One single-file text write
+    * (coalesce(1) ONLY here, at the final finalize step — upstream
+    * parallelism is untouched because coalesce folds into the write),
+    * then the header and that part file stream into `outFile`.
     */
   def writeCsv(counts: DataFrame, outFile: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     import scala.util.Using
     val tmp = outFile + ".dir"
-    counts.coalesce(1).write.mode("overwrite")
-      .option("header", true).csv(tmp)
+    counts.select(concat(col("page_title"), lit(","),
+        col("count").cast(StringType)))
+      .coalesce(1).write.mode("overwrite").text(tmp)
     val part = Using.resource(Files.list(Paths.get(tmp))) { s =>
       s.iterator().asScala.find(_.getFileName.toString.startsWith("part-"))
         .getOrElse(sys.error(
           s"writeCsv: no part- file produced under $tmp (write failed or empty output dir)"))
     }
-    Files.move(part, Paths.get(outFile), StandardCopyOption.REPLACE_EXISTING)
+    Using.resource(Files.newOutputStream(Paths.get(outFile))) { out =>
+      out.write("page_title,count\n".getBytes("UTF-8"))
+      Files.copy(part, out)
+    }
     // best-effort cleanup of the temp dir
     Using.resource(Files.list(Paths.get(tmp))) { s =>
       s.iterator().asScala.foreach(p => Files.deleteIfExists(p))

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * session strongly), and every `Tables.once` call names its kind with
   * a literal that no other call uses — all kinds share one namespace
   * per session, so two sites with one kind would serve each other's
-  * fixtures. */
+  * fixtures. The table layer's static maps are pinned to a sanctioned
+  * list, so planner memos cannot come back. */
 class FixtureCacheGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -47,6 +48,35 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
     assert(found.filterNot(registries).isEmpty,
       "per-session caches must use Tables.once: " +
         found.filterNot(registries).mkString(", "))
+  }
+
+  private val concurrentMap =
+    ("""val\s+(\w+)\s*(?::[^=]*)?=\s*new\s+""" +
+      """(?:java\.util\.concurrent\s*\.\s*)?ConcurrentHashMap\b""").r
+
+  /** The table layer's sanctioned static maps: the snapshot-fact
+    * cache, the storage registry and handles, the in-memory store's
+    * objects and the catalog's table registry. A planner that runs no
+    * Spark job has nothing to memoize, so no other map belongs here. */
+  private val sanctionedSourceMaps = Set(
+    "graft/sources/ManifestPrune.scala:dirFacts",
+    "graft/sources/ChainStorage.scala:registry",
+    "graft/sources/HadoopFsChainStorage.scala:fsCache",
+    "graft/sources/InMemoryObjectStorage.scala:objects",
+    "graft/sources/GraftCatalog.scala:tables")
+
+  test("the table layer declares only the sanctioned static " +
+    "ConcurrentHashMaps") {
+    val found = sources.filter(_._1.startsWith("graft/sources/"))
+      .flatMap { case (file, text) =>
+        concurrentMap.findAllMatchIn(text).map(m => s"$file:${m.group(1)}")
+      }
+    // the scan sees every sanctioned map, so an empty result below is
+    // not a pattern that silently matches nothing
+    assert(sanctionedSourceMaps.subsetOf(found.toSet), found)
+    assert(found.filterNot(sanctionedSourceMaps).isEmpty,
+      "unsanctioned static maps (planner memos?): " +
+        found.filterNot(sanctionedSourceMaps).mkString(", "))
   }
 
   test("every Tables.once call passes a distinct literal kind") {

@@ -1,61 +1,25 @@
 package graft.sources
 
-import graft.{SparkSpec, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.{JobCounting, SparkSpec, Tables}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Expressions}
+import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.functions._
 
 /** Table-layer PLANNING runs on the driver: every protocol-owned
   * parquet dir (manifests, DV sidecars, equality-delete keys) is a
   * snapshot fact read through parquet-hadoop, so schema lookups, file
-  * lists, pruning, live counts, history, change-feed file sets and
+  * lists, pruning, live counts, LIMIT / TOP-N / bucket plans, metadata
+  * aggregates, CBO column stats, history, change-feed file sets and
   * the vacuum keep-set launch no Spark job — counted by a listener,
   * on a chain whose facts were never cached. The driver-read rows and
   * footer schemas must equal what `spark.read.parquet` returns for
   * every such dir, and vacuum must drop the facts of what it
   * deletes. */
-class TablePlanningSpec extends SparkSpec {
+class TablePlanningSpec extends SparkSpec with JobCounting {
 
   private lazy val docs = Tables.load(spark, sf0001, "documents")
     .select("doc_id", "text", "lang", "source", "n_chars")
-
-  /** Job-start events by job group. The listener bus is asynchronous,
-    * so a count is read only after a FENCE job (its own group) has
-    * been seen: events arrive in order, so every earlier job has too. */
-  private object Jobs extends SparkListener {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      groups.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse(""))
-  }
-  private lazy val listening = {
-    spark.sparkContext.addSparkListener(Jobs); true
-  }
-  private val groupSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private def jobsOf[T](body: => T): (T, Int) = {
-    assert(listening)
-    val sc = spark.sparkContext
-    val tag = s"planning-${groupSeq.incrementAndGet()}"
-    sc.setJobGroup(tag, tag)
-    val out = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$tag-fence", "fence")
-    try spark.range(1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (!Jobs.groups.contains(s"$tag-fence") &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    assert(Jobs.groups.contains(s"$tag-fence"), "listener bus stalled")
-    var n = 0
-    Jobs.groups.forEach(g => if (g == tag) n += 1)
-    (out, n)
-  }
-
-  private def noJobs[T](what: String)(body: => T): T = {
-    val (out, n) = jobsOf(body)
-    assert(n === 0, s"$what ran $n Spark job(s)")
-    out
-  }
 
   /** base, append, MoR merge, DV delete, SQL DELETE, equality delete,
     * compaction: every sidecar kind and commit shape. */
@@ -129,6 +93,47 @@ class TablePlanningSpec extends SparkSpec {
       noJobs(s"dvHiddenCount v$v") {
         ManifestPrune.dvOf(root, v).map(ManifestPrune.dvHiddenCount(spark, _))
       }
+      noJobs(s"plannedLiveRows v$v") {
+        ChainSkip.plannedLiveRows(spark, root, v, Map.empty)
+        ChainSkip.plannedLiveRows(spark, root, v,
+          Map("n_chars" -> ChainSkip.Bounds(100L, 200L)))
+      }
+      noJobs(s"limitFiles v$v") {
+        ChainSkip.limitFiles(spark, root, v, 5)
+      }
+      noJobs(s"topNFiles / topNFilesStr v$v") {
+        ChainSkip.topNFiles(spark, root, v, "doc_id", ascending = true,
+          nullsFirst = true, 5)
+        ChainSkip.topNFiles(spark, root, v, "n_chars", ascending = false,
+          nullsFirst = false, 5)
+        ChainSkip.topNFilesStr(spark, root, v, "lang", ascending = true,
+          nullsFirst = false, 5)
+      }
+      val schema = ManifestPrune.schemaOfVersion(spark, root, v)
+      val global = noJobs(s"planAgg v$v") {
+        ChainSkip.planAgg(spark, root, v, schema, aggOf(Seq(new CountStar,
+          new Max(Expressions.column("doc_id")),
+          new Min(Expressions.column("lang")),
+          new Sum(Expressions.column("n_chars"), false))))
+        ChainSkip.planAgg(spark, root, v, schema, aggOf(Seq(new CountStar)))
+      }
+      // COUNT(*) answers under a DV, refuses under equality deletes
+      if (ManifestPrune.eqDelOf(root, v).isEmpty)
+        assert(global.map(_.rows.head.head) ===
+          Some(ManifestPrune.liveRowCountCommitted(spark, root, v)), s"v$v")
+      else assert(global.isEmpty, s"v$v")
+      noJobs(s"planGroupAgg v$v") {
+        ChainSkip.planGroupAgg(spark, root, v, schema,
+          aggOf(Seq(new CountStar, new Max(Expressions.column("doc_id"))),
+            Seq(Expressions.column("lang"))))
+      }
+      val cols = noJobs(s"columnStatsFor v$v") {
+        withCbo(ChainSkip.columnStatsFor(spark, root, v, schema.fields.toSeq))
+      }
+      val sidecars = ManifestPrune.dvOf(root, v).nonEmpty ||
+        ManifestPrune.eqDelOf(root, v).nonEmpty
+      assert(cols.keySet === (if (sidecars) Set.empty[String]
+        else Set("doc_id", "text", "lang", "source", "n_chars")), s"v$v")
       if (v >= 1) noJobs(s"changeFeedStep planning v$v") {
         ManifestPrune.changeFeedStep(spark, root, v)
       }
@@ -143,6 +148,61 @@ class TablePlanningSpec extends SparkSpec {
       ManifestPrune.expireVersions(spark, root, keepLast = 2, graceMs = 0L)
     }.keptVersions
     assert(kept === Seq(cur - 1, cur))
+  }
+
+  private def aggOf(fns: Seq[AggregateFunc],
+                    groupBy: Seq[V2Expr] = Nil): Aggregation =
+    new Aggregation(fns.toArray, groupBy.toArray)
+
+  private def withCbo[T](body: => T): T = {
+    val key = "spark.sql.cbo.enabled"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try body
+    finally prior match {
+      case Some(p) => spark.conf.set(key, p)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("bucket planning on every version of a bucketed chain runs no " +
+    "Spark job") {
+    val built = Tables.matDir(s"plan_spj_${System.nanoTime}", spark, sf0001)
+    SpjBucket.buildBucketedLayout(docs, built, "doc_id", 4)
+    ManifestPrune.appendCommit(spark, built,
+      docs.filter(col("doc_id") % 13 === 1)
+        .withColumn("doc_id", col("doc_id") + 50000000L))
+    val root = coldCopy(built)
+    val cur = ManifestPrune.currentVersion(spark, root)
+    assert(cur === 1L)
+    for (v <- 0L to cur) {
+      val planned = noJobs(s"bucketedFiles v$v") {
+        SpjBucket.bucketedFiles(spark, root, v)
+      }
+      assert(planned.map(_._1) === Some(4), s"v$v")
+      assert(planned.get._2.map(_._1).toSet ===
+        ManifestPrune.dirRows(spark, ManifestPrune.manifestOf(root, v))
+          .strings("file").toSet, s"v$v")
+    }
+  }
+
+  test("the driver NDV equals Spark's hll_union_agg over the same " +
+    "manifest") {
+    val root = churned("ndv")
+    // the sidecar-free versions: base and append
+    for (v <- Seq(0L, 1L)) {
+      val schema = ManifestPrune.schemaOfVersion(spark, root, v)
+      val stats = withCbo(
+        ChainSkip.columnStatsFor(spark, root, v, schema.fields.toSeq))
+      val m = spark.read.parquet(ManifestPrune.manifestOf(root, v))
+        .filter(col("n_rows") > 0)
+      for (c <- Seq("doc_id", "n_chars", "lang", "source", "text")) {
+        val viaSpark = m.agg(hll_sketch_estimate(
+          hll_union_agg(col("cstats_hll").getItem(c), lit(true))))
+          .head.getLong(0)
+        assert(stats(c).ndv === Some(viaSpark), s"$c v$v")
+      }
+    }
   }
 
   /** Values in a form `==` compares structurally (binary as Seq). */

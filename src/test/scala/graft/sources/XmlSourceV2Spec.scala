@@ -79,9 +79,15 @@ class XmlSourceV2Spec extends SparkSpec {
     val missing = java.nio.file.Files.createTempDirectory("v2missing")
       .resolve("absent.xml").toString
     val e = intercept[Exception](spark.read.format("graft-xml")
-      .option("rowTag", "page").load(missing).count())
+      .option("rowTag", "page").load(missing))
     val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
     assert(causes.exists(c => c.isInstanceOf[java.io.FileNotFoundException] &&
       c.getMessage.contains(missing)), e)
+    // the SQL face fails at DDL time too
+    val ddl = intercept[Exception](spark.sql(
+      s"CREATE TEMPORARY VIEW v2missing USING `graft-xml` " +
+        s"OPTIONS (path '$missing', rowTag 'page')"))
+    assert(Iterator.iterate[Throwable](ddl)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), ddl)
   }
 }

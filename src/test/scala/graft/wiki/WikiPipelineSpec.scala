@@ -166,6 +166,26 @@ class WikiPipelineSpec extends SparkSpec {
     assert(WikiPipeline.links(df).count() === 0L)
   }
 
+  test("writeCsv is byte-equal to the reference's raw title,count " +
+    "lines under the literal header") {
+    val pairs = WikiPropertySpec.staxPages(WikiFixture.path)
+      .flatMap { case (t, x) => WikiPropertySpec.referenceEmissions(t, x) }
+      .distinct
+    val utf8 = Ordering.by[String, Array[Byte]](_.getBytes("UTF-8"))(
+      (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.compareUnsigned(a, b))
+    val expected = "page_title,count\n" + pairs.groupBy(_._1).toSeq
+      .sortBy(_._1)(utf8)
+      .map { case (title, ps) => s"$title,${ps.size}\n" }.mkString
+    // the fixture holds titles the CSV writer would have quoted
+    assert(expected.linesIterator.exists(_.contains("\"")))
+    val out = java.nio.file.Files.createTempDirectory("wiki").toString +
+      "/raw.csv"
+    WikiPipeline.writeCsv(WikiPipeline.run(spark, WikiFixture.path), out)
+    val written = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
+    assert(new String(written, "UTF-8") === expected)
+    assert(written.toSeq === expected.getBytes("UTF-8").toSeq)
+  }
+
   test("W2+W3: single CSV with header, sorted") {
     val out = java.nio.file.Files.createTempDirectory("wiki").toString + "/counts.csv"
     WikiPipeline.writeCsv(

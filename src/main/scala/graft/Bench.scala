@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every battery query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -29,46 +27,49 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SparkTune.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = SparkTune.sfDir
+    val spark = SparkTune.session("spark.sql.adaptive.enabled" -> "true")
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // a query that throws is reported on stderr, gets no time, and its
+    // first error lands in the on-disk JSON only (stdout keeps its form)
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def run(name: String): Unit =
+      try SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        errors.getOrElseUpdate(name, String.valueOf(e.getMessage))
+      }
 
     // warmup: drive one representative query end-to-end (JIT, codegen
     // compiler, parquet footer caches) before the clock starts
-    try run(SparkEntry.queries("q_agg_pricing")) catch { case _: Throwable => }
+    run("q_agg_pricing")
+    errors.clear()
 
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOnce(name: String): Double = {
       val t0 = System.nanoTime()
-      try run(fn) catch { case _: Throwable => }
+      run(name)
       (System.nanoTime() - t0) / 1e9
     }
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // optional comma-separated name filter for targeted local re-runs
     // (the driver never sets it, so the contract run stays full-battery)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val battery = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val battery = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.forall(_.contains(n)))
     val samples = (1 to passes).map { _ =>
-      battery.map { case (name, fn) => name -> timeOnce(fn) }.toMap
+      battery.map(name => name -> timeOnce(name)).toMap
     }
-    val results = battery.map { case (name, _) =>
+    val results = battery.filterNot(errors.contains).map { name =>
       name -> samples.map(_(name)).min
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val errs = errors.map { case (k, v) => "\"" + k + "\":" + SparkTune.jsonString(v) }
+      .mkString("{", ",", "}")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":$qs,"sf":"$sfDir","errors":$errs}"""
     // land the complete full-precision JSON on disk ONLY (not stdout:
     // the driver captures a bounded log TAIL, and a 200-query map
     // printed as one line has been cut mid-JSON every round,

@@ -1,28 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deployment-path check for [[GraftExtensions]]: builds a session with
   * spark.sql.extensions=graft.GraftExtensions (the exact config a
   * cluster job would set) and exercises every injected piece from pure
   * SQL — cosine_sim, dot_long, simhash64, and the row_number<=k →
   * TopKPerGroup optimizer rewrite. Usage, from the repo root (the
-  * default wiki dump is the in-repo 10-page test fixture):
+  * default sf dir is SPARK_GRAFT_SF_DIR's, the default wiki dump the
+  * in-repo 10-page test fixture):
   *   spark-submit --class graft.ExtCheck <jar> [sfDir] [wiki.xml]
   */
 object ExtCheck {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val sfDir = args.headOption.getOrElse(SparkTune.sfDir)
     val wikiXml = args.lift(1)
       .getOrElse("src/test/resources/wiki/itwiki-sample-10pages.xml")
-    val spark = graft.SparkTune.tuned(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-extcheck")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkTune.session(
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+      "spark.app.name" -> "graft-extcheck",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.extensions" -> "graft.GraftExtensions")
 
     Tables.load(spark, sfDir, "embeddings").createOrReplaceTempView("emb")
     Tables.load(spark, sfDir, "documents").createOrReplaceTempView("docs")

@@ -27,4 +27,40 @@ object SparkTune {
   def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
       minPartitionSize)
+
+  /** Executor threads of a main's local session. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The battery's sf dir (driver contract: Bench's default). */
+  def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The session every graft main runs in: tuned, `local[cpus]` with
+    * one shuffle partition per thread, UTC, no UI, WARN logs. `conf`
+    * adds keys or overrides these (a main that deploys through
+    * spark-submit passes its own `spark.master`). */
+  def session(conf: (String, String)*): SparkSession = {
+    val b = tuned(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** A JSON string literal: quote, backslash and EVERY control char
+    * (<0x20) escaped — a tab or CR left raw makes a consumer's
+    * json.load fail on the whole file. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -142,6 +142,7 @@ object Tables {
     * sanitization or session-keying lands everywhere at once. The
     * session-identity suffix preserves write-once reuse WITHIN a
     * session while isolating concurrent sessions in one JVM. */
+  // perfbench/run.py mat_root() regex-reads this literal's root: keep its form
   def matDir(kind: String, spark: SparkSession, sfDir: String): String =
     s"/root/repo/target/tmp/${kind}_" +
       sfDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + jvmRunId + "_" +

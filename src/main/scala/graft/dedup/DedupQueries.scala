@@ -25,8 +25,6 @@ import org.apache.spark.sql.types._
   */
 object DedupQueries {
 
-  private val dups = "/root/testdata" // doc substrate is `documents`
-
   /** Output-layout knob for the persisted dedup stages: files sized
     * to ~2M rows each. At battery scale every stage lands in ONE
     * compact file (hashes unchanged vs the old repartition(1)); at

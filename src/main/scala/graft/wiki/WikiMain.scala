@@ -1,7 +1,5 @@
 package graft.wiki
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry mirroring the reference driver
   * (/root/reference/src/mr/CountReference.java:322-363): args are the
   * XML dump path and the output CSV file. The two chained MR jobs +
@@ -16,15 +14,11 @@ object WikiMain {
       sys.exit(2)
     }
     val Array(xmlPath, outCsv) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("wiki-incoming-references")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkTune.session(
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER",
+        s"local[${graft.SparkTune.cpus}]"),
+      "spark.app.name" -> "wiki-incoming-references",
+      "spark.sql.adaptive.enabled" -> "true")
     try {
       val counts = WikiPipeline.run(spark, xmlPath)
       WikiPipeline.writeCsv(counts, outCsv)

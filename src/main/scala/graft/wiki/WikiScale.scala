@@ -1,6 +1,5 @@
 package graft.wiki
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the splittable XML scan (S1): run the full pipeline
@@ -14,17 +13,12 @@ object WikiScale {
   def main(args: Array[String]): Unit = {
     val Array(xml, copiesStr) = args.take(2)
     val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+    val spark = graft.SparkTune.session(
+      "spark.sql.shuffle.partitions" ->
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", graft.SparkTune.cpus),
       // force multiple input splits even for a ~100MB file so the
       // splittable-scan path is actually exercised
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.files.maxPartitionBytes" -> s"${16 * 1024 * 1024}")
 
     val pages = WikiPipeline.readPages(spark, xml)
     // The splittable scan (graft.sources.SplittableXml) plans one task

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * a literal that no other call uses — all kinds share one namespace
   * per session, so two sites with one kind would serve each other's
   * fixtures. The table layer's static maps are pinned to a sanctioned
-  * list, so planner memos cannot come back. */
+  * list, so planner memos cannot come back. The same walk pins the
+  * objects with a `main` and the `/root/` paths in code. */
 class FixtureCacheGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -92,5 +93,49 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
       s"Tables.once calls without a literal kind in ${calls.map(_._1)}")
     val dups = kinds.groupBy(_._1).filter(_._2.size > 1)
     assert(dups.isEmpty, s"kinds used by more than one site: $dups")
+  }
+
+  /** The mains: the driver's Verify and Bench, the wiki CLI and its
+    * scale smoke, the spark-submit extensions check, the battery
+    * profiler and the compressed-dump ingest. */
+  private val mains = Set(
+    "graft/Bench.scala", "graft/Verify.scala", "graft/ExtCheck.scala",
+    "graft/wiki/WikiMain.scala", "graft/wiki/WikiScale.scala",
+    "graft/tools/Profile.scala", "graft/sources/Bz2Ingest.scala")
+
+  test("only the sanctioned objects define a main") {
+    val found = sources.collect {
+      case (file, text) if """def\s+main\s*\(""".r.findFirstIn(text).isDefined =>
+        file
+    }.toSet
+    assert(found === mains)
+  }
+
+  private def isComment(line: String): Boolean = {
+    val t = line.trim
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+  }
+
+  /** `/root/` literals in code: the battery's default sf dir and Bench's
+    * output file (driver contract), SparkEntry.entry's smoke dir, and
+    * Tables.matDir's fixture root, which perfbench/run.py reads. */
+  private val rootPaths = Set(
+    "graft/SparkTune.scala:\"/root/testdata/sf0.1\"",
+    "graft/Bench.scala:\"/root/repo/BENCH_LOCAL.json\"",
+    "graft/SparkEntry.scala:\"/root/testdata/sf0.001\"",
+    "graft/Tables.scala:\"/root/repo/target/tmp/${kind}_\"")
+
+  test("code holds only the sanctioned /root/ paths") {
+    val found = sources.flatMap { case (file, text) =>
+      text.linesIterator.filterNot(isComment).flatMap(line =>
+        "\"/root/[^\"]*\"".r.findAllIn(line).map(lit => s"$file:$lit"))
+    }
+    assert(found.toSet === rootPaths)
+    assert(found.size === rootPaths.size, found)
+    // perfbench/run.py's mat_root() finds the fixture root with this
+    // regex; any other form of the literal fails every benchmark run
+    val tables = sources.toMap.apply("graft/Tables.scala")
+    assert("""def matDir[\s\S]*?s"(/[^"$]*?)/\$\{kind\}""".r
+      .findFirstMatchIn(tables).map(_.group(1)).contains("/root/repo/target/tmp"))
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The rule is injected here via session.experimental (getOrCreate
   * would silently ignore spark.sql.extensions once any suite has
   * created the shared session — extensions only apply at creation).
-  * The spark.sql.extensions path itself is exercised by graft.Demo /
-  * ExtCheck runs through spark-submit. */
+  * The spark.sql.extensions path itself is exercised by graft.ExtCheck
+  * runs through spark-submit. */
 class TopKRewriteRuleSpec extends SparkSpec {
 
   private def withRule[A](f: => A): A = {

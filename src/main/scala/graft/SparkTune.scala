@@ -31,7 +31,7 @@ object SparkTune {
   /** Executor threads of a main's local session. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
-  /** The battery's sf dir (driver contract: Bench's default). */
+  /** The battery's sf dir: SPARK_GRAFT_SF_DIR, else Bench's default. */
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

@@ -95,7 +95,7 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
     assert(dups.isEmpty, s"kinds used by more than one site: $dups")
   }
 
-  /** The mains: the driver's Verify and Bench, the wiki CLI and its
+  /** The mains: the benchmark's Verify and Bench, the wiki CLI and its
     * scale smoke, the spark-submit extensions check, the battery
     * profiler and the compressed-dump ingest. */
   private val mains = Set(
@@ -116,26 +116,34 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
     t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
   }
 
-  /** `/root/` literals in code: the battery's default sf dir and Bench's
-    * output file (driver contract), SparkEntry.entry's smoke dir, and
-    * Tables.matDir's fixture root, which perfbench/run.py reads. */
-  private val rootPaths = Set(
-    "graft/SparkTune.scala:\"/root/testdata/sf0.1\"",
-    "graft/Bench.scala:\"/root/repo/BENCH_LOCAL.json\"",
-    "graft/SparkEntry.scala:\"/root/testdata/sf0.001\"",
-    "graft/Tables.scala:\"/root/repo/target/tmp/${kind}_\"")
+  /** The absolute prefix that the benchmark's fixed paths share. */
+  private val hostRoot = "/root/"
 
-  test("code holds only the sanctioned /root/ paths") {
+  /** Absolute paths in code, as `<file>:<path below hostRoot>`: the
+    * battery's default sf dir, Bench's default output file,
+    * SparkEntry.entry's smoke dir, and Tables.matDir's fixture root,
+    * which perfbench/run.py reads. */
+  private val hostPaths = Set(
+    "graft/SparkTune.scala:testdata/sf0.1",
+    "graft/Bench.scala:repo/BENCH_LOCAL.json",
+    "graft/SparkEntry.scala:testdata/sf0.001",
+    "graft/Tables.scala:repo/target/tmp/${kind}_")
+
+  test("code holds only the sanctioned absolute host paths") {
+    val literal = ("\"" + java.util.regex.Pattern.quote(hostRoot) +
+      "([^\"]*)\"").r
     val found = sources.flatMap { case (file, text) =>
       text.linesIterator.filterNot(isComment).flatMap(line =>
-        "\"/root/[^\"]*\"".r.findAllIn(line).map(lit => s"$file:$lit"))
+        literal.findAllMatchIn(line).map(m => s"$file:${m.group(1)}"))
     }
-    assert(found.toSet === rootPaths)
-    assert(found.size === rootPaths.size, found)
+    assert(found.toSet === hostPaths)
+    assert(found.size === hostPaths.size, found)
     // perfbench/run.py's mat_root() finds the fixture root with this
     // regex; any other form of the literal fails every benchmark run
     val tables = sources.toMap.apply("graft/Tables.scala")
-    assert("""def matDir[\s\S]*?s"(/[^"$]*?)/\$\{kind\}""".r
-      .findFirstMatchIn(tables).map(_.group(1)).contains("/root/repo/target/tmp"))
+    val matRoot = """def matDir[\s\S]*?s"(/[^"$]*?)/\$\{kind\}""".r
+      .findFirstMatchIn(tables).map(_.group(1))
+    assert(matRoot.map(r => s"graft/Tables.scala:${r.stripPrefix(hostRoot)}/$${kind}_")
+      .exists(hostPaths), matRoot)
   }
 }

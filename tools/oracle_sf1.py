@@ -2,7 +2,7 @@
 """One-scale-up DuckDB oracle rung (VERDICT-r13 ask #4): the same
 typed compare as tools/oracle_check.py, run against the 10x corpus that
 `graft.tools.Profile --sf1 --build-only` builds under target/scalebench/sf1,
-writing CORRECTNESS_sf1.json in the driver's row format.
+writing CORRECTNESS_sf1.json in the CORRECTNESS_*.json row format.
 
 Two honest deviations from the sf0.01/sf0.1 gate, both recorded
 in-row rather than silently skipped:
@@ -27,8 +27,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 def main(sf_dir, out_dir, timeout_s=300):
     con = duckdb.connect()
     for t in TABLES:
-        # Profile --sf1 writes Spark-style directory tables; the driver's
-        # testdata uses flat files — accept either
+        # Profile --sf1 writes Spark-style directory tables; the battery's
+        # sf testdata uses flat files — accept either
         p = os.path.join(sf_dir, f"{t}.parquet")
         pat = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
         con.execute(

@@ -148,13 +148,16 @@ object ExtCheck {
     // through the same connector's inferred all-string schema
     val tsvOut = java.nio.file.Files
       .createTempDirectory("extcheck_tsv_").toString
-    spark.sql("SELECT doc_id, lang FROM docs ORDER BY doc_id LIMIT 7")
-      .write.format("graft-tsv").mode("overwrite").save(tsvOut)
-    val back = spark.read.format("graft-tsv").load(tsvOut).count()
-    val success = new java.io.File(s"$tsvOut/_SUCCESS").exists()
-    println(s"[ext] graft-tsv DSv2 write+read: $back rows " +
-      s"(expect 7), _SUCCESS=$success")
-    assert(back == 7L && success)
+    try {
+      spark.sql("SELECT doc_id, lang FROM docs ORDER BY doc_id LIMIT 7")
+        .write.format("graft-tsv").mode("overwrite").save(tsvOut)
+      val back = spark.read.format("graft-tsv").load(tsvOut).count()
+      val success = new java.io.File(s"$tsvOut/_SUCCESS").exists()
+      println(s"[ext] graft-tsv DSv2 write+read: $back rows " +
+        s"(expect 7), _SUCCESS=$success")
+      assert(back == 7L && success)
+    } finally org.apache.spark.network.util.JavaUtils
+      .deleteRecursively(new java.io.File(tsvOut))
 
     println("[ext] all extension surfaces OK")
     spark.stop()

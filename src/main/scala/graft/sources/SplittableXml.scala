@@ -26,7 +26,10 @@ import org.apache.spark.sql.types.StructType
   *      UTF-8 string per record;
   *   3. `from_xml` (the same StaxXmlParser that backs the native
   *      source, codegen-friendly, schema-pruned) parses records into
-  *      columns.
+  *      columns. Its projection is the plan's only parse: the wiki
+  *      pipeline puts no Filter above it (a pushed-down predicate would
+  *      repeat the whole `from_xml` once per check), so its executed
+  *      plan evaluates `from_xml` once per page.
   *
   * Straddle rule, bit-for-bit from CountReference.java:141-158,180-201:
   * a range owns every record whose START tag BEGINS inside

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   *
   * The reference is two chained Hadoop MR jobs (parse+extract+distinct,
   * then sum; CountReference.java:322-363). Here the whole cascade is ONE
-  * lazy DataFrame plan: XML scan → project → explode(regexp_extract_all)
-  * → filters → groupBy.countDistinct → orderBy → csv. Catalyst plans the
+  * lazy DataFrame plan: XML scan → `from_xml` once per page →
+  * explode([[LinkTargets]]) → groupBy.countDistinct → sort in the one
+  * writing task → csv. Catalyst plans the
   * partial/final aggregate pair (the combiner the reference never wrote)
   * and the disk round-trip between the two jobs disappears.
   *
@@ -32,14 +33,15 @@ import org.apache.spark.sql.types._
   *     (CountReference.java:269-276).
   *
   * Scale posture: every step is a codegen'd Catalyst expression (no UDFs);
-  * the only shuffle is the final aggregate on page_to; the XML scan
+  * the two shuffles are the aggregate's, on (page_to, page_from) and then
+  * on page_to, and the final sort runs in the task that writes; the XML scan
   * splits by byte range WITHIN a file (graft.sources.SplittableXml), so
   * even a single-file multi-GB dump scans in parallel.
   */
 object WikiPipeline {
 
-  /** Same pattern object semantics as CountReference.java:208-209 —
-    * Spark's regexp_* run java.util.regex, so match behavior (lazy
+  /** Same pattern as CountReference.java:208-209, compiled by
+    * [[LinkTargets]] with java.util.regex, so match behavior (lazy
     * quantifier, no DOTALL) is identical by construction. */
   val LinkRegex = "\\[\\[(.*?)\\]\\]"
 
@@ -88,48 +90,43 @@ object WikiPipeline {
       .select(col("title"), col("revision.text").as("text"))
 
   /** E2→E3→F1→E4→F2 over a (title, text) frame: one row per surviving
-    * link emission, columns (page_to, page_from). Mirrors parseText
-    * (CountReference.java:246-266) including rule ORDER: pipe-split, then
-    * namespace filter, then bracket/comma cleanup, then non-empty. */
+    * link emission, columns (page_to, page_from). [[LinkTargets]] runs
+    * the matcher once per text and applies parseText's rules
+    * (CountReference.java:246-266) in their order; `explode` is the MR
+    * mapper's multi-emit.
+    *
+    * The guard at CountReference.java:237 (raw, untrimmed title and text
+    * non-empty) nulls the generator's input instead of filtering rows: a
+    * Filter here would be pushed below `readPages`' projection, and
+    * Catalyst would then repeat the whole `from_xml` of every page for
+    * each of its checks. The emitted page_from is the TRIMMED title (:263).
+    */
   def links(pages: DataFrame): DataFrame = {
-    // Guard at CountReference.java:237: raw (untrimmed) title/text must be
-    // non-empty; the emitted page_from is the TRIMMED title (:263).
-    val live = pages.filter(
-      col("title").isNotNull && length(col("title")) > 0 &&
-      col("text").isNotNull && length(col("text")) > 0)
-
-    // E2: whole match group(0), brackets included (:249). explode of
-    // regexp_extract_all == the MR mapper's multi-emit (a Generator).
-    val raw = live.select(
-      javaTrim(col("title")).as("page_from"),
-      explode(regexp_extract_all(col("text"), lit(LinkRegex), lit(0))).as("m"))
-
-    // E3: part before the first '|' of the whole match (:251-253; the
-    // startsWith guard there is dead code — see SURVEY.md §1.3.2).
-    val target = substring_index(col("m"), "|", 1)
-    // F1: substring (not prefix!) namespace filter (:254-256).
-    val banned = BannedSubstrings.map(target.contains(_)).reduce(_ || _)
-
-    raw.filter(!banned)
-      // E4: strip all [ ] , then trim (:260).
-      .select(
-        col("page_from"),
-        javaTrim(regexp_replace(target, "[\\[\\]\\,]", "")).as("page_to"))
-      // F2: drop empty cleaned targets (:261).
-      .filter(length(col("page_to")) > 0)
-      .select("page_to", "page_from")
+    val nonEmpty = (c: Column) => coalesce(length(c), lit(0)) > 0
+    pages.select(
+      explode(LinkTargets.linkTargets(
+        when(nonEmpty(col("title")) && nonEmpty(col("text")), col("text"))))
+        .as("page_to"),
+      javaTrim(col("title")).as("page_from"))
   }
 
-  /** A1+A2+O1 fused: the reference's two-job cascade (distinct over
+  /** A1+A2 fused: the reference's two-job cascade (distinct over
     * (to,from) then sum per to; CountReference.java:269-306) is exactly
-    * countDistinct — Catalyst plans partial-distinct + final-count with
-    * map-side combine, and orderBy is a range-partitioned sort in Spark's
-    * default UTF8_BINARY collation (== Hadoop Text byte order). */
-  def incomingReferenceCounts(linkRows: DataFrame): DataFrame =
+    * countDistinct — Catalyst plans the (page_to, page_from) dedup and the
+    * partial count with map-side combine, N tasks wide. */
+  private[wiki] def countsByTarget(linkRows: DataFrame): DataFrame =
     linkRows
       .groupBy(col("page_to").as("page_title"))
       .agg(countDistinct(col("page_from")).as("count"))
-      .orderBy("page_title")
+
+  /** A1+A2+O1: counts per target, sorted in Spark's default UTF8_BINARY
+    * collation (== Hadoop Text byte order). The output is one CSV, so the
+    * sort runs in the single task that writes it: coalesce(1) folds the
+    * final count merge (at most one partial row per target and shuffle
+    * partition) into that task, and no range exchange or sampling job is
+    * planned. */
+  def incomingReferenceCounts(linkRows: DataFrame): DataFrame =
+    countsByTarget(linkRows).coalesce(1).sortWithinPartitions("page_title")
 
   /** Whole pipeline: XML path in, sorted counts frame out. */
   def run(spark: SparkSession, xmlPath: String): DataFrame =
@@ -138,9 +135,9 @@ object WikiPipeline {
   /** W2+W3: single CSV file with literal header `page_title,count`
     * and raw `title,count` lines, exactly as the reference writes them
     * (CountReference.java:292-295,304) — no CSV quoting or escaping of
-    * titles that hold `"` or `,`. One single-file text write
-    * (coalesce(1) ONLY here, at the final finalize step — upstream
-    * parallelism is untouched because coalesce folds into the write),
+    * titles that hold `"` or `,`. One single-file text write (the
+    * coalesce(1) folds into the last stage, as in
+    * [[incomingReferenceCounts]], so upstream parallelism is untouched),
     * then the header and that part file stream into `outFile`.
     */
   def writeCsv(counts: DataFrame, outFile: String): Unit = {

@@ -1,10 +1,12 @@
 package graft.wiki
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke for the splittable XML scan (S1): run the full pipeline
-  * on a multi-hundred-MB dump, report scan parallelism and throughput,
-  * and check the copy-invariants (targets unchanged, per-target counts
+  * on a multi-hundred-MB dump, report scan parallelism, a cumulative
+  * per-stage time table and the pipeline's throughput, and check the
+  * copy-invariants (targets unchanged, per-target counts
   * multiplied by the copy factor). The input is
   * `tools/make_wiki_dump.py` over the 10-page test fixture.
   * Usage: runMain graft.wiki.WikiScale <big.xml> <copies>
@@ -52,31 +54,52 @@ object WikiScale {
       }
     }
 
-    // raw record-scan throughput (byte scanner only, no XML parse)
-    val tScan = System.nanoTime()
-    val nRecs = graft.sources.SplittableXml.records(spark, xml, "page").count()
-    val scanSecs = (System.nanoTime() - tScan) / 1e9
-    println(f"[scale] raw scan: $nRecs records in $scanSecs%.1f s " +
-      f"(${bytes / 1e6 / scanSecs}%.1f MB/s)")
+    // Cumulative stage table: each line runs the pipeline one stage
+    // further than the line above it, so a stage costs the difference
+    // between neighbouring lines. The record scan counts the byte
+    // scanner's records (no XML parse); the middle lines run to a noop
+    // sink; the last one writes the CSV.
+    def noop(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    def timed[T](body: => T): (T, Double) = {
+      val t = System.nanoTime()
+      val out = body
+      (out, (System.nanoTime() - t) / 1e9)
+    }
+    val csv = java.nio.file.Files.createTempDirectory("wikiscale_").toString
+    val links = () => WikiPipeline.links(WikiPipeline.readPages(spark, xml))
+    val (nRecs, scanSecs) = timed(
+      graft.sources.SplittableXml.records(spark, xml, "page").count())
+    val stages = Seq(
+      "record scan" -> scanSecs,
+      "+ parse" -> timed(noop(WikiPipeline.readPages(spark, xml)))._2,
+      "+ extract" -> timed(noop(links()))._2,
+      "+ countDistinct" ->
+        timed(noop(WikiPipeline.countsByTarget(links())))._2,
+      "+ sort + writeCsv" -> timed(WikiPipeline.writeCsv(
+        WikiPipeline.run(spark, xml), s"$csv/counts.csv"))._2)
+    org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(csv))
+    println(s"[scale] stages over $nRecs records:")
+    println("[scale] | up to | s | MB/s |")
+    println("[scale] |---|---|---|")
+    stages.foreach { case (stage, secs) =>
+      println(f"[scale] | $stage | $secs%.1f | ${bytes / 1e6 / secs}%.1f |")
+    }
 
     // the same byte ranges through the DataSource V2 face — must plan
     // the identical splits and count the identical records (count(*)
     // prunes to a zero-width schema, so this is the connector's
     // record-walk overhead vs the raw RDD path)
-    val tV2 = System.nanoTime()
-    val nV2 = spark.read.format("graft-xml").option("rowTag", "page")
-      .load(xml).count()
-    val v2Secs = (System.nanoTime() - tV2) / 1e9
+    val (nV2, v2Secs) = timed(spark.read.format("graft-xml")
+      .option("rowTag", "page").load(xml).count())
     println(f"[scale] DSv2 scan: $nV2 records in $v2Secs%.1f s " +
       f"(${bytes / 1e6 / v2Secs}%.1f MB/s)")
     require(nV2 == nRecs,
       s"DSv2 face diverged from the RDD path: $nV2 vs $nRecs")
 
-    val t0 = System.nanoTime()
     val counts = WikiPipeline.incomingReferenceCounts(
       WikiPipeline.links(pages)).cache()
-    val rows = counts.count()
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (rows, secs) = timed(counts.count())
     println(f"[scale] pipeline: $rows rows in $secs%.1f s " +
       f"(${bytes / 1e6 / secs}%.1f MB/s)")
 

@@ -17,4 +17,8 @@ object WikiFixture {
   val Rows = 426L
   val MaxCount = 10L
   val AtMaxCount = Set("astronomia moderna", "etnologia (letteratura)", "stella")
+  /** sha256 of the whole expected CSV (header + raw `title,count` lines),
+    * the `csv_sha256` that `tools/make_wiki_fixture.py` prints from its
+    * own replica. */
+  val CsvSha256 = "0cd75612a597fb78f17db88cf0e46b36e9ef55a6f22c613b1e865a3fc73769c8"
 }

@@ -1,6 +1,10 @@
 package graft.wiki
 
-import graft.SparkSpec
+import graft.{JobCounting, SparkSpec}
+import org.apache.spark.sql.catalyst.expressions.{RegExpExtractAll, XmlToStructs}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** Golden reference-parity suite. Cardinalities and edge cases come from
@@ -9,7 +13,8 @@ import org.apache.spark.sql.functions._
   * ([[WikiFixture]]) — see FIXTURES.md §A. The three `golden:` tests pin
   * the reference's own itwiki sample, whose wikitext no other input can
   * stand in for; they run wherever a mirror of the reference holds it. */
-class WikiPipelineSpec extends SparkSpec {
+class WikiPipelineSpec extends SparkSpec with JobCounting
+    with AdaptiveSparkPlanHelper {
 
   val referenceXml =
     "/root/reference/result/i/itwiki-latest-pages-articles1-10pages.xml"
@@ -38,6 +43,24 @@ class WikiPipelineSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     assert(atMax === WikiFixture.AtMaxCount)
     assert(counts.filter(col("count") > WikiFixture.MaxCount).isEmpty)
+  }
+
+  test("plan: one from_xml per page, no per-match regex, no range " +
+    "exchange; writeCsv runs at most 3 jobs") {
+    val plan = WikiPipeline.run(spark, WikiFixture.path)
+      .queryExecution.executedPlan
+    val exprs = flatMap(plan)(_.expressions.flatMap(_.collect { case e => e }))
+    assert(exprs.count(_.isInstanceOf[XmlToStructs]) === 1, plan)
+    assert(!exprs.exists(_.isInstanceOf[RegExpExtractAll]), plan)
+    assert(collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning
+        .isInstanceOf[RangePartitioning] => e
+    }.isEmpty, plan)
+    val out = java.nio.file.Files.createTempDirectory("wiki").toString +
+      "/jobs.csv"
+    val (_, jobs) = jobsOf(
+      WikiPipeline.writeCsv(WikiPipeline.run(spark, WikiFixture.path), out))
+    assert(jobs <= 3, s"writeCsv(run(fixture)) ran $jobs Spark jobs")
   }
 
   test("golden: 1,483 raw link emissions post-filter") {
@@ -184,6 +207,10 @@ class WikiPipelineSpec extends SparkSpec {
     val written = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
     assert(new String(written, "UTF-8") === expected)
     assert(written.toSeq === expected.getBytes("UTF-8").toSeq)
+    // and the independent Python replica's digest of the whole file
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(written).map("%02x".format(_)).mkString
+    assert(sha === WikiFixture.CsvSha256)
   }
 
   test("W2+W3: single CSV with header, sorted") {

@@ -30,7 +30,20 @@ class WikiPropertySpec extends SparkSpec {
     Gen.const("[[Genesis: storia]]"),
     Gen.const("[[caffè]] [[über|u]]"),
     Gen.alphaLowerStr.map(_.take(10)), // plain prose
-    Gen.const("]] stray [["))
+    Gen.const("]] stray [["),
+    // every char String.trim() strips, tabs and newlines included
+    for {
+      l <- Gen.listOfN(3, Gen.choose('\u0000', '\u0020'))
+      r <- Gen.listOfN(3, Gen.choose('\u0000', '\u0020'))
+      s <- Gen.alphaLowerStr
+    } yield s"[[${l.mkString}${s.take(5)}${r.mkString}]]",
+    Gen.const("[[|x]]"),
+    Gen.const("[[,]]"),
+    Gen.const("[[a|b|c]]"),
+    Gen.const("[[File:x [[y]]]]"),
+    Gen.const("[[\uD834\uDD1E chiave di violino]]"), // U+1D11E
+    Gen.const("[[x\n]] [[y]]"),
+    Gen.const("]][[z]]"))
 
   private val textGen: Gen[String] =
     Gen.listOfN(12, fragment).map(_.mkString(" "))

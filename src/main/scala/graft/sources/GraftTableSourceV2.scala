@@ -223,17 +223,12 @@ private[sources] class GraftTableWrite(root: String, mode: String,
       override def insert(data: org.apache.spark.sql.DataFrame,
                           overwrite: Boolean): Unit = {
         val s = data.sparkSession
-        if (replace || overwrite)
-          ManifestPrune.replaceCommit(s, root, data)
-        else mode match {
-          case "append" => ManifestPrune.appendCommit(s, root, data)
-          case "upsert" => ManifestPrune.upsertCommit(s, root, data, key)
-          case "delete" => ManifestPrune.eqDeleteCommit(s, root,
-            data.select(key))
-          case other => throw new IllegalArgumentException(
-            s"graft-table batch write mode must be " +
-              s"append|upsert|delete, got '$other' (cdc is a " +
-              "streaming mode)")
+        // every mode re-reads the current version on each attempt, so
+        // a lost CAS is retried as the catalog's INSERT does
+        ManifestPrune.withCommitRetry() { () =>
+          if (replace || overwrite)
+            ManifestPrune.replaceCommit(s, root, data)
+          else GraftTableWrite.commit(s, root, data, mode, key)
         }
       }
     }
@@ -243,6 +238,27 @@ private[sources] class GraftTableWrite(root: String, mode: String,
     new GraftStreamingWrite(root, mode, key, querySchema,
       new SerializableHadoopConf(
         SparkSession.active.sparkContext.hadoopConfiguration))
+}
+
+private[graft] object GraftTableWrite {
+  /** Commit `rows` to the chain at `root` as one version in write mode
+    * `mode` — the dispatch the batch write and the streaming sink
+    * ([[graft.streaming.StreamingPipelines.applySinkBatch]]) share:
+    * `append` (insert-only, [[ManifestPrune.appendCommit]]), `upsert`
+    * (full-row MERGE by `key`, [[ManifestPrune.upsertCommit]]) or
+    * `delete` (key rows → pure-metadata equality delete). The
+    * streaming-only `cdc` mode never reaches here. Returns the
+    * committed version. */
+  def commit(s: SparkSession, root: String,
+             rows: org.apache.spark.sql.DataFrame,
+             mode: String, key: String): Long = mode match {
+    case "append" => ManifestPrune.appendCommit(s, root, rows)
+    case "upsert" => ManifestPrune.upsertCommit(s, root, rows, key)
+    case "delete" => ManifestPrune.eqDeleteCommit(s, root, rows.select(key))
+    case other => throw new IllegalArgumentException(
+      s"graft-table write mode must be append|upsert|delete, got " +
+        s"'$other' (cdc is a streaming mode)")
+  }
 }
 
 /** The staged streaming write: each task spills its rows to one

@@ -453,6 +453,71 @@ object ManifestPrune {
                inserts: DataFrame, version: String): (String, String) =
     cowMergeFrom(s, root, s"$root/manifest", updates, inserts, version)
 
+  /** The MERGE plan copy-on-write ([[cowMergeFrom]]) and merge-on-read
+    * ([[morMergeFrom]]) share; they differ only in how they commit it.
+    *   - SET resolution: every non-key column of `updates` overwrites
+    *     the matched row's column, a NULL update value keeps the old
+    *     one (coalesce semantics), and the legacy `new_lang` spelling
+    *     keeps meaning SET lang.
+    *   - The hit-file plan: one join of the matched keys (updates ∪
+    *     deletes) against the base version's key column collects the
+    *     files holding one — a driver-held list under
+    *     `graft.manifest.maxDriverFiles`, one row per touched file.
+    *   - The hit read: ONLY those files, base deletion vectors applied,
+    *     so a merge never resurrects a row the base already hides.
+    *     Every matched row lives in a hit file, so this read serves
+    *     both the CoW rewrite and MoR's masks and post-images: the base
+    *     version is scanned once, by the plan.
+    * Accumulated equality deletes fold into positional form first
+    * ([[foldEqDel]]); `effDv` is the base DV after that fold. */
+  private final class MergePlan(s: SparkSession, root: String,
+                                baseManifest: String,
+                                baseDv: Option[String], updates: DataFrame,
+                                deletes: Option[DataFrame],
+                                version: String, key: String) {
+    val effDv: Option[String] =
+      foldEqDel(s, root, baseManifest, baseDv, version)
+    private val table = readVersionWithDv(s, baseManifest, effDv)
+    val tableCols: Seq[String] = table.columns.toSeq
+    private val upd =
+      if (updates.columns.contains("new_lang"))
+        updates.withColumnRenamed("new_lang", "lang")
+      else updates
+    private val setCols = upd.columns.filterNot(_ == key).toSeq
+    require(setCols.nonEmpty,
+      "MERGE updates carry no SET columns (only the key)")
+    require(setCols.forall(tableCols.contains),
+      s"MERGE SET columns ${setCols.filterNot(tableCols.contains)
+        .mkString(", ")} do not exist in the table")
+    /** The keys of every matched row: updated or deleted. */
+    val matched: DataFrame =
+      deletes.fold(upd.select(key))(d => upd.select(key)
+        .unionByName(d.select(key)))
+    val hitFiles: Seq[String] = collectFileList(s,
+      table
+        .select(col("_metadata.file_path").as("file"), col(key))
+        .join(matched, key)
+        .select("file").distinct(),
+      "MERGE hit-file plan")
+    /** The hit files' live rows. */
+    val hit: DataFrame =
+      if (hitFiles.isEmpty) table.limit(0)
+      else applyDv(s, readFiles(s, baseManifest, hitFiles), effDv)
+    /** `rows` without the deleted keys, matched updates' SET columns
+      * applied: a `left` join keeps unmatched rows (the CoW rewrite),
+      * an `inner` one only the post-images (MoR). */
+    def updated(rows: DataFrame, how: String): DataFrame = {
+      val live = deletes.fold(rows)(d =>
+        rows.join(d.select(key), Seq(key), "left_anti"))
+      val prefixed = setCols.foldLeft(upd) { (d, c) =>
+        d.withColumnRenamed(c, s"__u_$c")
+      }
+      setCols.foldLeft(live.join(prefixed, Seq(key), how)) { (d, c) =>
+        d.withColumn(c, coalesce(col(s"__u_$c"), col(c)))
+      }.select(tableCols.map(col): _*)
+    }
+  }
+
   /** [[cowMerge]] against an arbitrary committed base manifest (the
     * commit-protocol entry point merges against the current one).
     * `deletes` (optional, key rows) completes the MERGE triad — WHEN
@@ -460,7 +525,7 @@ object ManifestPrune {
     * the rewrite drops their rows (an anti-join inside the rewritten
     * subset only — copy-on-write deletion, the eager complement of
     * Delta/Iceberg deletion vectors, which defer the same anti-join
-    * to read time). */
+    * to read time). Planning is [[MergePlan]]'s. */
   def cowMergeFrom(s: SparkSession, root: String, baseManifest: String,
                    updates: DataFrame, inserts: DataFrame,
                    version: String,
@@ -469,59 +534,13 @@ object ManifestPrune {
                    key: String = "doc_id"): (String, String) = {
     val dataV2 = s"$root/data_$version"
     val mfV2 = s"$root/manifest_$version"
-    // any accumulated equality deletes fold into positional form here
-    // (and are thereby materialized away — the prepared manifest
-    // carries no `_eqdel` pointer)
-    val effDv = foldEqDel(s, root, baseManifest, baseDv, version)
-    val table = readVersionWithDv(s, baseManifest, effDv)
     // 1. plan: which files hold a matched key? (driver-held, file-grain)
-    val touchedKeys = deletes match {
-      case Some(del) => updates.select(key)
-        .unionByName(del.select(key))
-      case None => updates.select(key)
-    }
-    val hitFiles = collectFileList(s,
-      table
-        .select(col("_metadata.file_path").as("file"), col(key))
-        .join(touchedKeys, key)
-        .select("file").distinct(),
-      "CoW merge hit-file plan").toArray
+    val plan = new MergePlan(s, root, baseManifest, baseDv, updates,
+      deletes, version, key)
+    val hitFiles = plan.hitFiles
     // 2. rewrite hit files with updates applied and deletes dropped,
-    //    then append inserts; rows the base version's deletion
-    //    vectors already hide must not be resurrected by the rewrite
-    val hit =
-      if (hitFiles.isEmpty) table.limit(0)
-      else applyDv(s, readFiles(s, baseManifest, hitFiles.toIndexedSeq),
-        effDv)
-    val afterDelete = deletes match {
-      case Some(del) => hit.join(del.select(key), Seq(key),
-        "left_anti")
-      case None => hit
-    }
-    // general MERGE SET application: every non-key column of `updates`
-    // overwrites the matched row's column (NULL update values keep the
-    // old value — coalesce semantics); the legacy `new_lang` spelling
-    // keeps meaning SET lang
-    val upd0 =
-      if (updates.columns.contains("new_lang"))
-        updates.withColumnRenamed("new_lang", "lang")
-      else updates
-    val setCols = upd0.columns.filterNot(_ == key).toSeq
-    require(setCols.nonEmpty,
-      "MERGE updates carry no SET columns (only the key)")
-    require(setCols.forall(afterDelete.columns.contains),
-      s"MERGE SET columns ${setCols.filterNot(afterDelete.columns
-        .contains).mkString(", ")} do not exist in the table")
-    val prefixed = setCols.foldLeft(upd0) { (d, c) =>
-      d.withColumnRenamed(c, s"__u_$c")
-    }
-    val tableCols = afterDelete.columns.toSeq
-    val mergedRows = setCols.foldLeft(
-        afterDelete.join(prefixed, Seq(key), "left")) { (d, c) =>
-        d.withColumn(c, coalesce(col(s"__u_$c"), col(c)))
-      }
-      .select(tableCols.map(col): _*)
-      .unionByName(inserts)
+    //    then append inserts
+    val mergedRows = plan.updated(plan.hit, "left").unionByName(inserts)
     // a merge that empties EVERY hit file (and the untouched set)
     // would write a file-less parquet dir and an unreadable version —
     // refuse up front with a usable message (an empty table is
@@ -543,19 +562,16 @@ object ManifestPrune {
     // sidecar; entries for rewritten files are dropped — the rewrite
     // materialized those deletes (the Iceberg rewrite-drops-its-
     // position-deletes rule).
-    val untouched = immutableParquet(s, baseManifest)
-      .filter(if (hitFiles.isEmpty) lit(true)
-        else !col("file").isInCollection(hitFiles.toIndexedSeq))
+    val untouchedFile = !col("file").isInCollection(hitFiles)
+    val untouched = immutableParquet(s, baseManifest).filter(untouchedFile)
     val spec = specOfManifest(root, baseManifest)
     val v2Stats = statsManifest(s, dataV2, spec.statsCol, spec.id,
       statsPolicyOf(root))
     untouched.unionByName(v2Stats, allowMissingColumns = true)
       .write.mode("overwrite").parquet(mfV2)
     carrySpecPointer(root, baseManifest, mfV2)
-    effDv.foreach { dv =>
-      val carried = immutableParquet(s, dv)
-        .filter(if (hitFiles.isEmpty) lit(true)
-          else !col("file").isInCollection(hitFiles.toIndexedSeq))
+    plan.effDv.foreach { dv =>
+      val carried = immutableParquet(s, dv).filter(untouchedFile)
       if (carried.limit(1).count() > 0) {
         carried.write.mode("overwrite").parquet(s"$root/dv_$version")
         writeDvPointer(root, mfV2, s"$root/dv_$version")
@@ -566,13 +582,41 @@ object ManifestPrune {
 
   // ------------------------------------------------ deletion vectors
 
+  /** Each row of `frame` with its POSITION in columns `file` and `pos`:
+    * the parquet file it lives in and its ordinal there
+    * (`_metadata.row_index`, stable for an immutable file) — the
+    * coordinates a deletion-vector sidecar records. Every DV writer
+    * and reader takes positions from here. */
+  private def positions(frame: DataFrame, file: String = "file",
+                        pos: String = "pos"): DataFrame =
+    frame.withColumn(file, col("_metadata.file_path"))
+      .withColumn(pos, col("_metadata.row_index"))
+
+  /** A sidecar's rows ∪ `rows`, deduplicated: how every DV and
+    * equality-delete sidecar grows. Version N's sidecar holds
+    * everything hidden as of N, so a reader needs only its own
+    * version's sidecar, never the chain. */
+  private def accumulate(s: SparkSession, sidecar: Option[String],
+                         rows: DataFrame): DataFrame =
+    sidecar.fold(rows)(immutableParquet(s, _).unionByName(rows))
+      .distinct()
+
+  /** Write DV sidecar `dir`: `baseDv` grown by the `(file, pos)` of
+    * `hidden`'s rows. Every commit that masks rows lands its sidecar
+    * here. Returns `dir`. */
+  private def writeDv(s: SparkSession, baseDv: Option[String],
+                      hidden: DataFrame, dir: String): String = {
+    accumulate(s, baseDv, hidden.select("file", "pos"))
+      .write.mode("overwrite").parquet(dir)
+    dir
+  }
+
   /** MERGE-ON-READ DELETE via positional DELETION VECTORS — the lazy
     * complement of [[cowMergeFrom]]'s eager row rewrite: a DELETE
-    * touches NO data file. Instead the deleted rows' positions are
-    * recorded in a sidecar table of `(file, pos)` rows (pos =
-    * `_metadata.row_index`, the row's ordinal inside its parquet
-    * file — stable for an immutable file), and the read path hides
-    * them with a positional anti-join ([[readVersionWithDv]]).
+    * touches NO data file. Instead the deleted rows' [[positions]] are
+    * recorded in a sidecar table of `(file, pos)` rows, and the read
+    * path hides them with a positional anti-join
+    * ([[readVersionWithDv]]).
     *
     * Why this matters at 100 TB: frequent small deletes (GDPR erasure
     * over a petabyte corpus) under copy-on-write rewrite ~every file
@@ -581,9 +625,7 @@ object ManifestPrune {
     * proportional to the DELETED rows, and the data files are never
     * touched until a compaction or CoW merge materializes the
     * deletes (a rewrite drops the rewritten files' DV entries). The
-    * sidecar accumulates: version N's DV dir holds ALL positions
-    * hidden as of N (base DVs ∪ this delete), so a reader needs only
-    * its own version's sidecar, never the chain.
+    * sidecar accumulates ([[writeDv]]).
     *
     * Returns (manifestDir, dvDir) for the new version; the manifest
     * is a copy of the base (same file list, same stats — `n_rows`
@@ -594,60 +636,30 @@ object ManifestPrune {
                    version: String,
                    key: String = "doc_id"): (String, String) = {
     val mfV = s"$root/manifest_$version"
-    val dvV = s"$root/dv_$version"
     // accumulated equality deletes fold into this version's sidecar
     val effDv = foldEqDel(s, root, baseManifest, baseDv, version)
     // plan: positions of doomed rows, a distributed join on the key —
     // never a driver-side row list (only FILES are ever driver-held
     // in this layer, and a DV delete holds none at all)
-    val doomed = readVersionWithDv(s, baseManifest, effDv)
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("pos"), col(key))
-      .join(deletes.select(key), key)
-      .select("file", "pos")
-    val merged = effDv match {
-      case Some(dv) =>
-        immutableParquet(s, dv).unionByName(doomed).distinct()
-      case None => doomed.distinct()
-    }
-    merged.write.mode("overwrite").parquet(dvV)
+    val dvV = writeDv(s, effDv,
+      positions(readVersionWithDv(s, baseManifest, effDv))
+        .join(deletes.select(key), key),
+      s"$root/dv_$version")
     // manifest: identical file list — the no-rewrite contract; the
     // sidecar reference rides inside it so one rename publishes both
-    immutableParquet(s, baseManifest).write.mode("overwrite").parquet(mfV)
-    carrySpecPointer(root, baseManifest, mfV)
+    prepareManifest(s, root, baseManifest, None, mfV)
     writeDvPointer(root, mfV, dvV)
     (mfV, dvV)
   }
 
-  /** MERGE-ON-READ upsert — the write-amplification complement of
-    * [[cowMergeFrom]] (Iceberg v2 delete-plus-insert / Delta deletion
-    * vectors applied to UPDATE, not just DELETE): a matched key's OLD
-    * row is hidden behind a DV sidecar entry and its post-image is
-    * APPENDED to a new delta file, so the commit writes
-    * O(updated + inserted rows) — never a hit-FILE rewrite. This is
-    * the path a streaming CDC feed of small scattered updates needs
-    * at 100 TB: CoW rewrites a whole file per touched key per batch;
-    * MoR writes exactly the changed rows and lets [[compactCommit]]
-    * materialize the masks once per maintenance window. The read-side
-    * cost (positional anti-join against a growing sidecar) is the
-    * same one DV deletes already pay, erased by the same compaction.
-    *
-    * Semantics are IDENTICAL to [[cowMergeFrom]] (MorMergeSpec pins
-    * CoW-vs-MoR result equality): WHEN MATCHED THEN UPDATE SET over
-    * every non-key `updates` column (NULL keeps the old value), WHEN
-    * NOT MATCHED THEN INSERT, WHEN MATCHED by `deletes` keys THEN
-    * DELETE (mask only, no post-image). Post-image computation reads
-    * ONLY the hit files (the CoW planning join, reused verbatim) —
-    * reading matched rows is unavoidable for coalesce semantics, but
-    * nothing is rewritten. */
   /** Write a commit's new data rows + their manifest stats,
     * preserving a registered SPJ bucketing ([[SpjBucket]]) when the
     * row set carries the bucket key: files split per bucket id, ids
-    * recorded in the stats — the shared tail of every data-writing
-    * commit path, so append/replace/MERGE/upsert all keep the
-    * storage-partitioned-join surface alive. An empty row set takes
-    * the plain path (a bucket-partitioned write of zero rows emits
-    * no file at all, which would break downstream schema reads). */
+    * recorded in the stats — so append/replace/MERGE/upsert all keep
+    * the storage-partitioned-join surface alive. An empty row set
+    * takes the plain path (a bucket-partitioned write of zero rows
+    * emits no file at all, which would break downstream schema
+    * reads). */
   private def writeDataWithStats(s: SparkSession, root: String,
                                  rows: DataFrame, dataDir: String,
                                  spec: ClusterSpec): DataFrame = {
@@ -667,105 +679,107 @@ object ManifestPrune {
     }
   }
 
+  /** The delta write every row-adding commit shares: `rows` in the base
+    * version's column order land in `dataDir` through
+    * [[writeDataWithStats]], then the table's CHECK constraints run
+    * over exactly the written rows (a violation aborts BEFORE any
+    * manifest exists, leaving only prepared garbage for expiry).
+    * Returns the delta's stats rows. */
+  private def writeDelta(s: SparkSession, root: String,
+                         baseManifest: String, rows: DataFrame,
+                         dataDir: String): DataFrame = {
+    // schema-only read: footers, not data
+    val cols = readVersion(s, baseManifest).schema.fieldNames.toSeq
+    val stats = writeDataWithStats(s, root, rows.select(cols.map(col): _*),
+      dataDir, specOfManifest(root, baseManifest))
+    enforceConstraints(root,
+      s.read.parquet(dataDir).select(cols.map(col): _*))
+    stats
+  }
+
+  /** Prepare manifest `mfV`: the base manifest's file rows plus
+    * `added` stats rows, with the base's clustering-spec pointer — the
+    * manifest of every commit that keeps all of the base's files. */
+  private def prepareManifest(s: SparkSession, root: String,
+                              baseManifest: String,
+                              added: Option[DataFrame],
+                              mfV: String): Unit = {
+    val base = immutableParquet(s, baseManifest)
+    added.fold(base)(base.unionByName(_, allowMissingColumns = true))
+      .write.mode("overwrite").parquet(mfV)
+    carrySpecPointer(root, baseManifest, mfV)
+  }
+
+  /** MERGE-ON-READ upsert — the write-amplification complement of
+    * [[cowMergeFrom]] (Iceberg v2 delete-plus-insert / Delta deletion
+    * vectors applied to UPDATE, not just DELETE): a matched key's OLD
+    * row is hidden behind a DV sidecar entry and its post-image is
+    * APPENDED to a new delta file, so the commit writes
+    * O(updated + inserted rows) — never a hit-FILE rewrite. This is
+    * the path a streaming CDC feed of small scattered updates needs
+    * at 100 TB: CoW rewrites a whole file per touched key per batch;
+    * MoR writes exactly the changed rows and lets [[compactCommit]]
+    * materialize the masks once per maintenance window. The read-side
+    * cost (positional anti-join against a growing sidecar) is the
+    * same one DV deletes already pay, erased by the same compaction.
+    *
+    * Semantics are IDENTICAL to [[cowMergeFrom]] (MorMergeSpec pins
+    * CoW-vs-MoR result equality): WHEN MATCHED THEN UPDATE SET over
+    * every non-key `updates` column (NULL keeps the old value), WHEN
+    * NOT MATCHED THEN INSERT, WHEN MATCHED by `deletes` keys THEN
+    * DELETE (mask only, no post-image). Both merges plan through
+    * [[MergePlan]]: one key join over the base picks the hit files,
+    * and the masks and the post-images both come from reading ONLY
+    * those files — reading matched rows is unavoidable for coalesce
+    * semantics, but nothing is rewritten. The hit-file list is
+    * driver-held, so it falls under `graft.manifest.maxDriverFiles`
+    * exactly as CoW's does. */
   def morMergeFrom(s: SparkSession, root: String, baseManifest: String,
                    baseDv: Option[String], updates: DataFrame,
                    inserts: DataFrame, version: String,
                    deletes: Option[DataFrame] = None,
                    key: String = "doc_id"): (String, String) = {
-    val dataDelta = s"$root/data_$version"
     val mfV = s"$root/manifest_$version"
-    val dvV = s"$root/dv_$version"
-    // accumulated equality deletes fold into this version's sidecar
-    val effDv = foldEqDel(s, root, baseManifest, baseDv, version)
-    val table = readVersionWithDv(s, baseManifest, effDv)
-    val upd0 =
-      if (updates.columns.contains("new_lang"))
-        updates.withColumnRenamed("new_lang", "lang")
-      else updates
-    val setCols = upd0.columns.filterNot(_ == key).toSeq
-    require(setCols.nonEmpty,
-      "MERGE updates carry no SET columns (only the key)")
-    require(setCols.forall(table.columns.contains),
-      s"MERGE SET columns ${setCols.filterNot(table.columns
-        .contains).mkString(", ")} do not exist in the table")
-    // 1. mask: positions of every matched (updated or deleted) LIVE
-    // row join into the sidecar — the dvDeleteFrom plan verbatim
-    val maskKeys = deletes match {
-      case Some(del) => upd0.select(key).unionByName(del.select(key))
-      case None => upd0.select(key)
-    }
-    val doomed = table
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("pos"), col(key))
-      .join(maskKeys.distinct(), key)
-      .select("file", "pos")
-    val mergedDv = effDv match {
-      case Some(dv) =>
-        immutableParquet(s, dv).unionByName(doomed).distinct()
-      case None => doomed.distinct()
-    }
-    // 2. post-images: old values of matched UPDATE keys (hit-file
-    // scan only), SET columns coalesced over them; deleted keys get
-    // no post-image
-    val hitFiles = collectFileList(s,
-      table
-        .select(col("_metadata.file_path").as("file"), col(key))
-        .join(upd0.select(key), key)
-        .select("file").distinct(),
-      "MoR merge hit-file plan").toArray
-    val hit =
-      if (hitFiles.isEmpty) table.limit(0)
-      else applyDv(s, readFiles(s, baseManifest, hitFiles.toIndexedSeq),
-        effDv)
-    val prefixed = setCols.foldLeft(upd0) { (d, c) =>
-      d.withColumnRenamed(c, s"__u_$c")
-    }
-    val tableCols = table.columns.toSeq
-    val post = setCols.foldLeft(
-        hit.join(prefixed, Seq(key), "inner")) { (d, c) =>
-        d.withColumn(c, coalesce(col(s"__u_$c"), col(c)))
-      }
-      .select(tableCols.map(col): _*)
-    val postLive = deletes match {
-      case Some(del) => post.join(del.select(key), Seq(key), "left_anti")
-      case None => post
-    }
-    val newRows = postLive.unionByName(inserts.select(tableCols.map(col): _*))
-    val spec = specOfManifest(root, baseManifest)
-    val deltaStats = writeDataWithStats(s, root, newRows, dataDelta,
-      spec)
-    enforceConstraints(root,
-      s.read.parquet(dataDelta).select(tableCols.map(col): _*))
+    val plan = new MergePlan(s, root, baseManifest, baseDv, updates,
+      deletes, version, key)
+    // 1. post-images: the hit rows of matched UPDATE keys, SET columns
+    // coalesced over them (deleted keys get none), plus the inserts
+    val deltaStats = writeDelta(s, root, baseManifest,
+      plan.updated(plan.hit, "inner")
+        .unionByName(inserts.select(plan.tableCols.map(col): _*)),
+      s"$root/data_$version")
+    // 2. mask: the positions of every matched (updated or deleted)
+    // live row, from the same hit-file read
+    val dvV = writeDv(s, plan.effDv,
+      positions(plan.hit).join(plan.matched, Seq(key), "left_semi"),
+      s"$root/dv_$version")
     // 3. commit: carried base files + the delta file's stats; the
     // grown sidecar rides inside the prepared manifest so one rename
     // publishes both (the dvDeleteFrom publication rule)
-    mergedDv.write.mode("overwrite").parquet(dvV)
-    immutableParquet(s, baseManifest)
-      .unionByName(deltaStats, allowMissingColumns = true)
-      .write.mode("overwrite").parquet(mfV)
-    carrySpecPointer(root, baseManifest, mfV)
+    prepareManifest(s, root, baseManifest, Some(deltaStats), mfV)
     writeDvPointer(root, mfV, dvV)
     (mfV, dvV)
   }
 
-  /** Hide DV-recorded positions: positional anti-join on
-    * (file, row_index). The DV side is sized by deleted rows, the
-    * join key is uniform (file path × ordinal), and the scan side
-    * needs no sort — this is a plain shuffled anti-join at any
-    * scale (broadcast when the sidecar is small enough for AQE to
-    * notice). */
+  /** Hide DV-recorded positions ([[byPosition]], anti). */
   private[sources] def applyDv(s: SparkSession, data: DataFrame,
                       dvDir: Option[String]): DataFrame = dvDir match {
     case None => data
-    case Some(dv) =>
-      data
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(immutableParquet(s, dv),
-          col("__file") === col("file") && col("__pos") === col("pos"),
-          "left_anti")
-        .drop("__file", "__pos")
+    case Some(dv) => byPosition(data, immutableParquet(s, dv), "left_anti")
   }
+
+  /** `data`'s rows whose position is (`left_semi`) or is not
+    * (`left_anti`) among `dv`'s `(file, pos)` rows. The DV side is
+    * sized by deleted rows, the join key is uniform (file path ×
+    * ordinal), and the scan side needs no sort — a plain shuffled join
+    * at any scale (broadcast when the sidecar is small enough for AQE
+    * to notice). */
+  private def byPosition(data: DataFrame, dv: DataFrame,
+                         how: String): DataFrame =
+    positions(data, "__file", "__pos")
+      .join(dv, col("__file") === col("file") && col("__pos") === col("pos"),
+        how)
+      .drop("__file", "__pos")
 
   /** [[readVersion]] with a deletion-vector sidecar applied. */
   def readVersionWithDv(s: SparkSession, manifestDir: String,
@@ -921,10 +935,7 @@ object ManifestPrune {
       s"equality-delete columns ${keys.columns.filterNot(tableCols
         .contains).mkString(", ")} do not exist in the table")
     val tok = prepareToken()
-    val merged = eqDelOf(root, base) match {
-      case Some(e) => immutableParquet(s, e).unionByName(keys).distinct()
-      case None => keys.distinct()
-    }
+    val merged = accumulate(s, eqDelOf(root, base), keys)
     // AUTO-FOLD POLICY — read amplification bounded by policy, not
     // operator discipline: every committed read pays an anti-join on
     // the accumulated keys until a data-touching commit folds them,
@@ -947,19 +958,8 @@ object ManifestPrune {
     // counting the KEY set costs a keys-sized job, never a table scan
     if (streak + 1 > maxCommits || merged.count() > maxKeys) {
       val baseManifest = manifestOf(root, base)
-      val effDv = dvOf(root, base)
-      val hits = readVersionWithDv(s, baseManifest, effDv)
-        .withColumn("__file", col("_metadata.file_path"))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(merged, merged.columns.toIndexedSeq, "left_semi")
-        .select(col("__file").as("file"), col("__pos").as("pos"))
-      val folded = effDv match {
-        case Some(dv) =>
-          immutableParquet(s, dv).unionByName(hits).distinct()
-        case None => hits.distinct()
-      }
-      val dvV = s"$root/dv_$tok"
-      folded.write.mode("overwrite").parquet(dvV)
+      val dvV = foldKeys(s, baseManifest, dvOf(root, base), merged,
+        s"$root/dv_$tok")
       val prepared = s"$root/manifest_$tok"
       copyDirFlat(root, baseManifest, prepared)
       ChainStorage.forPath(root).deleteFile(s"$prepared/_eqdel")
@@ -1013,21 +1013,25 @@ object ManifestPrune {
       throw new IllegalStateException(
         s"base manifest $baseManifest's equality-delete sidecar " +
           s"$eqDir is missing")
-    val keys = immutableParquet(s, eqDir)
-    val hits = readVersionWithDv(s, baseManifest, baseDv)
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
-      .join(keys, keys.columns.toIndexedSeq, "left_semi")
-      .select(col("__file").as("file"), col("__pos").as("pos"))
-    val folded = baseDv match {
-      case Some(dv) =>
-        immutableParquet(s, dv).unionByName(hits).distinct()
-      case None => hits.distinct()
-    }
-    val dir = s"$root/dv_${version}f"
-    folded.write.mode("overwrite").parquet(dir)
-    Some(dir)
+    Some(foldKeys(s, baseManifest, baseDv, immutableParquet(s, eqDir),
+      s"$root/dv_${version}f"))
   }
+
+  /** Write DV sidecar `dir`: `baseDv` grown by the positions of the
+    * base version's live rows matching equality-delete `keys` — the
+    * one position-planning scan that turns key-valued deletes into
+    * positional ones ([[foldEqDel]] and [[eqDeleteCommit]]'s
+    * auto-fold). The position columns are named apart from the
+    * table's, which the key columns may share. Returns `dir`. */
+  private def foldKeys(s: SparkSession, baseManifest: String,
+                       baseDv: Option[String], keys: DataFrame,
+                       dir: String): String =
+    writeDv(s, baseDv,
+      positions(readVersionWithDv(s, baseManifest, baseDv), "__file",
+        "__pos")
+        .join(keys, keys.columns.toIndexedSeq, "left_semi")
+        .select(col("__file").as("file"), col("__pos").as("pos")),
+      dir)
 
   /** [[liveRowCount]] resolved through a committed version's
     * sidecars — and HONEST about when metadata cannot answer: under
@@ -1232,11 +1236,8 @@ object ManifestPrune {
         s"change-feed DV-$tag files of v$v")
       if (files.isEmpty) schemaRow
       else {
-        applyEqDel(s, readFiles(s, mf, files)
-          .withColumn("__file", col("_metadata.file_path"))
-          .withColumn("__pos", col("_metadata.row_index"))
-          .join(s.createDataFrame(onCarried).toDF("file", "pos"),
-            col("__file") === col("file") && col("__pos") === col("pos"))
+        applyEqDel(s, byPosition(readFiles(s, mf, files),
+          s.createDataFrame(onCarried).toDF("file", "pos"), "left_semi")
           .select(cols.map(col): _*), eq)
       }
     }
@@ -1526,17 +1527,21 @@ object ManifestPrune {
     }
   }
 
+  /** Retries of a lost CAS before [[withCommitRetry]] gives up. */
+  private val CommitRetries = 5
+
   /** Retry loop for optimistic commits: re-run `attempt` (which must
     * re-read the current version each time — all the *Commit methods
-    * do) until it publishes or the retry budget is exhausted. */
-  def withCommitRetry[T](maxRetries: Int = 5)(attempt: () => T): T = {
+    * do) until it publishes, at most [[CommitRetries]] times after the
+    * first try. */
+  def withCommitRetry[T]()(attempt: () => T): T = {
     var tries = 0
     while (true) {
       try return attempt()
       catch {
         case e: java.util.ConcurrentModificationException =>
           tries += 1
-          if (tries > maxRetries) throw e
+          if (tries > CommitRetries) throw e
       }
     }
     throw new IllegalStateException("unreachable")
@@ -1705,23 +1710,13 @@ object ManifestPrune {
     val tok = prepareToken()
     val baseManifest = manifestOf(root, base)
     val effDv = foldEqDel(s, root, baseManifest, dvOf(root, base), tok)
-    val dataDelta = s"$root/data_$tok"
-    // column order pinned to the table's (schema-only read: footers,
-    // not data)
-    val cols = readVersion(s, baseManifest).schema.fieldNames.toSeq
-    val spec = specOfManifest(root, baseManifest)
     // a bucketed chain's appends stay bucketed (each delta file
     // wholly inside one bucket, its id in the manifest), so the
     // storage-partitioned-join surface survives SQL INSERTs
-    val deltaStats = writeDataWithStats(s, root,
-      rows.select(cols.map(col): _*), dataDelta, spec)
-    enforceConstraints(root,
-      s.read.parquet(dataDelta).select(cols.map(col): _*))
+    val deltaStats = writeDelta(s, root, baseManifest, rows,
+      s"$root/data_$tok")
     val mfV = s"$root/manifest_$tok"
-    immutableParquet(s, baseManifest)
-      .unionByName(deltaStats, allowMissingColumns = true)
-      .write.mode("overwrite").parquet(mfV)
-    carrySpecPointer(root, baseManifest, mfV)
+    prepareManifest(s, root, baseManifest, Some(deltaStats), mfV)
     effDv.foreach(dv => writeDvPointer(root, mfV, dv))
     publish(root, base, mfV)
   }
@@ -1774,20 +1769,10 @@ object ManifestPrune {
         readVersion(s, baseManifest).limit(0)
       else applyDv(s, readFiles(s, baseManifest, files), effDv)
     }.getOrElse(readVersionWithDv(s, baseManifest, effDv))
-    val doomed = scanBase
-      .filter(cond)
-      .select(col("_metadata.file_path").as("file"),
-        col("_metadata.row_index").as("pos"))
-    val merged = effDv match {
-      case Some(dv) =>
-        immutableParquet(s, dv).unionByName(doomed).distinct()
-      case None => doomed.distinct()
-    }
-    val dvV = s"$root/dv_$tok"
-    merged.write.mode("overwrite").parquet(dvV)
+    val dvV = writeDv(s, effDv, positions(scanBase.filter(cond)),
+      s"$root/dv_$tok")
     val mfV = s"$root/manifest_$tok"
-    immutableParquet(s, baseManifest).write.mode("overwrite").parquet(mfV)
-    carrySpecPointer(root, baseManifest, mfV)
+    prepareManifest(s, root, baseManifest, None, mfV)
     writeDvPointer(root, mfV, dvV)
     publish(root, base, mfV)
   }
@@ -1804,16 +1789,11 @@ object ManifestPrune {
     val base = currentVersion(s, root)
     val tok = prepareToken()
     val baseManifest = manifestOf(root, base)
-    val cols = readVersion(s, baseManifest).schema.fieldNames.toSeq
-    val dataDir = s"$root/data_$tok"
     require(rows.limit(1).count() > 0,
       "INSERT OVERWRITE with zero rows — an empty table cannot be " +
         "represented by a replaced version; DELETE WHERE true instead")
-    val spec = specOfManifest(root, baseManifest)
-    val newStats = writeDataWithStats(s, root,
-      rows.select(cols.map(col): _*), dataDir, spec)
-    enforceConstraints(root,
-      s.read.parquet(dataDir).select(cols.map(col): _*))
+    val newStats = writeDelta(s, root, baseManifest, rows,
+      s"$root/data_$tok")
     val mfV = s"$root/manifest_$tok"
     newStats.write.mode("overwrite").parquet(mfV)
     carrySpecPointer(root, baseManifest, mfV)
@@ -1842,38 +1822,13 @@ object ManifestPrune {
     val baseManifest = manifestOf(root, base)
     val effDv = foldEqDel(s, root, baseManifest, dvOf(root, base), tok)
     val mfV = s"$root/manifest_$tok"
-    val statsOpt = newRows.filter(_.limit(1).count() > 0).map { rows =>
-      val cols = readVersion(s, baseManifest).schema.fieldNames.toSeq
-      val dataDelta = s"$root/data_$tok"
-      val spec = specOfManifest(root, baseManifest)
-      val st2 = writeDataWithStats(s, root,
-        rows.select(cols.map(col): _*), dataDelta, spec)
-      enforceConstraints(root,
-        s.read.parquet(dataDelta).select(cols.map(col): _*))
-      st2
-    }
-    statsOpt match {
-      case Some(st2) => immutableParquet(s, baseManifest)
-        .unionByName(st2, allowMissingColumns = true)
-        .write.mode("overwrite").parquet(mfV)
-      case None => immutableParquet(s, baseManifest)
-        .write.mode("overwrite").parquet(mfV)
-    }
-    carrySpecPointer(root, baseManifest, mfV)
-    val posNonEmpty = positions.filter(_.limit(1).count() > 0)
-    (effDv, posNonEmpty) match {
-      case (Some(dv), Some(p)) =>
-        val dvV = s"$root/dv_$tok"
-        immutableParquet(s, dv).unionByName(p).distinct()
-          .write.mode("overwrite").parquet(dvV)
-        writeDvPointer(root, mfV, dvV)
-      case (Some(dv), None) => writeDvPointer(root, mfV, dv)
-      case (None, Some(p)) =>
-        val dvV = s"$root/dv_$tok"
-        p.distinct().write.mode("overwrite").parquet(dvV)
-        writeDvPointer(root, mfV, dvV)
-      case (None, None) => ()
-    }
+    val stats = newRows.filter(_.limit(1).count() > 0)
+      .map(writeDelta(s, root, baseManifest, _, s"$root/data_$tok"))
+    prepareManifest(s, root, baseManifest, stats, mfV)
+    // no new position keeps the (folded) base sidecar as it is
+    positions.filter(_.limit(1).count() > 0)
+      .map(writeDv(s, effDv, _, s"$root/dv_$tok")).orElse(effDv)
+      .foreach(writeDvPointer(root, mfV, _))
     val v = publish(root, base, mfV)
     noteCommit(root, v, note)
     v

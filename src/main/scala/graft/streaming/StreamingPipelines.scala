@@ -21,6 +21,8 @@ import java.sql.Timestamp
   */
 object StreamingPipelines {
 
+  import graft.sources.ManifestPrune
+
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double)
 
@@ -187,22 +189,39 @@ object StreamingPipelines {
       .foreachBatch((b: DataFrame, id: Long) => applyCdcBatchMor(b, id, root))
 
   private[graft] def applyCdcBatchMor(batch: DataFrame, batchId: Long,
-                                      root: String): Unit = {
-    import graft.sources.ManifestPrune
-    val s = batch.sparkSession
+                                      root: String): Unit =
+    applyOnce(batch.sparkSession, root, "cdc:", batchId) { cur =>
+      Some(ManifestPrune.morMergeCommit(batch.sparkSession, root, batch,
+        noRows(batch.sparkSession, root, cur)))
+    }
+
+  /** The one replay-guarded applier every streaming writer of a chain
+    * lands its micro-batch through: re-read the chain, skip a batch
+    * whose id the `tag` cursor already holds (a replay), else run
+    * `commit` on the version the check read and note `<tag><batchId>`
+    * on the version it committed — after the kind token the commit
+    * itself may have noted (eqdel, eqdel-fold), since notes are
+    * whitespace-separated tokens that [[lastAppliedBatch]] and
+    * history()'s kind classifier both scan. A lost CAS re-runs check
+    * and commit ([[ManifestPrune.withCommitRetry]]): prepared state is
+    * writer-unique, so a retry leaks only garbage dirs, and a batch
+    * that lost to its own adopted crash-twin is caught by the
+    * re-check. `commit` returns None when it committed nothing. */
+  private def applyOnce(s: SparkSession, root: String, tag: String,
+                        batchId: Long)(commit: Long => Option[Long]): Unit =
     ManifestPrune.withCommitRetry() { () =>
       val cur = ManifestPrune.currentVersion(s, root)
-      if (batchId <= lastAppliedBatch(root, cur, "cdc:"))
-        return // replay of a committed batch
-      val baseMf = ManifestPrune.manifestOf(root, cur)
-      val empty = ManifestPrune.readVersion(s, baseMf).limit(0)
-      val (mf, _) = ManifestPrune.morMergeFrom(s, root, baseMf,
-        ManifestPrune.dvOf(root, cur), batch, empty,
-        ManifestPrune.prepareToken())
-      val next = ManifestPrune.publish(root, cur, mf)
-      ManifestPrune.noteCommit(root, next, s"cdc:$batchId")
+      if (batchId > lastAppliedBatch(root, cur, tag))
+        commit(cur).foreach { v =>
+          val kind = ManifestPrune.commitNote(root, v).fold("")(_ + " ")
+          ManifestPrune.noteCommit(root, v, s"$kind$tag$batchId")
+        }
     }
-  }
+
+  /** A zero-row frame in version `v`'s schema: the insert side of a
+    * CDC batch, which only updates. */
+  private def noRows(s: SparkSession, root: String, v: Long): DataFrame =
+    ManifestPrune.readVersion(s, ManifestPrune.manifestOf(root, v)).limit(0)
 
   /** Latest batch id a stream KIND committed on the chain: scan the
     * markers newest-first for a note bearing our tag. Interleaved
@@ -216,7 +235,6 @@ object StreamingPipelines {
 
   private def lastAppliedBatch(root: String, cur: Long,
                                tag: String): Long = {
-    import graft.sources.ManifestPrune
     // markers are retained forever (expiry keeps them by design), so a
     // cold scan is O(all versions ever committed) marker reads and
     // grows without bound on a long-lived CDC/delete stream; the
@@ -258,26 +276,11 @@ object StreamingPipelines {
   }
 
   private[streaming] def applyCdcBatch(batch: DataFrame, batchId: Long,
-                                       root: String): Unit = {
-    import graft.sources.ManifestPrune
-    val s = batch.sparkSession
-    // the whole prepare+publish re-runs on a publish race (prepared
-    // state is writer-unique, so a retry leaks only garbage dirs);
-    // the replay check re-reads the chain each attempt, so a batch
-    // that lost to its own adopted crash-twin is caught here
-    ManifestPrune.withCommitRetry() { () =>
-      val cur = ManifestPrune.currentVersion(s, root)
-      if (batchId <= lastAppliedBatch(root, cur, "cdc:"))
-        return // replay of a committed batch
-      val baseMf = ManifestPrune.manifestOf(root, cur)
-      val empty = ManifestPrune.readVersion(s, baseMf).limit(0)
-      val (_, mf) = ManifestPrune.cowMergeFrom(s, root, baseMf, batch,
-        empty, ManifestPrune.prepareToken(),
-        baseDv = ManifestPrune.dvOf(root, cur))
-      val next = ManifestPrune.publish(root, cur, mf)
-      ManifestPrune.noteCommit(root, next, s"cdc:$batchId")
+                                       root: String): Unit =
+    applyOnce(batch.sparkSession, root, "cdc:", batchId) { cur =>
+      Some(ManifestPrune.mergeIntoCommit(batch.sparkSession, root, batch,
+        noRows(batch.sparkSession, root, cur)))
     }
-  }
 
   /** STREAMING ERASURE — the GDPR leg of the lakehouse family, pairing
     * [[applyCdcStream]]'s continuous MERGE with the deletion-vector
@@ -298,20 +301,10 @@ object StreamingPipelines {
       .foreachBatch((b: DataFrame, id: Long) => applyDeleteBatch(b, id, root))
 
   private[graft] def applyDeleteBatch(batch: DataFrame, batchId: Long,
-                                      root: String): Unit = {
-    import graft.sources.ManifestPrune
-    val s = batch.sparkSession
-    ManifestPrune.withCommitRetry() { () =>
-      val cur = ManifestPrune.currentVersion(s, root)
-      if (batchId <= lastAppliedBatch(root, cur, "del:"))
-        return // replay of a committed batch
-      val (mf, _) = ManifestPrune.dvDeleteFrom(s, root,
-        ManifestPrune.manifestOf(root, cur), ManifestPrune.dvOf(root, cur),
-        batch, ManifestPrune.prepareToken())
-      val next = ManifestPrune.publish(root, cur, mf)
-      ManifestPrune.noteCommit(root, next, s"del:$batchId")
+                                      root: String): Unit =
+    applyOnce(batch.sparkSession, root, "del:", batchId) { _ =>
+      Some(ManifestPrune.dvDeleteCommit(batch.sparkSession, root, batch))
     }
-  }
 
   /** [[applyDeleteStream]] in EQUALITY-DELETE mode — the cheapest
     * erasure drain the chain offers: each micro-batch of keys becomes
@@ -330,21 +323,10 @@ object StreamingPipelines {
       .foreachBatch((b: DataFrame, id: Long) => applyEqDeleteBatch(b, id, root))
 
   private[graft] def applyEqDeleteBatch(batch: DataFrame, batchId: Long,
-                                        root: String): Unit = {
-    import graft.sources.ManifestPrune
-    val s = batch.sparkSession
-    ManifestPrune.withCommitRetry() { () =>
-      val cur = ManifestPrune.currentVersion(s, root)
-      if (batchId <= lastAppliedBatch(root, cur, "eqdel:"))
-        return // replay of a committed batch
-      val next = ManifestPrune.eqDeleteCommit(s, root, batch)
-      // PRESERVE the kind token the commit wrote (eqdel, or
-      // eqdel-fold when the auto-fold policy triggered) — the cursor
-      // token rides next to it
-      val kind = ManifestPrune.commitNote(root, next).getOrElse("eqdel")
-      ManifestPrune.noteCommit(root, next, s"$kind eqdel:$batchId")
+                                        root: String): Unit =
+    applyOnce(batch.sparkSession, root, "eqdel:", batchId) { _ =>
+      Some(ManifestPrune.eqDeleteCommit(batch.sparkSession, root, batch))
     }
-  }
 
   /** The graft-table STREAMING SINK's per-batch applier —
     * `spark.writeStream.format("graft-table").option("mode", …)`
@@ -361,68 +343,45 @@ object StreamingPipelines {
   private[graft] def applySinkBatch(batch: DataFrame, batchId: Long,
                                     root: String, mode: String,
                                     key: String): Unit = {
-    import graft.sources.ManifestPrune
     val s = batch.sparkSession
-    ManifestPrune.withCommitRetry() { () =>
-      val cur = ManifestPrune.currentVersion(s, root)
-      if (batchId <= lastAppliedBatch(root, cur, "tsink:"))
-        return // replay of a committed batch
-      if (mode == "cdc") {
+    applyOnce(s, root, "tsink:", batchId) { _ =>
+      if (mode != "cdc")
+        Some(graft.sources.GraftTableWrite.commit(s, root, batch, mode, key))
+      else {
         // change-feed images (op, table cols, version) — the
         // graft-table SOURCE's row shape, so table-to-table
         // replication is ONE streaming query: readStream the
         // source's feed, writeStream mode=cdc onto the replica. A
         // micro-batch may span several SOURCE versions; each is
-        // applied in order (deletes first, then post-images as an
-        // UPSERT — upsert instead of replicateFeed's pure insert
-        // makes re-applying a version IDEMPOTENT, so the `cdcv:`
-        // cursor below plus a crash anywhere inside a batch can at
-        // worst repeat work, never duplicate rows).
+        // applied in order under its own `cdcv:` cursor (deletes
+        // first, then post-images as an UPSERT — upsert instead of
+        // replicateFeed's pure insert makes re-applying a version
+        // IDEMPOTENT, so a crash anywhere inside a batch can at worst
+        // repeat work, never duplicate rows).
         val b = batch.localCheckpoint()
-        val applied = lastAppliedBatch(root, cur, "cdcv:")
         val versions = b.select("version").distinct()
-          .collect().map(_.getLong(0)).sorted.filter(_ > applied)
+          .collect().map(_.getLong(0)).sorted
         versions.foreach { v =>
-          val step = b.filter(col("version") === v)
-          val dels = step
-            .filter(col("op").isin("delete", "update_preimage"))
-            .select(key)
-          if (dels.limit(1).count() > 0)
-            ManifestPrune.dvDeleteCommit(s, root, dels, key)
-          val ins = step
-            .filter(col("op").isin("insert", "update_postimage"))
-            .drop("op", "version")
-          if (ins.limit(1).count() > 0)
-            ManifestPrune.upsertCommit(s, root, ins, key)
-          val now = ManifestPrune.currentVersion(s, root)
-          // an empty step (compaction on the source) commits nothing
-          // and leaves no cursor mark — re-examining it on replay is
-          // an empty filter, not a correctness issue
-          if (now > cur) ManifestPrune.noteCommit(root, now, s"cdcv:$v")
+          applyOnce(s, root, "cdcv:", v) { cur =>
+            val step = b.filter(col("version") === v)
+            val dels = step
+              .filter(col("op").isin("delete", "update_preimage"))
+              .select(key)
+            if (dels.limit(1).count() > 0)
+              ManifestPrune.dvDeleteCommit(s, root, dels, key)
+            val ins = step
+              .filter(col("op").isin("insert", "update_postimage"))
+              .drop("op", "version")
+            if (ins.limit(1).count() > 0)
+              ManifestPrune.upsertCommit(s, root, ins, key)
+            // an empty step (compaction on the source) commits nothing
+            // and leaves no cursor mark — re-examining it on replay is
+            // an empty filter, not a correctness issue
+            Some(ManifestPrune.currentVersion(s, root)).filter(_ > cur)
+          }
         }
-        return
+        None // the `cdcv:` cursors are this mode's replay record
       }
-      val next = mode match {
-        case "append" => ManifestPrune.appendCommit(s, root, batch)
-        case "upsert" => ManifestPrune.upsertCommit(s, root, batch, key)
-        case "delete" => ManifestPrune.eqDeleteCommit(s, root,
-          batch.select(key))
-        case other => throw new IllegalArgumentException(
-          s"graft-table sink mode must be append|upsert|delete|cdc, " +
-            s"got '$other'")
-      }
-      // mode=delete commits an eq-delete version whose marker already
-      // carries the kind token (eqdel, or eqdel-fold under the
-      // auto-fold policy); the sink cursor note must PRESERVE it
-      // (notes are whitespace-separated tokens — lastAppliedBatch and
-      // history()'s kind classifier both scan token-wise), or the
-      // version would misclassify as dv-delete in history()
-      val cursor =
-        if (mode == "delete")
-          s"${ManifestPrune.commitNote(root, next).getOrElse("eqdel")}" +
-            s" tsink:$batchId"
-        else s"tsink:$batchId"
-      ManifestPrune.noteCommit(root, next, cursor)
     }
   }
 

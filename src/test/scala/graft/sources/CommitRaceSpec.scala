@@ -108,6 +108,23 @@ class CommitRaceSpec extends SparkSpec {
     assert(got === 2L, "a lost INSERT race dropped a row")
   }
 
+  test("concurrent graft-table batch appends both land — the format's " +
+    "batch write retries a lost CAS like the catalog's INSERT") {
+    val root = freshRoot("fmtapp")
+    def row(id: Long) = docs.filter(col("doc_id") === 1L)
+      .withColumn("doc_id", lit(id)).withColumn("source", lit("race"))
+    val a = Future(row(95000011L).write.format("graft-table")
+      .mode("append").save(root))
+    val b = Future(row(95000012L).write.format("graft-table")
+      .mode("append").save(root))
+    Await.result(a, 120.seconds); Await.result(b, 120.seconds)
+    assert(ManifestPrune.currentVersion(spark, root) === 2L)
+    assert(ManifestPrune.readCommitted(spark, root, 2L)
+      .filter(col("source") === "race").select("doc_id").collect()
+      .map(_.getLong(0)).toSet === Set(95000011L, 95000012L),
+      "a lost append race dropped a row")
+  }
+
   test("expiry collects race losers' prepared garbage") {
     val root = freshRoot("gc")
     // a loser: fully prepared, never published

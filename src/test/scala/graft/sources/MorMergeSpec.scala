@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *      content.
   * Plus: describeHistory classifies the commit as `mor-merge`, the
   * change feed pairs a masked row with its post-image, and a feed
-  * replica converges across MoR commits. */
-class MorMergeSpec extends SparkSpec {
+  * replica converges across MoR commits, and the merge scans the base
+  * version once. */
+class MorMergeSpec extends SparkSpec with graft.JobCounting {
 
   private lazy val docs = Tables.load(spark, sf0001, "documents")
 
@@ -103,6 +104,36 @@ class MorMergeSpec extends SparkSpec {
       .orderBy("version").select("kind")
       .collect().map(_.getString(0)).toSeq
     assert(kinds === Seq("base", "mor-merge", "mor-merge"))
+  }
+
+  test("a MoR merge reads the base once: the key plan, then only the " +
+    "hit file") {
+    val root = graft.Tables.matDir(s"mor_scan_${System.nanoTime}", spark,
+      sf0001)
+    ManifestPrune.buildLayout(docs, root, nFiles = 8)
+    val base = ManifestPrune.readCommitted(spark, root, 0L)
+    val n = base.count()
+    // every update key sits in one of the 8 files; the keys and the
+    // inserts are driver-local frames, so only table reads count
+    val hot = base.select(input_file_name().as("f"), col("doc_id"))
+      .collect()
+    val keys = hot.filter(_.getString(0) == hot.head.getString(0))
+      .map(_.getLong(1)).toSeq
+    assert(keys.size < n / 4, s"${keys.size} keys of $n rows in one file")
+    import spark.implicits._
+    val upd = keys.map(k => (k, "mm")).toDF("doc_id", "lang")
+    val (_, read) = recordsReadOf {
+      ManifestPrune.morMergeCommit(spark, root, upd,
+        base.limit(0))
+    }
+    info(s"one MoR merge read $read records of a $n-row base")
+    // planning the hit files and the masks with two full scans of the
+    // base would read at least 2n records
+    assert(read < 2 * n, s"one MoR merge read $read records of a " +
+      s"$n-row base")
+    val head = ManifestPrune.readCommitted(spark, root, 1L)
+    assert(head.count() === n)
+    assert(head.filter(col("lang") === "mm").count() === keys.size)
   }
 
   test("compaction materializes the masks: no sidecar, same content") {

@@ -652,19 +652,26 @@ object ManifestPrune {
     (mfV, dvV)
   }
 
-  /** Write a commit's new data rows + their manifest stats,
-    * preserving a registered SPJ bucketing ([[SpjBucket]]) when the
-    * row set carries the bucket key: files split per bucket id, ids
-    * recorded in the stats — so append/replace/MERGE/upsert all keep
-    * the storage-partitioned-join surface alive. An empty row set
-    * takes the plain path (a bucket-partitioned write of zero rows
-    * emits no file at all, which would break downstream schema
-    * reads). */
-  private def writeDataWithStats(s: SparkSession, root: String,
-                                 rows: DataFrame, dataDir: String,
-                                 spec: ClusterSpec): DataFrame = {
-    val cols = rows.columns.toSeq
-    SpjBucket.bucketingOf(root)
+  /** The delta write every row-adding commit shares: `rows`, in the
+    * base version's column order, land in `dataDir` with their
+    * manifest stats, then the table's CHECK constraints run over
+    * exactly the written rows (a violation aborts BEFORE any manifest
+    * exists, leaving only prepared garbage for expiry). A registered
+    * SPJ bucketing ([[SpjBucket]]) is preserved when the rows carry the
+    * bucket key: files split per bucket id, ids recorded in the stats —
+    * so append/replace/MERGE/upsert all keep the
+    * storage-partitioned-join surface alive. An empty row set takes
+    * the plain path (a bucket-partitioned write of zero rows emits no
+    * file at all, which would break downstream schema reads). Returns
+    * the delta's stats rows. */
+  private def writeDelta(s: SparkSession, root: String,
+                         baseManifest: String, newRows: DataFrame,
+                         dataDir: String): DataFrame = {
+    // schema-only read: footers, not data
+    val cols = readVersion(s, baseManifest).schema.fieldNames.toSeq
+    val rows = newRows.select(cols.map(col): _*)
+    val spec = specOfManifest(root, baseManifest)
+    val stats = SpjBucket.bucketingOf(root)
       .filter { case (k, _) => cols.contains(k) }
       .filter(_ => rows.limit(1).count() > 0) match {
       case Some((key, n)) =>
@@ -677,21 +684,6 @@ object ManifestPrune {
         statsManifest(s, dataDir, spec.statsCol, spec.id,
           statsPolicyOf(root))
     }
-  }
-
-  /** The delta write every row-adding commit shares: `rows` in the base
-    * version's column order land in `dataDir` through
-    * [[writeDataWithStats]], then the table's CHECK constraints run
-    * over exactly the written rows (a violation aborts BEFORE any
-    * manifest exists, leaving only prepared garbage for expiry).
-    * Returns the delta's stats rows. */
-  private def writeDelta(s: SparkSession, root: String,
-                         baseManifest: String, rows: DataFrame,
-                         dataDir: String): DataFrame = {
-    // schema-only read: footers, not data
-    val cols = readVersion(s, baseManifest).schema.fieldNames.toSeq
-    val stats = writeDataWithStats(s, root, rows.select(cols.map(col): _*),
-      dataDir, specOfManifest(root, baseManifest))
     enforceConstraints(root,
       s.read.parquet(dataDir).select(cols.map(col): _*))
     stats

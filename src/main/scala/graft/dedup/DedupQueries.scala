@@ -656,7 +656,7 @@ object DedupQueries {
              |ORDER BY a_id, b_id""".stripMargin)),
 
     // 16-bit SimHash per doc + bucket sizes (hamming-0 near-dup groups).
-    // Row-based: one md5 per distinct token (the simhash16 HOF helper
+    // Row-based: one md5 per distinct token (an array-HOF form per doc
     // would recompute tokenization and md5 for each of the 16 bits),
     // then 16 conditional-count aggregates vote the bits.
     Q("q_dedup_simhash",

@@ -100,10 +100,9 @@ object SimhashBanding {
 
   /** The ONE Catalyst form of [[probeKeys]]: per block-subset a
     * struct(comb, bits) expression over a 64-bit fingerprint column.
-    * Both the batch banded self-join (DedupQueries.bandedRows) and the
-    * streaming bucketing (StreamingPipelines.streamingNearDupFlags)
-    * build from this — a single construction site, so the
-    * batch≡stream agreement SimhashBandingSpec certifies cannot drift
+    * The batch banded self-join (DedupQueries.bandedRows) builds from
+    * this — a single construction site, so the agreement with
+    * [[probeKeys]] that SimhashBandingSpec certifies cannot drift
     * between copies. */
   def probeStructs(fp64: org.apache.spark.sql.Column,
                    plan: Plan): Seq[org.apache.spark.sql.Column] = {

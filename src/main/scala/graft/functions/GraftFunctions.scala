@@ -56,41 +56,6 @@ object GraftFunctions {
       .otherwise(array().cast(ArrayType(StringType)))
   }
 
-  /** MinHash signature of a shingle-set column: ONE md5 per shingle,
-    * sliced into k disjoint 4-hex-char (16-bit) sub-hashes, each
-    * minimized lexicographically (md5 hex is lowercase, so string min ==
-    * unsigned byte min). One hash call per shingle instead of k — the
-    * classic slice-a-wide-hash trick — and reproducible in any engine
-    * with md5. k <= 8 (32 hex chars / 4). */
-  def minhashSignature(shingleSet: Column, k: Int): Column = {
-    require(k <= 8, s"md5 yields at most 8 4-hex slices, got k=$k")
-    val hashed = transform(shingleSet, s => md5(s))
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      j => array_min(transform(hashed, m => m.substr(j * 4 + 1, lit(4)))))
-  }
-
-  /** LSH band keys from a minhash signature: band j = concatenation of
-    * `rowsPerBand` consecutive signature entries (already uniform hex —
-    * no need to re-hash). */
-  def lshBands(sig: Column, rowsPerBand: Int, nBands: Int): Column =
-    transform(
-      sequence(lit(0), lit(nBands - 1)),
-      j => concat_ws("", slice(sig, j * rowsPerBand + 1, lit(rowsPerBand))))
-
-  /** 16-bit SimHash over a distinct-token array: bit k is set iff at
-    * least half the tokens have the top bit of the (k+1)-th nibble of
-    * their md5 set (nibble >= '8' in hex). Deterministic, md5-portable. */
-  def simhash16(tokSet: Column): Column =
-    aggregate(
-      sequence(lit(0), lit(15)),
-      lit(0L),
-      (acc, k) => acc + when(
-        size(filter(tokSet, t => md5(t).substr(k + 1, lit(1)) >= lit("8"))) * 2
-          >= size(tokSet),
-        // shiftleft() needs a literal shift amount; pow is exact for k<=15
-        pow(lit(2.0), k).cast(LongType)).otherwise(lit(0L)))
-
   private val Dec = DecimalType(10, 6)
   private val DecAcc = DecimalType(24, 12)
 

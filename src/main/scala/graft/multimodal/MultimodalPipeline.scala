@@ -27,12 +27,6 @@ object MultimodalPipeline {
                            sha_head: String, mean_byte: Double,
                            n_frames: Int, feature: Array[Float])
 
-  val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType), StructField("kind", StringType),
-    StructField("n_bytes", LongType), StructField("sha_head", StringType),
-    StructField("mean_byte", DoubleType), StructField("n_frames", IntegerType),
-    StructField("feature", ArrayType(FloatType))))
-
   /** The codec seam. A real deployment swaps this object for JNI/FFmpeg/
     * ImageIO bindings; signature and batch shape stay identical. */
   object StubCodec {

@@ -817,8 +817,8 @@ object CoreQueries {
   private def dppLayout(s: SparkSession, d: String): String =
     Tables.once("dppCache", s, d) {
       val dir = Tables.matDir("dpp_events", s, d)
-      graft.sources.SourcesSinks.writePartitionedParquet(
-        Tables.load(s, d, "events"), dir, "event_type")
+      Tables.load(s, d, "events").write.mode("overwrite")
+        .partitionBy("event_type").parquet(dir)
       dir
     }
 
@@ -1043,9 +1043,9 @@ object CoreQueries {
     // the write-time layout that lets parquet min/max stats prune
     // TWO-sided range predicates from one sort key — a ts-sorted table
     // bounds only ts per file; the interleaved code bounds both
-    // dimensions at once (ZOrder.writeZOrdered does the clustered
-    // write; ZOrderLayoutSpec measures per-file bounding boxes under
-    // both layouts). The interleave is an unrolled shift/mask/or
+    // dimensions at once (ZOrderLayoutSpec writes such a clustered
+    // layout and measures per-file bounding boxes under it and under
+    // a linear sort). The interleave is an unrolled shift/mask/or
     // expression tree (codegen-friendly, no array HOFs), emitted
     // identically as DuckDB SQL — bucketing uses exact integer div,
     // so the code hash-matches bit-for-bit. Plan: one scalar min
@@ -2253,10 +2253,10 @@ object CoreQueries {
 
     // CHANGE FEED over the version chain (ManifestPrune.changeFeed) —
     // the PRODUCE side of CDC, closing the loop with the streaming
-    // APPLY side (applyCdcStream): a chain holding one commit of each
-    // kind (CoW merge with updates AND inserts, DV delete,
-    // compaction) must emit exactly the four op groups of the Delta
-    // CDF convention — update_preimage AND update_postimage (both
+    // APPLY side (the graft-table sink's cdc mode): a chain holding
+    // one commit of each kind (CoW merge with updates AND inserts, DV
+    // delete, compaction) must emit exactly the four op groups of the
+    // Delta CDF convention — update_preimage AND update_postimage (both
     // images is what lets a consumer maintain aggregates
     // incrementally, q_mv_feed_refresh), inserts, positional deletes
     // with pre-images — and NOTHING for the compaction (physical

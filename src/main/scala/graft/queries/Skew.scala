@@ -38,17 +38,4 @@ object Skew {
         bigS("__salt") === smallS("__salt"))
       .drop("__salt")
   }
-
-  /** Two-phase (salted) aggregation for count-like aggregates on a
-    * skewed group key: partial-aggregate on (key, salt) first, then
-    * final-aggregate on key. Catalyst already plans partial aggregates,
-    * but the explicit salt bounds the size of ANY single reducer group
-    * even under extreme single-key skew. */
-  def saltedCount(df: DataFrame, key: String, salts: Int): DataFrame =
-    df.withColumn("__salt",
-        pmod(hash(df.columns.map(col).toSeq: _*), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as("cnt"))
 }

@@ -148,21 +148,6 @@ object SimilarityQueries {
       dir
     }
 
-  /** Cross-module access to the battery's persisted ANN search state —
-    * (index dir, centroid table, exact scaled-cosine sim) plus the
-    * scaled corpus — so the STREAMING search path (StreamingPipelines
-    * .streamingAnnSearch and its batch≡stream spec) runs against the
-    * SAME index build the batch queries verify, not a second one. */
-  private[graft] def sharedIvfSearchState(
-      s: org.apache.spark.sql.SparkSession, d: String)
-      : (String, org.apache.spark.sql.DataFrame,
-         (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-           org.apache.spark.sql.Column,
-         org.apache.spark.sql.DataFrame) = {
-    val e = scaled(s, d)
-    (ivfIndexDir(s, d), ivfCentroids(e), simScaled, e)
-  }
-
   /** Deterministic demo centroids: the 8 lowest vec_ids as-is —
     * exactly IvfIndex.train(e, 8, 0). */
   private def ivfCentroids(e: org.apache.spark.sql.DataFrame) =

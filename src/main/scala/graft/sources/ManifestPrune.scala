@@ -1144,8 +1144,8 @@ object ManifestPrune {
 
   /** CHANGE FEED of one version step (v−1 → v) — the PRODUCE side of
     * CDC (Delta's table_changes / Iceberg's changelog scan), closing
-    * the loop with [[graft.streaming.StreamingPipelines.applyCdcStream]]'s
-    * apply side: emits `(version, op, <row>)` rows with op ∈
+    * the loop with the apply side, the graft-table sink's cdc mode
+    * ([[graft.streaming.StreamingPipelines.applySinkBatch]]): emits `(version, op, <row>)` rows with op ∈
     * insert|update_preimage|update_postimage|delete (the Delta CDF
     * `_change_type` convention — an updated key yields BOTH images,
     * which is what lets a consumer maintain aggregates incrementally:

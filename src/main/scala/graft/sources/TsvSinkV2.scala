@@ -267,9 +267,9 @@ private[sources] class TsvWriteBuilder(path: String, info: LogicalWriteInfo)
 
 /** The STREAMING face of the sink — `writeStream.format("graft-tsv")`
   * with the exactly-once contract done at the connector layer instead
-  * of inside a foreachBatch body (the `writeExactlyOnce` pattern in
-  * [[graft.streaming.StreamingPipelines]] — same idea, now behind the
-  * standard API): each epoch stages under
+  * of inside a foreachBatch body (an overwrite of a per-batch-id
+  * directory — the same idea, here behind the standard API): each
+  * epoch stages under
   * `_staging-<queryId>/epoch-<id>/`, `commit(epoch, msgs)` promotes
   * the winners to `part-<epoch>-NNNNN.tsv` and then RECORDS the epoch
   * in the `_epochs` ledger — a replayed epoch (failure between commit

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) clustering — the write-time layout that makes
@@ -49,18 +49,4 @@ object ZOrder {
 
   def bucketSql(c: String, bits: Int = 16): String =
     s"least(CAST($c AS BIGINT), ${(1L << bits) - 1})"
-
-  /** Write `df` z-order-clustered on (x, y) into `numFiles` parquet
-    * files: range-partition by the Morton code (equal-count z-curve
-    * segments), sort within each partition by it (tight row-group
-    * stats), drop the helper column on write. At scale this is the
-    * one-time layout job; every later two-sided range scan pays
-    * 1/numFiles-ish I/O instead of a full scan. */
-  def writeZOrdered(df: DataFrame, x: Column, y: Column, bits: Int,
-                    numFiles: Int, dir: String): Unit =
-    df.withColumn("__z", morton(bucket(x, bits), bucket(y, bits), bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
 }

@@ -25,15 +25,4 @@ object GraftSqlShims {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Rewrap a streaming micro-batch frame as a NON-streaming frame
-    * over its executed rows — the ForeachBatchSink move, needed by
-    * any V1 `Sink.addBatch` that hands the batch to batch-only APIs
-    * (`.write`, joins against itself, etc.). */
-  def unstream(data: DataFrame): DataFrame = {
-    val ds = data.asInstanceOf[classic.Dataset[_]]
-    classic.Dataset.ofRows(ds.sparkSession,
-      execution.LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds,
-        isStreaming = false))
-  }
 }

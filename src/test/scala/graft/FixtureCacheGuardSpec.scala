@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * per session, so two sites with one kind would serve each other's
   * fixtures. The table layer's static maps are pinned to a sanctioned
   * list, so planner memos cannot come back. The same walk pins the
-  * objects with a `main` and the `/root/` paths in code. */
+  * objects with a `main`, the `/root/` paths in code and the
+  * definitions that no main code calls. */
 class FixtureCacheGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -145,5 +146,101 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
       .findFirstMatchIn(tables).map(_.group(1))
     assert(matRoot.map(r => s"graft/Tables.scala:${r.stripPrefix(hostRoot)}/$${kind}_")
       .exists(hostPaths), matRoot)
+  }
+
+  /** `text` with its comments blanked; string and character literals
+    * are kept, so a name given as a string (a service file entry, a
+    * class loaded by name) still counts as a use. */
+  private def stripComments(text: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(s: String) = text.startsWith(s, i)
+    while (i < text.length) {
+      lazy val charLit = """'(\\.|[^'\\])'""".r
+        .findPrefixOf(text.substring(i, math.min(i + 4, text.length)))
+      if (at("\"\"\"")) {
+        var j = text.indexOf("\"\"\"", i + 3)
+        j = if (j < 0) text.length else j + 3
+        while (j < text.length && text(j) == '"') j += 1
+        out ++= text.substring(i, j); i = j
+      } else if (at("\"")) {
+        var j = i + 1
+        while (j < text.length && text(j) != '"' && text(j) != '\n')
+          j += (if (text(j) == '\\') 2 else 1)
+        j = math.min(j + 1, text.length)
+        out ++= text.substring(i, j); i = j
+      } else if (at("'") && charLit.isDefined) {
+        out ++= charLit.get; i += charLit.get.length
+      } else if (at("//")) {
+        val j = text.indexOf('\n', i)
+        i = if (j < 0) text.length else j
+      } else if (at("/*")) {
+        // Scala block comments nest
+        var depth = 0
+        do {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+        } while (depth > 0 && i < text.length)
+        out += ' '
+      } else { out += text(i); i += 1 }
+    }
+    out.toString
+  }
+
+  /** A declaration that is not an `override`: group 1 is the name. */
+  private val declaration =
+    ("""(?<![\w.])(?:override\s+(?:(?:final|lazy|implicit|private|""" +
+      """protected)(?:\[\w+\])?\s+)*(?:def|val|class|object)\s+\w+|""" +
+      """(?:def|val|class|object)\s+([A-Za-z_]\w*))""").r
+
+  private val identifier = """[A-Za-z_]\w*""".r
+
+  /** Every file under `dir` (recursively) that `keep` accepts. */
+  private def filesUnder(dir: Path, keep: Path => Boolean): Seq[String] = {
+    assert(Files.isDirectory(dir), s"no directory at ${dir.toAbsolutePath}")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && keep(p))
+      .map(p => new String(Files.readAllBytes(p), "UTF-8")).toList
+    finally walk.close()
+  }
+
+  /** Java serialization's private hooks and the extractors that
+    * pattern matches call: the JVM and the compiler call these, never
+    * code by name. */
+  private val conventionHooks = Set("readObject", "writeObject", "unapply")
+
+  /** Definitions that only specs call, kept on purpose: reference
+    * implementations that a spec checks the served path against
+    * (`search` for `searchIndexed`, `probeKeys` for `probeStructs`,
+    * `cosineDecimal` for the `cosine_sim` expression), the in-memory
+    * object store that the storage contract spec runs against, the
+    * snapshot cache's key set (for specs of its bound), and the table
+    * reads, counts and replication that the table specs probe the
+    * chain with. */
+  private val testHooks = Set(
+    "search", "probeKeys", "cosineDecimal", "InMemoryObjectStorage",
+    "cachedDirs", "readAsOf", "readTagged", "readBranch",
+    "liveRowCountCommitted", "totalFiles", "replicateFeed")
+
+  test("every main definition has a caller outside the specs, or is " +
+    "a sanctioned test hook") {
+    val main = sources.map { case (_, text) => stripComments(text) }
+    val used = main ++
+      filesUnder(Paths.get("perfbench/src"), _.toString.endsWith(".scala"))
+        .map(stripComments) ++
+      filesUnder(Paths.get("src/main/resources"), _ => true)
+    val declared = main.flatMap(text =>
+      declaration.findAllMatchIn(text).flatMap(m => Option(m.group(1))))
+    val declarations = declared.groupMapReduce(identity)(_ => 1)(_ + _)
+    val occurrences = used.flatMap(identifier.findAllIn)
+      .filter(declarations.contains).groupMapReduce(identity)(_ => 1)(_ + _)
+    // a name is used when it occurs anywhere beyond its declarations
+    val unused = declarations.collect {
+      case (n, d) if occurrences.getOrElse(n, 0) <= d => n
+    }.toSet
+    val mainObjects = mains.map(f => f.split('/').last.stripSuffix(".scala"))
+    assert(unused.filterNot(mainObjects) === testHooks ++ conventionHooks)
   }
 }

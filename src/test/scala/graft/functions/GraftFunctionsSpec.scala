@@ -23,41 +23,6 @@ class GraftFunctionsSpec extends SparkSpec {
     assert(sh("a") === Seq.empty)
   }
 
-  test("minhashSignature: k entries, each a 4-hex-char md5 slice") {
-    val sig = Seq("x y z w").toDF("t")
-      .select(minhashSignature(array_distinct(shingles(tokens(col("t")), 3)), 8)
-        .as("sig")).head().getSeq[String](0)
-    assert(sig.length === 8)
-    assert(sig.forall(_.matches("[0-9a-f]{4}")))
-  }
-
-  test("minhash identical docs -> identical signatures; disjoint differ") {
-    val df = Seq(("a b c d e"), ("a b c d e"), ("q r s t u")).toDF("t")
-      .select(minhashSignature(array_distinct(shingles(tokens(col("t")), 3)), 8)
-        .as("sig"))
-    val rows = df.collect().map(_.getSeq[String](0))
-    assert(rows(0) === rows(1))
-    assert(rows(0) !== rows(2))
-  }
-
-  test("lshBands: identical signature slices collide") {
-    val df = Seq(("a b c d e f g h")).toDF("t")
-      .select(lshBands(
-        minhashSignature(array_distinct(shingles(tokens(col("t")), 3)), 8),
-        2, 4).as("b"))
-    val bands = df.head().getSeq[String](0)
-    assert(bands.length === 4)
-    assert(bands.distinct.length === 4)
-  }
-
-  test("simhash16 is within [0, 2^16) and deterministic") {
-    val vals = Seq("the quick brown fox", "the quick brown fox", "abc def")
-      .toDF("t").select(simhash16(tokenSet(col("t"))).as("h"))
-      .collect().map(_.getLong(0))
-    assert(vals(0) === vals(1))
-    assert(vals.forall(v => v >= 0 && v < 65536))
-  }
-
   test("dotDecimal and cosineDecimal: known values") {
     val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
       .toDF("a", "b")

@@ -49,7 +49,12 @@ class ZOrderLayoutSpec extends SparkSpec {
 
     val dirZ = "target/tmp/zorder_layout_z"
     val dirT = "target/tmp/zorder_layout_t"
-    ZOrder.writeZOrdered(b, col("ub"), col("tb"), 8, 16, dirZ)
+    // the z-order layout write: range-partition by the Morton code
+    // (equal-count z-curve segments), sort within each file by it
+    b.withColumn("__z", ZOrder.morton(ZOrder.bucket(col("ub"), 8),
+        ZOrder.bucket(col("tb"), 8), 8))
+      .repartitionByRange(16, col("__z")).sortWithinPartitions("__z")
+      .drop("__z").write.mode("overwrite").parquet(dirZ)
     b.repartitionByRange(16, col("tb")).sortWithinPartitions("tb")
       .write.mode("overwrite").parquet(dirT)
 

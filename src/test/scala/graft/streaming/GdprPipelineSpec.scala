@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** The composed GDPR lifecycle, driven through a REAL streaming query:
-  * erasure keys arrive on a MemoryStream, applyDeleteStream's
-  * foreachBatch lands them as sidecar-only DV versions on the CAS
+  * erasure keys arrive on a MemoryStream, a foreachBatch over
+  * applyDeleteBatch lands them as sidecar-only DV versions on the CAS
   * chain, compactCommit materializes the accumulated vectors, and
   * expireVersions physically reclaims every pre-compaction data file —
   * so the erased rows' BYTES are gone, which is the actual
@@ -37,8 +37,10 @@ class GdprPipelineSpec extends SparkSpec {
       .collect()
     val in = MemoryStream[Long]
     in.addData(doomed1.toSeq)
-    val q = StreamingPipelines.applyDeleteStream(
-      in.toDF().withColumnRenamed("value", "doc_id"), root)
+    val q = in.toDF().withColumnRenamed("value", "doc_id").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        StreamingPipelines.applyDeleteBatch(b, id, root)
+      }
       .option("checkpointLocation", java.nio.file.Files
         .createTempDirectory("gdpr_ck_").toString)
       .start()

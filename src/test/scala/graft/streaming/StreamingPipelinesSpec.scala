@@ -1,620 +1,119 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.streaming.StreamingPipelines._
+import graft.sources.ManifestPrune
 // Spark 4.1 moved MemoryStream under execution.streaming.runtime
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.sql.Timestamp
 
-/** NOTE on test mechanics: data is added to the MemoryStream BEFORE
-  * start() and queries run with Trigger.AvailableNow + awaitTermination.
-  * processAllAvailable() would hang on the sessionize query: pending
-  * ProcessingTimeTimeout state makes the default trigger re-run batches
-  * forever, so the no-new-data condition never fires. */
+/** The streaming writers of a graft table: the erasure applier
+  * (`del:` cursor), the graft-table sink's applier (`tsink:`) and the
+  * feed-maintained MV's version pointer — replay, crash and
+  * interleaving on one chain. */
 class StreamingPipelinesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ev(id: Long, tsSec: Long, user: Long, typ: String,
-                 v: Double = 1.0) =
-    Event(id, new Timestamp(tsSec * 1000), user, typ, v)
+  private lazy val docs = graft.Tables.load(spark, sf0001, "documents")
 
-  /** Sessionize queries never self-terminate under AvailableNow: the
-    * pending ProcessingTimeTimeout state keeps the query alive waiting
-    * for timers, so awaitTermination always burns its full timeout.
-    * Poll for the expected sink condition instead, then stop. */
-  private def awaitCondition(q: org.apache.spark.sql.streaming.StreamingQuery,
-                             cond: () => Boolean,
-                             timeoutMs: Long = 120000): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline && q.isActive && !cond())
-      Thread.sleep(200)
-    q.stop()
-  }
+  /** A sink upsert batch: the rows whose doc_id is a multiple of
+    * `mod`, re-languaged to `tag`. */
+  private def upd(mod: Int, tag: String) =
+    docs.filter(col("doc_id") % mod === 0).withColumn("lang", lit(tag))
 
-  test("windowedCounts aggregates tumbling 1h windows (streaming)") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    in.addData(
-      ev(1, 100, 1, "click"), ev(2, 200, 1, "click"),
-      ev(3, 4000, 2, "view"))
-    val q = windowedCounts(in.toDF())
-      .writeStream.format("memory").queryName("win_out")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000); q.stop()
-    val rows = spark.table("win_out")
-      .select("window_start", "event_type", "n", "sum_value")
-      .collect().map(r => (r.getTimestamp(0).getTime / 1000,
-        r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(rows === Set((0L, "click", 2L, 2.0), (3600L, "view", 1L, 1.0)))
-  }
+  private def upsert(batch: org.apache.spark.sql.DataFrame, id: Long,
+                     root: String): Unit =
+    StreamingPipelines.applySinkBatch(batch, id, root, "upsert", "doc_id")
 
-  test("streaming windowedQuantiles ≡ batch aggregate on same data") {
-    // the GK sketch is a mergeable monoid, so the streaming state
-    // machine must land exactly where one batch aggregate does
-    val src = readEventsStream(spark, sf0001).select(
-      "event_id", "ts", "user_id", "event_type", "value")
-    val q = windowedQuantiles(src)
-      .writeStream.format("memory").queryName("wq_out")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000); q.stop()
-    val streamed = spark.table("wq_out").collect().map(r =>
-      (r.getTimestamp(0), r.getString(1), r.getDouble(2),
-        r.getDouble(3), r.getDouble(4), r.getLong(5))).toSet
-    val batch = graft.Tables.load(spark, sf0001, "events")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(approx_percentile(col("value"), lit(0.5), lit(1000)).as("p50"),
-        approx_percentile(col("value"), lit(0.95), lit(1000)).as("p95"),
-        max(col("value")).as("vmax"), count(lit(1)).as("n"))
-      .select(col("window.start"), col("event_type"), col("p50"),
-        col("p95"), col("vmax"), col("n"))
-      .collect().map(r =>
-        (r.getTimestamp(0), r.getString(1), r.getDouble(2),
-          r.getDouble(3), r.getDouble(4), r.getLong(5))).toSet
-    assert(streamed === batch)
-    // sanity: the quantiles are ordered and bounded per row
-    streamed.foreach { case (_, _, p50, p95, vmax, n) =>
-      assert(p50 <= p95 && p95 <= vmax && n > 0)
-    }
-  }
+  private def mvSnapshot(dir: String): Set[(String, Long, Long)] =
+    StreamingPipelines.currentMv(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
-  test("streamingAnnSearch ≡ batch searchIndexed against the same index") {
-    import org.apache.spark.sql.functions.col
-    val (dir, centroids, sim, e) =
-      graft.similarity.SimilarityQueries.sharedIvfSearchState(spark, sf001)
-    val queryVecs = e.filter(col("vec_id") < 6)
-      .select(col("vec_id").as("query_id"), col("sv").as("qv"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Long, Seq[Long])]
-    val streamed = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Int)]
-    def run(): Unit = {
-      val q = streamingAnnSearch(
-        in.toDF().selectExpr("_1 AS query_id", "_2 AS qv"),
-        dir, centroids, topK = 5, nProbe = 2, sim,
-        res => streamed.synchronized {
-          streamed ++= res.select("query_id", "neighbor_id", "rank")
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        })
-      q.awaitTermination(120000); q.stop()
-    }
-    // two separate arrivals — the index serves each batch independently
-    in.addData(queryVecs.take(3): _*); run()
-    in.addData(queryVecs.drop(3): _*); run()
-    val batch = graft.similarity.IvfIndex.searchIndexed(spark, dir,
-        centroids, e.filter(col("vec_id") < 6)
-          .select(col("vec_id").as("query_id"), col("sv").as("qv")),
-        topK = 5, nProbe = 2, sim)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(streamed.toSet === batch)
-    assert(batch.nonEmpty)
-  }
+  /** The signed per-lang fold of change-feed images, recomputed from
+    * scratch: inserts and post-images add, deletes and pre-images
+    * subtract. */
+  private def mvRecompute(rows: Seq[(String, String, Long)])
+      : Set[(String, Long, Long)] =
+    rows.groupBy(_._2).map { case (lang, rs) =>
+      val sign = rs.map(r =>
+        if (Set("insert", "update_postimage")(r._1)) 1L else -1L)
+      (lang, sign.sum, rs.zip(sign).map { case (r, g) => g * r._3 }.sum)
+    }.filter(_._2 > 0).toSet
 
-  test("windowedHeavyHitters: k-bounded sketch state keeps the guarantee") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String)]
-    // window [0, 1h): "hot" 12 of 20 tokens (freq > N/(k+1) at k=3);
-    // window [1h, 2h): "warm" dominates a different vocabulary
-    val w0 = (1 to 12).map(i => (new Timestamp(i * 1000L), "hot")) ++
-      (1 to 8).map(i => (new Timestamp((100 + i) * 1000L), s"noise$i"))
-    val w1 = (1 to 6).map(i => (new Timestamp((3600 + i) * 1000L), "warm")) ++
-      Seq((new Timestamp(3700 * 1000L), "rare"))
-    in.addData(w0 ++ w1: _*)
-    val q = windowedHeavyHitters(
-        in.toDF().toDF("ts", "tok"), k = 3)
-      .writeStream.format("memory").queryName("hh_out")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000); q.stop()
-    val byWindow = spark.table("hh_out").collect().map { r =>
-      r.getTimestamp(0).getTime / 1000 ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(_.getString(0)).toSet
-    }.toMap
-    assert(byWindow.keySet === Set(0L, 3600L))
-    // per-window MG guarantee: the dominant token survives, state <= k
-    assert(byWindow(0L).contains("hot"))
-    assert(byWindow(3600L).contains("warm"))
-    assert(byWindow.values.forall(_.size <= 3))
-  }
-
-  test("sessionize splits on >30min gaps and flushes closed sessions") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    // user 1: two events 10s apart, then a 2h gap, then one more -> the
-    // first session closes in-batch when the gap is seen
-    in.addData(
-      ev(1, 1000, 1, "a"), ev(2, 1010, 1, "a"), ev(3, 9000, 1, "a"),
-      ev(4, 1000, 2, "b"))
-    val q = sessionize(in.toDS()).writeStream
-      .format("memory").queryName("sess_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    awaitCondition(q, () => spark.table("sess_out").count() >= 1)
-    val sessions = spark.table("sess_out")
-      .select("user_id", "n_events", "duration_sec")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // only user 1's first session is closed (user 2 and the tail session
-    // are still open in state awaiting timeout)
-    assert(sessions === Set((1L, 2L, 10L)))
-  }
-
-  test("sessionize keeps a single session for gap-free events") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 0, 7, "x"), ev(2, 60, 7, "x"), ev(3, 120, 7, "x"))
-    val q = sessionize(in.toDS()).writeStream
-      .format("memory").queryName("sess_out2")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    // nothing will ever arrive in the sink — wait for the input batch
-    // to be fully processed, then stop
-    awaitCondition(q, () => q.recentProgress.map(_.numInputRows).sum >= 3)
-    // nothing closed: all within gap; state holds one open session
-    assert(spark.table("sess_out2").count() === 0)
-  }
-
-  test("streamingDedup drops repeated payloads within the watermark") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, String)]
-    // NOT epoch 0: the initial watermark is 0, and rows at/below the
-    // watermark are discarded as late data
-    val base = 1700000000000L
-    val t0 = new java.sql.Timestamp(base)
-    in.addData(
-      (t0, "alpha beta"), (t0, "alpha beta"), (t0, "gamma"),
-      (new java.sql.Timestamp(base + 60000L), "alpha beta"))
-    val q = streamingDedup(in.toDF().toDF("ts", "text"))
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000); q.stop()
-    val texts = spark.table("dedup_out").select("text")
-      .collect().map(_.getString(0)).toSeq.sorted
-    // three duplicates of "alpha beta" collapse to one within watermark
-    assert(texts === Seq("alpha beta", "gamma"))
-  }
-
-  test("stream-static enrichment join attaches dimension columns") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    in.addData(ev(1, 100, 7, "click"), ev(2, 200, 99, "view"))
-    val dim = Seq((7L, "gold"), (8L, "silver")).toDF("user_id", "tier")
-    val q = enrich(in.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000); q.stop()
-    val rows = spark.table("enriched").select("user_id", "tier")
-      .collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSet
-    assert(rows === Set((7L, Some("gold")), (99L, None)))
-  }
-
-  test("file-source streaming read over the events parquet works") {
-    val out = windowedCounts(
-      readEventsStream(spark, sf0001).select(
-        "event_id", "ts", "user_id", "event_type", "value"))
-    val q = out.writeStream.format("memory").queryName("file_win")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000); q.stop()
-    assert(spark.table("file_win").count() > 0)
-  }
-
-  // ---- streaming ≡ batch equivalence --------------------------------
-  // The oracle gate cannot reach the streaming family, so these two
-  // tests are its substitute: the SAME events parquet driven through
-  // the file stream must produce row-identical results to the batch
-  // queries the oracle does verify (q_events_tumbling /
-  // q_events_sessionize). A semantics drift between the batch and
-  // streaming implementations now fails the suite instead of hiding.
-
-  test("streaming windowedCounts ≡ batch q_events_tumbling on same data") {
-    import org.apache.spark.sql.functions.unix_timestamp
-    val out = windowedCounts(
-      readEventsStream(spark, sf0001).select(
-        "event_id", "ts", "user_id", "event_type", "value"))
-    val q = out.writeStream.format("memory").queryName("eq_win")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000); q.stop()
-    // single batch (one file, no maxFilesPerTrigger) -> initial
-    // watermark 0 drops nothing and update mode emits each window once
-    val streamed = spark.table("eq_win")
-      .select(unix_timestamp(col("window_start")).as("hour_epoch"),
-        col("event_type"), col("n"), col("sum_value"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(streamed.length === streamed.toSet.size,
-      "window emitted more than once — batch split changed; compare last-update instead")
-    val batch = graft.SparkEntry.queries("q_events_tumbling")(spark, sf0001)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3)))
-    assert(batch.nonEmpty)
-    assert(streamed.toSet === batch.toSet)
-  }
-
-  test("streaming sessionWindowAgg: append emits watermark-closed " +
-      "sessions with the exact-gap boundary rule") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    // user 1: 0s,100s merge; 3000s is a new session (gap 2900 >= 1800)
-    // user 2: a single event
-    // user 3: 0s and EXACTLY 1800s — the boundary rule MERGES them
-    //         (the event lands on the open window's inclusive end;
-    //         only a strictly larger gap splits), the same rule the
-    //         batch q_session_window oracle encodes as diff > gap
-    in.addData(
-      ev(1, 0, 1, "click"), ev(2, 100, 1, "click"), ev(3, 3000, 1, "click"),
-      ev(4, 500, 2, "click"),
-      ev(5, 0, 3, "click"), ev(6, 1800, 3, "click"))
-    val q = sessionWindowAgg(in.toDF()).writeStream.format("memory")
-      .queryName("sess_win").outputMode("append").start()
-    q.processAllAvailable()
-    // watermark sentinel: far-future event closes every session above;
-    // its own session stays open and must NOT emit
-    in.addData(ev(7, 100000, 99, "click"))
-    q.processAllAvailable()
-    // one more batch so the advanced watermark flushes closed state
-    in.addData(ev(8, 100001, 99, "click"))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("sess_win")
-      .select(col("user_id"),
-        col("start_ts").cast("long").as("s"),
-        col("end_ts").cast("long").as("e"), col("n_events"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    val expected = Set(
-      (1L, 0L, 1900L, 2L), (1L, 3000L, 4800L, 1L),
-      (2L, 500L, 2300L, 1L),
-      (3L, 0L, 3600L, 2L))
-    assert(got === expected)
-  }
-
-  test("session windows survive a query restart through the checkpoint") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    val out = java.nio.file.Files
-      .createTempDirectory("sess_restart_out_").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("sess_restart_ck_").toString
-    def runOnce(): Unit = {
-      val q = sessionWindowAgg(in.toDF()).writeStream
-        .format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-    }
-    // run 1: user 11's session closes under the sentinel's watermark
-    in.addData(ev(1, 0, 11, "click"), ev(2, 100, 11, "click"))
-    in.addData(ev(3, 100000, 99, "click"))
-    in.addData(ev(4, 100001, 99, "click")) // flush batch
-    runOnce()
-    // run 2 (same checkpoint): committed session state and sink
-    // batches must not replay; the new session emits exactly once
-    in.addData(ev(5, 200000, 12, "click"), ev(6, 200100, 12, "click"))
-    in.addData(ev(7, 300000, 98, "click"))
-    in.addData(ev(8, 300001, 98, "click"))
-    runOnce()
-    val got = spark.read.parquet(out)
-      .filter(col("user_id") < 50)
-      .select(col("user_id"), col("start_ts").cast("long"),
-        col("end_ts").cast("long"), col("n_events"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(got.length === got.toSet.size, s"duplicate sessions: ${got.toSeq}")
-    assert(got.toSet === Set(
-      (11L, 0L, 1900L, 2L),
-      (12L, 200000L, 201900L, 2L)))
-  }
-
-  test("stream-stream interval join matches hand-computed pairs") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    // user 1: clicks at 100 and 1000, purchase at 1500 -> both within
-    // 1800s. user 2: click at 100, purchase at 3000 -> outside window.
-    // user 3: purchase with no click at all.
-    in.addData(
-      ev(1, 100, 1, "click"), ev(2, 1000, 1, "click"),
-      ev(3, 1500, 1, "purchase"),
-      ev(4, 100, 2, "click"), ev(5, 3000, 2, "purchase"),
-      ev(6, 500, 3, "purchase"))
-    val q = clickAttribution(in.toDF()).writeStream
-      .format("memory").queryName("attr_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000); q.stop()
-    val pairs = spark.table("attr_out").select("purchase_id", "click_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((3L, 1L), (3L, 2L)))
-  }
-
-  test("left-outer attribution: organic purchases emit null-padded " +
-      "only after the watermark closes their window") {
-    implicit val sc = spark.sqlContext
-    val in = MemoryStream[Event]
-    // user 1: attributed purchase (click 100, purchase 1500).
-    // user 2: purchase 3000 with click 100 OUTSIDE the 1800s window.
-    // user 3: purchase 500, no click at all.
-    in.addData(
-      ev(1, 100, 1, "click"), ev(3, 1500, 1, "purchase"),
-      ev(4, 100, 2, "click"), ev(5, 3000, 2, "purchase"),
-      ev(6, 500, 3, "purchase"))
-    val q = clickAttributionOuter(in.toDF()).writeStream
-      .format("memory").queryName("attr_outer")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      // watermark still at 3000s - 1h < 0: no null-padded row may
-      // have emitted yet — "no click will ever come" is not yet known
-      val early = spark.table("attr_outer")
-        .filter(col("click_id").isNull).count()
-      assert(early === 0, "null-padded rows emitted before the " +
-        "watermark closed the join window")
-      // push the watermark past every purchase's window: the GLOBAL
-      // watermark is the min over BOTH input sides, so both need a
-      // far-future event (100000s - 1h = 96400s > 3000 + 1800); users
-      // 8/9 never match each other, so no extra pairs appear
-      in.addData(ev(98, 100000, 8, "click"), ev(99, 100000, 9, "purchase"))
-      q.processAllAvailable()
-      // the advanced watermark applies in the NEXT batch — run one
-      in.addData(ev(97, 100002, 8, "click"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("attr_outer")
-      .filter(col("purchase_id") < 90) // the pusher purchase stays in state
-      .select("purchase_id", "click_id").collect()
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-      .toSet
-    assert(rows === Set((3L, 1L), (5L, -1L), (6L, -1L)),
-      s"got $rows")
-  }
-
-  test("streaming clickAttribution ≡ the same interval join in batch") {
-    val streamed = {
-      val out = clickAttribution(
-        readEventsStream(spark, sf0001).select(
-          "event_id", "ts", "user_id", "event_type", "value"))
-      val q = out.writeStream.format("memory").queryName("eq_attr")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000); q.stop()
-      spark.table("eq_attr").select("purchase_id", "click_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val batch = clickAttribution(graft.Tables.load(spark, sf0001, "events"))
-      .select("purchase_id", "click_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batch.nonEmpty)
-    assert(streamed === batch)
-  }
-
-  test("writeExactlyOnce: complete rows once; restart adds nothing") {
-    val events = readEventsStream(spark, sf0001)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val out = java.nio.file.Files.createTempDirectory("eos_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("eos_ckpt").toString
-
-    val q1 = writeExactlyOnce(events, out, ckpt)
-    q1.awaitTermination(120000); q1.stop()
-    val expected = graft.Tables.load(spark, sf0001, "events").count()
-    val ids1 = spark.read.parquet(out).select("event_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(ids1.length.toLong === expected)
-    assert(ids1.distinct.length === ids1.length, "duplicated rows in sink")
-
-    // restart from the same checkpoint with no new data: the completed
-    // batch must not replay-duplicate (idempotent overwrite + offsets)
-    val q2 = writeExactlyOnce(events, out, ckpt)
-    q2.awaitTermination(120000); q2.stop()
-    val ids2 = spark.read.parquet(out).select("event_id")
-      .collect().map(_.getLong(0)).sorted
-    assert(ids2.toSeq === ids1.toSeq)
-  }
-
-  test("streaming sessionize ≡ batch q_events_sessionize once closed") {
-    import org.apache.spark.sql.types._
-    // The streaming sessionizer only emits CLOSED sessions; to compare
-    // against the batch query, stage a stream dir = the real events file
-    // + one sentinel event per user at max(ts)+2h. The sentinel gap
-    // closes every real session in-batch; the sentinel sessions
-    // themselves stay open in state and are never emitted.
-    val raw = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("sessfull")
-    val src = java.nio.file.Paths.get(sf0001, "events.parquet")
-    java.nio.file.Files.copy(src, dir.resolve("events_a.parquet"))
-    val rawEvents = spark.read.schema(raw).parquet(src.toString)
-    val maxTs = rawEvents.agg(max(col("ts"))).head.getTimestamp(0)
-    val users = rawEvents.select("user_id").distinct()
-      .collect().map(_.getLong(0))
-    val sentinels = users.toSeq.map(u =>
-      (10_000_000L + u, new java.sql.Timestamp(maxTs.getTime + 7200_000L),
-        u, "flush", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val stage = dir.resolve("stage")
-    sentinels.coalesce(1).write.parquet(stage.toString)
-    val part = java.nio.file.Files.list(stage).iterator()
-    var moved = false
-    while (part.hasNext && !moved) {
-      val p = part.next()
-      if (p.getFileName.toString.endsWith(".parquet")) {
-        java.nio.file.Files.copy(p, dir.resolve("events_b.parquet"))
-        moved = true
-      }
-    }
-    assert(moved, "no parquet part file written for sentinels")
-
-    val batch = graft.SparkEntry.queries("q_events_sessionize")(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(batch.nonEmpty)
-    val expectedSessions = batch.toSeq.map(_._2).sum
-
-    val q = sessionize(
-        readEventsStream(spark, dir.toString)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .na.fill(0.0, Seq("value")).as[Event])
-      .writeStream.format("memory").queryName("eq_sess")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    awaitCondition(q,
-      () => spark.table("eq_sess").count() >= expectedSessions, 180000)
-    val streamed = spark.table("eq_sess")
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamed === batch)
-  }
-
-  test("streaming near-dup flags ≡ batch pair table (flagged = b_id side)") {
-    implicit val sc = spark.sqlContext
-    // the REAL sf0.001 fingerprints, streamed in one unordered batch;
-    // the flagged set must equal the batch banded join's larger-id
-    // side — stream and batch agree on what counts as a near-dup
-    val fp = graft.dedup.DedupQueries.fingerprints(spark, sf0001).collect()
-    val base = 1700000000000L
-    val docs = fp.map(r => FpDoc(r.getLong(0),
-      new Timestamp(base + r.getLong(0)), r.getLong(1), r.getLong(2)))
-    val in = MemoryStream[FpDoc]
-    in.addData(docs.toSeq)
-    val plan = graft.dedup.SimhashBanding.choose(docs.length.toLong)
-    val q = streamingNearDupFlags(in.toDS(), plan)
-      .writeStream.format("memory").queryName("neardup_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000); q.stop()
-    val flagged = spark.table("neardup_out").select("doc_id")
-      .distinct().collect().map(_.getLong(0)).toSet
-    val expect = graft.dedup.DedupQueries
-      .sharedSimhash64Pairs(spark, sf0001)
-      .select("b_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(expect.nonEmpty, "fixture corpus has no near-dup pairs")
-    assert(flagged === expect)
-  }
-
-  test("near-dup flags: late smaller id retro-flags the earlier larger id") {
-    implicit val sc = spark.sqlContext
-    val base = 1700000000000L
-    def doc(id: Long, hi: Long, lo: Long, dtSec: Long = 0) =
-      FpDoc(id, new Timestamp(base + dtSec * 1000), hi, lo)
-    val in = MemoryStream[FpDoc]
-    val plan = graft.dedup.SimhashBanding.Plan(4, 3)
-    // one continuous query so bucket state survives across batches
-    val q = streamingNearDupFlags(in.toDS(), plan)
-      .writeStream.format("memory").queryName("neardup_retro")
-      .outputMode("append").start()
-    try {
-      // batch 1: docs 10 and 20, far apart (no flags)
-      in.addData(doc(10, 0xAAAA5555L, 0x12345678L),
-        doc(20, 0x00FF00FFL, 0x87654321L))
-      q.processAllAvailable()
-      assert(spark.table("neardup_retro").count() === 0)
-      // batch 2: doc 5 arrives LATE, one bit away from doc 10 — the
-      // EARLIER-ARRIVED but larger id 10 must be the one flagged
-      in.addData(doc(5, 0xAAAA5555L, 0x12345679L, 60))
-      q.processAllAvailable()
-    } finally q.stop()
-    val flags = spark.table("neardup_retro")
-      .select("doc_id", "matched_id", "hamming").distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(flags === Set((10L, 5L, 1)))
-  }
-
-  private def mvSnapshot(dir: String): Set[(String, String, Double, Long)] =
-    currentMv(spark, dir).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-
-  private def mvRecompute(rows: Seq[FactRow]): Set[(String, String, Double, Long)] =
-    rows.toDF()
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(sum(col("l_quantity")).as("psum_qty"), count(lit(1)).as("pcnt"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3)))
+  /** The per-lang aggregate of a chain's committed head. */
+  private def headAggregate(root: String): Set[(String, Long, Long)] =
+    ManifestPrune.readCommitted(spark, root,
+        ManifestPrune.currentVersion(spark, root))
+      .groupBy("lang")
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSet
 
   test("incrementally maintained MV equals batch recompute at every step") {
-    implicit val sc = spark.sqlContext
-    val rows = graft.Tables.load(spark, sf0001, "lineitem")
-      .select("l_returnflag", "l_linestatus", "l_quantity")
-      .collect()
-      .map(r => FactRow(r.getString(0), r.getString(1), r.getDouble(2)))
-      .toSeq
-    val batches = rows.grouped((rows.size + 2) / 3).toSeq
+    val root = graft.Tables.matDir(s"mv_maint_${System.nanoTime}",
+      spark, sf0001)
+    ManifestPrune.buildLayout(docs, root, nFiles = 4)
     val dir = java.nio.file.Files.createTempDirectory("mv_maint").toString
     val ck = java.nio.file.Files.createTempDirectory("mv_maint_ck").toString
-    val in = MemoryStream[FactRow]
-    val q = maintainPricingMv(in.toDS().toDF(), dir, ck)
+    StreamingPipelines.seedLangMv(spark, root, dir)
+    assert(mvSnapshot(dir) === headAggregate(root))
+    val q = StreamingPipelines.maintainLangMvFromFeed(spark, root, dir)
+      .option("checkpointLocation", ck).start()
+    // one commit of each kind the feed carries: updates (pre- and
+    // post-images), inserts, and deletes
+    val steps: Seq[() => Unit] = Seq(
+      () => upsert(upd(9, "mv"), 0L, root),
+      () => upsert(docs.filter(col("doc_id") % 13 === 1)
+        .withColumn("doc_id", col("doc_id") + 20000000L), 1L, root),
+      () => StreamingPipelines.applyDeleteBatch(
+        docs.filter(col("doc_id") % 7 === 3).select("doc_id"), 0L, root))
     try {
-      var seen = Seq.empty[FactRow]
-      for (b <- batches) {
-        in.addData(b)
+      steps.zipWithIndex.foreach { case (step, i) =>
+        step()
         q.processAllAvailable()
-        seen ++= b
-        assert(mvSnapshot(dir) === mvRecompute(seen),
-          s"view diverged after folding ${seen.size} rows")
+        assert(mvSnapshot(dir) === headAggregate(root),
+          s"view diverged after step $i")
       }
     } finally q.stop()
   }
 
   test("MV maintenance: replayed batches fold exactly once") {
     val dir = java.nio.file.Files.createTempDirectory("mv_replay").toString
-    val b0 = Seq(FactRow("A", "F", 10.0), FactRow("N", "O", 5.0)).toDF()
-    val b1 = Seq(FactRow("A", "F", 7.0), FactRow("R", "F", 2.0)).toDF()
-    StreamingPipelines.applyMvBatch(b0, 0, dir)
+    val rows0 = Seq(("insert", "en", 10L), ("insert", "it", 5L))
+    val rows1 = Seq(("insert", "en", 7L), ("update_preimage", "it", 5L),
+      ("update_postimage", "de", 5L))
+    def frame(rows: Seq[(String, String, Long)]) =
+      rows.toDF("op", "lang", "n_chars")
+    StreamingPipelines.applyLangMvBatch(frame(rows0), 0, dir)
     val s0 = mvSnapshot(dir)
+    assert(s0 === mvRecompute(rows0))
     // pointer-committed replay: must be skipped outright
-    StreamingPipelines.applyMvBatch(b0, 0, dir)
+    StreamingPipelines.applyLangMvBatch(frame(rows0), 0, dir)
     assert(mvSnapshot(dir) === s0)
-    StreamingPipelines.applyMvBatch(b1, 1, dir)
+    StreamingPipelines.applyLangMvBatch(frame(rows1), 1, dir)
     val s1 = mvSnapshot(dir)
-    assert(s1 === mvRecompute(Seq(FactRow("A", "F", 10.0),
-      FactRow("N", "O", 5.0), FactRow("A", "F", 7.0), FactRow("R", "F", 2.0))))
+    assert(s1 === mvRecompute(rows0 ++ rows1))
     // crash-before-pointer replay: rewind the pointer to v0 and replay
     // batch 1 — the recompute reads the UNCHANGED v0, so the result is
     // byte-identical and re-pointing restores the same view
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_latest"),
       "0".getBytes("UTF-8"))
-    StreamingPipelines.applyMvBatch(b1, 1, dir)
+    StreamingPipelines.applyLangMvBatch(frame(rows1), 1, dir)
     assert(mvSnapshot(dir) === s1)
     assert(StreamingPipelines.latestMvVersion(dir) === Some(1L))
-    // time travel: v0 is immutable and still reads as committed
-    val asOf0 = StreamingPipelines.mvAsOf(spark, dir, 0).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+    // v0 is immutable and still reads as committed
+    val asOf0 = spark.read.parquet(s"$dir/v_0").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(asOf0 === s0)
-    intercept[IllegalArgumentException] {
-      StreamingPipelines.mvAsOf(spark, dir, 99)
-    }
   }
 
   test("CDC apply accepts multi-column SET batches (general merge)") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"cdc_mc_${System.nanoTime}",
       spark, sf0001)
     ManifestPrune.buildLayout(docs, root, nFiles = 4)
-    // a CDC batch carrying TWO payload columns — the streaming face
-    // inherits the generalized SET application for free
-    StreamingPipelines.applyCdcBatch(
-      docs.filter(col("doc_id") % 9 === 2)
-        .select(col("doc_id"), lit("mc").as("lang"),
-          lit("cdc").as("source")), 0L, root)
+    // an upsert batch changing TWO payload columns
+    upsert(docs.filter(col("doc_id") % 9 === 2)
+      .withColumn("lang", lit("mc")).withColumn("source", lit("cdc")),
+      0L, root)
     val t = ManifestPrune.readCommitted(spark, root, 1L)
     val n = docs.filter(col("doc_id") % 9 === 2).count()
     assert(t.filter(col("lang") === "mc" &&
@@ -624,59 +123,15 @@ class StreamingPipelinesSpec extends SparkSpec {
     assert(t.count() === docs.count())
   }
 
-  test("MoR CDC apply lands the same state as CoW CDC apply without " +
-    "touching data files, shares the replay cursor, and interleaves") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
-    def upd(m: Long, v: String) = docs.filter(col("doc_id") % 23 === m)
-      .select(col("doc_id"), lit(v).as("new_lang"))
-    val cow = graft.Tables.matDir(s"cdc_cow_${System.nanoTime}",
-      spark, sf0001)
-    val mor = graft.Tables.matDir(s"cdc_morx_${System.nanoTime}",
-      spark, sf0001)
-    ManifestPrune.buildLayout(docs, cow, nFiles = 4)
-    ManifestPrune.buildLayout(docs, mor, nFiles = 4)
-    StreamingPipelines.applyCdcBatch(upd(3, "x0"), 0L, cow)
-    StreamingPipelines.applyCdcBatchMor(upd(3, "x0"), 0L, mor)
-    val a = ManifestPrune.readCommitted(spark, cow, 1L)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    val b = ManifestPrune.readCommitted(spark, mor, 1L)
-      .orderBy("doc_id").collect().map(_.toSeq)
-    assert(a === b)
-    // MoR carried every base file (no rewrite) where CoW did not
-    val base = spark.read.parquet(s"$mor/manifest")
-      .select("file").collect().map(_.getString(0)).toSet
-    val after = spark.read.parquet(ManifestPrune.manifestOf(mor, 1L))
-      .select("file").collect().map(_.getString(0)).toSet
-    assert(base.subsetOf(after))
-    // replay of a committed MoR batch publishes nothing
-    StreamingPipelines.applyCdcBatchMor(upd(3, "x0"), 0L, mor)
-    assert(ManifestPrune.currentVersion(spark, mor) === 1L)
-    // interleave: a CoW batch on the MoR chain advances the same
-    // cdc: cursor, then a delete batch on its own cursor
-    StreamingPipelines.applyCdcBatch(upd(5, "x1"), 1L, mor)
-    StreamingPipelines.applyDeleteBatch(
-      docs.filter(col("doc_id") % 29 === 7).select("doc_id"), 0L, mor)
-    assert(ManifestPrune.currentVersion(spark, mor) === 3L)
-    val head = ManifestPrune.readCommitted(spark, mor, 3L).cache()
-    assert(head.filter(col("lang") === "x1").count() ===
-      docs.filter(col("doc_id") % 23 === 5 &&
-        col("doc_id") % 29 =!= 7).count())
-    assert(head.filter(col("doc_id") % 29 === 7).count() === 0L)
-  }
-
   test("a table rebuilt at the same path invalidates the in-JVM " +
     "replay cursor: the new chain's first batches are NOT skipped") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"cdc_rebuild_${System.nanoTime}",
       spark, sf0001)
     ManifestPrune.buildLayout(docs, root, nFiles = 4)
     // three batches advance the cursor's floor to v3 / lastBatch 2
     (0L to 2L).foreach { b =>
-      StreamingPipelines.applyCdcBatch(
-        docs.filter(col("doc_id") % 7 === b)
-          .select(col("doc_id"), lit(s"b$b").as("new_lang")), b, root)
+      upsert(docs.filter(col("doc_id") % 7 === b)
+        .withColumn("lang", lit(s"b$b")), b, root)
     }
     assert(ManifestPrune.currentVersion(spark, root) === 3L)
     // DELETE the table and rebuild a fresh chain at the SAME path —
@@ -687,9 +142,8 @@ class StreamingPipelinesSpec extends SparkSpec {
     }
     rm(new java.io.File(root))
     ManifestPrune.buildLayout(docs, root, nFiles = 4)
-    StreamingPipelines.applyCdcBatch(
-      docs.filter(col("doc_id") % 5 === 1)
-        .select(col("doc_id"), lit("fresh").as("new_lang")), 0L, root)
+    upsert(docs.filter(col("doc_id") % 5 === 1)
+      .withColumn("lang", lit("fresh")), 0L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 1L)
     assert(ManifestPrune.readCommitted(spark, root, 1L)
       .filter(col("lang") === "fresh").count() ===
@@ -698,63 +152,53 @@ class StreamingPipelinesSpec extends SparkSpec {
 
   test("streaming equality deletes: pure-metadata batches, own replay " +
     "cursor, interleave with DV deletes and CDC updates") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"eqstream_${System.nanoTime}",
       spark, sf0001)
     ManifestPrune.buildLayout(docs, root, nFiles = 4)
+    def eqDelete(mod: Int, rem: Int, id: Long): Unit =
+      StreamingPipelines.applySinkBatch(
+        docs.filter(col("doc_id") % mod === rem).select("doc_id"), id,
+        root, "delete", "doc_id")
     def dataFiles(): Set[String] =
       new java.io.File(root).listFiles()
         .filter(d => d.isDirectory && d.getName.startsWith("data"))
         .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
         .map(_.getAbsolutePath).toSet
     val before = dataFiles()
-    StreamingPipelines.applyEqDeleteBatch(
-      docs.filter(col("doc_id") % 5 === 1).select("doc_id"), 0L, root)
+    eqDelete(5, 1, 0L)
     assert(dataFiles() === before,
       "a streaming eq-delete batch touched data files")
-    // replay is a no-op on the eqdel: cursor
-    StreamingPipelines.applyEqDeleteBatch(
-      docs.filter(col("doc_id") % 5 === 1).select("doc_id"), 0L, root)
+    // replay is a no-op on the tsink: cursor
+    eqDelete(5, 1, 0L)
     assert(ManifestPrune.currentVersion(spark, root) === 1L)
     // interleave: a DV delete batch (own del: cursor) then a second
-    // eq batch (eqdel: cursor advances past the interloper)
+    // eq batch (tsink: cursor advances past the interloper)
     StreamingPipelines.applyDeleteBatch(
       docs.filter(col("doc_id") % 7 === 2).select("doc_id"), 0L, root)
-    StreamingPipelines.applyEqDeleteBatch(
-      docs.filter(col("doc_id") % 11 === 3).select("doc_id"), 1L, root)
+    eqDelete(11, 3, 1L)
     assert(ManifestPrune.currentVersion(spark, root) === 3L)
     assert(ManifestPrune.readCommitted(spark, root, 3L).count() ===
       docs.filter(col("doc_id") % 5 =!= 1 && col("doc_id") % 7 =!= 2 &&
         col("doc_id") % 11 =!= 3).count())
     // the replayed ids stay replayed after the interleaving
-    StreamingPipelines.applyEqDeleteBatch(
-      docs.filter(col("doc_id") % 11 === 3).select("doc_id"), 1L, root)
+    eqDelete(11, 3, 1L)
     assert(ManifestPrune.currentVersion(spark, root) === 3L)
   }
 
   test("CDC streams into a BRANCH (a branch is a full root) and " +
     "fast-forward publishes the drained stream onto main") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"cdc_branch_${System.nanoTime}",
       spark, sf0001)
     ManifestPrune.buildLayout(docs, root, nFiles = 4)
     ManifestPrune.createBranch(spark, root, "ingest", 0L)
     val br = ManifestPrune.branchRoot(root, "ingest")
-    // two CDC batches drain onto the branch; main stays at v0
-    StreamingPipelines.applyCdcBatch(
-      docs.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), lit("s0").as("new_lang")), 0L, br)
-    StreamingPipelines.applyCdcBatch(
-      docs.filter(col("doc_id") % 11 === 0)
-        .select(col("doc_id"), lit("s1").as("new_lang")), 1L, br)
+    // two upsert batches drain onto the branch; main stays at v0
+    upsert(upd(7, "s0"), 0L, br)
+    upsert(upd(11, "s1"), 1L, br)
     assert(ManifestPrune.currentVersion(spark, root) === 0L)
     assert(ManifestPrune.currentVersion(spark, br) === 2L)
     // replay idempotency holds on the branch's own cursor
-    StreamingPipelines.applyCdcBatch(
-      docs.filter(col("doc_id") % 11 === 0)
-        .select(col("doc_id"), lit("s1").as("new_lang")), 1L, br)
+    upsert(upd(11, "s1"), 1L, br)
     assert(ManifestPrune.currentVersion(spark, br) === 2L)
     // publish: main's head equals the drained branch state
     val v = ManifestPrune.fastForward(spark, root, "ingest")
@@ -767,37 +211,30 @@ class StreamingPipelinesSpec extends SparkSpec {
   }
 
   test("CDC apply: batches commit versions; replay and crash are safe") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     // unique per JVM run: identityHashCode suffixes can collide across
     // restarts and _commits markers persist (see CowMergeSpec)
     val root = graft.Tables.matDir(s"cdc_apply_${System.nanoTime}",
       spark, sf0001)
-    graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
-    def upd(mod: Int, tag: String) = docs
-      .filter(col("doc_id") % mod === 0)
-      .select(col("doc_id"), lit(tag).as("new_lang"))
-    StreamingPipelines.applyCdcBatch(upd(7, "b0"), 0L, root)
-    StreamingPipelines.applyCdcBatch(upd(11, "b1"), 1L, root)
+    ManifestPrune.buildLayout(docs, root, nFiles = 8)
+    upsert(upd(7, "b0"), 0L, root)
+    upsert(upd(11, "b1"), 1L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 2L)
-    val after2 = ManifestPrune.readVersion(spark,
-      ManifestPrune.manifestOf(root, 2)).collect()
+    val after2 = ManifestPrune.readCommitted(spark, root, 2L).collect()
     // REPLAY of committed batch 1: no new version, state unchanged
-    StreamingPipelines.applyCdcBatch(upd(11, "b1"), 1L, root)
+    upsert(upd(11, "b1"), 1L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 2L)
-    // CRASH before publish: writer-unique prepared dirs exist but the
+    // CRASH before publish: writer-unique prepared state exists but the
     // canonical rename never happened — replaying the batch prepares
     // again and commits exactly once (the rename-then-crash window is
     // adoption, pinned in CommitRaceSpec)
     val baseMf = ManifestPrune.manifestOf(root, 2)
-    ManifestPrune.cowMergeFrom(spark, root, baseMf, upd(13, "b2"),
-      ManifestPrune.readVersion(spark, baseMf).limit(0),
+    ManifestPrune.morMergeFrom(spark, root, baseMf,
+      ManifestPrune.dvOf(root, 2L), upd(13, "b2"), upd(13, "b2").limit(0),
       ManifestPrune.prepareToken())
     assert(ManifestPrune.currentVersion(spark, root) === 2L) // not committed
-    StreamingPipelines.applyCdcBatch(upd(13, "b2"), 2L, root)
+    upsert(upd(13, "b2"), 2L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 3L)
-    val v3 = ManifestPrune.readVersion(spark,
-      ManifestPrune.manifestOf(root, 3))
+    val v3 = ManifestPrune.readCommitted(spark, root, 3L)
     assert(v3.filter(col("doc_id") % 13 === 0 &&
       col("lang") =!= "b2").count() === 0)
     assert(v3.count() === after2.length)
@@ -805,34 +242,33 @@ class StreamingPipelinesSpec extends SparkSpec {
 
   test("DV erasure stream interleaves with CDC on one chain, " +
     "replay- and crash-safe") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"del_apply_${System.nanoTime}",
       spark, sf0001)
-    graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 8)
+    ManifestPrune.buildLayout(docs, root, nFiles = 8)
     def del(mod: Int) = docs.filter(col("doc_id") % mod === 0)
       .select("doc_id")
-    def upd(mod: Int, tag: String) = docs
-      .filter(col("doc_id") % mod === 0)
-      .select(col("doc_id"), lit(tag).as("new_lang"))
     val dataFilesBefore = new java.io.File(s"$root/data").listFiles()
       .map(f => f.getName -> f.lastModified()).toMap
-    // delete batch 0, then a CDC update batch 0 from a DIFFERENT
-    // stream — the two id sequences are incomparable and must keep
-    // independent replay cursors
+    // delete batch 0, then a sink batch 0 from a DIFFERENT stream —
+    // the two id sequences are incomparable and must keep independent
+    // replay cursors
     StreamingPipelines.applyDeleteBatch(del(7), 0L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 1L)
     // the erasure touched no data file (merge-on-read)
     assert(new java.io.File(s"$root/data").listFiles()
       .map(f => f.getName -> f.lastModified()).toMap === dataFilesBefore)
-    StreamingPipelines.applyCdcBatch(upd(11, "u0"), 0L, root)
+    // the update batch draws from the live rows: an upsert would
+    // re-insert an erased key
+    val u0 = ManifestPrune.readCommitted(spark, root, 1L)
+      .filter(col("doc_id") % 11 === 0).withColumn("lang", lit("u0"))
+    upsert(u0, 0L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 2L)
     // REPLAYS of both batch 0s: no new versions even though the
     // current marker carries the OTHER stream's note
     StreamingPipelines.applyDeleteBatch(del(7), 0L, root)
-    StreamingPipelines.applyCdcBatch(upd(11, "u0"), 0L, root)
+    upsert(u0, 0L, root)
     assert(ManifestPrune.currentVersion(spark, root) === 2L)
-    // state: deletes hidden THROUGH the later CoW merge, update applied
+    // state: deletes stay hidden through the later upsert, update applied
     val v2 = ManifestPrune.readCommitted(spark, root, 2L)
     assert(v2.filter(col("doc_id") % 7 === 0).count() === 0L)
     assert(v2.filter(col("doc_id") % 11 === 0 && col("doc_id") % 7 =!= 0
@@ -853,17 +289,17 @@ class StreamingPipelinesSpec extends SparkSpec {
       col("doc_id") % 13 =!= 0).count())
   }
 
-  test("applyDeleteStream drains a key stream through foreachBatch") {
-    import graft.sources.ManifestPrune
+  test("applyDeleteBatch drains a key stream through foreachBatch") {
     implicit val sc = spark.sqlContext
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"del_stream_${System.nanoTime}",
       spark, sf0001)
-    graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 4)
+    ManifestPrune.buildLayout(docs, root, nFiles = 4)
     val in = MemoryStream[Long]
     in.addData(1L, 2L, 3L)
-    val q = StreamingPipelines.applyDeleteStream(
-      in.toDF().withColumnRenamed("value", "doc_id"), root)
+    val q = in.toDF().withColumnRenamed("value", "doc_id").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        StreamingPipelines.applyDeleteBatch(b, id, root)
+      }
       .option("checkpointLocation", java.nio.file.Files
         .createTempDirectory("del_stream_ck_").toString)
       .start()
@@ -880,61 +316,31 @@ class StreamingPipelinesSpec extends SparkSpec {
   }
 
   test("an adopted version's empty note is skipped by replay cursors") {
-    import graft.sources.ManifestPrune
-    val docs = graft.Tables.load(spark, sf0001, "documents")
     val root = graft.Tables.matDir(s"note_${System.nanoTime}",
       spark, sf0001)
-    graft.sources.ManifestPrune.buildLayout(docs, root, nFiles = 4)
+    ManifestPrune.buildLayout(docs, root, nFiles = 4)
     // stream writer commits batch 0 (note "del:0")
     StreamingPipelines.applyDeleteBatch(
       docs.filter(col("doc_id") % 23 === 1).select("doc_id"), 0L, root)
     // a crashed anonymous writer's version gets adopted (empty note)
-    val tok = graft.sources.ManifestPrune.prepareToken()
-    val (mf, _) = graft.sources.ManifestPrune.dvDeleteFrom(spark, root,
-      graft.sources.ManifestPrune.manifestOf(root, 1L), graft.sources.ManifestPrune.dvOf(root, 1L),
+    val tok = ManifestPrune.prepareToken()
+    val (mf, _) = ManifestPrune.dvDeleteFrom(spark, root,
+      ManifestPrune.manifestOf(root, 1L), ManifestPrune.dvOf(root, 1L),
       docs.filter(col("doc_id") % 29 === 2).select("doc_id"), tok)
     assert(new java.io.File(mf)
-      .renameTo(new java.io.File(graft.sources.ManifestPrune.manifestOf(root, 2L))))
+      .renameTo(new java.io.File(ManifestPrune.manifestOf(root, 2L))))
     // stream writer's batch 1: publish races the orphan, adopts it,
     // retries, and lands as v3 — the adopted v2's EMPTY note must not
     // truncate the cursor scan (batch 0's note sits below it)
     StreamingPipelines.applyDeleteBatch(
       docs.filter(col("doc_id") % 31 === 3).select("doc_id"), 1L, root)
-    assert(graft.sources.ManifestPrune.currentVersion(spark, root) === 3L)
+    assert(ManifestPrune.currentVersion(spark, root) === 3L)
     // and a REPLAY of batch 1 finds its note through the chain
     StreamingPipelines.applyDeleteBatch(
       docs.filter(col("doc_id") % 31 === 3).select("doc_id"), 1L, root)
-    assert(graft.sources.ManifestPrune.currentVersion(spark, root) === 3L)
-    val t = graft.sources.ManifestPrune.readCommitted(spark, root, 3L)
+    assert(ManifestPrune.currentVersion(spark, root) === 3L)
+    val t = ManifestPrune.readCommitted(spark, root, 3L)
     assert(t.filter(col("doc_id") % 23 === 1 ||
       col("doc_id") % 29 === 2 || col("doc_id") % 31 === 3).count() === 0L)
-  }
-
-  test("streamingEwma over 3 micro-batches equals the batch q_ewma rows") {
-    implicit val sc = spark.sqlContext
-    import spark.implicits._
-    val evs = graft.Tables.load(spark, sf0001, "events")
-      .filter(col("user_id") < 25)
-      .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      .as[EwmaEvent].collect()
-      .sortBy(e => (e.ts.getTime, e.event_id))
-    assert(evs.nonEmpty)
-    val in = MemoryStream[EwmaEvent]
-    val third = evs.length / 3
-    in.addData(evs.take(third).toIndexedSeq)
-    in.addData(evs.slice(third, 2 * third).toIndexedSeq)
-    in.addData(evs.drop(2 * third).toIndexedSeq)
-    val q = streamingEwma(in.toDS())
-      .writeStream.format("memory").queryName("ewma_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000); q.stop()
-    def asTuples(df: org.apache.spark.sql.DataFrame) = df
-      .select("user_id", "event_id", "num", "den").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    val got = asTuples(spark.table("ewma_out"))
-    val exp = asTuples(graft.SparkEntry.queries("q_ewma")(spark, sf0001))
-    assert(got.size === evs.length)
-    assert(got === exp)
   }
 }

@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predica
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.util.SerializableConfiguration
 
 /** THE SQL CATALOG FACE of the version chain — a DSv2 `TableCatalog`
   * that exposes chain roots as real SQL tables, so an analyst speaks
@@ -728,7 +729,7 @@ private[sources] class GraftCatalogTable(val root: String,
           val mode = Option(info.options.get("mode")).getOrElse("append")
           val key = Option(info.options.get("key")).getOrElse(mergeKey)
           new GraftStreamingWrite(root, mode, key, info.schema(),
-            new SerializableHadoopConf(
+            new SerializableConfiguration(
               SparkSession.active.sparkContext.hadoopConfiguration))
         }
       }
@@ -1259,7 +1260,7 @@ private[sources] class GraftChainScan(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ChainReaderFactory(
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration), required,
       ManifestPrune.priorNameMap(
         ManifestPrune.manifestOf(root, version)))
@@ -1273,7 +1274,7 @@ private[sources] class GraftChainScan(
       Option(options.get("startingVersion")).map(_.toLong),
       Option(options.get("maxVersionsPerTrigger")).map(_.toInt),
       Option(options.get("skipChangeCommits")).exists(_.toBoolean),
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration))
 }
 
@@ -1324,7 +1325,7 @@ private[sources] case class BucketedChainFilePartition(
 }
 
 private[sources] class ChainReaderFactory(
-    conf: SerializableHadoopConf, required: StructType,
+    conf: SerializableConfiguration, required: StructType,
     priorNames: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
   import org.apache.parquet.example.data.Group
@@ -1466,7 +1467,7 @@ private[sources] class GraftRowLevelOperation(
       override def build()
           : org.apache.spark.sql.connector.write.DeltaWrite =
         new GraftDeltaWrite(root, snapshot, info.schema(),
-          new SerializableHadoopConf(SparkSession.active
+          new SerializableConfiguration(SparkSession.active
             .sparkContext.hadoopConfiguration),
           cmd.toString.toLowerCase)
     }
@@ -1487,7 +1488,7 @@ private[sources] object GraftDeltaWrite {
   * from plain SQL. */
 private[sources] class GraftDeltaWrite(root: String, expectedBase: Long,
                                        rowSchema: StructType,
-                                       conf: SerializableHadoopConf,
+                                       conf: SerializableConfiguration,
                                        note: String)
     extends org.apache.spark.sql.connector.write.DeltaWrite {
   import org.apache.spark.sql.connector.write._
@@ -1532,7 +1533,7 @@ private[sources] case class DeltaStagedMessage(delPath: String,
 
 private[sources] case class GraftDeltaWriterFactory(
     stageDir: String, rowSchema: StructType,
-    conf: SerializableHadoopConf)
+    conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
@@ -1548,7 +1549,7 @@ private[sources] case class GraftDeltaWriterFactory(
   * no actions stages nothing. */
 private[sources] class GraftDeltaWriter(pathBase: String,
                                         rowSchema: StructType,
-                                        conf: SerializableHadoopConf)
+                                        conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
   import org.apache.parquet.example.data.Group
 

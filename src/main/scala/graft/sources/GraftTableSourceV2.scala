@@ -10,6 +10,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** STREAMING (and batch) READ of a versioned graft table's CHANGE
   * FEED — `spark.readStream.format("graft-table").load(root)`, the
@@ -236,7 +237,7 @@ private[sources] class GraftTableWrite(root: String, mode: String,
   override def toStreaming
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
     new GraftStreamingWrite(root, mode, key, querySchema,
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration))
 }
 
@@ -274,7 +275,7 @@ private[graft] object GraftTableWrite {
 private[sources] class GraftStreamingWrite(root: String, mode: String,
                                            key: String,
                                            schema: StructType,
-                                           conf: SerializableHadoopConf)
+                                           conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
@@ -316,7 +317,7 @@ private[sources] case class StagedFileMessage(path: String)
 /** Ships only serializable state to the tasks (the enclosing
   * StreamingWrite must not ride the closure). */
 private[sources] case class GraftStagingWriterFactory(
-    stageDir: String, schema: StructType, conf: SerializableHadoopConf)
+    stageDir: String, schema: StructType, conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
@@ -332,7 +333,7 @@ private[sources] case class GraftStagingWriterFactory(
   * (lazily opened, so an empty task stages nothing). */
 private[sources] class GraftStagingDataWriter(path: String,
                                               schema: StructType,
-                                              conf: SerializableHadoopConf)
+                                              conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   private var writer: org.apache.parquet.hadoop.ParquetWriter[
     org.apache.parquet.example.data.Group] = _
@@ -396,7 +397,7 @@ private[sources] class GraftTableScan(schema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FeedParquetReaderFactory(
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration), schema)
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -404,7 +405,7 @@ private[sources] class GraftTableScan(schema: StructType,
     new GraftTableMicroBatchStream(root, schema, key,
       opt("startingVersion").map(_.toLong).getOrElse(1L),
       opt("maxVersionsPerTrigger").map(_.toInt),
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration))
 }
 
@@ -419,7 +420,7 @@ private[sources] case class FeedFilePartition(file: String)
 private[sources] class GraftTableMicroBatchStream(
     root: String, schema: StructType, key: String,
     startingVersion: Long, maxVersionsPerTrigger: Option[Int],
-    conf: SerializableHadoopConf)
+    conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -504,7 +505,7 @@ private[sources] class GraftTableMicroBatchStream(
 private[sources] class GraftRowMicroBatchStream(
     root: String, required: StructType,
     startingVersion: Option[Long], maxVersionsPerTrigger: Option[Int],
-    skipChangeCommits: Boolean, conf: SerializableHadoopConf)
+    skipChangeCommits: Boolean, conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -603,7 +604,7 @@ private[sources] class GraftRowMicroBatchStream(
   * parquet-hadoop's Group API ([[GroupParquet]] — no Spark-internal
   * reader classes): fields resolve by name, flat primitives only. */
 private[sources] class FeedParquetReaderFactory(
-    conf: SerializableHadoopConf, schema: StructType)
+    conf: SerializableConfiguration, schema: StructType)
     extends PartitionReaderFactory {
   import org.apache.parquet.example.data.Group
 

@@ -1,13 +1,16 @@
 package graft.sources
 
 import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, from_xml}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Splittable scan WITHIN a single huge XML file.
   *
@@ -15,21 +18,20 @@ import org.apache.spark.sql.types.StructType
   * `graft.wiki.WikiScale`), so a single 100 GB MediaWiki dump degrades
   * to one scan task. The reference engine solves this with a
   * Mahout-derived record reader that byte-scans for the row tag inside
-  * arbitrary byte ranges (/root/reference/src/mr/CountReference.java:
-  * 94-203). This is the Spark-first equivalent:
+  * arbitrary byte ranges (CountReference.java:94-203). This is the
+  * Spark-first equivalent:
   *
   *   1. the DRIVER plans byte ranges per file (exactly the split table
   *      a FileScanRDD would hold — a few dozen bytes per 128 MB range,
   *      so ~1M entries at 100 TB: driver-trivial);
   *   2. each EXECUTOR task scans its range for `<tag>...</tag>` byte
-  *      spans under the reference's straddle rule (below), emitting one
-  *      UTF-8 string per record;
-  *   3. `from_xml` (the same StaxXmlParser that backs the native
-  *      source, codegen-friendly, schema-pruned) parses records into
-  *      columns. Its projection is the plan's only parse: the wiki
-  *      pipeline puts no Filter above it (a pushed-down predicate would
-  *      repeat the whole `from_xml` once per check), so its executed
-  *      plan evaluates `from_xml` once per page.
+  *      spans under the reference's straddle rule (below);
+  *   3. the same task hands each record's bytes to a per-task consumer
+  *      ([[scan]]): [[records]] decodes them to one UTF-8 string per
+  *      record, and `graft.wiki.WikiPipeline.readPages` parses them with
+  *      StAX into `(title, text)` rows, as the reference's mapper does
+  *      inside its record reader's loop (CountReference.java:211-244).
+  *      No record is decoded, serialized or parsed a second time.
   *
   * Straddle rule, bit-for-bit from CountReference.java:141-158,180-201:
   * a range owns every record whose START tag BEGINS inside
@@ -48,37 +50,38 @@ object SplittableXml {
   /** One byte range of one file. */
   final case class XmlSplit(path: String, start: Long, end: Long)
 
-  /** Columnar read: records scanned per-range, parsed with `from_xml`
-    * against the explicit schema (never infer on a multi-GB dump).
-    * `splitBytes <= 0` means use `spark.sql.files.maxPartitionBytes`. */
-  def read(spark: SparkSession, path: String, rowTag: String,
-           schema: StructType, splitBytes: Long = 0L): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    records(spark, path, rowTag, splitBytes)
-      .select(from_xml(col("value"), schema,
-        Map.empty[String, String].asJava).as("r"))
-      .select(col("r.*"))
-  }
-
   /** Raw `<rowTag>...</rowTag>` record strings, one row each, one task
     * per planned byte range. */
   def records(spark: SparkSession, path: String, rowTag: String,
               splitBytes: Long = 0L): Dataset[String] = {
     import spark.implicits._
+    spark.createDataset(scan(spark, path, rowTag, splitBytes)(() =>
+      (bytes: Array[Byte], len: Int) => new String(bytes, 0, len, UTF_8)))
+  }
+
+  /** One task per planned byte range. Each task builds its consumer once
+    * with `perTask` and feeds it every record it owns: the record's
+    * bytes, valid only until the call returns, and their length.
+    * `splitBytes <= 0` means use `spark.sql.files.maxPartitionBytes`. */
+  def scan[T: ClassTag](spark: SparkSession, path: String, rowTag: String,
+                        splitBytes: Long = 0L)(
+      perTask: () => (Array[Byte], Int) => T): RDD[T] = {
     val bytes =
       if (splitBytes > 0) splitBytes
       else JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes"))
     val splits = planSplits(spark, path, bytes)
     val confBc = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-    val startTag = s"<$rowTag>".getBytes("UTF-8")
-    val endTag = s"</$rowTag>".getBytes("UTF-8")
-    val rdd = spark.sparkContext
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    val startTag = s"<$rowTag>".getBytes(UTF_8)
+    val endTag = s"</$rowTag>".getBytes(UTF_8)
+    spark.sparkContext
       .parallelize(splits, math.max(splits.length, 1))
-      .mapPartitions(_.flatMap(s =>
-        new TagRecordIterator(confBc.value.value, s, startTag, endTag)))
-    spark.createDataset(rdd)
+      .mapPartitions { it =>
+        val emit = perTask()
+        it.flatMap(s =>
+          new TagRecordIterator(confBc.value.value, s, startTag, endTag, emit))
+      }
   }
 
   /** What `path` (a file, directory or glob) matches. A path that
@@ -149,27 +152,14 @@ object SplittableXml {
   }
 }
 
-/** Hadoop Configuration is not java-serializable; ship it to executors
-  * via its own writable form (Spark's internal SerializableConfiguration
-  * is private[spark], so the pattern is reproduced here). */
-private final class SerializableHadoopConf(
-    @transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 /** Per-range record scanner; see [[SplittableXml]] for the ownership
-  * rule. Executor-side only (constructed inside mapPartitions). */
-private final class TagRecordIterator(
+  * rule. Executor-side only (constructed inside mapPartitions). Each
+  * record's bytes go to `emit` as they are found, so a consumer reads
+  * them in place. */
+private final class TagRecordIterator[T](
     conf: Configuration, split: SplittableXml.XmlSplit,
-    startTag: Array[Byte], endTag: Array[Byte]) extends Iterator[String] {
+    startTag: Array[Byte], endTag: Array[Byte],
+    emit: (Array[Byte], Int) => T) extends Iterator[T] {
 
   private val in: java.io.InputStream = {
     val p = new Path(split.path)
@@ -199,31 +189,30 @@ private final class TagRecordIterator(
   Option(org.apache.spark.TaskContext.get())
     .foreach(_.addTaskCompletionListener[Unit](_ => close()))
   private var pos = split.start
-  private val buf = new ByteArrayOutputStream(64 * 1024)
-  private var record: String = _
+  private val buf = new RecordBuffer
+  private var found = false
   private var closed = false
 
   advance()
 
-  override def hasNext: Boolean = record != null
+  override def hasNext: Boolean = found
 
-  override def next(): String = {
-    if (record == null) throw new NoSuchElementException("exhausted split")
-    val r = record
+  override def next(): T = {
+    if (!found) throw new NoSuchElementException("exhausted split")
+    val r = emit(buf.bytes, buf.size)
     advance()
     r
   }
 
   private def advance(): Unit = {
-    record = null
+    found = false
     if (!closed && pos < split.end &&
         readUntilMatch(startTag, withinBlock = false)) {
       buf.reset()
       buf.write(startTag)
-      if (readUntilMatch(endTag, withinBlock = true))
-        record = buf.toString("UTF-8")
+      found = readUntilMatch(endTag, withinBlock = true)
     }
-    if (record == null) close()
+    if (!found) close()
   }
 
   /** The reference scanner verbatim in semantics
@@ -292,4 +281,9 @@ private final class TagRecordIterator(
     closed = true
     in.close()
   }
+}
+
+/** The record buffer; consumers read its array in place. */
+private final class RecordBuffer extends ByteArrayOutputStream(64 * 1024) {
+  def bytes: Array[Byte] = buf
 }

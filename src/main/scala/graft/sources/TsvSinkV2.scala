@@ -12,6 +12,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Tab-separated sink/source as a **DataSource V2 WRITE path** — the
   * missing half of the connector story (graft-xml covers V2 read):
@@ -255,11 +256,11 @@ private[sources] class TsvWriteBuilder(path: String, info: LogicalWriteInfo)
   private def buildChecked(): Write = new Write {
     override def toBatch: BatchWrite =
       new TsvBatchWrite(path, info.schema(), info.queryId(), truncateFirst,
-        new SerializableHadoopConf(
+        new SerializableConfiguration(
           SparkSession.active.sparkContext.hadoopConfiguration))
     override def toStreaming: StreamingWrite =
       new TsvStreamingWrite(path, info.schema(), info.queryId(),
-        new SerializableHadoopConf(
+        new SerializableConfiguration(
           SparkSession.active.sparkContext.hadoopConfiguration),
         truncateEachEpoch = truncateFirst)
   }
@@ -282,7 +283,7 @@ private[sources] class TsvWriteBuilder(path: String, info: LogicalWriteInfo)
   * the writer died between create and close). */
 private[sources] class TsvStreamingWrite(path: String, schema: StructType,
                                          queryId: String,
-                                         conf: SerializableHadoopConf,
+                                         conf: SerializableConfiguration,
                                          truncateEachEpoch: Boolean = false)
     extends StreamingWrite {
   private def stagingDir(epochId: Long) =
@@ -406,7 +407,7 @@ private[sources] class TsvStreamingWrite(path: String, schema: StructType,
 private[sources] class TsvStreamingWriterFactory(path: String,
                                                  stagingRoot: String,
                                                  schema: StructType,
-                                                 conf: SerializableHadoopConf)
+                                                 conf: SerializableConfiguration)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
@@ -421,7 +422,7 @@ private[sources] case class TsvCommit(stagedFile: String, rows: Long)
 
 private[sources] class TsvBatchWrite(path: String, schema: StructType,
                                      queryId: String, truncateFirst: Boolean,
-                                     conf: SerializableHadoopConf)
+                                     conf: SerializableConfiguration)
     extends BatchWrite {
   private def stagingDir = new Path(path, s"_staging-$queryId")
 
@@ -636,7 +637,7 @@ private[sources] class TsvBatchWrite(path: String, schema: StructType,
 
 private[sources] class TsvWriterFactory(path: String, stagingDir: String,
                                         schema: StructType,
-                                        conf: SerializableHadoopConf)
+                                        conf: SerializableConfiguration)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
@@ -646,7 +647,7 @@ private[sources] class TsvWriterFactory(path: String, stagingDir: String,
 }
 
 private[sources] class TsvDataWriter(file: Path, schema: StructType,
-                                     conf: SerializableHadoopConf)
+                                     conf: SerializableConfiguration)
     extends DataWriter[InternalRow] {
   private val fs = file.getFileSystem(conf.value)
   private val out = new java.io.BufferedWriter(
@@ -839,7 +840,7 @@ private[sources] class TsvMicroBatchStream(path: String,
                                            projection: Array[Int],
                                            filters: Array[(Int, Option[String])],
                                            maxEpochsPerTrigger: Option[Int],
-                                           conf: SerializableHadoopConf)
+                                           conf: SerializableConfiguration)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
@@ -919,7 +920,7 @@ private[sources] class TsvScan(path: String, schema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TsvReaderFactory(
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration),
       projection, filters)
 
@@ -934,12 +935,12 @@ private[sources] class TsvScan(path: String, schema: StructType,
         "the reader, or supply an explicit .schema(...)")
     new TsvMicroBatchStream(path, projection, filters,
       maxEpochsPerTrigger,
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration))
   }
 }
 
-private[sources] class TsvReaderFactory(conf: SerializableHadoopConf,
+private[sources] class TsvReaderFactory(conf: SerializableConfiguration,
                                         projection: Array[Int],
                                         filters: Array[(Int, Option[String])])
     extends PartitionReaderFactory {

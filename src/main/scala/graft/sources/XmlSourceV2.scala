@@ -9,6 +9,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** The splittable tag-XML scanner as a first-class **DataSource V2** —
   * the deployment-grade face of [[SplittableXml]]:
@@ -144,13 +145,13 @@ private[sources] class XmlScan(path: String, rowTag: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new XmlReaderFactory(
-      new SerializableHadoopConf(
+      new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration),
       s"<$rowTag>".getBytes("UTF-8"), s"</$rowTag>".getBytes("UTF-8"),
       emitValue = required.nonEmpty, screens)
 }
 
-private[sources] class XmlReaderFactory(conf: SerializableHadoopConf,
+private[sources] class XmlReaderFactory(conf: SerializableConfiguration,
                                         startTag: Array[Byte],
                                         endTag: Array[Byte],
                                         emitValue: Boolean,
@@ -158,7 +159,8 @@ private[sources] class XmlReaderFactory(conf: SerializableHadoopConf,
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val it = new TagRecordIterator(conf.value,
-      p.asInstanceOf[XmlRangePartition].split, startTag, endTag)
+      p.asInstanceOf[XmlRangePartition].split, startTag, endTag,
+      (bytes, len) => new String(bytes, 0, len, "UTF-8"))
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
 

@@ -54,11 +54,13 @@ object WikiScale {
       }
     }
 
-    // Cumulative stage table: each line runs the pipeline one stage
-    // further than the line above it, so a stage costs the difference
-    // between neighbouring lines. The record scan counts the byte
-    // scanner's records (no XML parse); the middle lines run to a noop
-    // sink; the last one writes the CSV.
+    // Cumulative stage table: from the second line on, each line runs
+    // the pipeline one stage further than the line above it, so a stage
+    // costs the difference between neighbouring lines. The first line
+    // counts the byte scanner's records as strings (no XML parse); the
+    // second is the pipeline's own scan, which parses (title, text) in
+    // the scan task; the middle lines run to a noop sink; the last one
+    // writes the CSV.
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     def timed[T](body: => T): (T, Double) = {
@@ -71,8 +73,9 @@ object WikiScale {
     val (nRecs, scanSecs) = timed(
       graft.sources.SplittableXml.records(spark, xml, "page").count())
     val stages = Seq(
-      "record scan" -> scanSecs,
-      "+ parse" -> timed(noop(WikiPipeline.readPages(spark, xml)))._2,
+      "record scan (strings)" -> scanSecs,
+      "scan parsing (title, text)" ->
+        timed(noop(WikiPipeline.readPages(spark, xml)))._2,
       "+ extract" -> timed(noop(links()))._2,
       "+ countDistinct" ->
         timed(noop(WikiPipeline.countsByTarget(links())))._2,

@@ -25,4 +25,13 @@ object GraftSqlShims {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over rows the caller builds itself (an RDD of
+    * InternalRow in `schema`'s layout), with no encoder in between. */
+  def internalCreateDataFrame(
+      spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

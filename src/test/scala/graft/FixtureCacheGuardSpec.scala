@@ -206,10 +206,9 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** Java serialization's private hooks and the extractors that
-    * pattern matches call: the JVM and the compiler call these, never
-    * code by name. */
-  private val conventionHooks = Set("readObject", "writeObject", "unapply")
+  /** The extractors that pattern matches call: the compiler calls
+    * these, never code by name. */
+  private val conventionHooks = Set("unapply")
 
   /** Definitions that only specs call, kept on purpose: reference
     * implementations that a spec checks the served path against

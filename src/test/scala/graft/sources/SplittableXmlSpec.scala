@@ -5,23 +5,25 @@ import graft.wiki.{WikiFixture, WikiPipeline}
 import org.apache.spark.sql.functions._
 
 /** The splittable in-file XML scan vs two independent baselines: Spark's
-  * native per-file XML source on the 10-page wiki fixture, and hand-built
-  * documents with split boundaries forced into every awkward position
+  * native per-file XML source on the 10-page wiki fixture and on
+  * hand-built documents that exercise each value rule of the page reader,
+  * and documents with split boundaries forced into every awkward position
   * (inside records, inside tags). */
 class SplittableXmlSpec extends SparkSpec {
 
   val fixtureXml = WikiFixture.path
 
-  private def fixtureRows(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("title"), col("revision.text").as("text"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("title"), col("text"))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+
+  private def fixtureRows(df: org.apache.spark.sql.DataFrame) = rows(df).toSet
+
+  private lazy val native =
+    fixtureRows(WikiPipeline.readPagesNative(spark, fixtureXml))
 
   test("single split reproduces the native source row-for-row") {
-    val native = fixtureRows(
-      spark.read.option("rowTag", "page").schema(WikiPipeline.pageSchema)
-        .xml(fixtureXml))
-    val split = fixtureRows(SplittableXml.read(
-      spark, fixtureXml, "page", WikiPipeline.pageSchema))
+    val split = fixtureRows(WikiPipeline.readPages(spark, fixtureXml))
     assert(split === native)
     assert(split.size === 10)
   }
@@ -30,12 +32,10 @@ class SplittableXmlSpec extends SparkSpec {
     val ds = SplittableXml.records(spark, fixtureXml, "page",
       splitBytes = 8 * 1024) // 187 KB fixture -> 23 ranges
     assert(ds.rdd.getNumPartitions > 1)
-    val split = fixtureRows(SplittableXml.read(
-      spark, fixtureXml, "page", WikiPipeline.pageSchema,
-      splitBytes = 8 * 1024))
-    val native = fixtureRows(
-      spark.read.option("rowTag", "page").schema(WikiPipeline.pageSchema)
-        .xml(fixtureXml))
+    val pages = WikiPipeline.readPages(spark, fixtureXml,
+      splitBytes = 8 * 1024)
+    assert(pages.rdd.getNumPartitions === ds.rdd.getNumPartitions)
+    val split = fixtureRows(pages)
     assert(split === native)
   }
 
@@ -55,13 +55,69 @@ class SplittableXmlSpec extends SparkSpec {
     assert(splits.length === 1)
     assert(splits.head.start === 0L && splits.head.end === Long.MaxValue)
 
-    val compressed = fixtureRows(SplittableXml.read(
-      spark, gz.toString, "page", WikiPipeline.pageSchema,
-      splitBytes = 8 * 1024))
-    val plain = fixtureRows(
-      spark.read.option("rowTag", "page").schema(WikiPipeline.pageSchema)
-        .xml(fixtureXml))
-    assert(compressed === plain)
+    val compressed = fixtureRows(WikiPipeline.readPages(
+      spark, gz.toString, splitBytes = 8 * 1024))
+    assert(compressed === native)
+  }
+
+  private def writeDoc(prefix: String, pages: Seq[String]): String = {
+    val f = java.nio.file.Files.createTempDirectory(prefix).resolve("d.xml")
+    java.nio.file.Files.write(f, pages.mkString(
+      "<mediawiki>\n", "\n", "\n</mediawiki>\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  test("readPages equals the native source row for row on every value " +
+    "rule: trim, entities, CDATA, empty and missing values, skipped and " +
+    "repeated elements, a malformed record") {
+    val rev = (body: String) => s"<revision>$body</revision>"
+    val doc = writeDoc("parity", Seq(
+      "<page><title>\tTabbed\t</title>" + rev("<text>[[A]]</text>") +
+        "</page>",
+      "<page><title> \t \n</title>" + rev("<text>[[B]]</text>") + "</page>",
+      "<page><title>Amp</title>" +
+        rev("<text>x &amp; y [[C]] &lt;z&gt; &#x5B;&#x5B;D]]</text>") +
+        "</page>",
+      "<page><title>Cdata</title>" +
+        rev("<text>a <![CDATA[<b> & [[E]]]]> c</text>") + "</page>",
+      "<page><title>Empty</title>" +
+        rev("<text xml:space=\"preserve\"/>") + "</page>",
+      "<page><title>Commented</title>" +
+        rev("<comment>see [[F]]</comment><text>[[G]]</text>") + "</page>",
+      "<page><title>Malformed</title>" + rev("<text>a < b [[H]]</text>") +
+        "</page>",
+      "<page>\n  <title>Dump shape</title>\n  <ns>0</ns>\n  <id>8</id>\n" +
+        "  <revision>\n    <id>1</id>\n    <text bytes=\"9\" " +
+        "xml:space=\"preserve\">\n[[I]] é中 \n</text>\n  </revision>\n" +
+        "</page>",
+      "<page><title>No revision</title></page>",
+      "<page><title>Old</title><title>Last title</title>" +
+        rev("<text>old</text>") + rev("<id>2</id>") + "</page>"))
+    val got = rows(WikiPipeline.readPages(spark, doc)).toSeq
+    assert(got === rows(WikiPipeline.readPagesNative(spark, doc)).toSeq)
+    assert(got === Seq(
+      ("Tabbed", "[[A]]"), ("", "[[B]]"),
+      ("Amp", "x & y [[C]] <z> [[D]]"), ("Cdata", "a <b> & [[E]] c"),
+      ("Empty", ""), ("Commented", "[[G]]"), ("Malformed", null),
+      ("Dump shape", "[[I]] é中"), ("No revision", null),
+      ("Last title", null)))
+  }
+
+  test("malformed records: from_xml's rows, and the next record is kept") {
+    // readPages parses each record alone, as from_xml does; the native
+    // source reads the whole file as one stream, and after a mismatched
+    // end tag it loses the records that follow
+    val doc = writeDoc("malformed", Seq(
+      "<page><title>Mismatch</title><revision><text>x</revision></page>",
+      "<page><title>Markup</title><revision><text>a <b>c</b> d</text>" +
+        "</revision></page>",
+      "<page><title>Entity</title><revision><text>&nbsp;x</text>" +
+        "</revision></page>",
+      "<page><title>After</title><revision><text>[[K]]</text>" +
+        "</revision></page>"))
+    assert(rows(WikiPipeline.readPages(spark, doc)).toSeq === Seq(
+      (null, null), ("Markup", "a <b>c</b> d"), ("Entity", null),
+      ("After", "[[K]]")))
   }
 
   test("every boundary position: records owned exactly once") {
@@ -121,10 +177,8 @@ class SplittableXmlSpec extends SparkSpec {
   }
 
   test("golden pipeline numbers hold through the splittable path") {
-    val pages = SplittableXml.read(
-        spark, fixtureXml, "page", WikiPipeline.pageSchema,
-        splitBytes = 16 * 1024)
-      .select(col("title"), col("revision.text").as("text"))
+    val pages = WikiPipeline.readPages(spark, fixtureXml,
+      splitBytes = 16 * 1024)
     val links = WikiPipeline.links(pages).cache()
     assert(links.count() === WikiFixture.Emissions)
     assert(links.distinct().count() === WikiFixture.DistinctPairs)

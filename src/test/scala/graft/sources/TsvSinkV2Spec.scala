@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** The graft-tsv V2 write path: round-trip fidelity, the atomic-commit
   * visibility contract, speculative-duplicate exclusion, and abort
@@ -142,7 +143,7 @@ class TsvSinkV2Spec extends SparkSpec {
     val schema = StructType(Seq(StructField("v", LongType, false)))
     val conf = SparkSpec.session.sparkContext.hadoopConfiguration
     val bw = new TsvBatchWrite(out, schema, "q-test", false,
-      new SerializableHadoopConf(conf))
+      new SerializableConfiguration(conf))
     val factory = bw.createBatchWriterFactory(null)
     // two attempts of partition 0 race; both stage their bytes
     val attempt1 = factory.createWriter(0, 100L)
@@ -166,7 +167,7 @@ class TsvSinkV2Spec extends SparkSpec {
     val schema = StructType(Seq(StructField("v", LongType, false)))
     val conf = SparkSpec.session.sparkContext.hadoopConfiguration
     val bw = new TsvBatchWrite(out, schema, "q-abort", true,
-      new SerializableHadoopConf(conf))
+      new SerializableConfiguration(conf))
     val w = bw.createBatchWriterFactory(null).createWriter(0, 1L)
     w.write(InternalRow(42L))
     val msg = w.commit()
@@ -228,7 +229,7 @@ class TsvSinkV2Spec extends SparkSpec {
     val schema = StructType(Seq(StructField("v", LongType, false)))
     val conf = SparkSpec.session.sparkContext.hadoopConfiguration
     val sw = new TsvStreamingWrite(out, schema, "q-stream",
-      new SerializableHadoopConf(conf))
+      new SerializableConfiguration(conf))
     val factory = sw.createStreamingWriterFactory(null)
     def runEpoch(epoch: Long, v: Long): Unit = {
       val w = factory.createWriter(0, epoch * 100, epoch)
@@ -385,7 +386,7 @@ class TsvSinkV2Spec extends SparkSpec {
     val schema = StructType(Seq(StructField("v", LongType, false)))
     val conf = SparkSpec.session.sparkContext.hadoopConfiguration
     val sw = new TsvStreamingWrite(out, schema, "q-shrink",
-      new SerializableHadoopConf(conf))
+      new SerializableConfiguration(conf))
     val factory = sw.createStreamingWriterFactory(null)
     def attempt(epoch: Long, vals: Seq[Long]): Array[WriterCommitMessage] =
       vals.zipWithIndex.map { case (v, pid) =>
@@ -464,7 +465,7 @@ class TsvSinkV2Spec extends SparkSpec {
     // the next commit ADOPTS the migrated dir instead of mkdirs-ing
     // an empty one over the history
     val sw = new TsvStreamingWrite(out, schema, "q-adopt",
-      new SerializableHadoopConf(conf))
+      new SerializableConfiguration(conf))
     val factory = sw.createStreamingWriterFactory(null)
     val w1 = factory.createWriter(0, 100L, 1L)
     w1.write(InternalRow(99L))
@@ -492,7 +493,7 @@ class TsvSinkV2Spec extends SparkSpec {
     val fw = new java.io.FileWriter(s"$out/part-0-00000.tsv")
     fw.write("7\n"); fw.close()
     val sw = new TsvStreamingWrite(out, schema, "q-migrate",
-      new SerializableHadoopConf(conf))
+      new SerializableConfiguration(conf))
     val factory = sw.createStreamingWriterFactory(null)
     // a REPLAY of ledgered epoch 1 must still be recognized (promote
     // nothing), and the commit must not crash over the legacy file
@@ -643,7 +644,7 @@ class TsvSinkV2Spec extends SparkSpec {
     val out = tmpDir()
     val schema = StructType(Seq(StructField("v", LongType, false)))
     val conf = SparkSpec.session.sparkContext.hadoopConfiguration
-    val shc = new SerializableHadoopConf(conf)
+    val shc = new SerializableConfiguration(conf)
     val w = new TsvDataWriter(
       new Path(s"$out/_staging-x/part-0-1.tsv"), schema, shc)
     w.write(InternalRow(7L))

@@ -1,8 +1,11 @@
 package graft.wiki
 
+import java.nio.file.Files
+
 import graft.{JobCounting, SparkSpec}
 import org.apache.spark.sql.catalyst.expressions.{RegExpExtractAll, XmlToStructs}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SerializeFromObjectExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -45,12 +48,13 @@ class WikiPipelineSpec extends SparkSpec with JobCounting
     assert(counts.filter(col("count") > WikiFixture.MaxCount).isEmpty)
   }
 
-  test("plan: one from_xml per page, no per-match regex, no range " +
-    "exchange; writeCsv runs at most 3 jobs") {
+  test("plan: the scan parses (no from_xml, no serialized records), no " +
+    "per-match regex, no range exchange; writeCsv runs at most 3 jobs") {
     val plan = WikiPipeline.run(spark, WikiFixture.path)
       .queryExecution.executedPlan
     val exprs = flatMap(plan)(_.expressions.flatMap(_.collect { case e => e }))
-    assert(exprs.count(_.isInstanceOf[XmlToStructs]) === 1, plan)
+    assert(!exprs.exists(_.isInstanceOf[XmlToStructs]), plan)
+    assert(collect(plan) { case s: SerializeFromObjectExec => s }.isEmpty, plan)
     assert(!exprs.exists(_.isInstanceOf[RegExpExtractAll]), plan)
     assert(collect(plan) {
       case e: ShuffleExchangeExec if e.outputPartitioning
@@ -220,5 +224,60 @@ class WikiPipelineSpec extends SparkSpec with JobCounting
     val lines = scala.io.Source.fromFile(out, "UTF-8").getLines().toVector
     assert(lines.head === "page_title,count")
     assert(lines.length === WikiFixture.Rows + 1) // rows + header
+  }
+
+  private def csvDir(prefix: String) = Files.createTempDirectory(prefix)
+
+  private def dirNames(dir: java.nio.file.Path): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala.map(_.getFileName.toString).toSet)
+  }
+
+  test("writeCsv: a dump without links writes exactly the header") {
+    val dir = csvDir("nolinks")
+    val xml = dir.resolve("d.xml")
+    Files.write(xml, ("<mediawiki><page><title>A</title><revision>" +
+      "<text>no links here</text></revision></page></mediawiki>")
+      .getBytes("UTF-8"))
+    val out = dir.resolve("out.csv")
+    WikiPipeline.writeCsv(WikiPipeline.run(spark, xml.toString), out.toString)
+    assert(new String(Files.readAllBytes(out), "UTF-8") === "page_title,count\n")
+    assert(dirNames(dir) === Set("d.xml", "out.csv"))
+  }
+
+  test("writeCsv: the directory holds only the CSV, and a second write " +
+    "replaces it") {
+    import spark.implicits._
+    val dir = csvDir("replace")
+    val out = dir.resolve("counts.csv")
+    WikiPipeline.writeCsv(WikiPipeline.run(spark, WikiFixture.path),
+      out.toString)
+    assert(dirNames(dir) === Set("counts.csv"))
+    assert(Files.readAllLines(out).size === WikiFixture.Rows + 1)
+    WikiPipeline.writeCsv(Seq(("b", 2L), ("a", 1L))
+      .toDF("page_title", "count").orderBy("page_title"), out.toString)
+    assert(dirNames(dir) === Set("counts.csv"))
+    assert(new String(Files.readAllBytes(out), "UTF-8") ===
+      "page_title,count\na,1\nb,2\n")
+  }
+
+  test("writeCsv: a failing task leaves the previous file and no temp " +
+    "file behind") {
+    val dir = csvDir("failing")
+    val out = dir.resolve("counts.csv")
+    Files.write(out, "page_title,count\nold,1\n".getBytes("UTF-8"))
+    // the third row throws inside the writing task, after the header and
+    // two lines are in its temp file
+    val failing = spark.range(0, 5, 1, 1).select(
+      when(col("id") === 2, raise_error(lit("boom")))
+        .otherwise(col("id").cast("string")).as("page_title"),
+      lit(1L).as("count"))
+    val e = intercept[Exception](
+      WikiPipeline.writeCsv(failing, out.toString))
+    assert(e.getMessage.contains("boom"), e)
+    assert(new String(Files.readAllBytes(out), "UTF-8") ===
+      "page_title,count\nold,1\n")
+    assert(dirNames(dir) === Set("counts.csv"))
   }
 }

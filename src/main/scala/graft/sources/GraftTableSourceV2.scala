@@ -18,8 +18,7 @@ import org.apache.spark.util.SerializableConfiguration
   * `readChangeFeed` / Iceberg's changelog scan as a source):
   *
   *   - OFFSETS ARE VERSION IDS. The chain's commit markers are the
-  *     offset log — the same reuse the graft-tsv source makes of the
-  *     sink's epoch ledger: an offset is "highest version consumed",
+  *     offset log: an offset is "highest version consumed",
   *     a micro-batch (start, end] is exactly the per-version feeds of
   *     the versions committed in that window, and a reader can never
   *     observe a half-published version (its marker doesn't exist
@@ -27,8 +26,7 @@ import org.apache.spark.util.SerializableConfiguration
   *     watermark lives in the reading query's checkpoint.
   *   - ADMISSION CONTROL caps versions per micro-batch
   *     (`maxVersionsPerTrigger`), so a consumer catching up on a long
-  *     chain backlog takes bounded steps (the TsvMicroBatchStream
-  *     pattern, verbatim).
+  *     chain backlog takes bounded steps.
   *   - Each version step is SPILLED ONCE to `root/_cdc/<key>/v<N>/`
   *     parquet
   *     (computed by [[ManifestPrune.changeFeedStep]] at plan time,

@@ -820,17 +820,16 @@ object ManifestPrune {
   def manifestOf(root: String, version: Long): String =
     if (version == 0L) s"$root/manifest" else s"$root/manifest_c$version"
 
-  /** DV sidecar dir of a committed version, when one exists (version
-    * 0 and purely-CoW versions have none). Resolution order: the
-    * `_dv` pointer file INSIDE the manifest dir (written by
-    * [[dvDeleteFrom]]/[[cowMergeFrom]] before the manifest is
-    * published, so the atomic manifest rename publishes the sidecar
-    * reference with it — the property the concurrent-writer protocol
-    * needs), else the legacy `dv_c<version>` name convention. Version
-    * 0 checks ONLY the pointer: [[buildLayout]] never writes one, but
-    * a BRANCH's version 0 is a byte-copy of its fork version's
-    * manifest ([[createBranch]]) and must keep hiding the fork's
-    * deleted rows. */
+  /** DV sidecar dir of a committed version, when one exists (purely
+    * CoW versions have none): the one named by the `_dv` pointer file
+    * INSIDE the manifest dir (written by [[dvDeleteFrom]]/
+    * [[cowMergeFrom]] before the manifest is published, so the atomic
+    * manifest rename publishes the sidecar reference with it — the
+    * property the concurrent-writer protocol needs). A base layout's
+    * version 0 has none ([[buildLayout]] never writes one), but a
+    * BRANCH's version 0 is a byte-copy of its fork version's manifest
+    * ([[createBranch]]) and must keep hiding the fork's deleted rows,
+    * so version 0 checks the pointer too. */
   def dvOf(root: String, version: Long): Option[String] = {
     if (version < 0L) return None
     val st = ChainStorage.forPath(root)
@@ -845,11 +844,8 @@ object ManifestPrune {
           s"version $version's DV sidecar $named is " +
             "missing — the table metadata is corrupt (was it vacuumed " +
             "by an external process?)")
-      return Some(named)
-    }
-    if (version == 0L) return None // no legacy dv_c0 ever existed
-    val p = s"$root/dv_c$version"
-    if (st.isDir(p)) Some(p) else None
+      Some(named)
+    } else None
   }
 
   /** Record the sidecar reference inside a PREPARED manifest dir, so

@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Tabl
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage, SupportsTruncate}
-import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -64,19 +63,20 @@ import org.apache.spark.util.SerializableConfiguration
   * partition per visible file — the files were sized by the writing
   * query's partitioning; in-file line splitting would buy nothing the
   * upstream `spark.sql.files.maxPartitionBytes` didn't already decide.
-  * Directories with no manifest (a streaming target, a hand-built
-  * dir) fall back to listing `part-*` (minus un-ledgered epoch
-  * files).
+  * A directory with no manifest (a hand-built dir) falls back to
+  * listing every `part-*` file.
   *
-  * Known single-writer contracts (shared with Spark's own file sink):
-  * ONE streaming query per target — the epoch ledger is keyed by
-  * epoch id, so two queries with independent epoch counters would
-  * mistake each other's ids for replays; and old-generation files are
-  * garbage-collected at commit, so a batch reader that planned
-  * against generation N can hit FileNotFound if an overwrite lands
-  * mid-scan (atomic visibility, no retained read snapshots — a
-  * deferred vacuum would buy retention at the cost of unbounded
-  * storage).
+  * The connector is batch-only, as the reference's tab-text stages
+  * are: the table declares no streaming capability, so Spark refuses
+  * `readStream` / `writeStream` on graft-tsv before touching the
+  * target.
+  *
+  * Known single-writer contract (shared with Spark's own file sink):
+  * old-generation files are garbage-collected at commit, so a batch
+  * reader that planned against generation N can hit FileNotFound if
+  * an overwrite lands mid-scan (atomic visibility, no retained read
+  * snapshots — a deferred vacuum would buy retention at the cost of
+  * unbounded storage).
   */
 class TsvSinkV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-tsv"
@@ -120,7 +120,6 @@ object TsvSinkV2 {
 
   private[sources] val ManifestName = "_manifest-(\\d+)".r
   private[sources] val ManifestLockName = "_manifest-(\\d+)\\.lock".r
-  private[sources] val EpochPartName = "part-(\\d+)-\\d+\\.tsv".r
 
   /** (generation, manifestPath) of the highest-numbered manifest, if
     * any — the batch commit's visibility authority. */
@@ -146,67 +145,13 @@ object TsvSinkV2 {
   }
 
   /** The files a reader must see: the highest manifest's list when one
-    * exists (batch commits), else every `part-*` in the directory
-    * (streaming targets and hand-built dirs have no manifest) —
-    * minus epoch-named files whose epoch the ledger does not record:
-    * those are a crashed streaming attempt's half-promoted output,
-    * and the batch-read fallback must apply the same ledger filter
-    * the streaming read face and the batch carry-forward already do. */
+    * exists (batch commits), else every `part-*` in the directory (a
+    * hand-built dir has no manifest). */
   private[sources] def visibleFiles(fs: FileSystem, dir: Path): Seq[Path] =
     currentManifest(fs, dir) match {
       case Some((_, m)) => readManifest(fs, m)._2.map(new Path(dir, _))
-      case None =>
-        lazy val ledger = committedEpochs(fs, dir)
-        listParts(fs, dir).filter(_.getName match {
-          case EpochPartName(e) => ledger.contains(e.toLong)
-          case _ => true
-        })
+      case None => listParts(fs, dir)
     }
-
-  /** Committed epoch ids of a streaming target: the marker-dir layout,
-    * with the legacy single-file ledger read transparently (it is
-    * migrated in place by the next streaming commit). */
-  private[sources] def committedEpochs(fs: FileSystem,
-                                       dir: Path): Set[Long] = {
-    val ledger = new Path(dir, "_epochs")
-    val migrating = new Path(dir, "_epochs.migrating")
-    def readMarkers(p: Path): Set[Long] =
-      fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
-        case n if n.startsWith("e-") => n.drop(2).toLong
-      }.toSet
-    def once(): Set[Long] =
-      if (fs.exists(ledger)) {
-        if (fs.getFileStatus(ledger).isFile) {
-          val in = fs.open(ledger)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .filter(_.nonEmpty).map(_.toLong).toSet
-          finally in.close()
-        } else readMarkers(ledger)
-      } else if (fs.exists(migrating)) {
-        // the legacy-file→marker-dir migration's delete+rename window:
-        // `_epochs` is briefly absent while `_epochs.migrating` already
-        // holds the COMPLETE marker set (built in full BEFORE the
-        // legacy file is deleted). exists()==false here is NOT "no
-        // ledger" — returning empty would let a concurrent batch
-        // commit treat every ledgered epoch file as un-ledgered, drop
-        // it from carryable/visible, and delete committed streaming
-        // data in cleanup. Give the rename a moment, then read the
-        // completed tmp set directly (correct even if the migrator
-        // died mid-swap; the next commit adopts it by rename).
-        var i = 0
-        while (i < 20 && !fs.exists(ledger) && fs.exists(migrating)) {
-          Thread.sleep(25); i += 1
-        }
-        if (fs.exists(ledger)) once()
-        else if (fs.exists(migrating)) readMarkers(migrating)
-        else if (fs.exists(ledger)) once()
-        else Set.empty
-      } else Set.empty
-    // a marker file/dir can still vanish between exists() and open()
-    // (concurrent migration completing); one retry sees the settled
-    // layout
-    try once() catch { case _: java.io.FileNotFoundException => once() }
-  }
 }
 
 private[sources] class TsvTable(userSchema: StructType,
@@ -216,18 +161,14 @@ private[sources] class TsvTable(userSchema: StructType,
   override def schema(): StructType = userSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.BATCH_READ,
-      TableCapability.STREAMING_WRITE, TableCapability.MICRO_BATCH_READ)
+      TableCapability.TRUNCATE, TableCapability.BATCH_READ)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new TsvWriteBuilder(options.get("path"), info)
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
     new TsvScanBuilder(Option(opts.get("path"))
-      .getOrElse(options.get("path")), userSchema,
-      Option(opts.get("maxEpochsPerTrigger"))
-        .orElse(Option(options.get("maxEpochsPerTrigger")))
-        .map(_.toInt))
+      .getOrElse(options.get("path")), userSchema)
 }
 
 private[sources] class TsvWriteBuilder(path: String, info: LogicalWriteInfo)
@@ -251,170 +192,13 @@ private[sources] class TsvWriteBuilder(path: String, info: LogicalWriteInfo)
         case _ => ()
       }
     }
-    buildChecked()
-  }
-  private def buildChecked(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new TsvBatchWrite(path, info.schema(), info.queryId(), truncateFirst,
-        new SerializableConfiguration(
-          SparkSession.active.sparkContext.hadoopConfiguration))
-    override def toStreaming: StreamingWrite =
-      new TsvStreamingWrite(path, info.schema(), info.queryId(),
-        new SerializableConfiguration(
-          SparkSession.active.sparkContext.hadoopConfiguration),
-        truncateEachEpoch = truncateFirst)
-  }
-}
-
-/** The STREAMING face of the sink — `writeStream.format("graft-tsv")`
-  * with the exactly-once contract done at the connector layer instead
-  * of inside a foreachBatch body (an overwrite of a per-batch-id
-  * directory — the same idea, here behind the standard API): each
-  * epoch stages under
-  * `_staging-<queryId>/epoch-<id>/`, `commit(epoch, msgs)` promotes
-  * the winners to `part-<epoch>-NNNNN.tsv` and then RECORDS the epoch
-  * in the `_epochs` ledger — a replayed epoch (failure between commit
-  * and checkpoint advance) finds its id in the ledger and discards its
-  * staged files instead of promoting duplicates. The ledger is a
-  * DIRECTORY of per-epoch marker files (`_epochs/e-<id>`): recording
-  * an epoch creates one new empty file and never rewrites prior
-  * state, so no crash window can truncate the committed-epoch history
-  * (a single rewritten ledger file would forget every prior epoch if
-  * the writer died between create and close). */
-private[sources] class TsvStreamingWrite(path: String, schema: StructType,
-                                         queryId: String,
-                                         conf: SerializableConfiguration,
-                                         truncateEachEpoch: Boolean = false)
-    extends StreamingWrite {
-  private def stagingDir(epochId: Long) =
-    new Path(path, s"_staging-$queryId/epoch-$epochId")
-
-  /** Remove the epoch's staging subdir, and the per-query staging root
-    * once no other epoch is mid-flight under it. */
-  private def dropStaging(fs: FileSystem, epochId: Long): Unit = {
-    fs.delete(stagingDir(epochId), true)
-    val root = new Path(path, s"_staging-$queryId")
-    if (fs.exists(root) && fs.listStatus(root).isEmpty)
-      fs.delete(root, false)
-  }
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new TsvStreamingWriterFactory(path, s"$path/_staging-$queryId",
-      schema, conf)
-
-  private def ledgerDir = new Path(path, "_epochs")
-
-  private def committedEpochs(fs: FileSystem): Set[Long] =
-    TsvSinkV2.committedEpochs(fs, new Path(path))
-
-  /** A pre-marker-directory target carried `_epochs` as a single
-    * rewritten FILE of ids; migrate it to the marker layout (one
-    * `e-<id>` file per epoch) so its committed history survives the
-    * upgrade instead of being silently forgotten — and so the next
-    * commit's mkdirs does not fail over the existing file. */
-  private def migrateLegacyLedger(fs: FileSystem): Unit = {
-    val tmpExisting = new Path(path, "_epochs.migrating")
-    if (!fs.exists(ledgerDir) && fs.exists(tmpExisting)) {
-      // a prior migrator died between delete(legacy) and
-      // rename(tmp→_epochs): tmp was built COMPLETE before the delete,
-      // so adopt it — without this, the mkdirs below would install an
-      // EMPTY marker dir and silently forget the committed history
-      require(fs.rename(tmpExisting, ledgerDir),
-        s"legacy ledger adoption failed: cannot install $ledgerDir")
-      return
-    }
-    if (fs.exists(ledgerDir) && fs.getFileStatus(ledgerDir).isFile) {
-      val in = fs.open(ledgerDir)
-      val ids =
-        try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).map(_.toLong).toSeq
-        finally in.close()
-      // build the marker dir COMPLETE under a temp name, then swap:
-      // concurrent readers see either the legacy file or the full
-      // marker set — never a partially-migrated subset (which a
-      // racing batch commit would misread as "epoch uncommitted" and
-      // garbage-collect committed files on)
-      val tmp = new Path(path, "_epochs.migrating")
-      fs.delete(tmp, true)
-      fs.mkdirs(tmp)
-      ids.foreach(id => fs.create(new Path(tmp, s"e-$id"), true).close())
-      require(fs.delete(ledgerDir, false),
-        s"legacy ledger migration failed: cannot remove $ledgerDir")
-      require(fs.rename(tmp, ledgerDir),
-        s"legacy ledger migration failed: cannot install $ledgerDir")
+    new Write {
+      override def toBatch: BatchWrite =
+        new TsvBatchWrite(path, info.schema(), info.queryId(), truncateFirst,
+          new SerializableConfiguration(
+            SparkSession.active.sparkContext.hadoopConfiguration))
     }
   }
-
-  override def commit(epochId: Long,
-                      messages: Array[WriterCommitMessage]): Unit = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
-    migrateLegacyLedger(fs)
-    if (committedEpochs(fs).contains(epochId)) {
-      // epoch replay after a commit-then-crash: the data is already
-      // visible — drop this attempt's staged bytes, promote nothing
-      dropStaging(fs, epochId)
-      return
-    }
-    // a crash mid-promote replays the epoch before it was recorded:
-    // everything already promoted under this epoch id is the dead
-    // attempt's output — remove ALL of it first, not just colliding
-    // indexes, because the replay may run with FEWER partitions and a
-    // same-index-only replace would leave the dead attempt's higher-
-    // index files visible as duplicates
-    val stalePrefix = s"part-$epochId-"
-    TsvSinkV2.listParts(fs, dir)
-      .filter(_.getName.startsWith(stalePrefix))
-      .foreach(p => require(fs.delete(p, false),
-        s"stale replace failed: $p"))
-    messages.zipWithIndex.foreach { case (m, i) =>
-      val c = m.asInstanceOf[TsvCommit]
-      val dst = new Path(dir, f"part-$epochId-$i%05d.tsv")
-      require(fs.rename(new Path(c.stagedFile), dst),
-        s"promote failed: ${c.stagedFile} -> $dst")
-    }
-    // ledger record AFTER the renames: only a fully-promoted epoch is
-    // recorded; creating the marker touches no prior epoch's state
-    fs.mkdirs(ledgerDir)
-    fs.create(new Path(ledgerDir, s"e-$epochId"), true).close()
-    if (truncateEachEpoch) {
-      // Complete output mode: this epoch's state REPLACES the
-      // previous one — retire older epochs' files and markers now
-      // that the new epoch is promoted and recorded (a crash in
-      // between leaves both visible for one replay window; the next
-      // commit retires them)
-      TsvSinkV2.listParts(fs, dir).foreach { p =>
-        p.getName match {
-          case TsvSinkV2.EpochPartName(e) if e.toLong != epochId =>
-            fs.delete(p, false)
-          case _ => ()
-        }
-      }
-      committedEpochs(fs).filter(_ != epochId).foreach(e =>
-        fs.delete(new Path(ledgerDir, s"e-$e"), false))
-    }
-    dropStaging(fs, epochId)
-  }
-
-  override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit = {
-    val fs = stagingDir(epochId).getFileSystem(conf.value)
-    dropStaging(fs, epochId)
-  }
-}
-
-private[sources] class TsvStreamingWriterFactory(path: String,
-                                                 stagingRoot: String,
-                                                 schema: StructType,
-                                                 conf: SerializableConfiguration)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new TsvDataWriter(
-      new Path(s"$stagingRoot/epoch-$epochId",
-        s"part-$partitionId-$taskId.tsv"),
-      schema, conf)
 }
 
 private[sources] case class TsvCommit(stagedFile: String, rows: Long)
@@ -513,33 +297,19 @@ private[sources] class TsvBatchWrite(path: String, schema: StructType,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf.value)
     val preExisting = TsvSinkV2.listParts(fs, dir).map(_.getName)
-    // epoch-named files carry only while their epoch is in the
-    // LEDGER: an epoch-named file without a marker is a crashed
-    // streaming attempt's partial promote — baking it into a
-    // generation would pin files a later epoch REPLAY legitimately
-    // deletes. Anything not epoch-named (legacy hand-built data,
-    // manifest-chained batch files) always carries.
-    def carryable(names: Seq[String]): Seq[String] = {
-      lazy val ledger = TsvSinkV2.committedEpochs(fs, dir)
-      names.filter {
-        case TsvSinkV2.EpochPartName(e) => ledger.contains(e.toLong)
-        case _ => true
-      }
-    }
-    // 0) BOOTSTRAP a manifest-less target (legacy or stream-written
-    //    dir): publish a generation with exactly the carryable
-    //    PRE-existing files BEFORE anything changes, so readers switch
-    //    to manifest authority now — a crash mid-promote below can
-    //    then never expose this job's partial output through the
-    //    listing fallback, and a later commit can never bake it into
-    //    a generation. Pre-existing row count is unknown (best-effort
-    //    0) — the FILE LIST is the authority, the count advisory.
-    //    An EMPTY target bootstraps too (an empty generation-0): a
-    //    first write that dies mid-promote must not expose its
-    //    partials through the listing fallback either.
+    // 0) BOOTSTRAP a manifest-less target (a hand-built dir): publish
+    //    a generation with exactly the PRE-existing files BEFORE
+    //    anything changes, so readers switch to manifest authority now
+    //    — a crash mid-promote below can then never expose this job's
+    //    partial output through the listing fallback, and a later
+    //    commit can never bake it into a generation. Pre-existing row
+    //    count is unknown (best-effort 0) — the FILE LIST is the
+    //    authority, the count advisory. An EMPTY target bootstraps too
+    //    (an empty generation-0): a first write that dies mid-promote
+    //    must not expose its partials through the listing fallback
+    //    either.
     if (TsvSinkV2.currentManifest(fs, dir).isEmpty)
-      publishManifest(fs, dir, 0L, 0L, carryable(preExisting),
-        "manifest-boot.tmp")
+      publishManifest(fs, dir, 0L, 0L, preExisting, "manifest-boot.tmp")
     // 1) promote the committed task files (losers of speculative
     //    races are not in `messages` and stay in staging until (4)),
     //    under names UNIQUE TO THIS JOB — an append cannot collide
@@ -560,57 +330,28 @@ private[sources] class TsvBatchWrite(path: String, schema: StructType,
     //    publishManifest). Readers resolve the highest generation, so
     //    the rename is the only instant at which the visible file set
     //    changes: a crash before it leaves the previous generation
-    //    visible, after it the new one. An append also carries
-    //    forward files of LEDGER-COMMITTED streaming epochs that
-    //    landed since the last batch generation — they are committed
-    //    data under the sink's other protocol, not garbage.
+    //    visible, after it the new one.
     val prev = TsvSinkV2.currentManifest(fs, dir)
-    val ledgered = TsvSinkV2.committedEpochs(fs, dir)
-    def epochFiles(names: Seq[String]): Seq[String] = names.filter {
-      case TsvSinkV2.EpochPartName(e) => ledgered.contains(e.toLong)
-      case _ => false
-    }
     val (visible, total) =
       if (truncateFirst) (newNames, batchRows)
       else prev match {
         case Some((_, m)) =>
           val (prevRows, prevFiles) = TsvSinkV2.readManifest(fs, m)
-          val sinceEpochs =
-            epochFiles(preExisting).filterNot(prevFiles.contains)
-          (prevFiles ++ sinceEpochs ++ newNames, prevRows + batchRows)
-        case None => (carryable(preExisting) ++ newNames, batchRows)
+          (prevFiles ++ newNames, prevRows + batchRows)
+        case None => (preExisting ++ newNames, batchRows)
       }
     val gen = prev.map(_._1 + 1).getOrElse(0L)
     publishManifest(fs, dir, gen, total, visible, "manifest.tmp")
     // 3) post-switch housekeeping, all crash-safe to skip (the next
     //    commit collects the same garbage): advisory _SUCCESS marker,
-    //    stale part files of older generations, older manifests and
-    //    orphaned locks; a TRUNCATE also retires the streaming-epoch
-    //    ledger, because its files are gone by contract
+    //    part files outside the new manifest, older manifests and
+    //    orphaned locks
     val out = fs.create(new Path(dir, "_SUCCESS"), true)
     out.write(s"$total\n".getBytes("UTF-8"))
     out.close()
     val keep = visible.toSet
-    // the ledger is RE-READ here, after the manifest publish: a
-    // streaming epoch that committed while this batch ran is neither
-    // in the t0 listing nor in `visible`, but its files are committed
-    // data — only a TRUNCATE may remove ledgered-epoch files
-    val ledgerNow =
-      if (truncateFirst) Set.empty[Long]
-      else TsvSinkV2.committedEpochs(fs, dir)
-    val cutoff = System.currentTimeMillis() - StaleLockMs
     TsvSinkV2.listParts(fs, dir)
       .filterNot(p => keep.contains(p.getName))
-      .filterNot(p => p.getName match {
-        case TsvSinkV2.EpochPartName(e) =>
-          // ledgered epochs are committed data; a YOUNG un-ledgered
-          // epoch file may belong to a streaming commit in its
-          // promote-then-record window right now — only provably
-          // stale partials are garbage (same grace idea as the lock)
-          ledgerNow.contains(e.toLong) || (!truncateFirst &&
-            fs.getFileStatus(p).getModificationTime > cutoff)
-        case _ => false
-      })
       .foreach(fs.delete(_, false))
     fs.listStatus(dir).map(_.getPath).foreach { p =>
       p.getName match {
@@ -623,8 +364,6 @@ private[sources] class TsvBatchWrite(path: String, schema: StructType,
         case _ => ()
       }
     }
-    if (truncateFirst)
-      fs.delete(new Path(dir, "_epochs"), true)
     // 4) drop staging (and any orphaned loser files inside it)
     fs.delete(stagingDir, true)
   }
@@ -770,8 +509,7 @@ private[sources] object TsvEscape {
   * returned as residual for Spark to re-evaluate above the scan. The
   * accepted set and the pruned schema are echoed in the scan
   * description so a plan test can assert both pushdowns happened. */
-private[sources] class TsvScanBuilder(path: String, schema: StructType,
-                                      maxEpochsPerTrigger: Option[Int] = None)
+private[sources] class TsvScanBuilder(path: String, schema: StructType)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
@@ -813,85 +551,8 @@ private[sources] class TsvScanBuilder(path: String, schema: StructType,
     // filter indexes address the full line split; projection indexes
     // name the cells that materialize
     val projection = required.fieldNames.map(n => colIndex(n).get)
-    new TsvScan(path, required, projection, evals, pushed.mkString(", "),
-      maxEpochsPerTrigger, tableHasColumns = schema.fields.nonEmpty)
+    new TsvScan(path, required, projection, evals, pushed.mkString(", "))
   }
-}
-
-/** STREAMING READ of a graft-tsv directory — the source face that
-  * closes the connector loop: the sink's exactly-once epoch ledger
-  * (`_epochs/e-<id>` markers, recorded only after an epoch's files
-  * are fully promoted) doubles as the SOURCE's offset log. An offset
-  * is simply "highest committed epoch consumed"; a micro-batch
-  * (start, end] plans exactly the part files of the epochs committed
-  * in that window (`part-<epoch>-NNNNN.tsv` — the sink's naming), so
-  * the source sees every epoch atomically, exactly once, and never
-  * observes a half-promoted epoch (its marker does not exist yet).
-  * Restart replays nothing: the consumed watermark lives in the
-  * reading query's checkpoint. Batch-written files (no epoch ledger)
-  * are not visible to this face — stream-in/stream-out dirs are the
-  * contract, the same one the sink's scaladoc states. */
-private[sources] case class TsvEpochOffset(epoch: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = epoch.toString
-}
-
-private[sources] class TsvMicroBatchStream(path: String,
-                                           projection: Array[Int],
-                                           filters: Array[(Int, Option[String])],
-                                           maxEpochsPerTrigger: Option[Int],
-                                           conf: SerializableConfiguration)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-
-  private def fs = new Path(path).getFileSystem(conf.value)
-
-  private def committedEpochs(): Seq[Long] =
-    TsvSinkV2.committedEpochs(fs, new Path(path)).toSeq.sorted
-
-  override def initialOffset(): Offset = TsvEpochOffset(-1L)
-  override def latestOffset(): Offset =
-    TsvEpochOffset(committedEpochs().lastOption.getOrElse(-1L))
-
-  // ---- admission control (backpressure): cap how many committed
-  // epochs one micro-batch may consume, so a reader catching up on a
-  // long backlog processes it in bounded steps instead of one giant
-  // batch (`maxEpochsPerTrigger` read option; default unbounded)
-  override def getDefaultReadLimit: ReadLimit =
-    maxEpochsPerTrigger.map(n => ReadLimit.maxFiles(n))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
-    val start = startOffset.asInstanceOf[TsvEpochOffset].epoch
-    val pending = committedEpochs().filter(_ > start)
-    val capped = limit match {
-      case m: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
-        pending.take(m.maxFiles())
-      case _ => pending
-    }
-    TsvEpochOffset(capped.lastOption.getOrElse(start))
-  }
-  override def deserializeOffset(json: String): Offset =
-    TsvEpochOffset(json.toLong)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-
-  override def planInputPartitions(start: Offset,
-                                   end: Offset): Array[InputPartition] = {
-    val lo = start.asInstanceOf[TsvEpochOffset].epoch
-    val hi = end.asInstanceOf[TsvEpochOffset].epoch
-    val inWindow = committedEpochs().filter(e => e > lo && e <= hi).toSet
-    TsvSinkV2.listParts(fs, new Path(path)).filter { f =>
-      f.getName match {
-        case TsvSinkV2.EpochPartName(e) => inWindow.contains(e.toLong)
-        case _ => false
-      }
-    }.map(f => TsvFilePartition(f.toString): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TsvReaderFactory(conf, projection, filters)
 }
 
 private[sources] case class TsvFilePartition(file: String)
@@ -900,9 +561,7 @@ private[sources] case class TsvFilePartition(file: String)
 private[sources] class TsvScan(path: String, schema: StructType,
                                projection: Array[Int],
                                filters: Array[(Int, Option[String])],
-                               pushedDesc: String,
-                               maxEpochsPerTrigger: Option[Int] = None,
-                               tableHasColumns: Boolean = true)
+                               pushedDesc: String)
     extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
@@ -923,21 +582,6 @@ private[sources] class TsvScan(path: String, schema: StructType,
       new SerializableConfiguration(
         SparkSession.active.sparkContext.hadoopConfiguration),
       projection, filters)
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    // a stream started on an empty/not-yet-written dir would freeze a
-    // ZERO-COLUMN inferred schema for the query's lifetime and emit
-    // field-less rows for every later epoch — fail loudly instead
-    require(tableHasColumns,
-      "cannot start a streaming read on an empty graft-tsv target: " +
-        "no schema to infer — write the first epoch before starting " +
-        "the reader, or supply an explicit .schema(...)")
-    new TsvMicroBatchStream(path, projection, filters,
-      maxEpochsPerTrigger,
-      new SerializableConfiguration(
-        SparkSession.active.sparkContext.hadoopConfiguration))
-  }
 }
 
 private[sources] class TsvReaderFactory(conf: SerializableConfiguration,

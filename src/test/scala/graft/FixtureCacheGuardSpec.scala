@@ -58,18 +58,23 @@ class FixtureCacheGuardSpec extends AnyFunSuite {
 
   /** The table layer's sanctioned static maps: the snapshot-fact
     * cache, the storage registry and handles, the in-memory store's
-    * objects and the catalog's table registry. A planner that runs no
-    * Spark job has nothing to memoize, so no other map belongs here. */
+    * objects, the catalog's table registry and the streaming writers'
+    * replay cursors. A planner that runs no Spark job has nothing to
+    * memoize, so no other map belongs here. */
   private val sanctionedSourceMaps = Set(
     "graft/sources/ManifestPrune.scala:dirFacts",
     "graft/sources/ChainStorage.scala:registry",
     "graft/sources/HadoopFsChainStorage.scala:fsCache",
     "graft/sources/InMemoryObjectStorage.scala:objects",
-    "graft/sources/GraftCatalog.scala:tables")
+    "graft/sources/GraftCatalog.scala:tables",
+    // unbounded for now: ROADMAP item 7 bounds it
+    "graft/streaming/StreamingPipelines.scala:batchCursor")
+
+  private val tableLayerDirs = Seq("graft/sources/", "graft/streaming/")
 
   test("the table layer declares only the sanctioned static " +
     "ConcurrentHashMaps") {
-    val found = sources.filter(_._1.startsWith("graft/sources/"))
+    val found = sources.filter(f => tableLayerDirs.exists(f._1.startsWith))
       .flatMap { case (file, text) =>
         concurrentMap.findAllMatchIn(text).map(m => s"$file:${m.group(1)}")
       }
